@@ -775,26 +775,14 @@ def q_block_candidates(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_multimodal_meta(spark: SparkSession, sf: str) -> DataFrame:
-    """Multimodal plumbing: binary payload columns → size + content hash
-    (the deterministic columns of the media-feature stage)."""
-    from pyspark.sql import types as T
-
-    from ocr_obsidian_spark.operators.multimodal import MEDIA_META, extract_media_features
-
-    d = _t(spark, sf, "documents", spread=True)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.encode("text", "UTF-8").alias("payload"),
-        F.named_struct(
-            F.lit("media_type"), F.lit("image"),
-            F.lit("mime"), F.lit("application/octet-stream"),
-            F.lit("width"), F.lit(None).cast(T.IntegerType()),
-            F.lit("height"), F.lit(None).cast(T.IntegerType()),
-            F.lit("duration_ms"), F.lit(None).cast(T.LongType()),
-        ).cast(MEDIA_META).alias("media_meta"),
+    """Payload size + content hash over the UTF-8 bytes of each document:
+    a pure JVM projection (NULL text hashes as the empty payload)."""
+    payload = F.encode(F.coalesce(F.col("text"), F.lit("")), "UTF-8")
+    return _t(spark, sf, "documents").select(
+        "doc_id",
+        F.length(payload).cast("long").alias("n_bytes"),
+        F.sha2(payload, 256).alias("content_sha256"),
     )
-    out = extract_media_features(media)
-    return out.select(F.col("url").cast("long").alias("doc_id"), "n_bytes", "content_sha256")
 
 
 # ---------------------------------------------------------------------------

@@ -14,7 +14,8 @@ Scale design (10^12-doc target):
   * skew from giant pages is defused by an optional pre-repartition on
     ``xxhash64(url)`` (urls are unique ⇒ uniform spread) and bounded Arrow
     batches (``spark.sql.execution.arrow.maxRecordsPerBatch``).
-  * per-partition lineage/metrics rows are emitted by operators/lineage.py.
+  * per-partition lineage/metrics rows (``schemas.LINEAGE``) ride the same
+    map stage: see ``extract_pages_with_lineage``.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ from ..functions.geometry import admit_word, group_lines
 from ..functions.qa import compute_text_metrics, is_garbage_page, low_quality_placeholder
 from ..functions.romans import detect_printed_page, infer_scan_side
 from ..functions.textclean import render_page_text, render_raw_text
-from ..schemas import CORPUS
+from ..schemas import CORPUS, LINEAGE
 from ..sources.fixtures import parse_page_payload
 
 _URL_BOOK_RE = re.compile(r"/book_([^/]+)/page_(\d+)")
@@ -204,15 +205,9 @@ def extract_pages(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFr
 # kind marker, the corpus columns (nullable — lineage rows leave them null),
 # and the lineage metric columns (null on data rows). config_hash is shared.
 _LINEAGE_EXTRA = [
-    T.StructField("run_id", T.StringType(), True),
-    T.StructField("stage", T.StringType(), True),
-    T.StructField("partition_id", T.IntegerType(), True),
-    T.StructField("rows_in", T.LongType(), True),
-    T.StructField("rows_out", T.LongType(), True),
-    T.StructField("bytes_in", T.LongType(), True),
-    T.StructField("wall_ms", T.DoubleType(), True),
-    T.StructField("min_url", T.StringType(), True),
-    T.StructField("max_url", T.StringType(), True),
+    T.StructField(f.name, f.dataType, True)
+    for f in LINEAGE.fields
+    if f.name != "config_hash"
 ]
 EXTRACT_COMBINED = T.StructType(
     [T.StructField("row_kind", T.StringType(), False)]
@@ -231,8 +226,8 @@ def extract_pages_with_lineage(
     """Single-pass extract + per-partition lineage (north-rule requirement,
     SURVEY §2.10): the SAME ``mapInPandas`` that produces corpus rows
     side-accumulates partition metrics and emits one trailing lineage row
-    per partition — the input is read exactly once (VERDICT r1 fix: the
-    separate ``lineage.partition_metrics`` pass doubled the 100 TB read).
+    per partition — the input is read exactly once (a separate metrics
+    pass would double the read).
 
     Split the combined frame with ``split_extract_lineage`` (persist the
     combined frame first so both halves share the one materialization).
@@ -309,10 +304,7 @@ def extract_pages_with_lineage(
 def split_extract_lineage(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(corpus, lineage) halves of the combined single-pass output."""
     corpus_cols = [f.name for f in CORPUS_OUT.fields]
-    lineage_cols = [
-        "run_id", "stage", "partition_id", "rows_in", "rows_out",
-        "bytes_in", "wall_ms", "min_url", "max_url", "config_hash",
-    ]
+    lineage_cols = [f.name for f in LINEAGE.fields]
     corpus = combined.filter(F.col("row_kind") == "data").select(*corpus_cols)
     lineage = combined.filter(F.col("row_kind") == "lineage").select(*lineage_cols)
     return corpus, lineage

@@ -5,8 +5,8 @@ logical screen descriptor, global/local color tables, LZW-compressed
 image data with variable-width LSB-first codes, optional interlacing and
 a graphics-control transparency index. This module decodes the FIRST
 image of a GIF to pixels (animation composition is out of scope — an
-honest boundary like progressive JPEG), and provides the fixture-encoder
-counterpart used by the tests: a valid "uncompressed-style" LZW stream
+honest boundary), and provides the fixture-encoder counterpart used by
+the tests: a valid "uncompressed-style" LZW stream
 (a CLEAR code before every pixel code, so the dictionary never grows)
 with optional interlace and transparency.
 

@@ -4,12 +4,11 @@ Images/audio/video ride through the pipeline as ``binary`` columns with a
 metadata struct; decode / feature-extraction / resize / frame-sampling are
 Arrow-batched ``mapInPandas`` stages. PNG payloads decode for REAL with a
 pure-stdlib decoder (``decode_png``: zlib inflate + scanline unfiltering),
-baseline JPEG with ``jpegcodec.decode_jpeg`` (Huffman + dequant + IDCT)
 GIF first-frames with ``gifcodec.decode_gif`` (LZW + palettes +
 interlace), lossless WebP with ``webpcodec.decode_webp`` (VP8L: prefix
 codes + LZ77 + color cache + all four transforms, round 5), and WAV/PCM
 audio with ``wavcodec.decode_wav`` — all public specs, no PIL/ffmpeg
-needed. The remaining codecs (lossy-VP8 WebP, AVIF/TIFF, MP3/AAC,
+needed. The remaining codecs (JPEG, lossy-VP8 WebP, AVIF/TIFF, MP3/AAC,
 video) are a STUBBED boundary in this container and fall back to
 deterministic content-derived fake features, so the distributed path is
 exercised end-to-end either way.
@@ -182,12 +181,10 @@ def image_codecs() -> list[tuple]:
     wires decode_image, extract_media_features and resize_images at
     once."""
     from .gifcodec import GIF_SIGNATURES, decode_gif, gif_dimensions
-    from .jpegcodec import JPEG_SIGNATURE, decode_jpeg, jpeg_dimensions
     from .webpcodec import decode_webp, is_webp, webp_dimensions
 
     return [
         (lambda d: d.startswith(PNG_SIGNATURE), decode_png, png_dimensions),
-        (lambda d: d.startswith(JPEG_SIGNATURE), decode_jpeg, jpeg_dimensions),
         (lambda d: d[:6] in GIF_SIGNATURES, decode_gif, gif_dimensions),
         (is_webp, decode_webp, webp_dimensions),
     ]
@@ -196,10 +193,9 @@ def image_codecs() -> list[tuple]:
 def decode_image(payload: bytes) -> np.ndarray:
     """Decode an image payload to a (H, W, C) uint8 array.
 
-    PNG decodes for real via ``decode_png``; sequential AND progressive
-    JPEG via ``jpegcodec.decode_jpeg``; GIF (first frame) via
+    PNG decodes for real via ``decode_png``; GIF (first frame) via
     ``gifcodec.decode_gif``; lossless WebP via ``webpcodec.decode_webp``.
-    Other formats (lossy-VP8 WebP, AVIF/TIFF, audio, video) require a
+    Other formats (JPEG, lossy-VP8 WebP, AVIF/TIFF, audio, video) require a
     codec library (PIL/opencv/ffmpeg) not installed in this container —
     the pipeline falls back to ``fake_features`` for them (see
     ``extract_media_features``)."""
@@ -210,12 +206,12 @@ def decode_image(payload: bytes) -> np.ndarray:
         from PIL import Image  # noqa: F401
     except ImportError as exc:  # pragma: no cover - container has no PIL
         raise NotImplementedError(
-            "non-PNG/JPEG/GIF image decode requires a codec (PIL/opencv) "
+            "non-PNG/GIF/WebP image decode requires a codec (PIL/opencv) "
             "not present in this environment; pipeline uses the "
             "deterministic stub features"
         ) from exc
     raise NotImplementedError(  # pragma: no cover - container has no PIL
-        "non-PNG/JPEG/GIF decode path not implemented"
+        "non-PNG/GIF/WebP decode path not implemented"
     )
 
 
@@ -253,8 +249,8 @@ def extract_media_features(
 ) -> DataFrame:
     """(url, payload, meta) → feature rows via an Arrow-batched map stage.
 
-    PNG, JPEG (sequential + progressive) and GIF payloads decode for real
-    (``decode_png`` / ``decode_jpeg`` / ``decode_gif``) and yield
+    PNG, GIF and lossless WebP payloads decode for real
+    (``decode_png`` / ``decode_gif`` / ``decode_webp``) and yield
     pixel-derived features;
     WAV/PCM audio decodes via ``wavcodec`` into level/duration features;
     anything else (or a malformed/unsupported-profile payload) falls back
@@ -320,8 +316,8 @@ def resize_images(
     math + Arrow batch shape are real; the pixel resample itself is the same
     stubbed codec boundary as ``decode_image`` (the output row carries the
     input content hash in place of resized bytes). Missing metadata
-    dimensions are recovered from the PNG IHDR, the JPEG SOF header or the
-    GIF screen descriptor; otherwise dimension-less rows pass through at
+    dimensions are recovered from the PNG IHDR, the GIF screen descriptor or
+    the WebP header; otherwise dimension-less rows pass through at
     scale 1.0."""
     codecs = image_codecs()
 

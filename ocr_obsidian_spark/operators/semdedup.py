@@ -54,7 +54,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .dedup import pair_components
-from .similarity import _dot, _norm, bucketed_cosine_pairs
+from .similarity import _dot, _norm, _valid_embedding, bucketed_cosine_pairs
 
 
 def _centroid_sim(centroids: list[list[float]], vec_col: str, cell_col: str) -> F.Column:
@@ -117,21 +117,6 @@ def _assign_sim_udf(centroids: list[list[float]]):
         return pd.DataFrame({"cell": cell.astype("int32"), "sim": sim})
 
     return assign
-
-
-def _valid_embedding(vec_col: str, dim: int) -> F.Column:
-    """Fail-soft gate for corpus-grade embedding tables: NULL vectors,
-    wrong-dimension vectors and zero-norm vectors (a failed encoder
-    emits all three) are flagged instead of crashing the stage — the
-    zero norm would be an ANSI divide-by-zero in the cosine, and a
-    ragged row kills the vectorized numpy assignment path."""
-    vec = F.col(vec_col)
-    nsq = F.aggregate(
-        F.transform(vec, lambda x: x.cast("double") * x),
-        F.lit(0.0),
-        lambda a, v: a + v,
-    )
-    return vec.isNotNull() & (F.size(vec) == F.lit(dim)) & (nsq > 0)
 
 
 def assign_semantic_cells(

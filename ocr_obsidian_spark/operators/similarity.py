@@ -39,6 +39,21 @@ def cosine_similarity(a: F.Column, b: F.Column) -> F.Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _valid_embedding(vec_col: str, dim: int) -> F.Column:
+    """Fail-soft gate for corpus-grade embedding tables: NULL vectors,
+    wrong-dimension vectors and zero-norm vectors (a failed encoder
+    emits all three) are flagged instead of crashing the stage — the
+    zero norm would be an ANSI divide-by-zero in the cosine, and a
+    ragged row kills the vectorized numpy assignment path."""
+    vec = F.col(vec_col)
+    nsq = F.aggregate(
+        F.transform(vec, lambda x: x.cast("double") * x),
+        F.lit(0.0),
+        lambda a, v: a + v,
+    )
+    return vec.isNotNull() & (F.size(vec) == F.lit(dim)) & (nsq > 0)
+
+
 def _pair_cosine_udf():
     """Row-wise cosine over two equal-dim array columns, Arrow-batched:
     one numpy pass per batch replaces the zip_with+aggregate expression
@@ -487,7 +502,8 @@ def bucketed_cosine_pairs(
             dots = (mat[:-1] * mat[1:]).sum(axis=1)
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = dots / (norms[:-1] * norms[1:])
-            keep = cos >= thr
+            # a duplicated id is never its own near-duplicate
+            keep = (cos >= thr) & (ids[:-1] != ids[1:])
             return pd.DataFrame(
                 {"id_a": ids[:-1][keep], "id_b": ids[1:][keep], "cosine": cos[keep]}
             )
@@ -499,7 +515,11 @@ def bucketed_cosine_pairs(
             g = mat[lo:hi] @ mat.T
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = g / (norms[lo:hi, None] * norms[None, :])
-            valid = (cos >= thr) & (col_idx[None, :] > np.arange(lo, hi)[:, None])
+            valid = (
+                (cos >= thr)
+                & (col_idx[None, :] > np.arange(lo, hi)[:, None])
+                & (ids[None, :] != ids[lo:hi, None])
+            )
             r, c = np.nonzero(valid)
             if r.size:
                 outs.append(
@@ -562,9 +582,12 @@ def embedding_near_duplicates(
     Skew: buckets above ``max_bucket_size`` (duplicate mega-clusters) chain
     instead of all-pairs joining — see ``bucketed_candidate_pairs``; report
     via ``bucket_cap_stats`` on the same keyed frame.
+
+    Invalid vectors (see ``_valid_embedding``) are dropped before keying:
+    they have no cosine, so they can never be near-duplicates.
     """
     sig_udf = _table_signatures_udf(dim, n_bits, n_tables, seed)
-    keyed = df.select(
+    keyed = df.filter(_valid_embedding(vec_col, dim)).select(
         F.col(id_col),
         F.col(vec_col),
         F.posexplode(sig_udf(F.col(vec_col))).alias("table", "sig"),
@@ -594,6 +617,6 @@ def near_dup_signature_frame(
     """The (id, table, sig) keyed frame embedding_near_duplicates buckets on —
     exposed so call sites can run ``bucket_cap_stats`` on the same keys."""
     sig_udf = _table_signatures_udf(dim, n_bits, n_tables, seed)
-    return df.select(
+    return df.filter(_valid_embedding(vec_col, dim)).select(
         F.col(id_col), F.posexplode(sig_udf(F.col(vec_col))).alias("table", "sig")
     )

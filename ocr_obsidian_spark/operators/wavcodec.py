@@ -1,5 +1,5 @@
-"""Pure-stdlib WAV (RIFF/PCM) decoder — the audio analog of the PNG/JPEG/
-GIF modules: the one audio container whose spec is simple, public and
+"""Pure-stdlib WAV (RIFF/PCM) decoder — the audio analog of the PNG/GIF/
+WebP modules: the one audio container whose spec is simple, public and
 decodable without ffmpeg. Supports PCM 8 (unsigned) / 16 / 24 / 32-bit
 and IEEE float32/float64 samples, any channel count; compressed codecs
 (MP3/AAC/Opus — format tags other than 1 and 3) raise

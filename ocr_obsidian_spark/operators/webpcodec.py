@@ -12,7 +12,7 @@ color-indexing with sub-byte pixel bundling). Sub-images (predictor /
 color-transform blocks, palettes) decode through the same recursive
 image-stream reader, as specified.
 
-Honest boundary (mirrors jpegcodec's baseline-only scope): the
+Honest boundary: the
 meta-prefix feature (an entropy image selecting per-tile prefix-code
 groups) raises NotImplementedError — single-group images, palettized
 graphics and every stream our fixture encoder emits decode for real.

@@ -22,7 +22,6 @@ from ..config import DEFAULT_CONFIG, PipelineConfig
 from ..operators.blocks import detect_blocks
 from ..operators.emit import BookMeta, emit_notes
 from ..operators.extract import extract_pages_with_lineage, split_extract_lineage
-from ..operators.lineage import partition_metrics
 from ..operators.printed_page import apply_printed_page_mode
 from ..operators.spans_op import make_spans
 
@@ -73,9 +72,3 @@ def run_pipeline(
         spans = make_spans(corpus, triggers, cfg, broadcast_triggers=broadcast_triggers)
         notes = emit_notes(corpus, spans, cfg, run_id=run_id, book_meta=book_meta)
     return PipelineResult(corpus=corpus, spans=spans, notes=notes, lineage=lineage)
-
-
-def corpus_lineage(corpus: DataFrame, *, run_id: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    return partition_metrics(
-        corpus, run_id=run_id, stage="extract", config_hash=cfg.config_hash()
-    )

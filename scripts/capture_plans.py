@@ -3,8 +3,11 @@
 
 Usage: python scripts/capture_plans.py <tag> <suffix> [q1,q2,...]
 Writes plans/<tag>/<query>_<suffix>.txt for each query (default: the
-round-6 optimization target set). Planning only — no query execution
-beyond the tiny driver-side collects some builders do (centroid seeds).
+round-6 optimization target set). This is not planning only: building
+some queries runs real Spark jobs (substr_dedup's local checkpoint, the
+eager near-dup candidate sets, the crawl-doc and LSH local checkpoints,
+centroid-seed collects), so do not run it while timing a benchmark on
+the same host.
 """
 
 from __future__ import annotations

@@ -80,3 +80,4 @@ print("FAILURES:" if fails else "ALL MATCH")
 for n, m in fails:
     print(" -", n, ":", m)
 spark.stop()
+sys.exit(1 if fails else 0)

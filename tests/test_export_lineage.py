@@ -5,10 +5,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_obsidian_spark.config import DEFAULT_CONFIG
 from ocr_obsidian_spark.operators.export_text import export_book_text
 from ocr_obsidian_spark.operators.extract import extract_pages
-from ocr_obsidian_spark.operators.lineage import partition_metrics
 from ocr_obsidian_spark.operators.printed_page import apply_printed_page_mode
 
 
@@ -74,19 +72,6 @@ def test_export_byte_identical_to_reference_join(corpus, fmt):
     assert set(out) == set(by_book)
     for book_id, rows in by_book.items():
         assert out[book_id] == _reference_export(rows, fmt), book_id
-
-
-def test_lineage_rows_cover_all_partitions(spark, corpus):
-    df = corpus.repartition(6)
-    rows = partition_metrics(
-        df, run_id="r", stage="extract", config_hash=DEFAULT_CONFIG.config_hash()
-    ).collect()
-    assert len(rows) == 6
-    assert sum(r["rows_in"] for r in rows) == corpus.count()
-    assert all(r["stage"] == "extract" and r["run_id"] == "r" for r in rows)
-    covered = [r for r in rows if r["min_url"] is not None]
-    assert covered and all(r["min_url"] <= r["max_url"] for r in covered)
-    assert sum(r["bytes_in"] for r in rows) > 0
 
 
 def test_single_pass_extract_lineage(spark, pages_df):

@@ -499,3 +499,26 @@ def test_recipe_final_plan_is_truncated_and_udf_free(spark):
     assert "SortMergeJoin" not in final, final
     assert "ArrowEvalPython" not in final and "BatchEvalPython" not in final
     assert final.count("Exchange hashpartitioning") <= 4, final
+
+
+def test_multimodal_meta_is_native_and_hashes_utf8_bytes(spark, tmp_path):
+    """Payload size + sha256 come from JVM expressions over the UTF-8
+    bytes of ``text`` (NULL hashes as the empty payload): the values
+    match hashlib and the executed plan carries no Python worker."""
+    import hashlib
+
+    import __spark_entry__ as e
+
+    texts = {1: None, 2: "", 3: "plain ascii", 4: "naïve café — 東京 ✓"}
+    spark.createDataFrame(
+        list(texts.items()), "doc_id long, text string"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    df = e.queries()["multimodal_meta"](spark, str(tmp_path))
+    got = {r["doc_id"]: (r["n_bytes"], r["content_sha256"]) for r in df.collect()}
+    want = {}
+    for doc_id, text in texts.items():
+        b = (text or "").encode("utf-8")
+        want[doc_id] = (len(b), hashlib.sha256(b).hexdigest())
+    assert got == want
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert "Python" not in p and "Pandas" not in p, p

@@ -145,9 +145,10 @@ def test_png_dimensions_header_only():
 def test_decode_image_dispatch():
     img = _gradient(3, 3, 3)
     assert np.array_equal(decode_image(encode_png(img)), img)
-    # JPEG and GIF are real codecs since round 4: malformed = data error
-    with pytest.raises(ValueError):
+    # JPEG has no decoder: an unsupported format, not a data error
+    with pytest.raises(NotImplementedError):
         decode_image(b"\xff\xd8\xff\xe0 fake jpeg")
+    # GIF is a real codec: malformed = data error
     with pytest.raises(ValueError):
         decode_image(b"GIF89a malformed stream")
     # WebP is a real codec since round 5: no-VP8L-chunk = data error

@@ -161,6 +161,31 @@ def test_near_dup_mega_cluster_bucket_cap(spark):
     assert stats["n_over_cap"] >= 1 and stats["max_bucket"] == 1000
 
 
+def test_near_dup_drops_invalid_vectors(spark):
+    """NULL, wrong-dimension and zero-norm vectors are dropped before
+    keying (fail-soft, like semdedup) instead of killing the job."""
+    v = [float(x) for x in _unit(np.random.default_rng(5), 64)]
+    rows = [(0, v), (1, v), (2, v[:63]), (3, None), (4, [0.0] * 64)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = {(r["id_a"], r["id_b"]) for r in embedding_near_duplicates(df, dim=64).collect()}
+    assert got == {(0, 1)}
+
+
+@pytest.mark.parametrize("cap", [4096, 2])
+def test_near_dup_never_pairs_an_id_with_itself(spark, cap):
+    """Two rows sharing an id must not emit the self-pair, in the
+    all-pairs branch and in the over-cap chaining branch alike."""
+    v = [float(x) for x in _unit(np.random.default_rng(6), 64)]
+    df = spark.createDataFrame(
+        [(1, v), (1, v), (2, v)], "vec_id long, embedding array<float>"
+    )
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in embedding_near_duplicates(df, dim=64, max_bucket_size=cap).collect()
+    }
+    assert got == {(1, 2)}
+
+
 def test_ivf_with_kmeans_centroids(spark, emb, emb_np):
     """The fitted-quantizer path: seeded KMeans centroids plug into the
     same map-only assignment; recall at n_probe=3 must beat or match the
