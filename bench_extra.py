@@ -4,7 +4,7 @@
 optimization hits the real cost, not a guess. Separate from the frozen
 bench.py on purpose. Prints one JSON line.
 
-Env: SPARK_GRAFT_SF_DIR (default sf1.0 — the driver's measured scale),
+Env: SPARK_GRAFT_SF_DIR (default sf0.1, like bench.py),
 SPARK_GRAFT_CPUS, SPARK_GRAFT_PROBES (comma list; default all).
 """
 
@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
+SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 

@@ -80,7 +80,6 @@ class PipelineConfig:
     blocks: BlockFilterConfig = field(default_factory=BlockFilterConfig)
     # scale knobs (Spark-side only; no reference analog — single process there)
     salt_partitions: int = 0  # 0 = leave partitioning to AQE/source splits
-    arrow_max_records_per_batch: int = 512
 
     def config_hash(self) -> str:
         """Stable 16-hex-char config fingerprint (reference ingest/config.py:134-136)."""

@@ -28,8 +28,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 BUCKET_COL = "ck_bucket"
 
 
-def with_bucket(df: DataFrame, n_buckets: int, url_col: str = "url") -> DataFrame:
-    return df.withColumn(BUCKET_COL, F.pmod(F.xxhash64(url_col), F.lit(n_buckets)).cast("int"))
+def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
+    return df.withColumn(BUCKET_COL, F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -58,8 +58,6 @@ def run_resumable(
     out_dir: str,
     run_id: str,
     n_buckets: int = 64,
-    url_col: str = "url",
-    verify_readback: bool = True,
 ) -> int:
     """Run ``transform`` over the not-yet-committed buckets of ``pages`` and
     commit them; returns the number of buckets committed this invocation.
@@ -69,18 +67,14 @@ def run_resumable(
     transform legitimately produces 0 rows still gets a manifest row (rows=0)
     and is never reprocessed, so sparse runs converge to fully-complete.
     Buckets absent from the input entirely remain pending (fail-closed: a
-    truncated upstream never registers its missing buckets as done).
-
-    ``verify_readback=True`` (default, fail-closed) re-reads the durable
-    files to count committed rows; ``False`` skips the second read (rows=-1
-    in the manifest) — the at-scale opt-out when the write itself is trusted
-    (e.g. an Iceberg commit, which is atomic).
+    truncated upstream never registers its missing buckets as done), and
+    the manifest's row counts are always re-read from the durable files.
     """
     done = completed_buckets(spark, out_dir, run_id)
     pending = sorted(set(range(n_buckets)) - done)
     if not pending:
         return 0
-    src = with_bucket(pages, n_buckets, url_col)
+    src = with_bucket(pages, n_buckets)
     if done:
         src = src.filter(F.col(BUCKET_COL).isin(pending))
 
@@ -93,7 +87,7 @@ def run_resumable(
         return 0
 
     out = transform(src.drop(BUCKET_COL))
-    out = with_bucket(out, n_buckets, url_col)
+    out = with_bucket(out, n_buckets)
     # Rows whose natural bucket is NOT assigned this invocation (synthetic
     # urls a transform may emit, e.g. extract_pages_with_lineage's
     # lineage:// rows) must never land in a committed partition — dynamic
@@ -107,7 +101,7 @@ def run_resumable(
         assigned_arr = F.array(*[F.lit(b) for b in assigned])
         fallback = F.element_at(
             assigned_arr,
-            (F.pmod(F.xxhash64(F.col(url_col)), F.lit(len(assigned))) + 1).cast("int"),
+            (F.pmod(F.xxhash64(F.col("url")), F.lit(len(assigned))) + 1).cast("int"),
         )
         out = out.withColumn(
             BUCKET_COL,
@@ -128,39 +122,32 @@ def run_resumable(
     assigned_df = spark.createDataFrame(
         [(run_id, b) for b in assigned], schema=f"run_id string, {BUCKET_COL} int"
     )
-    if verify_readback:
-        # fail-closed commit: count rows back from the durable files; buckets
-        # whose transform produced no rows commit as rows=0 via the left join.
-        try:
-            written = (
-                spark.read.parquet(_data_path(out_dir))
-                .filter(F.col(BUCKET_COL).isin(assigned))
-                .groupBy(BUCKET_COL)
-                .agg(F.count(F.lit(1)).alias("rows"))
-            )
-        except AnalysisException as exc:
-            # fail-closed: ONLY the no-files case (every assigned bucket
-            # produced 0 rows — no parquet footers to infer a schema from)
-            # commits as all-zero counts. Any other readback failure (torn
-            # files, transient FS error) must abort the commit, or the
-            # manifest would mark torn buckets complete with rows=0.
-            getter = getattr(exc, "getCondition", None) or getattr(
-                exc, "getErrorClass", lambda: None
-            )
-            cond = getter() or str(exc)
-            if "PATH_NOT_FOUND" in cond or "UNABLE_TO_INFER_SCHEMA" in cond:
-                written = spark.createDataFrame(
-                    [], schema=f"{BUCKET_COL} int, rows long"
-                )
-            else:
-                raise
-        manifest_rows = assigned_df.join(written, BUCKET_COL, "left").select(
-            "run_id", BUCKET_COL, F.coalesce(F.col("rows"), F.lit(0)).alias("rows")
+    # fail-closed commit: count rows back from the durable files; buckets
+    # whose transform produced no rows commit as rows=0 via the left join.
+    try:
+        written = (
+            spark.read.parquet(_data_path(out_dir))
+            .filter(F.col(BUCKET_COL).isin(assigned))
+            .groupBy(BUCKET_COL)
+            .agg(F.count(F.lit(1)).alias("rows"))
         )
-    else:
-        manifest_rows = assigned_df.select(
-            "run_id", BUCKET_COL, F.lit(-1).cast("long").alias("rows")
+    except AnalysisException as exc:
+        # fail-closed: ONLY the no-files case (every assigned bucket
+        # produced 0 rows — no parquet footers to infer a schema from)
+        # commits as all-zero counts. Any other readback failure (torn
+        # files, transient FS error) must abort the commit, or the
+        # manifest would mark torn buckets complete with rows=0.
+        getter = getattr(exc, "getCondition", None) or getattr(
+            exc, "getErrorClass", lambda: None
         )
+        cond = getter() or str(exc)
+        if "PATH_NOT_FOUND" in cond or "UNABLE_TO_INFER_SCHEMA" in cond:
+            written = spark.createDataFrame([], schema=f"{BUCKET_COL} int, rows long")
+        else:
+            raise
+    manifest_rows = assigned_df.join(written, BUCKET_COL, "left").select(
+        "run_id", BUCKET_COL, F.coalesce(F.col("rows"), F.lit(0)).alias("rows")
+    )
     manifest_rows.write.mode("append").parquet(_manifest_path(out_dir))
     return len(assigned)
 

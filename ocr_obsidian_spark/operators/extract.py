@@ -7,6 +7,11 @@ per-page loop, ingest/ocr.py:187-254 + cli.py:162-215, collapses into this
 stage). The only cross-row dependency (arabic mode switch) lives in
 operators/printed_page.py as a window.
 
+There is exactly one per-page loop, ``extract_pages_with_lineage``: it emits
+the corpus rows plus one trailing per-partition lineage row
+(``schemas.LINEAGE``) from the same map stage. ``extract_pages`` is its
+corpus half, so every caller runs the same per-page code.
+
 Scale design (10^12-doc target):
   * ``html`` is by far the widest column; it is consumed inside this stage
     and never appears in the output schema, so downstream stages prune it
@@ -14,8 +19,6 @@ Scale design (10^12-doc target):
   * skew from giant pages is defused by an optional pre-repartition on
     ``xxhash64(url)`` (urls are unique ⇒ uniform spread) and bounded Arrow
     batches (``spark.sql.execution.arrow.maxRecordsPerBatch``).
-  * per-partition lineage/metrics rows (``schemas.LINEAGE``) ride the same
-    map stage: see ``extract_pages_with_lineage``.
 """
 
 from __future__ import annotations
@@ -36,12 +39,6 @@ from ..schemas import CORPUS, LINEAGE
 from ..sources.fixtures import parse_page_payload
 
 _URL_BOOK_RE = re.compile(r"/book_([^/]+)/page_(\d+)")
-
-# the extract stage emits the full canonical corpus schema (the final
-# extracted_text is page-local: QA gate + placeholder only depend on the
-# page itself)
-CORPUS_OUT = CORPUS
-
 
 def parse_url_book_page(url: str) -> tuple[str, int]:
     """(book_id, page_num) from a fixture-style url; generic urls fall back
@@ -172,35 +169,6 @@ def _extract_one(url: str, html: Any, cfg: PipelineConfig) -> dict[str, Any]:
     }
 
 
-def extract_pages(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """pages → corpus (one Arrow-batched map stage, no shuffle unless salting
-    is requested via ``cfg.salt_partitions``)."""
-    config_hash = cfg.config_hash()
-    out_cols = [f.name for f in CORPUS_OUT.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # columnar accumulation (dict-of-lists) — noticeably cheaper
-            # than pd.DataFrame(list-of-dicts) at batch granularity
-            data: dict[str, list[Any]] = {k: [] for k in out_cols}
-            for url, warc_ts, html, lang in zip(
-                pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]
-            ):
-                rec = _extract_one(url, html, cfg)
-                rec["url"] = url
-                rec["warc_ts"] = warc_ts
-                rec["lang"] = lang
-                rec["config_hash"] = config_hash
-                for k in out_cols:
-                    data[k].append(rec[k])
-            yield pd.DataFrame(data, columns=out_cols)
-
-    src = df.select("url", "warc_ts", "html", "lang")
-    if cfg.salt_partitions > 0:
-        src = src.repartition(cfg.salt_partitions, F.xxhash64("url"))
-    return src.mapInPandas(run, schema=CORPUS_OUT)
-
-
 # combined output schema for the single-pass extract+lineage stage: a row
 # kind marker, the corpus columns (nullable — lineage rows leave them null),
 # and the lineage metric columns (null on data rows). config_hash is shared.
@@ -211,7 +179,7 @@ _LINEAGE_EXTRA = [
 ]
 EXTRACT_COMBINED = T.StructType(
     [T.StructField("row_kind", T.StringType(), False)]
-    + [T.StructField(f.name, f.dataType, True) for f in CORPUS_OUT.fields]
+    + [T.StructField(f.name, f.dataType, True) for f in CORPUS.fields]
     + _LINEAGE_EXTRA
 )
 
@@ -235,7 +203,7 @@ def extract_pages_with_lineage(
     from pyspark import TaskContext
 
     config_hash = cfg.config_hash()
-    corpus_cols = [f.name for f in CORPUS_OUT.fields]
+    corpus_cols = [f.name for f in CORPUS.fields]
     extra_cols = [f.name for f in _LINEAGE_EXTRA]
     all_cols = ["row_kind"] + corpus_cols + extra_cols
 
@@ -250,6 +218,8 @@ def extract_pages_with_lineage(
         min_url: str | None = None
         max_url: str | None = None
         for pdf in batches:
+            # columnar accumulation (dict-of-lists) — noticeably cheaper
+            # than pd.DataFrame(list-of-dicts) at batch granularity
             data: dict[str, list[Any]] = {k: [] for k in all_cols}
             for url, warc_ts, html, lang in zip(
                 pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]
@@ -303,11 +273,19 @@ def extract_pages_with_lineage(
 
 def split_extract_lineage(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(corpus, lineage) halves of the combined single-pass output."""
-    corpus_cols = [f.name for f in CORPUS_OUT.fields]
+    corpus_cols = [f.name for f in CORPUS.fields]
     lineage_cols = [f.name for f in LINEAGE.fields]
     corpus = combined.filter(F.col("row_kind") == "data").select(*corpus_cols)
     lineage = combined.filter(F.col("row_kind") == "lineage").select(*lineage_cols)
     return corpus, lineage
+
+
+def extract_pages(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+    """pages → corpus (the full canonical corpus schema; the final
+    extracted_text is page-local). The corpus half of
+    ``extract_pages_with_lineage`` — one Arrow-batched map stage, no shuffle
+    unless salting is requested via ``cfg.salt_partitions``."""
+    return split_extract_lineage(extract_pages_with_lineage(df, cfg, run_id="extract"))[0]
 
 
 def parse_lines_json(lines_json: str | None) -> list[dict[str, Any]]:

@@ -20,11 +20,10 @@ would funnel everything through few fat partitions. Instead:
   2. keep only the urls whose roman result must be nulled — sparse by
      construction (roman headers appearing after an arabic switch);
   3. null via a broadcast left join on url — the corpus itself never
-     shuffles. The default auto-sizes: a cheap narrow count of the null
-     set picks broadcast only below ``max_broadcast_nulls`` urls, so the
+     shuffles. The join auto-sizes: a cheap narrow count of the null set
+     picks broadcast only up to ``MAX_BROADCAST_NULLS`` urls, so the
      adversarial corpus (roman headers after an arabic switch everywhere)
-     degrades to a regular join instead of a driver OOM; pass
-     ``broadcast_nulls=True/False`` to override either way.
+     degrades to a regular join instead of a driver OOM.
 """
 
 from __future__ import annotations
@@ -32,6 +31,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
+
+# largest null set the mode switch broadcasts (~2M urls ≈ low hundreds of
+# MB on the driver); above it the join falls back to a regular join
+MAX_BROADCAST_NULLS = 2_000_000
 
 
 def roman_null_set(corpus: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
@@ -55,30 +58,24 @@ def roman_null_set(corpus: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> D
 
 
 def apply_printed_page_mode(
-    corpus: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    *,
-    broadcast_nulls: bool | None = None,
-    max_broadcast_nulls: int = 2_000_000,
+    corpus: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
-    """``broadcast_nulls``: True forces the broadcast join, False forces a
-    regular join, None (default) counts the null set first — one extra job
-    over the five narrow columns — and broadcasts only when it holds fewer
-    than ``max_broadcast_nulls`` urls (~2M urls ≈ low hundreds of MB on the
-    driver; size to your driver memory)."""
-    nulls = roman_null_set(corpus, cfg).withColumn("_null_roman", F.lit(True))
-    if broadcast_nulls is None:
-        # materialize the (sparse by construction) null set ONCE behind a
-        # localCheckpoint (round 6): the sizing count then reads the
-        # truncated blocks and the join broadcasts the same blocks, so
-        # the narrow window pass executes exactly once instead of twice
-        # (count + join recompute). Leak-free unlike persist(): truncated
-        # blocks are dropped with the RDD, no session-lifetime cache.
-        from .xengine import truncate_lineage
+    """Null every roman detection the per-book mode switch suppresses. The
+    null set is counted first — one extra job over the five narrow columns
+    — and broadcast only when it holds at most ``MAX_BROADCAST_NULLS``
+    urls."""
+    # materialize the (sparse by construction) null set ONCE behind a
+    # localCheckpoint (round 6): the sizing count then reads the truncated
+    # blocks and the join broadcasts the same blocks, so the narrow window
+    # pass executes exactly once instead of twice (count + join recompute).
+    # Leak-free unlike persist(): truncated blocks are dropped with the
+    # RDD, no session-lifetime cache.
+    from .xengine import truncate_lineage
 
-        nulls = truncate_lineage(nulls, "local")
-        broadcast_nulls = nulls.count() <= max_broadcast_nulls
-    if broadcast_nulls:
+    nulls = truncate_lineage(
+        roman_null_set(corpus, cfg).withColumn("_null_roman", F.lit(True)), "local"
+    )
+    if nulls.count() <= MAX_BROADCAST_NULLS:
         nulls = F.broadcast(nulls)
     keep = F.col("_null_roman").isNull()
     return (

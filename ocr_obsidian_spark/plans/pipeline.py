@@ -1,10 +1,13 @@
 """The full extraction pipeline, composed.
 
-    pages ──extract_pages──► corpus' ──apply_printed_page_mode──► corpus
-                                 │
-    triggers ────make_spans──────┤
-                                 ▼
-                            emit_notes ──► notes
+    pages ──extract_pages_with_lineage──► corpus' + lineage
+                                            │ apply_printed_page_mode
+                                            ▼
+                                          corpus ─────────┐
+                                            │             │
+    triggers ─────────make_spans────────────┤             │
+                                            ▼             ▼
+                                          spans ──► emit_notes ──► notes
 
 Stage boundaries mirror the reference's five CLI stages (SURVEY.md §0) but
 collapse the page-local work into single map stages; the whole pipeline has
@@ -16,6 +19,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
@@ -42,7 +46,6 @@ def run_pipeline(
     run_id: str = "run-0",
     book_meta: BookMeta | None = None,
     broadcast_triggers: bool = True,
-    persist_corpus: bool = True,
     detect_triggers: bool = False,
 ) -> PipelineResult:
     """``detect_triggers=True`` computes block candidates FROM the pages
@@ -55,16 +58,14 @@ def run_pipeline(
         triggers = detect_blocks(pages, cfg)
     # single pass: corpus rows + per-partition lineage rows from ONE
     # mapInPandas (the input is never re-read for metrics)
-    combined = extract_pages_with_lineage(pages, cfg, run_id=run_id)
-    if persist_corpus:
-        # stage boundary: the mode window, the lineage split and every
-        # downstream consumer read the one-pass extract output instead of
-        # re-running the UDF (the reference's single-OCR-pass rule,
-        # README.md:3-8; at cluster scale this boundary is the checkpointed
-        # corpus table itself)
-        from pyspark import StorageLevel
-
-        combined = combined.persist(StorageLevel.MEMORY_AND_DISK)
+    # stage boundary: the mode window, the lineage split and every
+    # downstream consumer read the one-pass extract output instead of
+    # re-running the UDF (the reference's single-OCR-pass rule,
+    # README.md:3-8; at cluster scale this boundary is the checkpointed
+    # corpus table itself)
+    combined = extract_pages_with_lineage(pages, cfg, run_id=run_id).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     raw, lineage = split_extract_lineage(combined)
     corpus = apply_printed_page_mode(raw, cfg)
     spans = notes = None

@@ -1,8 +1,11 @@
 """Streaming extraction: unbounded pages source → corpus sink.
 
 Design notes (Spark-first):
-  * ``extract_pages`` is a stateless Arrow-batched map — it composes with
-    streaming DataFrames unchanged; one micro-batch = one bounded extract.
+  * ``extract_pages`` is the batch spine's own per-page loop (the corpus
+    half of ``extract_pages_with_lineage``), a stateless Arrow-batched map
+    plus a row-kind filter — it composes with streaming DataFrames
+    unchanged; one micro-batch = one bounded extract. Each micro-batch's
+    per-partition lineage rows are filtered out, not written to the sink.
   * the per-book printed-page mode switch has TWO streaming stories:
     - the default stays a batch fix-up over the materialized corpus
       (narrow, column-pruned — operators/printed_page.py), mirroring how

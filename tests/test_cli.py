@@ -37,6 +37,13 @@ def test_unknown_keys_rejected():
         pipeline_config_from_dict({"not_a_section": 1})
 
 
+def test_removed_arrow_batch_key_rejected():
+    """The Arrow batch size is a session setting (``build_session``), not a
+    pipeline knob: the loader must reject the key, not accept and ignore it."""
+    with pytest.raises(ConfigError, match="arrow_max_records_per_batch"):
+        pipeline_config_from_dict({"arrow_max_records_per_batch": 64})
+
+
 def test_missing_and_invalid_yaml_exit_code_3(tmp_path):
     assert main(["extract", "--pages", "fixtures:1,2,1", "--out", str(tmp_path / "o"),
                  "--config", str(tmp_path / "missing.yaml")]) == 3

@@ -76,9 +76,11 @@ def test_export_byte_identical_to_reference_join(corpus, fmt):
 
 def test_single_pass_extract_lineage(spark, pages_df):
     """extract_pages_with_lineage emits corpus AND per-partition metrics
-    from one map stage; the corpus half is identical to extract_pages."""
+    from one map stage; every data row equals the driver-side page-local
+    function plus the pass-through columns."""
+    from ocr_obsidian_spark.config import DEFAULT_CONFIG
     from ocr_obsidian_spark.operators.extract import (
-        extract_pages,
+        _extract_one,
         extract_pages_with_lineage,
         split_extract_lineage,
     )
@@ -93,9 +95,17 @@ def test_single_pass_extract_lineage(spark, pages_df):
     assert sum(r["bytes_in"] for r in lrows) > 0
     covered = [r for r in lrows if r["min_url"] is not None]
     assert covered and all(r["min_url"] <= r["max_url"] for r in covered)
-    a = {r["url"]: r["extracted_text"] for r in got_corpus.collect()}
-    b = {r["url"]: r["extracted_text"] for r in extract_pages(pages_df).collect()}
-    assert a == b
+    pages = {r["url"]: r for r in pages_df.collect()}
+    got = {r["url"]: r.asDict() for r in got_corpus.collect()}
+    assert set(got) == set(pages)
+    config_hash = DEFAULT_CONFIG.config_hash()
+    for url, row in got.items():
+        page = pages[url]
+        want = _extract_one(url, page["html"], DEFAULT_CONFIG)
+        want.update(
+            url=url, warc_ts=page["warc_ts"], lang=page["lang"], config_hash=config_hash
+        )
+        assert row == want, url
     combined.unpersist()
 
 

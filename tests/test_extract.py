@@ -1,0 +1,156 @@
+"""Extract-spine tests that need no reference oracle: fail-soft decoding,
+partitioning invariance, the per-partition lineage rows and the
+printed-page mode switch's broadcast sizing."""
+
+from __future__ import annotations
+
+
+def test_malformed_payloads_fail_soft(spark):
+    """At 10^12 docs a corrupt payload must degrade to a flagged row, never
+    kill the stage — NULL html, truncated JSON, non-dict JSON, words of the
+    wrong type, and words with broken bboxes all survive with
+    parse_ok=False; detection skips them without error."""
+    import datetime as _dt
+    import json as _json
+
+    from ocr_obsidian_spark.operators.blocks import detect_blocks
+    from ocr_obsidian_spark.operators.extract import extract_pages
+    from ocr_obsidian_spark.schemas import PAGES
+
+    ts = _dt.datetime(2020, 1, 1, tzinfo=_dt.timezone.utc)
+    good = _json.dumps(
+        {"page_width": 1000, "page_height": 1400, "scan_relpath": "s.png",
+         "words": [{"t": "Hello", "b": [10, 300, 60, 322], "c": 95.0}]}
+    ).encode()
+    rows = [
+        ("https://x.test/book_b/page_0001", ts, None, "", "eng"),
+        ("https://x.test/book_b/page_0002", ts, b"{truncated", "", "eng"),
+        ("https://x.test/book_b/page_0003", ts, b"[1,2,3]", "", "eng"),
+        ("https://x.test/book_b/page_0004", ts, b'{"words": 42}', "", "eng"),
+        ("https://x.test/book_b/page_0005", ts,
+         b'{"words": [{"t": "x", "b": [1], "c": 90.0}, {"t": "ok", "b": [0,0,30,20], "c": 90.0}]}',
+         "", "eng"),
+        ("https://x.test/book_b/page_0006", ts, good, "", "eng"),
+    ]
+    df = spark.createDataFrame(rows, schema=PAGES)
+    out = {r["page_num"]: r for r in extract_pages(df).collect()}
+    assert len(out) == 6
+    for p in (1, 2, 3, 4, 5):
+        assert out[p]["parse_ok"] is False, p
+    assert out[6]["parse_ok"] is True
+    assert out[6]["extracted_text"] == "Hello"
+    # the salvageable word on page 5 still extracts
+    assert out[5]["extracted_text"] == "ok"
+    # detection skips undecodable/pixel-less pages silently
+    assert detect_blocks(df).count() == 0
+
+
+def test_determinism_across_partitionings(spark, pages_df):
+    from ocr_obsidian_spark.operators.extract import extract_pages
+    from ocr_obsidian_spark.operators.printed_page import apply_printed_page_mode
+
+    a = apply_printed_page_mode(extract_pages(pages_df.repartition(1)))
+    b = apply_printed_page_mode(extract_pages(pages_df.repartition(16)))
+    rows_a = {r["url"]: (r["extracted_text"], r["printed_page"]) for r in a.collect()}
+    rows_b = {r["url"]: (r["extracted_text"], r["printed_page"]) for r in b.collect()}
+    assert rows_a == rows_b
+
+
+def test_salted_repartition_same_results(spark, pages_df):
+    from ocr_obsidian_spark.config import PipelineConfig
+    from ocr_obsidian_spark.operators.extract import extract_pages
+
+    cfg = PipelineConfig(salt_partitions=12)
+    salted = {r["url"]: r["extracted_text"] for r in extract_pages(pages_df, cfg).collect()}
+    plain = {r["url"]: r["extracted_text"] for r in extract_pages(pages_df).collect()}
+    assert salted == plain
+
+
+def test_mode_switch_autosizes_null_broadcast(spark, monkeypatch):
+    """Adversarial corpus — every book switches to arabic on page 1, romans
+    everywhere after — must not broadcast a null set above the cap: the
+    count-first sizing falls back to a regular join. Values are identical
+    on both paths (round-2 verdict #7)."""
+    from pyspark.sql import functions as F
+
+    from ocr_obsidian_spark.operators import printed_page
+    from ocr_obsidian_spark.operators.printed_page import apply_printed_page_mode
+
+    rows = []
+    for b in range(20):
+        rows.append((f"b{b}/p0", f"b{b}", 0, 100, "100", "arabic"))
+        for p in range(1, 30):
+            rows.append((f"b{b}/p{p}", f"b{b}", p, p, "xiv", "roman"))
+    corpus = spark.createDataFrame(
+        rows,
+        "url string, book_id string, page_num int, printed_page int, "
+        "printed_page_text string, printed_page_kind string",
+    )
+
+    def null_count(df):
+        return df.filter(F.col("printed_page").isNull()).count()
+
+    def has_broadcast_hint(df):
+        # the explicit driver-side hint is what risks OOM on a truly huge
+        # set; AQE may still choose a runtime broadcast from actual sizes,
+        # which is exactly the safe behavior the fallback delegates to
+        return "strategy=broadcast" in df._jdf.queryExecution().optimizedPlan().toString()
+
+    monkeypatch.setattr(printed_page, "MAX_BROADCAST_NULLS", 10)
+    fallback = apply_printed_page_mode(corpus)
+    assert not has_broadcast_hint(fallback)
+    monkeypatch.undo()
+    # the same null set (580 urls) is sparse at the default cap: broadcast
+    default = apply_printed_page_mode(corpus)
+    assert has_broadcast_hint(default)
+    assert null_count(fallback) == null_count(default) == 20 * 29
+    # the triggering arabic pages themselves are untouched
+    assert fallback.filter(F.col("printed_page_kind") == "arabic").count() == 20
+
+
+def test_lineage_row_per_partition_including_empty(spark, pages_df):
+    """Every map partition emits exactly one lineage row, an empty one
+    included (rows_in=0); ``extract_pages`` keeps none of them."""
+    from ocr_obsidian_spark.operators.extract import (
+        extract_pages,
+        extract_pages_with_lineage,
+        split_extract_lineage,
+    )
+
+    small = pages_df.limit(5)
+    n = small.count()
+    assert n < 16
+    src = small.repartition(16)
+    _, lineage = split_extract_lineage(extract_pages_with_lineage(src, run_id="e"))
+    lrows = lineage.collect()
+    assert len(lrows) == 16
+    assert sum(r["rows_in"] for r in lrows) == n
+    assert any(r["rows_in"] == 0 and r["min_url"] is None for r in lrows)
+    urls = [r["url"] for r in extract_pages(src).collect()]
+    assert len(urls) == n
+    assert not [u for u in urls if u.startswith("lineage://")]
+
+
+def test_debug_rides_as_corpus_column(spark, pages_df):
+    """Debug artifacts become DATA rows (SURVEY §2.10): run the extract
+    stage twice with debug on — the pp_debug_json column must be
+    byte-identical per url and structurally sane."""
+    import json as _json
+
+    from ocr_obsidian_spark.config import PipelineConfig, PrintedPageConfig
+    from ocr_obsidian_spark.operators.extract import extract_pages
+
+    cfg = PipelineConfig(printed_page=PrintedPageConfig(debug=True))
+    sample = pages_df.limit(12)
+    a = {r["url"]: r["pp_debug_json"] for r in extract_pages(sample, cfg).collect()}
+    b = {r["url"]: r["pp_debug_json"] for r in extract_pages(sample.repartition(4), cfg).collect()}
+    assert a == b and a
+    payloads = [_json.loads(v) for v in a.values() if v]
+    assert payloads
+    for p in payloads:
+        assert set(p) == {"selected", "selected_kind", "arabic_top_candidates", "roman_top_candidates"}
+        assert len(p["arabic_top_candidates"]) <= 10
+        assert len(p["roman_top_candidates"]) <= 10
+    # default config keeps the column null (no payload bloat unless asked)
+    off = extract_pages(sample).select("pp_debug_json").distinct().collect()
+    assert [r[0] for r in off] == [None]

@@ -222,104 +222,3 @@ def test_notes_emitted_and_valid(pipeline_result):
         assert sidecar["span_id"] == n["span_id"]
         assert n["note_path"] not in seen_paths
         seen_paths.add(n["note_path"])
-
-
-def test_malformed_payloads_fail_soft(spark):
-    """At 10^12 docs a corrupt payload must degrade to a flagged row, never
-    kill the stage — NULL html, truncated JSON, non-dict JSON, words of the
-    wrong type, and words with broken bboxes all survive with
-    parse_ok=False; detection skips them without error."""
-    import datetime as _dt
-    import json as _json
-
-    from ocr_obsidian_spark.operators.blocks import detect_blocks
-    from ocr_obsidian_spark.operators.extract import extract_pages
-    from ocr_obsidian_spark.schemas import PAGES
-
-    ts = _dt.datetime(2020, 1, 1, tzinfo=_dt.timezone.utc)
-    good = _json.dumps(
-        {"page_width": 1000, "page_height": 1400, "scan_relpath": "s.png",
-         "words": [{"t": "Hello", "b": [10, 300, 60, 322], "c": 95.0}]}
-    ).encode()
-    rows = [
-        ("https://x.test/book_b/page_0001", ts, None, "", "eng"),
-        ("https://x.test/book_b/page_0002", ts, b"{truncated", "", "eng"),
-        ("https://x.test/book_b/page_0003", ts, b"[1,2,3]", "", "eng"),
-        ("https://x.test/book_b/page_0004", ts, b'{"words": 42}', "", "eng"),
-        ("https://x.test/book_b/page_0005", ts,
-         b'{"words": [{"t": "x", "b": [1], "c": 90.0}, {"t": "ok", "b": [0,0,30,20], "c": 90.0}]}',
-         "", "eng"),
-        ("https://x.test/book_b/page_0006", ts, good, "", "eng"),
-    ]
-    df = spark.createDataFrame(rows, schema=PAGES)
-    out = {r["page_num"]: r for r in extract_pages(df).collect()}
-    assert len(out) == 6
-    for p in (1, 2, 3, 4, 5):
-        assert out[p]["parse_ok"] is False, p
-    assert out[6]["parse_ok"] is True
-    assert out[6]["extracted_text"] == "Hello"
-    # the salvageable word on page 5 still extracts
-    assert out[5]["extracted_text"] == "ok"
-    # detection skips undecodable/pixel-less pages silently
-    assert detect_blocks(df).count() == 0
-
-
-def test_determinism_across_partitionings(spark, pages_df):
-    from ocr_obsidian_spark.operators.extract import extract_pages
-    from ocr_obsidian_spark.operators.printed_page import apply_printed_page_mode
-
-    a = apply_printed_page_mode(extract_pages(pages_df.repartition(1)))
-    b = apply_printed_page_mode(extract_pages(pages_df.repartition(16)))
-    rows_a = {r["url"]: (r["extracted_text"], r["printed_page"]) for r in a.collect()}
-    rows_b = {r["url"]: (r["extracted_text"], r["printed_page"]) for r in b.collect()}
-    assert rows_a == rows_b
-
-
-def test_salted_repartition_same_results(spark, pages_df):
-    from ocr_obsidian_spark.config import PipelineConfig
-    from ocr_obsidian_spark.operators.extract import extract_pages
-
-    cfg = PipelineConfig(salt_partitions=12)
-    salted = {r["url"]: r["extracted_text"] for r in extract_pages(pages_df, cfg).collect()}
-    plain = {r["url"]: r["extracted_text"] for r in extract_pages(pages_df).collect()}
-    assert salted == plain
-
-
-def test_mode_switch_autosizes_null_broadcast(spark):
-    """Adversarial corpus — every book switches to arabic on page 1, romans
-    everywhere after — must not broadcast the (huge) null set at the
-    default: the auto path counts first and falls back to a regular join.
-    Values are identical on both paths (round-2 verdict #7)."""
-    from pyspark.sql import functions as F
-
-    from ocr_obsidian_spark.operators.printed_page import apply_printed_page_mode
-
-    rows = []
-    for b in range(20):
-        rows.append((f"b{b}/p0", f"b{b}", 0, 100, "100", "arabic"))
-        for p in range(1, 30):
-            rows.append((f"b{b}/p{p}", f"b{b}", p, p, "xiv", "roman"))
-    corpus = spark.createDataFrame(
-        rows,
-        "url string, book_id string, page_num int, printed_page int, "
-        "printed_page_text string, printed_page_kind string",
-    )
-
-    def null_count(df):
-        return df.filter(F.col("printed_page").isNull()).count()
-
-    def has_broadcast_hint(df):
-        # the explicit driver-side hint is what risks OOM on a truly huge
-        # set; AQE may still choose a runtime broadcast from actual sizes,
-        # which is exactly the safe behavior the auto path delegates to
-        return "strategy=broadcast" in df._jdf.queryExecution().optimizedPlan().toString()
-
-    auto = apply_printed_page_mode(corpus, max_broadcast_nulls=10)
-    assert not has_broadcast_hint(auto)
-    forced = apply_printed_page_mode(corpus, broadcast_nulls=True)
-    assert null_count(auto) == null_count(forced) == 20 * 29
-    # the triggering arabic pages themselves are untouched
-    assert auto.filter(F.col("printed_page_kind") == "arabic").count() == 20
-    # sparse null set still broadcasts at the default threshold
-    small = apply_printed_page_mode(corpus)
-    assert has_broadcast_hint(small) and has_broadcast_hint(forced)

@@ -176,28 +176,3 @@ def test_debug_payload_determinism():
     assert len(dbg["arabic_top_candidates"]) == 2
     assert dbg["arabic_top_candidates"][0] == dbg["selected"]
     assert "_preferred" not in dbg["selected"] and "_edge_score" not in dbg["selected"]
-
-
-def test_debug_rides_as_corpus_column(spark, pages_df):
-    """Debug artifacts become DATA rows (SURVEY §2.10): run the extract
-    stage twice with debug on — the pp_debug_json column must be
-    byte-identical per url and structurally sane."""
-    import json as _json
-
-    from ocr_obsidian_spark.config import PipelineConfig, PrintedPageConfig
-    from ocr_obsidian_spark.operators.extract import extract_pages
-
-    cfg = PipelineConfig(printed_page=PrintedPageConfig(debug=True))
-    sample = pages_df.limit(12)
-    a = {r["url"]: r["pp_debug_json"] for r in extract_pages(sample, cfg).collect()}
-    b = {r["url"]: r["pp_debug_json"] for r in extract_pages(sample.repartition(4), cfg).collect()}
-    assert a == b and a
-    payloads = [_json.loads(v) for v in a.values() if v]
-    assert payloads
-    for p in payloads:
-        assert set(p) == {"selected", "selected_kind", "arabic_top_candidates", "roman_top_candidates"}
-        assert len(p["arabic_top_candidates"]) <= 10
-        assert len(p["roman_top_candidates"]) <= 10
-    # default config keeps the column null (no payload bloat unless asked)
-    off = extract_pages(sample).select("pp_debug_json").distinct().collect()
-    assert [r[0] for r in off] == [None]
