@@ -183,16 +183,6 @@ def merge_hyphen_breaks(lines: list[str]) -> list[str]:
     return out
 
 
-def looks_continuation(current: str, nxt: str) -> bool:
-    """True if ``nxt`` continues the paragraph started by ``current``
-    (reference ingest/render_text.py:103-108)."""
-    if _LIST_ITEM.match(current) or _LIST_ITEM.match(nxt):
-        return False
-    if _HARD_STOP.search(current):
-        return False
-    return _LOWER_FIRST.match(nxt) is not None
-
-
 def render_page_text(lines: Iterable[dict[str, Any]]) -> str:
     """Lines → final cleaned page text. THE invariant function
     (byte-identical to reference ingest/render_text.py:111-128).

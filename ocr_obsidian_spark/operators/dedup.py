@@ -20,7 +20,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
-from .xengine import WS_RE as _NORM_WS
+from .xengine import WS_RE as _NORM_WS, truncate_lineage
 
 
 def normalized_text(col: str = "text") -> F.Column:
@@ -636,7 +636,6 @@ def near_duplicate_matches_against(
     num_hashes: int = 64,
     bands: int = 16,
     max_bucket_size: int | None = 4096,
-    eager_candidates: bool = True,
 ) -> DataFrame:
     """(new_id, existing_id, jaccard) — cross-corpus near-duplicate
     matches: banded-minhash candidates restricted to NEW×EXISTING bucket
@@ -651,15 +650,11 @@ def near_duplicate_matches_against(
     Verification joins each candidate to its two shingle arrays —
     O(candidates), never all-pairs.
 
-    ``eager_candidates`` (round 6, the guide's decide-with-small-rows
-    rule): the candidate table is materialized eagerly (localCheckpoint)
-    and its id sets broadcast-semi-join-filter both corpora BEFORE the
-    shingle arrays are built, so verification shingles are computed for
-    candidate rows only — previously the existing side paid a second
-    full shingle pass just to feed the verify join. The candidate set is
-    bounded by construction (|new ∩ bucket| × per-bucket cap); pass
-    ``False`` to keep the fully-lazy plan (e.g. inside a larger lazy
-    composition, or when candidates could exceed broadcast limits)."""
+    The candidate table is materialized eagerly (localCheckpoint) and its
+    id sets broadcast-semi-join-filter both corpora BEFORE the shingle
+    arrays are built, so verification shingles are computed for candidate
+    rows only. The candidate set is bounded by construction
+    (|new ∩ bucket| × per-bucket cap)."""
     nb = minhash_banded_buckets(new, text_col, id_col, num_hashes, bands).select(
         F.col(id_col).alias("new_id"), "band", "bucket"
     )
@@ -674,23 +669,17 @@ def near_duplicate_matches_against(
             .drop("_rn")
         )
     cands = nb.join(eb, ["band", "bucket"]).select("new_id", "existing_id").distinct()
-    new_src, ex_src = new, existing
-    if eager_candidates:
-        from .xengine import truncate_lineage
-
-        cands = truncate_lineage(cands, "local")
-        new_src = new.join(
-            F.broadcast(cands.select(F.col("new_id").alias(id_col)).distinct()),
-            id_col,
-            "left_semi",
-        )
-        ex_src = existing.join(
-            F.broadcast(
-                cands.select(F.col("existing_id").alias(id_col)).distinct()
-            ),
-            id_col,
-            "left_semi",
-        )
+    cands = truncate_lineage(cands, "local")
+    new_src = new.join(
+        F.broadcast(cands.select(F.col("new_id").alias(id_col)).distinct()),
+        id_col,
+        "left_semi",
+    )
+    ex_src = existing.join(
+        F.broadcast(cands.select(F.col("existing_id").alias(id_col)).distinct()),
+        id_col,
+        "left_semi",
+    )
     sa = new_src.select(
         F.col(id_col).alias("new_id"), word_shingles(text_col, k).alias("_sa")
     )

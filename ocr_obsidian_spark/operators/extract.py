@@ -286,11 +286,3 @@ def extract_pages(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFr
     ``extract_pages_with_lineage`` — one Arrow-batched map stage, no shuffle
     unless salting is requested via ``cfg.salt_partitions``."""
     return split_extract_lineage(extract_pages_with_lineage(df, cfg, run_id="extract"))[0]
-
-
-def parse_lines_json(lines_json: str | None) -> list[dict[str, Any]]:
-    """lines_json column → list of line dicts (executor-side helper for the
-    spans/emit consumers)."""
-    if not lines_json:
-        return []
-    return json.loads(lines_json)

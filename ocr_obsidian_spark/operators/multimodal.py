@@ -3,13 +3,10 @@
 Images/audio/video ride through the pipeline as ``binary`` columns with a
 metadata struct; decode / feature-extraction / resize / frame-sampling are
 Arrow-batched ``mapInPandas`` stages. PNG payloads decode for REAL with a
-pure-stdlib decoder (``decode_png``: zlib inflate + scanline unfiltering),
-GIF first-frames with ``gifcodec.decode_gif`` (LZW + palettes +
-interlace), lossless WebP with ``webpcodec.decode_webp`` (VP8L: prefix
-codes + LZ77 + color cache + all four transforms, round 5), and WAV/PCM
-audio with ``wavcodec.decode_wav`` — all public specs, no PIL/ffmpeg
-needed. The remaining codecs (JPEG, lossy-VP8 WebP, AVIF/TIFF, MP3/AAC,
-video) are a STUBBED boundary in this container and fall back to
+pure-stdlib decoder (``decode_png``: zlib inflate + scanline unfiltering)
+and GIF first-frames with ``gifcodec.decode_gif`` (LZW + palettes +
+interlace) — public specs, no PIL needed. Every other format (JPEG, WebP,
+AVIF/TIFF, WAV/MP3/AAC, video) is a STUBBED boundary and falls back to
 deterministic content-derived fake features, so the distributed path is
 exercised end-to-end either way.
 """
@@ -181,12 +178,10 @@ def image_codecs() -> list[tuple]:
     wires decode_image, extract_media_features and resize_images at
     once."""
     from .gifcodec import GIF_SIGNATURES, decode_gif, gif_dimensions
-    from .webpcodec import decode_webp, is_webp, webp_dimensions
 
     return [
         (lambda d: d.startswith(PNG_SIGNATURE), decode_png, png_dimensions),
         (lambda d: d[:6] in GIF_SIGNATURES, decode_gif, gif_dimensions),
-        (is_webp, decode_webp, webp_dimensions),
     ]
 
 
@@ -194,10 +189,9 @@ def decode_image(payload: bytes) -> np.ndarray:
     """Decode an image payload to a (H, W, C) uint8 array.
 
     PNG decodes for real via ``decode_png``; GIF (first frame) via
-    ``gifcodec.decode_gif``; lossless WebP via ``webpcodec.decode_webp``.
-    Other formats (JPEG, lossy-VP8 WebP, AVIF/TIFF, audio, video) require a
-    codec library (PIL/opencv/ffmpeg) not installed in this container —
-    the pipeline falls back to ``fake_features`` for them (see
+    ``gifcodec.decode_gif``. Other formats (JPEG, WebP, AVIF/TIFF, audio,
+    video) require a codec library (PIL/opencv/ffmpeg) that is not
+    installed — the pipeline falls back to ``fake_features`` for them (see
     ``extract_media_features``)."""
     for sniff, dec, _dims in image_codecs():
         if sniff(payload):
@@ -206,12 +200,12 @@ def decode_image(payload: bytes) -> np.ndarray:
         from PIL import Image  # noqa: F401
     except ImportError as exc:  # pragma: no cover - container has no PIL
         raise NotImplementedError(
-            "non-PNG/GIF/WebP image decode requires a codec (PIL/opencv) "
+            "non-PNG/GIF image decode requires a codec (PIL/opencv) "
             "not present in this environment; pipeline uses the "
             "deterministic stub features"
         ) from exc
     raise NotImplementedError(  # pragma: no cover - container has no PIL
-        "non-PNG/GIF/WebP decode path not implemented"
+        "non-PNG/GIF decode path not implemented"
     )
 
 
@@ -249,32 +243,23 @@ def extract_media_features(
 ) -> DataFrame:
     """(url, payload, meta) → feature rows via an Arrow-batched map stage.
 
-    PNG, GIF and lossless WebP payloads decode for real
-    (``decode_png`` / ``decode_gif`` / ``decode_webp``) and yield
-    pixel-derived features;
-    WAV/PCM audio decodes via ``wavcodec`` into level/duration features;
-    anything else (or a malformed/unsupported-profile payload) falls back
-    fail-soft to the deterministic content-derived ``fake_features`` — a
-    bad payload never kills the stage.
+    PNG and GIF payloads decode for real (``decode_png`` /
+    ``decode_gif``) and yield pixel-derived features; anything else (or a
+    malformed/unsupported-profile payload) falls back fail-soft to the
+    deterministic content-derived ``fake_features`` — a bad payload never
+    kills the stage.
     """
-    from .wavcodec import audio_features
-
-    decoders = [
-        (sniff, lambda d, n, dec=dec: pixel_features(dec(d), n))
-        for sniff, dec, _dims in image_codecs()
-    ] + [
-        (lambda d: d[:4] == b"RIFF" and d[8:12] == b"WAVE", audio_features),
-    ]
+    codecs = image_codecs()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[dict[str, Any]] = []
             for url, payload, meta in zip(pdf["url"], pdf[payload_col], pdf[meta_col]):
                 data = bytes(payload) if payload is not None else b""
-                for sniff, feat in decoders:
+                for sniff, dec, _dims in codecs:
                     if sniff(data):
                         try:
-                            vec = feat(data, dim)
+                            vec = pixel_features(dec(data), dim)
                         except Exception:
                             vec = fake_features(data, dim)
                         break
@@ -316,9 +301,8 @@ def resize_images(
     math + Arrow batch shape are real; the pixel resample itself is the same
     stubbed codec boundary as ``decode_image`` (the output row carries the
     input content hash in place of resized bytes). Missing metadata
-    dimensions are recovered from the PNG IHDR, the GIF screen descriptor or
-    the WebP header; otherwise dimension-less rows pass through at
-    scale 1.0."""
+    dimensions are recovered from the PNG IHDR or the GIF screen
+    descriptor; otherwise dimension-less rows pass through at scale 1.0."""
     codecs = image_codecs()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

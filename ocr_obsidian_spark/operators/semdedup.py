@@ -54,25 +54,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .dedup import pair_components
-from .similarity import _dot, _norm, _valid_embedding, bucketed_cosine_pairs
-
-
-def _centroid_sim(centroids: list[list[float]], vec_col: str, cell_col: str) -> F.Column:
-    """cosine(vec, centroid[cell]) as a map-side expression: the cell is
-    already an integer column, so this is one element_at into an array-of
-    -arrays literal followed by the dot product. The centroid NORMS are
-    computed driver-side into a K-element literal — referencing the K×dim
-    centroid literal once (dot) instead of twice (dot + norm) halves the
-    biggest subtree in the plan."""
-    cent_lit = F.array(
-        *[F.array(*[F.lit(float(v)) for v in c]) for c in centroids]
-    )
-    norm_lit = F.array(
-        *[F.lit(float(sum(v * v for v in c)) ** 0.5) for c in centroids]
-    )
-    own = F.element_at(cent_lit, F.col(cell_col) + 1)
-    own_norm = F.element_at(norm_lit, F.col(cell_col) + 1)
-    return _dot(F.col(vec_col), own) / (_norm(F.col(vec_col)) * own_norm)
+from .similarity import _valid_embedding, bucketed_cosine_pairs
 
 
 def _assign_sim_udf(centroids: list[list[float]]):

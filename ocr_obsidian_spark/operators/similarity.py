@@ -116,23 +116,6 @@ def brute_force_topk(
     )
 
 
-def hyperplane_signature(
-    vec_col: str, dim: int, n_bits: int = 16, seed: int = 7
-) -> F.Column:
-    """Random-hyperplane LSH signature as a bigint column (deterministic
-    projections from a fixed seed, embedded as literals)."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_bits, dim))
-    sig = F.lit(0).cast("long")
-    for i in range(n_bits):
-        plane = F.array(*[F.lit(float(v)) for v in planes[i]])
-        d = _dot(F.col(vec_col), plane)
-        sig = sig.bitwiseXOR(
-            F.shiftleft(F.when(d > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long")), i)
-        )
-    return sig
-
-
 def _table_signatures_udf(dim: int, n_bits: int, n_tables: int, seed: int):
     """Arrow-vectorized multi-table signatures: one numpy matmul per batch.
 

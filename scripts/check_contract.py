@@ -1,7 +1,7 @@
 """Mimic the driver's correctness check: run each queries() entry on Spark
 and its oracle_sql() on DuckDB at sf0.01; compare rows/schema/values."""
-import sys, math
-sys.path.insert(0, "/root/repo")
+import math, os, sys
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pandas as pd
 

@@ -13,11 +13,13 @@ private heaps — sits closer to the box's practical ceiling than codegen
 itself. A real cluster's 4x executors bring 4x heaps and memory
 bandwidth, which is the regime the criterion describes.
 """
-import json, subprocess, sys
+import json, os, subprocess, sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 CHILD = r'''
 import sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[2])
 from pyspark.sql import functions as F
 from ocr_obsidian_spark.session import build_session
 cpus = int(sys.argv[1])
@@ -42,7 +44,7 @@ spark.stop()
 '''
 
 def run(cpus):
-    out = subprocess.run([sys.executable, "-c", CHILD, str(cpus)],
+    out = subprocess.run([sys.executable, "-c", CHILD, str(cpus), ROOT],
                          capture_output=True, text=True, timeout=900)
     for line in out.stdout.splitlines():
         if line.startswith("WALL"):

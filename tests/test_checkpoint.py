@@ -145,15 +145,33 @@ def test_multimodal_resize_and_frames_plumbing(spark):
 
 
 def test_multimodal_stub_features(spark):
-    from ocr_obsidian_spark.operators.multimodal import extract_media_features
+    import struct
 
+    from ocr_obsidian_spark.operators.multimodal import (
+        MEDIA_META,
+        extract_media_features,
+        fake_features,
+    )
+
+    # A well-formed 16-bit PCM mono WAV and a lossless-WebP container: both
+    # formats have no decoder, so they take the content-derived stub.
+    samples = struct.pack("<8h", 0, 12000, -12000, 32767, -32768, 5, -5, 0)
+    wav = (
+        b"RIFF" + struct.pack("<I", 36 + len(samples)) + b"WAVE"
+        + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
+        + b"data" + struct.pack("<I", len(samples)) + samples
+    )
+    webp = b"RIFF" + struct.pack("<I", 12) + b"WEBPVP8L" + b"\x00" * 8
     rows = [
         ("u1", b"payload-bytes-1", {"media_type": "image", "mime": "image/png",
                                     "width": 4, "height": 4, "duration_ms": None}),
         ("u2", b"", {"media_type": "audio", "mime": "audio/wav",
                      "width": None, "height": None, "duration_ms": 1500}),
+        ("wav", wav, {"media_type": "audio", "mime": "audio/wav",
+                      "width": None, "height": None, "duration_ms": 1}),
+        ("webp", webp, {"media_type": "image", "mime": "image/webp",
+                        "width": None, "height": None, "duration_ms": None}),
     ]
-    from ocr_obsidian_spark.operators.multimodal import MEDIA_META
     import pyspark.sql.types as T
 
     schema = T.StructType(
@@ -172,3 +190,6 @@ def test_multimodal_stub_features(spark):
     assert list(out["u1"]["feature_vec"]) == list(out2["u1"]["feature_vec"])
     assert out["u1"]["media_type"] == "image"
     assert out["u2"]["media_type"] == "audio"
+    for url, payload in (("wav", wav), ("webp", webp)):
+        assert out[url]["n_bytes"] == len(payload)
+        assert list(out[url]["feature_vec"]) == pytest.approx(fake_features(payload))

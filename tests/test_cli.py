@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -16,6 +17,8 @@ from ocr_obsidian_spark.config import (
     load_pipeline_yaml,
     pipeline_config_from_dict,
 )
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_yaml_deep_merge_partial_override(tmp_path):
@@ -78,7 +81,7 @@ def test_extract_with_example_config(tmp_path, spark):
     """The shipped example YAML must parse and drive a real extract run."""
     out = str(tmp_path / "cfg_run")
     rc = main(["extract", "--pages", "fixtures:1,4,2", "--out", out,
-               "--config", "/root/repo/configs/pipeline.example.yaml",
+               "--config", str(ROOT / "configs" / "pipeline.example.yaml"),
                "--master", "local[4]", "--shuffle-partitions", "8"])
     assert rc == 0
     assert spark.read.parquet(f"{out}/corpus").count() == 4
@@ -167,7 +170,7 @@ def test_select_subcommand_dsir(tmp_path, spark):
 def test_module_entrypoint_help_runs_without_spark():
     out = subprocess.run(
         [sys.executable, "-m", "ocr_obsidian_spark", "--help"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=60,
+        capture_output=True, text=True, cwd=ROOT, timeout=60,
     )
     assert out.returncode == 0
     for cmd in ["extract", "detect-blocks", "make-spans", "emit-notes", "export-text", "smoke"]:

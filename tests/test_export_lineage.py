@@ -163,8 +163,9 @@ def test_run_extract_job_script_rerun_idempotent(spark, pages_df, tmp_path, monk
     and NOT duplicate lineage rows in _lineage (round-2 ADVICE: the old
     append-mode export re-appended the full history every rerun)."""
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo/scripts")
+    monkeypatch.syspath_prepend(str(Path(__file__).resolve().parents[1] / "scripts"))
     import run_extract_job
 
     inp = str(tmp_path / "pages_in")

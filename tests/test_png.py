@@ -151,8 +151,8 @@ def test_decode_image_dispatch():
     # GIF is a real codec: malformed = data error
     with pytest.raises(ValueError):
         decode_image(b"GIF89a malformed stream")
-    # WebP is a real codec since round 5: no-VP8L-chunk = data error
-    with pytest.raises(ValueError):
+    # WebP has no decoder either: an unsupported format
+    with pytest.raises(NotImplementedError):
         decode_image(b"RIFF....WEBP no codec in container")
 
 
