@@ -880,15 +880,19 @@ def q_simhash_dups(spark: SparkSession, sf: str) -> DataFrame:
 def _lsh_verified(spark: SparkSession, sf: str):
     """Shared LSH-verified >=0.8-Jaccard pair pipeline (round 6): the
     candidate table is materialized once (localCheckpoint) and its id set
-    broadcast-semi-join-filters the corpus BEFORE the verification shingle
-    arrays are built — previously the full corpus paid the shingle
-    computation twice more (sa and sb) just to feed the candidate join.
+    semi-join-filters the corpus (broadcast when driver-sized) BEFORE the
+    verification shingle arrays are built — previously the full corpus
+    paid the shingle computation twice more (sa and sb) just to feed the
+    candidate join.
     Returns (docs, verified_pairs); the pair set is unchanged."""
     from ocr_obsidian_spark.operators.dedup import (
         minhash_lsh_candidate_pairs,
         ngram_jaccard_pairs,
     )
-    from ocr_obsidian_spark.operators.xengine import truncate_lineage
+    from ocr_obsidian_spark.operators.xengine import (
+        broadcast_if_small,
+        truncate_lineage,
+    )
 
     docs = _docs_with_dups(spark, sf, spread=True)
     cands = truncate_lineage(minhash_lsh_candidate_pairs(docs), "local")
@@ -897,7 +901,7 @@ def _lsh_verified(spark: SparkSession, sf: str):
         .union(cands.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
-    cand_docs = docs.join(F.broadcast(cand_ids), "doc_id", "left_semi")
+    cand_docs = docs.join(broadcast_if_small(cand_ids), "doc_id", "left_semi")
     pairs = ngram_jaccard_pairs(
         cand_docs, threshold=0.8, candidate_pairs=cands
     )

@@ -20,7 +20,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
-from .xengine import WS_RE as _NORM_WS, truncate_lineage
+from .xengine import WS_RE as _NORM_WS, broadcast_if_small, truncate_lineage
 
 
 def normalized_text(col: str = "text") -> F.Column:
@@ -87,9 +87,11 @@ def word_shingles(text_col: str = "text", k: int = 3) -> F.Column:
     )
 
 
-# bounds the (total_shingles x hash_chunk) transient inside family_min to
-# ~128 MB per Arrow batch (heavy-tailed corpora carry 10^6-shingle docs);
-# module-level so tests can force the chunked path at small scale
+# element budget per Arrow batch for the two per-batch transients: the
+# (total_shingles x hash_chunk) products in minhash_signatures' family_min
+# and the (total_tokens x bit_slice) votes in simhash64's fingerprint,
+# ~128 MB each (heavy-tailed corpora carry 10^6-shingle docs); module-level
+# so tests can force the chunked paths at small scale
 _MINHASH_CHUNK_ELEMS = 1 << 24
 
 
@@ -488,9 +490,12 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         starts = np.zeros(len(hs), dtype=np.int64)
         np.cumsum(lens[:-1], out=starts[1:])
         fp = np.zeros(len(hs), dtype=np.uint64)
-        # 16 bit positions per slice bounds the (tokens x bits) transient
-        for lo in range(0, 64, 16):
-            shifts = np.arange(lo, lo + 16, dtype=np.uint64)
+        # bit positions per slice sized from the element budget, so the
+        # (tokens x bits) transient stays bounded however many tokens the
+        # batch carries (identical results, bounded peak memory)
+        width = max(1, min(64, _MINHASH_CHUNK_ELEMS // flat.shape[0]))
+        for lo in range(0, 64, width):
+            shifts = np.arange(lo, min(lo + width, 64), dtype=np.uint64)
             bits = ((flat[:, None] >> shifts[None, :]) & np.uint64(1)).astype(
                 np.int64
             )
@@ -651,10 +656,11 @@ def near_duplicate_matches_against(
     O(candidates), never all-pairs.
 
     The candidate table is materialized eagerly (localCheckpoint) and its
-    id sets broadcast-semi-join-filter both corpora BEFORE the shingle
-    arrays are built, so verification shingles are computed for candidate
-    rows only. The candidate set is bounded by construction
-    (|new ∩ bucket| × per-bucket cap)."""
+    id sets semi-join-filter both corpora BEFORE the shingle arrays are
+    built, so verification shingles are computed for candidate rows only.
+    The candidate set is bounded by construction (|new ∩ bucket| ×
+    per-bucket cap); each id set is broadcast only when driver-sized
+    (``xengine.broadcast_if_small``)."""
     nb = minhash_banded_buckets(new, text_col, id_col, num_hashes, bands).select(
         F.col(id_col).alias("new_id"), "band", "bucket"
     )
@@ -671,12 +677,12 @@ def near_duplicate_matches_against(
     cands = nb.join(eb, ["band", "bucket"]).select("new_id", "existing_id").distinct()
     cands = truncate_lineage(cands, "local")
     new_src = new.join(
-        F.broadcast(cands.select(F.col("new_id").alias(id_col)).distinct()),
+        broadcast_if_small(cands.select(F.col("new_id").alias(id_col)).distinct()),
         id_col,
         "left_semi",
     )
     ex_src = existing.join(
-        F.broadcast(cands.select(F.col("existing_id").alias(id_col)).distinct()),
+        broadcast_if_small(cands.select(F.col("existing_id").alias(id_col)).distinct()),
         id_col,
         "left_semi",
     )

@@ -20,10 +20,11 @@ would funnel everything through few fat partitions. Instead:
   2. keep only the urls whose roman result must be nulled — sparse by
      construction (roman headers appearing after an arabic switch);
   3. null via a broadcast left join on url — the corpus itself never
-     shuffles. The join auto-sizes: a cheap narrow count of the null set
-     picks broadcast only up to ``MAX_BROADCAST_NULLS`` urls, so the
-     adversarial corpus (roman headers after an arabic switch everywhere)
-     degrades to a regular join instead of a driver OOM.
+     shuffles. The join auto-sizes through ``xengine.broadcast_if_small``:
+     a cheap narrow count of the null set picks broadcast only up to
+     ``xengine.MAX_BROADCAST_ROWS`` urls, so the adversarial corpus (roman
+     headers after an arabic switch everywhere) degrades to a regular join
+     instead of a driver OOM.
 """
 
 from __future__ import annotations
@@ -31,10 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
-
-# largest null set the mode switch broadcasts (~2M urls ≈ low hundreds of
-# MB on the driver); above it the join falls back to a regular join
-MAX_BROADCAST_NULLS = 2_000_000
+from .xengine import broadcast_if_small
 
 
 def roman_null_set(corpus: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
@@ -61,22 +59,12 @@ def apply_printed_page_mode(
     corpus: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """Null every roman detection the per-book mode switch suppresses. The
-    null set is counted first — one extra job over the five narrow columns
-    — and broadcast only when it holds at most ``MAX_BROADCAST_NULLS``
-    urls."""
-    # materialize the (sparse by construction) null set ONCE behind a
-    # localCheckpoint (round 6): the sizing count then reads the truncated
-    # blocks and the join broadcasts the same blocks, so the narrow window
-    # pass executes exactly once instead of twice (count + join recompute).
-    # Leak-free unlike persist(): truncated blocks are dropped with the
-    # RDD, no session-lifetime cache.
-    from .xengine import truncate_lineage
-
-    nulls = truncate_lineage(
-        roman_null_set(corpus, cfg).withColumn("_null_roman", F.lit(True)), "local"
+    null set (sparse by construction) is materialized once and counted —
+    one extra job over the five narrow columns — and broadcast only when it
+    holds at most ``MAX_BROADCAST_ROWS`` urls."""
+    nulls = broadcast_if_small(
+        roman_null_set(corpus, cfg).withColumn("_null_roman", F.lit(True))
     )
-    if nulls.count() <= MAX_BROADCAST_NULLS:
-        nulls = F.broadcast(nulls)
     keep = F.col("_null_roman").isNull()
     return (
         corpus.join(nulls, "url", "left_outer")

@@ -50,7 +50,7 @@ from .webprep import (
     drop_url_duplicates,
     scrub_pii,
 )
-from .xengine import truncate_lineage
+from .xengine import broadcast_if_small, truncate_lineage
 
 
 @dataclass
@@ -195,17 +195,19 @@ def prepare_web_corpus(
     if checkpoint:
         # decide-with-small-rows (round 6, same shape as
         # dedup.near_duplicate_matches_against): materialize the sparse
-        # candidate table once and broadcast-semi-join-filter the corpus
-        # before the verification shingle arrays are built — otherwise
-        # the full corpus pays the shingle computation twice more (sa and
-        # sb) just to feed the candidate join.
+        # candidate table once and semi-join-filter the corpus (broadcast
+        # when the id set is driver-sized) before the verification shingle
+        # arrays are built — otherwise the full corpus pays the shingle
+        # computation twice more (sa and sb) just to feed the candidate join.
         cands = truncate_lineage(cands, checkpoint)
         cand_ids = (
             cands.select(F.col("id_a").alias(id_col))
             .union(cands.select(F.col("id_b").alias(id_col)))
             .distinct()
         )
-        ver_src = out.join(F.broadcast(cand_ids), id_col, "left_semi")
+        ver_src = out.join(
+            broadcast_if_small(cand_ids, checkpoint), id_col, "left_semi"
+        )
     pairs = ngram_jaccard_pairs(
         ver_src, text_col, id_col, threshold=jaccard_threshold, candidate_pairs=cands
     )

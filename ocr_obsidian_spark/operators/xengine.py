@@ -21,6 +21,11 @@ from pyspark.sql import Column, functions as F
 WS_CLASS = "[ \\t\\n\\x0B\\f\\r]"
 WS_RE = WS_CLASS + "+"
 
+# largest data-derived key set ``broadcast_if_small`` hints for broadcast
+# (~2M keys ≈ low hundreds of MB on the driver); above it the join stays a
+# regular join that AQE sizes from actual bytes
+MAX_BROADCAST_ROWS = 2_000_000
+
 
 def md5_bucket(key: str | Column, buckets: int) -> Column:
     """Bucket in [0, buckets): first 32 md5 bits of the key, mod buckets.
@@ -81,3 +86,14 @@ def truncate_lineage(df, checkpoint: str = "local"):
             )
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def broadcast_if_small(df, checkpoint: str = "local"):
+    """A data-derived key set (candidate ids, null urls) ready to join:
+    materialized once with ``truncate_lineage`` — the sizing count then
+    reads the truncated blocks and the join reuses them, so the set is
+    computed exactly once — and hinted ``F.broadcast`` only when it holds
+    at most ``MAX_BROADCAST_ROWS`` rows. An adversarial input with a huge
+    set degrades to a regular join instead of a driver OOM."""
+    df = truncate_lineage(df, checkpoint)
+    return F.broadcast(df) if df.count() <= MAX_BROADCAST_ROWS else df

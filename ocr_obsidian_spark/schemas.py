@@ -13,23 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-WORD = T.StructType(
-    [
-        T.StructField("text", T.StringType(), False),
-        T.StructField("bbox", T.ArrayType(T.IntegerType(), False), False),
-        T.StructField("confidence", T.DoubleType(), False),
-    ]
-)
-
-LINE = T.StructType(
-    [
-        T.StructField("line_id", T.StringType(), False),
-        T.StructField("bbox", T.ArrayType(T.IntegerType(), False), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("words", T.ArrayType(WORD, False), True),
-    ]
-)
-
 PAGES = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -113,14 +96,6 @@ SPAN = T.StructType(
             "trigger_bboxes", T.ArrayType(T.ArrayType(T.IntegerType(), False), False), False
         ),
         T.StructField("span_bbox", T.ArrayType(T.IntegerType(), False), False),
-    ]
-)
-
-SPANS = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("page_num", T.IntegerType(), True),
-        T.StructField("spans", T.ArrayType(SPAN, False), False),
     ]
 )
 

@@ -1,9 +1,8 @@
 """Checkpoint-resume semantics (reference fail-closed overwrite analog,
-ingest/utils_paths.py:75-117) + multimodal plumbing."""
+ingest/utils_paths.py:75-117)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from ocr_obsidian_spark.operators.checkpoint import (
@@ -108,88 +107,3 @@ def test_zero_row_buckets_still_commit(spark, pages_df, tmp_path):
         spark, pages_df, drop_everything, out_dir=out, run_id="r1", n_buckets=8
     )
     assert n2 == 0
-
-
-def test_multimodal_resize_and_frames_plumbing(spark):
-    from ocr_obsidian_spark.operators.multimodal import (
-        MEDIA_META,
-        resize_images,
-        sample_frames,
-    )
-    import pyspark.sql.types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("media_meta", MEDIA_META),
-        ]
-    )
-    rows = [
-        ("img-big", b"x" * 10, {"media_type": "image", "mime": "image/png",
-                                "width": 2048, "height": 1024, "duration_ms": None}),
-        ("img-small", b"y", {"media_type": "image", "mime": "image/png",
-                             "width": 100, "height": 60, "duration_ms": None}),
-        ("vid", b"z", {"media_type": "video", "mime": "video/mp4",
-                       "width": 640, "height": 480, "duration_ms": 3500}),
-    ]
-    df = spark.createDataFrame(rows, schema=schema)
-    rz = {r["url"]: r for r in resize_images(df, max_side=512).collect()}
-    assert set(rz) == {"img-big", "img-small"}  # video filtered out
-    assert (rz["img-big"]["out_width"], rz["img-big"]["out_height"]) == (512, 256)
-    assert rz["img-big"]["scale"] == 0.25
-    assert (rz["img-small"]["out_width"], rz["img-small"]["scale"]) == (100, 1.0)
-    fr = sample_frames(df, every_ms=1000).collect()
-    assert [r["frame_ts_ms"] for r in fr] == [0, 1000, 2000, 3000]
-    assert all(r["url"] == "vid" for r in fr)
-
-
-def test_multimodal_stub_features(spark):
-    import struct
-
-    from ocr_obsidian_spark.operators.multimodal import (
-        MEDIA_META,
-        extract_media_features,
-        fake_features,
-    )
-
-    # A well-formed 16-bit PCM mono WAV and a lossless-WebP container: both
-    # formats have no decoder, so they take the content-derived stub.
-    samples = struct.pack("<8h", 0, 12000, -12000, 32767, -32768, 5, -5, 0)
-    wav = (
-        b"RIFF" + struct.pack("<I", 36 + len(samples)) + b"WAVE"
-        + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
-        + b"data" + struct.pack("<I", len(samples)) + samples
-    )
-    webp = b"RIFF" + struct.pack("<I", 12) + b"WEBPVP8L" + b"\x00" * 8
-    rows = [
-        ("u1", b"payload-bytes-1", {"media_type": "image", "mime": "image/png",
-                                    "width": 4, "height": 4, "duration_ms": None}),
-        ("u2", b"", {"media_type": "audio", "mime": "audio/wav",
-                     "width": None, "height": None, "duration_ms": 1500}),
-        ("wav", wav, {"media_type": "audio", "mime": "audio/wav",
-                      "width": None, "height": None, "duration_ms": 1}),
-        ("webp", webp, {"media_type": "image", "mime": "image/webp",
-                        "width": None, "height": None, "duration_ms": None}),
-    ]
-    import pyspark.sql.types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("media_meta", MEDIA_META),
-        ]
-    )
-    df = spark.createDataFrame(rows, schema=schema)
-    out = {r["url"]: r for r in extract_media_features(df).collect()}
-    assert out["u1"]["n_bytes"] == 15
-    assert len(out["u1"]["feature_vec"]) == 8
-    # deterministic: same payload → same features
-    out2 = {r["url"]: r for r in extract_media_features(df).collect()}
-    assert list(out["u1"]["feature_vec"]) == list(out2["u1"]["feature_vec"])
-    assert out["u1"]["media_type"] == "image"
-    assert out["u2"]["media_type"] == "audio"
-    for url, payload in (("wav", wav), ("webp", webp)):
-        assert out[url]["n_bytes"] == len(payload)
-        assert list(out[url]["feature_vec"]) == pytest.approx(fake_features(payload))

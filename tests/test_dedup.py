@@ -447,11 +447,13 @@ def test_word_shingles_zip_form_equals_per_index_form(docs):
         assert both.filter(F.col("new") != F.col("old")).count() == 0
 
 
-def test_simhash64_map_only_equals_explode_groupby_form(docs):
+def test_simhash64_map_only_equals_explode_groupby_form(docs, monkeypatch):
     """Round-6 internals pin: the map-only Arrow sign-sum simhash64
     reproduces the original explode + 64-conditional-sum groupBy
     formulation bit-for-bit (same per-occurrence xxhash64 votes, same
-    sum>0 bit rule, same bit-63 two's-complement wrap)."""
+    sum>0 bit rule, same bit-63 two's-complement wrap) — at the default
+    element budget and at budget 8 (1-bit slices)."""
+    from ocr_obsidian_spark.operators import dedup as D
     from ocr_obsidian_spark.operators.dedup import normalized_text, simhash64
 
     toks = docs.select(
@@ -481,3 +483,6 @@ def test_simhash64_map_only_equals_explode_groupby_form(docs):
     }
     got = {r["doc_id"]: r["simhash"] for r in simhash64(docs).collect()}
     assert got == ref
+    monkeypatch.setattr(D, "_MINHASH_CHUNK_ELEMS", 8)  # 1-bit slices
+    sliced = {r["doc_id"]: r["simhash"] for r in simhash64(docs).collect()}
+    assert sliced == ref

@@ -73,7 +73,7 @@ def test_mode_switch_autosizes_null_broadcast(spark, monkeypatch):
     on both paths (round-2 verdict #7)."""
     from pyspark.sql import functions as F
 
-    from ocr_obsidian_spark.operators import printed_page
+    from ocr_obsidian_spark.operators import xengine
     from ocr_obsidian_spark.operators.printed_page import apply_printed_page_mode
 
     rows = []
@@ -96,7 +96,7 @@ def test_mode_switch_autosizes_null_broadcast(spark, monkeypatch):
         # which is exactly the safe behavior the fallback delegates to
         return "strategy=broadcast" in df._jdf.queryExecution().optimizedPlan().toString()
 
-    monkeypatch.setattr(printed_page, "MAX_BROADCAST_NULLS", 10)
+    monkeypatch.setattr(xengine, "MAX_BROADCAST_ROWS", 10)
     fallback = apply_printed_page_mode(corpus)
     assert not has_broadcast_hint(fallback)
     monkeypatch.undo()

@@ -151,3 +151,38 @@ def test_prepare_web_corpus_keep_best_and_optional_stages(spark):
     assert [r["doc_id"] for r in kept] == [1]
     assert set(res.observations) == {"input", "exact_dedup", "near_dedup", "output"}
     assert res.counts()["output"] == 1
+
+
+def test_broadcast_cap_zero_takes_regular_semi_join(spark, monkeypatch):
+    """With ``xengine.MAX_BROADCAST_ROWS`` patched to 0 no candidate-id set
+    is hinted for broadcast: the recipe's keep set and the cross-corpus
+    near-duplicate matches equal the default's, and the optimized plan
+    carries no broadcast hint."""
+    from ocr_obsidian_spark.operators import xengine
+    from ocr_obsidian_spark.operators.dedup import near_duplicate_matches_against
+    from ocr_obsidian_spark.operators.recipe import prepare_web_corpus
+
+    docs = spark.createDataFrame(_fixture_rows(), ["doc_id", "url", "text"])
+    new = docs.filter(F.col("doc_id") >= 11).select("doc_id", "text")
+    existing = docs.filter(F.col("doc_id") < 11).select("doc_id", "text")
+
+    def run():
+        res = prepare_web_corpus(docs, langs=["en"], line_dedup_min_docs=3)
+        keep = {r["doc_id"] for r in res.df.collect()}
+        matches = near_duplicate_matches_against(new, existing)
+        rows = {(r["new_id"], r["existing_id"], r["jaccard"]) for r in matches.collect()}
+        # the recipe's semi-join sits behind pair_components' lineage cut,
+        # so only the matches plan still shows the hint
+        hinted = "strategy=broadcast" in (
+            matches._jdf.queryExecution().optimizedPlan().toString()
+        )
+        return keep, rows, hinted
+
+    keep, rows, hinted = run()
+    assert (11, 1, 1.0) in rows  # the exact copy of doc 1 matches
+    assert hinted
+    monkeypatch.setattr(xengine, "MAX_BROADCAST_ROWS", 0)
+    keep0, rows0, hinted0 = run()
+    assert keep0 == keep and keep
+    assert rows0 == rows
+    assert not hinted0
