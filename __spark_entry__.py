@@ -725,13 +725,12 @@ def q_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
     both = _semdedup_population(spark, sf)
     cents = sample_centroids(both, 32)
-    # max_cell_size=None: the oracle computes EXHAUSTIVE within-cell
-    # pairs, so the Spark side must never degrade a cell to chaining —
-    # populations at driver/bench scales are bounded (<= ~2k rows), and
-    # the cap path is pinned by tests/test_semdedup.py instead
-    return semantic_dedup_labels(
-        both, cents, threshold=0.999, max_cell_size=None
-    )
+    # the oracle computes EXHAUSTIVE within-cell pairs, so the Spark side
+    # must never degrade a cell to chaining: the default cell cap (4096)
+    # exceeds the whole population at the sf0.01/sf0.1 test scales (2,050
+    # rows at sf0.1), so no cell can reach it; the cap path is pinned by
+    # tests/test_semdedup.py instead
+    return semantic_dedup_labels(both, cents, threshold=0.999)
 
 
 def q_embedding_dedup(spark: SparkSession, sf: str) -> DataFrame:

@@ -10,6 +10,7 @@ All page-local; pinned to reference semantics:
 
 from __future__ import annotations
 
+from operator import itemgetter
 from typing import Any
 
 BBox = list[int]  # [x1, y1, x2, y2]
@@ -53,15 +54,26 @@ def group_lines(
     """Greedy y-center clustering of words into lines.
 
     Words sorted by (y-center, x1); each word joins the first existing
-    cluster whose running-mean y-center is within tolerance, else starts a
-    new cluster; clusters then sort by y-center and words within a line by
-    x1 (reference ingest/ocr.py:95-127). Sequential per page by design —
-    parallelism is across pages.
+    cluster (in creation order) whose running-mean y-center is within
+    tolerance, else starts a new cluster; clusters then sort by y-center and
+    words within a line by x1 (reference ingest/ocr.py:95-127). Sequential
+    per page by design — parallelism is across pages.
+
+    Dead clusters are pruned, which is exact: words arrive in nondecreasing
+    y-center ``cy``, and a cluster's mean changes only when a word joins it.
+    Once ``cy - mean > tol`` for a cluster, every later word has
+    ``cy' >= cy``, and float subtraction rounds monotonically, so
+    ``cy' - mean >= cy - mean > tol``: the cluster can never match again.
+    Dropping it from the creation-ordered list of live clusters therefore
+    leaves the first match among the survivors equal to the first match
+    over all clusters. Each cluster is dropped at most once, and a live
+    cluster is passed over without matching only when its mean exceeds
+    ``cy + tol`` (possible only once sums round, beyond 2^52), so the
+    search is O(1) amortized per word on real pages (the 10⁷-byte page
+    has ~10⁵ words over ~10⁴ lines).
     """
     if not words:
         return []
-
-    import numpy as np
 
     # natural tuple sort: (cy, x1, insertion index) needs no key lambda —
     # the index tiebreak reproduces key-sort stability exactly, and dicts
@@ -71,66 +83,43 @@ def group_lines(
         for i, w in enumerate(words)
         for b in (w["bbox"],)
     )
-    # first-match cluster search vectorized: a 10⁷-byte page has ~10⁵ words
-    # over ~10³ clusters, and the per-cluster python loop (reference
-    # ingest/ocr.py:100-111 shape) is O(n·k) with ~10⁸ interpreter ops —
-    # minutes on the skew tail. The numpy mirror of the running means keeps
-    # the EXACT float64 comparisons (same values, same first-match index)
-    # at C speed. Running mean via incremental sum — float-add order is
-    # identical to re-summing in insertion order, so the mean (and thus
-    # clustering) is bit-exact vs the reference's recompute (ocr.py:107).
-    # clusters as parallel lists (word lists / running sums), not dicts —
-    # the per-word dict field accesses were ~20% of this function
-    cluster_words: list[list[dict[str, Any]]] = []
-    cluster_sum: list[float] = []
-    # means kept as a plain-float list for the small-k loop (numpy scalar
-    # reads cost ~5× a float compare); the numpy mirror for the
-    # vectorized first-match is built LAZILY when the cluster count first
-    # crosses the threshold — the typical ≈10-line page never pays the
-    # array allocation or the per-word numpy writes. Same float64 values
-    # either way, so identical comparisons.
-    means: np.ndarray | None = None
-    means_f: list[float] = []
-    k = 0
+    # a cluster is [mean, sum, words]. Running mean via incremental sum —
+    # float-add order is identical to re-summing in insertion order, so the
+    # mean (and thus clustering) is bit-exact vs the reference's recompute
+    # (ocr.py:107).
+    clusters: list[list[Any]] = []
+    live: list[list[Any]] = []  # clusters that can still match, creation order
     tol = float(y_tolerance_px)
     for cy, _, _, w in keyed:
-        matched = -1
-        if k > 48:
-            if means is None:
-                means = np.empty(len(keyed), dtype=np.float64)
-                means[:k] = means_f
-            hit = np.abs(means[:k] - cy) <= tol
-            i = int(hit.argmax())
-            if hit[i]:
-                matched = i
-        else:
-            for i in range(k):
-                if abs(cy - means_f[i]) <= tol:
-                    matched = i
-                    break
-        if matched >= 0:
-            wl = cluster_words[matched]
+        j = 0
+        n = len(live)
+        while j < n:
+            d = cy - live[j][0]
+            if d > tol:
+                del live[j]
+                n -= 1
+            elif d >= -tol:  # abs(d) <= tol
+                break
+            else:
+                j += 1
+        if j < n:
+            c = live[j]
+            wl = c[2]
             wl.append(w)
-            s = cluster_sum[matched] + cy
-            cluster_sum[matched] = s
-            m = s / len(wl)
-            if means is not None:
-                means[matched] = m
-            means_f[matched] = m
+            s = c[1] + cy
+            c[1] = s
+            c[0] = s / len(wl)
         else:
-            cluster_words.append([w])
-            cluster_sum.append(cy)
-            if means is not None:
-                means[k] = cy
-            means_f.append(cy)
-            k += 1
+            c = [cy, cy, [w]]
+            clusters.append(c)
+            live.append(c)
 
-    # stable sort by final mean — identical order to the dict-based
-    # clusters.sort(key=cy) (creation-order ties preserved)
-    order = sorted(range(k), key=means_f.__getitem__)
+    # stable sort by final mean — creation-order ties preserved, as in the
+    # reference's clusters.sort(key=cy)
+    clusters.sort(key=itemgetter(0))
     lines: list[dict[str, Any]] = []
-    for idx, ci in enumerate(order, start=1):
-        ws = sorted(cluster_words[ci], key=lambda w: w["bbox"][0])
+    for idx, c in enumerate(clusters, start=1):
+        ws = sorted(c[2], key=lambda w: w["bbox"][0])
         lines.append(
             {
                 "line_id": f"p{page_num}_l{idx}",

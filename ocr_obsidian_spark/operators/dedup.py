@@ -182,7 +182,7 @@ def minhash_lsh_candidate_pairs(
     id_col: str = "doc_id",
     num_hashes: int = 64,
     bands: int = 16,
-    max_bucket_size: int | None = 4096,
+    max_bucket_size: int = 4096,
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) from banded minhash.
 
@@ -565,7 +565,7 @@ def simhash_candidate_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     bands: int = 4,
-    max_bucket_size: int | None = 4096,
+    max_bucket_size: int = 4096,
 ) -> DataFrame:
     """Near-dup candidates: equal 16-bit simhash band ⇒ hamming ≤ 48 filter
     stage; exact hamming check on the candidates (bit_count of xor).
@@ -640,7 +640,7 @@ def near_duplicate_matches_against(
     threshold: float = 0.95,
     num_hashes: int = 64,
     bands: int = 16,
-    max_bucket_size: int | None = 4096,
+    max_bucket_size: int = 4096,
 ) -> DataFrame:
     """(new_id, existing_id, jaccard) — cross-corpus near-duplicate
     matches: banded-minhash candidates restricted to NEW×EXISTING bucket
@@ -661,19 +661,21 @@ def near_duplicate_matches_against(
     The candidate set is bounded by construction (|new ∩ bucket| ×
     per-bucket cap); each id set is broadcast only when driver-sized
     (``xengine.broadcast_if_small``)."""
+    from .similarity import require_bucket_cap
+
+    require_bucket_cap(max_bucket_size)
     nb = minhash_banded_buckets(new, text_col, id_col, num_hashes, bands).select(
         F.col(id_col).alias("new_id"), "band", "bucket"
     )
     eb = minhash_banded_buckets(
         existing, text_col, id_col, num_hashes, bands
     ).select(F.col(id_col).alias("existing_id"), "band", "bucket")
-    if max_bucket_size is not None:
-        w = Window.partitionBy("band", "bucket").orderBy("existing_id")
-        eb = (
-            eb.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= max_bucket_size)
-            .drop("_rn")
-        )
+    w = Window.partitionBy("band", "bucket").orderBy("existing_id")
+    eb = (
+        eb.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= max_bucket_size)
+        .drop("_rn")
+    )
     cands = nb.join(eb, ["band", "bucket"]).select("new_id", "existing_id").distinct()
     cands = truncate_lineage(cands, "local")
     new_src = new.join(

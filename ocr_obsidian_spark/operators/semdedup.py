@@ -165,7 +165,7 @@ def semantic_duplicate_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9999,
-    max_cell_size: int | None = 4096,
+    max_cell_size: int = 4096,
     checkpoint: str = "local",
     assigned: DataFrame | None = None,
 ) -> DataFrame:
@@ -208,7 +208,7 @@ def semantic_dedup_labels(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9999,
-    max_cell_size: int | None = 4096,
+    max_cell_size: int = 4096,
     checkpoint: str = "local",
 ) -> DataFrame:
     """One row per input row: ``(id_col, sem_cell, component, kept)``.
@@ -266,7 +266,7 @@ def drop_semantic_duplicates(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9999,
-    max_cell_size: int | None = 4096,
+    max_cell_size: int = 4096,
     checkpoint: str = "local",
 ) -> DataFrame:
     """The end-to-end SemDeDup resolution: keep one representative per

@@ -388,11 +388,18 @@ def ivf_topk(
     )
 
 
+def require_bucket_cap(max_bucket_size: int) -> None:
+    """Every bucketed pair generator is capped: an uncapped mega-bucket
+    emits m²/2 pairs, so ``None`` is rejected instead of meaning "no cap"."""
+    if max_bucket_size is None:
+        raise ValueError("max_bucket_size must be an int; buckets are always capped")
+
+
 def bucketed_candidate_pairs(
     keyed: DataFrame,
     id_col: str,
     bucket_cols: list[str],
-    max_bucket_size: int | None,
+    max_bucket_size: int,
 ) -> DataFrame:
     """(id_a, id_b) distinct candidate pairs from bucket co-membership, with
     a skew guard: buckets larger than ``max_bucket_size`` degrade from the
@@ -404,13 +411,11 @@ def bucketed_candidate_pairs(
     may be missed (report them via ``bucket_cap_stats``, never silently:
     PLANS.md no-silent-caps rule).
     """
+    require_bucket_cap(max_bucket_size)
     w = Window.partitionBy(*bucket_cols)
     sized = keyed.withColumn("_bsize", F.count(F.lit(1)).over(w))
 
-    if max_bucket_size is None:
-        small = sized
-    else:
-        small = sized.filter(F.col("_bsize") <= max_bucket_size)
+    small = sized.filter(F.col("_bsize") <= max_bucket_size)
     l, r = small.alias("l"), small.alias("r")
     cond = (F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
     for c in bucket_cols:
@@ -419,16 +424,14 @@ def bucketed_candidate_pairs(
         F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
     )
 
-    if max_bucket_size is not None:
-        big = sized.filter(F.col("_bsize") > max_bucket_size)
-        wo = Window.partitionBy(*bucket_cols).orderBy(id_col)
-        chained = (
-            big.withColumn("_next", F.lead(id_col).over(wo))
-            .filter(F.col("_next").isNotNull())
-            .select(F.col(id_col).alias("id_a"), F.col("_next").alias("id_b"))
-        )
-        pairs = pairs.unionByName(chained)
-    return pairs.distinct()
+    big = sized.filter(F.col("_bsize") > max_bucket_size)
+    wo = Window.partitionBy(*bucket_cols).orderBy(id_col)
+    chained = (
+        big.withColumn("_next", F.lead(id_col).over(wo))
+        .filter(F.col("_next").isNotNull())
+        .select(F.col(id_col).alias("id_a"), F.col("_next").alias("id_b"))
+    )
+    return pairs.unionByName(chained).distinct()
 
 
 def bucketed_cosine_pairs(
@@ -437,7 +440,7 @@ def bucketed_cosine_pairs(
     bucket_cols: list[str],
     vec_col: str,
     threshold: float,
-    max_bucket_size: int | None,
+    max_bucket_size: int,
 ) -> DataFrame:
     """(id_a, id_b, cosine) — within-bucket pairs with cosine >= threshold,
     computed per bucket group with one BLAS matmul (``applyInPandas``).
@@ -459,6 +462,7 @@ def bucketed_cosine_pairs(
     measured decision margin). The one shuffle is the groupBy hash
     exchange of (id, bucket, vec) rows.
     """
+    require_bucket_cap(max_bucket_size)
     id_type = keyed.schema[id_col].dataType.simpleString()
     out_schema = f"id_a {id_type}, id_b {id_type}, cosine double"
     cap = max_bucket_size
@@ -480,7 +484,7 @@ def bucketed_cosine_pairs(
             pdf[vec_col].to_numpy()[order].tolist(), dtype=np.float64
         )
         norms = np.sqrt((mat * mat).sum(axis=1))
-        if cap is not None and m > cap:
+        if m > cap:
             # sorted-adjacent chaining (bucketed_candidate_pairs contract)
             dots = (mat[:-1] * mat[1:]).sum(axis=1)
             with np.errstate(divide="ignore", invalid="ignore"):
@@ -549,7 +553,7 @@ def embedding_near_duplicates(
     n_bits: int = 8,
     n_tables: int = 8,
     seed: int = 7,
-    max_bucket_size: int | None = 4096,
+    max_bucket_size: int = 4096,
 ) -> DataFrame:
     """(id_a, id_b, cosine >= threshold) — embedding-cosine near-dup pass:
     multi-table LSH candidate generation (linear), exact cosine only on

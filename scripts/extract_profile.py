@@ -2,9 +2,13 @@
 
 Feeds `_extract_one` the SAME deterministic payloads bench.py derives from
 the documents table (sources/doc_pages._doc_payload) so the profile
-reflects the benchmarked distribution, and prints the top cumulative
-functions plus pages/sec. Run alone (not next to a bench) — single
-process, but the host noise rules still apply to the absolute number.
+reflects the benchmarked distribution. Without ``--profile`` it times
+``REPS`` passes over the same pages and prints the best and the median
+pages/sec: the best is the least host-disturbed pass, and the median is
+the figure to compare between two trees, alternating runs of each. With
+``--profile`` it makes one cProfile'd pass and prints the top cumulative
+functions (cProfile inflates per-call cost, so its pages/sec is not
+comparable). Run alone (not next to a bench) — single process.
 
 Usage: python scripts/extract_profile.py [n_pages] [--profile]
 """
@@ -15,6 +19,7 @@ import cProfile
 import io
 import os
 import pstats
+import statistics
 import sys
 import time
 
@@ -29,6 +34,7 @@ from ocr_obsidian_spark.operators.extract import _extract_one  # noqa: E402
 from ocr_obsidian_spark.sources.doc_pages import _doc_payload  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+REPS = 5
 
 
 def main() -> None:
@@ -54,20 +60,25 @@ def main() -> None:
         for url, payload in pages:
             _extract_one(url, payload, DEFAULT_CONFIG)
 
-    run_fn = run
     if "--profile" in sys.argv:
         prof = cProfile.Profile()
         t0 = time.monotonic()
-        prof.runcall(run_fn)
+        prof.runcall(run)
         wall = time.monotonic() - t0
         s = io.StringIO()
         pstats.Stats(prof, stream=s).sort_stats("cumulative").print_stats(30)
         print(s.getvalue())
-    else:
+        print(f"{n} pages in {wall:.2f}s under cProfile = {n / wall:.0f} pages/sec")
+        return
+    rates = []
+    for _ in range(REPS):
         t0 = time.monotonic()
-        run_fn()
-        wall = time.monotonic() - t0
-    print(f"{n} pages in {wall:.2f}s = {n / wall:.0f} pages/sec (single core)")
+        run()
+        rates.append(n / (time.monotonic() - t0))
+    print(
+        f"{n} pages x {REPS} passes: best {max(rates):.0f} pages/sec, "
+        f"median {statistics.median(rates):.0f} pages/sec (single core)"
+    )
 
 
 if __name__ == "__main__":

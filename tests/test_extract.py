@@ -1,8 +1,17 @@
 """Extract-spine tests that need no reference oracle: fail-soft decoding,
-partitioning invariance, the per-partition lineage rows and the
-printed-page mode switch's broadcast sizing."""
+partitioning invariance, the per-partition lineage rows, the
+printed-page mode switch's broadcast sizing, and the page kernel's fast
+paths (pruned line clustering, orjson ``lines_json``) against the plain
+forms they replace."""
 
 from __future__ import annotations
+
+import json
+import math
+import random
+from typing import Any
+
+import pytest
 
 
 def test_malformed_payloads_fail_soft(spark):
@@ -154,3 +163,164 @@ def test_debug_rides_as_corpus_column(spark, pages_df):
     # default config keeps the column null (no payload bloat unless asked)
     off = extract_pages(sample).select("pp_debug_json").distinct().collect()
     assert [r[0] for r in off] == [None]
+
+
+def _first_match_group_lines(words, page_num, y_tolerance_px):
+    """The previous ``geometry.group_lines``, verbatim: the first-match
+    search over every cluster ever created (numpy above 48 clusters)."""
+    from ocr_obsidian_spark.functions.geometry import bbox_union
+
+    if not words:
+        return []
+
+    import numpy as np
+
+    keyed = sorted(
+        ((b[1] + b[3]) / 2.0, b[0], i, w)
+        for i, w in enumerate(words)
+        for b in (w["bbox"],)
+    )
+    cluster_words: list[list[dict[str, Any]]] = []
+    cluster_sum: list[float] = []
+    means: np.ndarray | None = None
+    means_f: list[float] = []
+    k = 0
+    tol = float(y_tolerance_px)
+    for cy, _, _, w in keyed:
+        matched = -1
+        if k > 48:
+            if means is None:
+                means = np.empty(len(keyed), dtype=np.float64)
+                means[:k] = means_f
+            hit = np.abs(means[:k] - cy) <= tol
+            i = int(hit.argmax())
+            if hit[i]:
+                matched = i
+        else:
+            for i in range(k):
+                if abs(cy - means_f[i]) <= tol:
+                    matched = i
+                    break
+        if matched >= 0:
+            wl = cluster_words[matched]
+            wl.append(w)
+            s = cluster_sum[matched] + cy
+            cluster_sum[matched] = s
+            m = s / len(wl)
+            if means is not None:
+                means[matched] = m
+            means_f[matched] = m
+        else:
+            cluster_words.append([w])
+            cluster_sum.append(cy)
+            if means is not None:
+                means[k] = cy
+            means_f.append(cy)
+            k += 1
+
+    order = sorted(range(k), key=means_f.__getitem__)
+    lines: list[dict[str, Any]] = []
+    for idx, ci in enumerate(order, start=1):
+        ws = sorted(cluster_words[ci], key=lambda w: w["bbox"][0])
+        lines.append(
+            {
+                "line_id": f"p{page_num}_l{idx}",
+                "bbox": bbox_union([w["bbox"] for w in ws]),
+                "words": ws,
+                "text": " ".join([str(w["text"]) for w in ws]),
+            }
+        )
+    return lines
+
+
+def _random_page(rng: random.Random, tol: int) -> list[dict[str, Any]]:
+    """Rows of words whose centers sit on, inside and just outside a row's
+    mean ± tol, with x ties, over few or many (> 48) rows, optionally
+    shifted beyond 2^53 where float centers round."""
+    off = rng.choice([0, 0, 0, 2**53 + 1, 2**53 + rng.randrange(1, 64), 2**60, -(2**54)])
+    words = []
+    y = 0
+    for _ in range(rng.choice([1, 5, 30, 49, 50, 200])):
+        for _ in range(rng.randrange(1, 7)):
+            dy = rng.choice([0, 0, 1, -1, tol, -tol, 2 * tol, tol + 1, 2 * tol + 1])
+            h = rng.choice([2, 22, 23])
+            x = rng.choice([10, 10, 50, rng.randrange(0, 900)])
+            words.append(
+                {
+                    "text": rng.choice(["a", "b", "xiv", "12"]),
+                    "bbox": [x + off, y + dy + off, x + 30 + off, y + dy + h + off],
+                    "confidence": 90.0,
+                }
+            )
+        y += rng.choice([1, tol, tol + 1, 2 * tol, 40])
+    rng.shuffle(words)
+    return words
+
+
+@pytest.mark.parametrize("tol", [0, 3, 14])
+def test_group_lines_equals_first_match_search(tol):
+    """Pruning dead clusters leaves every page's lines identical to the
+    first-match search over all clusters (same lines, order, words, ids)."""
+    from ocr_obsidian_spark.functions.geometry import group_lines
+
+    rng = random.Random(f"group_lines/{tol}")
+    many = 0
+    for _ in range(400):
+        words = _random_page(rng, tol)
+        want = _first_match_group_lines(words, 3, tol)
+        assert group_lines(words, 3, tol) == want
+        many += len(want) > 48
+    assert many > 20  # the old numpy branch was exercised
+
+
+def _std_json(obj: Any) -> str:
+    return json.dumps(obj, ensure_ascii=False, separators=(",", ":"))
+
+
+_EDGE_CONF = [
+    0.0, -0.0, 1e-4, math.nextafter(1e-4, 0.0), math.nextafter(1e-4, 1.0),
+    1e16, math.nextafter(1e16, 0.0), 10**16 - 1, 5e-324, 1e300, 95, 95.5,
+    math.nan, math.inf,
+]
+_EDGE_TEXT = [
+    "plain", "\U0001f600\U0001d518", "\x00\x01\x08\x0c\x1f\x7f\x85", "x\u2028y\u2029z",
+    'q"b\\s/', "\ud800x", "naïve",
+]
+
+
+@pytest.mark.parametrize("conf", _EDGE_CONF, ids=repr)
+@pytest.mark.parametrize("text", _EDGE_TEXT, ids=ascii)
+def test_lines_json_bytes_at_guard_edges(conf, text):
+    """``lines_json`` is byte-identical to the stdlib form at the edges of
+    the orjson guard (confidences, non-BMP, control and surrogate text)."""
+    from ocr_obsidian_spark.config import DEFAULT_CONFIG
+    from ocr_obsidian_spark.functions.geometry import group_lines
+    from ocr_obsidian_spark.operators.extract import _extract_one
+
+    raw = [
+        {"t": "head", "b": [10, 300, 60, 322], "c": 90.0},
+        {"t": text, "b": [70, 301, 140, 323], "c": conf},
+        {"t": "tail", "b": [10, 400, 60, 422], "c": 88.25},
+    ]
+    payload = json.dumps({"words": raw}).encode("ascii")
+    rec = _extract_one("https://x.test/book_b/page_0001", payload, DEFAULT_CONFIG)
+    admitted = [
+        {"text": w["t"].strip(), "bbox": w["b"], "confidence": float(w["c"])}
+        for w in raw
+    ]
+    assert rec["lines_json"] == _std_json(group_lines(admitted, 1, 14))
+
+
+@pytest.mark.parametrize(
+    "value",
+    [2**63 - 1, 2**63, 2**64 - 1, 2**64, -(2**63), -(2**63) - 1, 2**70,
+     "\ud800", "\U0001f600\x00", 0.1, 1e-4, 9999999999999998.0, -0.0],
+    ids=repr,
+)
+def test_lines_json_helper_falls_back_byte_identically(value):
+    """Values orjson cannot write (ints beyond 64 bits, lone surrogates)
+    take the stdlib path; the rest match it byte for byte."""
+    from ocr_obsidian_spark.operators.extract import _lines_json
+
+    lines = [{"line_id": "p1_l1", "bbox": [value, 0], "words": [{"x": value}], "text": "t"}]
+    assert _lines_json(lines, True) == _lines_json(lines, False) == _std_json(lines)

@@ -324,3 +324,22 @@ def test_ivf_vectorized_row_chunking_identical(spark, monkeypatch):
     chunked = {r["vec_id"]: r["ivf_cell"]
                for r in S.ivf_assign(df, cents, method="vectorized").collect()}
     assert chunked == base
+
+
+def test_bucket_cap_none_is_rejected(spark):
+    """Every bucketed pair generator is capped: ``max_bucket_size=None``
+    raises instead of silently meaning "no cap"."""
+    from ocr_obsidian_spark.operators.dedup import near_duplicate_matches_against
+    from ocr_obsidian_spark.operators.similarity import (
+        bucketed_candidate_pairs,
+        bucketed_cosine_pairs,
+    )
+
+    keyed = spark.createDataFrame([(1, 0, [1.0])], "id long, b int, v array<double>")
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="max_bucket_size"):
+        bucketed_candidate_pairs(keyed, "id", ["b"], None)
+    with pytest.raises(ValueError, match="max_bucket_size"):
+        bucketed_cosine_pairs(keyed, "id", ["b"], "v", 0.9, None)
+    with pytest.raises(ValueError, match="max_bucket_size"):
+        near_duplicate_matches_against(docs, docs, max_bucket_size=None)
