@@ -1566,8 +1566,7 @@ def q_quality_tiers(spark: SparkSession, sf: str) -> DataFrame:
     """CCNet-style head/middle/tail tiering: exact ntile(3) by rounded
     quality score within language (desc, doc_id tiebreak — both sides
     order on the ROUNDED score so cross-engine float dust can't flip
-    ranks). tier_by_cutpoints is the sketch-based 100 TB path, pinned to
-    this exact window by tests."""
+    ranks)."""
     from ocr_obsidian_spark.operators.textstats import (
         with_quality_score,
         with_quality_tiers,

@@ -141,8 +141,7 @@ def _load_book_meta(path: str | None):
 # ---------------------------------------------------------------------------
 
 def run_extract(args) -> int:
-    from .operators.extract import extract_pages_with_lineage, split_extract_lineage
-    from .operators.printed_page import apply_printed_page_mode
+    from .plans.pipeline import run_pipeline
     from .sources.io import write_table
 
     cfg = _cfg(args)
@@ -151,14 +150,12 @@ def run_extract(args) -> int:
     lineage_out = os.path.join(args.out, "lineage")
     _check_out(corpus_out, args.overwrite)
     pages = _load_pages(spark, args.pages)
-    combined = extract_pages_with_lineage(pages, cfg, run_id=args.run_id).persist()
-    raw, lineage = split_extract_lineage(combined)
-    corpus = apply_printed_page_mode(raw, cfg)
+    res = run_pipeline(pages, cfg=cfg, run_id=args.run_id)
     mode = "overwrite" if args.overwrite == "always" else "error"
-    write_table(corpus, corpus_out, mode=mode)
-    write_table(lineage, lineage_out, mode="overwrite" if args.overwrite == "always" else "error")
+    write_table(res.corpus, corpus_out, mode=mode)
+    write_table(res.lineage, lineage_out, mode=mode)
     n = spark.read.parquet(corpus_out).count()
-    combined.unpersist()
+    res.combined.unpersist()
     print(f"extract: wrote {n} corpus rows to {corpus_out} (run {args.run_id})")
     return 0
 

@@ -83,36 +83,22 @@ def token_is_junk(token: str, confidence: float) -> bool:
     return False
 
 
-def line_tokens(line: dict[str, Any]) -> list[tuple[str, float]]:
-    """(text, confidence) pairs for one line.
-
-    Lines missing a ``words`` array fall back to whitespace-splitting their
-    ``text`` at confidence 100.0 — this tolerant-read behavior is part of the
-    invariant (reference ingest/render_text.py:51-62).
-    """
-    words = line.get("words")
-    if isinstance(words, (list, tuple)) and len(words) > 0:
-        return [
-            (str(w.get("text", "")), float(w.get("confidence", 100.0)))
-            for w in words
-        ]
-    return [(tok, 100.0) for tok in str(line.get("text", "")).split()]
-
-
 def clean_line(line: dict[str, Any]) -> str:
     """One line → cleaned text ('' if nothing survives).
 
     Token pass: whitespace-normalize, strip leading/trailing ``|\\()`` chars,
     drop junk tokens; then line-level rejection of pipe-only / lone-symbol
     residue (reference ingest/render_text.py:65-82).
+
+    Tokens are the line's ``words``; a line without them whitespace-splits
+    its ``text`` at confidence 100.0 — a tolerant read that is part of the
+    invariant (reference ingest/render_text.py:51-62).
     """
     kept: list[str] = []
     words = line.get("words")
     if isinstance(words, (list, tuple)) and len(words) > 0:
-        # inlined line_tokens word path: same str()/float() conversions,
-        # minus the intermediate tuple-list build (hot: ~60 words/line ×
-        # every page). The float() stays eager — a non-floatable
-        # confidence must raise exactly like the tolerant-read contract.
+        # hot: ~60 words/line × every page. The float() stays eager — a
+        # non-floatable confidence must raise, as in the reference.
         all_fast = True
         for w in words:
             raw = str(w.get("text", ""))

@@ -705,23 +705,3 @@ def near_duplicate_matches_against(
         .filter(F.col("jaccard") >= threshold)
         .select("new_id", "existing_id", "jaccard")
     )
-
-
-def drop_near_duplicates_against(
-    new: DataFrame,
-    existing: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    **kwargs,
-) -> DataFrame:
-    """Keep the new rows with NO verified near-duplicate in the
-    accumulated corpus (kwargs forward to
-    ``near_duplicate_matches_against``)."""
-    matched = (
-        near_duplicate_matches_against(
-            new, existing, text_col, id_col, **kwargs
-        )
-        .select(F.col("new_id").alias(id_col))
-        .distinct()
-    )
-    return new.join(matched, id_col, "left_anti")

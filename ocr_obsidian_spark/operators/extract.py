@@ -65,6 +65,16 @@ def _lines_json(lines: list[dict[str, Any]], fast: bool) -> str:
     return json.dumps(lines, ensure_ascii=False, separators=(",", ":"))
 
 
+def _fits_float(b: list[int]) -> bool:
+    """An int bbox's coordinates and center sums all convert to float."""
+    try:
+        for v in (*b, b[0] + b[2], b[1] + b[3]):
+            float(v)
+    except OverflowError:
+        return False
+    return True
+
+
 def _extract_one(url: str, html: Any, cfg: PipelineConfig) -> dict[str, Any]:
     book_id, page_num = parse_url_book_page(url)
 
@@ -83,8 +93,17 @@ def _extract_one(url: str, html: Any, cfg: PipelineConfig) -> dict[str, Any]:
         if not isinstance(payload, dict):  # valid JSON, wrong shape
             payload = {}
             parse_ok = False
-    page_width = int(payload.get("page_width", 1000))
-    page_height = int(payload.get("page_height", 1400))
+    # a page dimension that is no integer, or one beyond float range (the
+    # printed-page geometry divides by it), falls back to its default
+    dims = []
+    for key, default in (("page_width", 1000), ("page_height", 1400)):
+        try:
+            v = int(payload.get(key, default))
+            float(v)
+        except (TypeError, ValueError, OverflowError):
+            v, parse_ok = default, False
+        dims.append(v)
+    page_width, page_height = dims
     scan_relpath = str(payload.get("scan_relpath", ""))
 
     words = []
@@ -127,7 +146,7 @@ def _extract_one(url: str, html: Any, cfg: PipelineConfig) -> dict[str, Any]:
                 continue
             bbox = [int(v) for v in b]
             admitted = admit_word(t, c, bbox[2] - bbox[0], bbox[3] - bbox[1])
-        except (TypeError, ValueError, KeyError, IndexError):
+        except (TypeError, ValueError, OverflowError, KeyError, IndexError):
             parse_ok = False
             continue
         if admitted:
@@ -136,6 +155,35 @@ def _extract_one(url: str, html: Any, cfg: PipelineConfig) -> dict[str, Any]:
                 {"text": str(w["t"]).strip(), "bbox": bbox, "confidence": float(w["c"])}
             )
 
+    try:
+        page = _render_page(
+            words, page_num, page_width, page_height, scan_relpath, fast_json, cfg
+        )
+    except OverflowError:
+        # admission takes int coordinates unchecked, so one beyond float
+        # range (a 400-digit integer) only raises in the geometry. Reject
+        # such words here, on the exception edge, instead of paying a
+        # per-word check on every well-formed page.
+        parse_ok = False
+        words = [w for w in words if _fits_float(w["bbox"])]
+        page = _render_page(
+            words, page_num, page_width, page_height, scan_relpath, fast_json, cfg
+        )
+    page.update(book_id=book_id, page_num=page_num, scan_relpath=scan_relpath,
+                page_width=page_width, page_height=page_height, parse_ok=parse_ok)
+    return page
+
+
+def _render_page(
+    words: list[dict[str, Any]],
+    page_num: int,
+    page_width: int,
+    page_height: int,
+    scan_relpath: str,
+    fast_json: bool,
+    cfg: PipelineConfig,
+) -> dict[str, Any]:
+    """The admitted words → lines, texts, QA and printed-page fields."""
     lines = group_lines(words, page_num, cfg.line_y_tolerance_px)
     raw_text = render_raw_text(lines)
     metrics = compute_text_metrics(lines, trusted_line_text=True)
@@ -170,11 +218,6 @@ def _extract_one(url: str, html: Any, cfg: PipelineConfig) -> dict[str, Any]:
     )
 
     return {
-        "book_id": book_id,
-        "page_num": page_num,
-        "scan_relpath": scan_relpath,
-        "page_width": page_width,
-        "page_height": page_height,
         "lines_json": _lines_json(lines, fast_json),
         "raw_text": raw_text,
         "clean_text": clean,
@@ -186,7 +229,6 @@ def _extract_one(url: str, html: Any, cfg: PipelineConfig) -> dict[str, Any]:
         "garbage_ratio": float(metrics["garbage_ratio"]),
         "pipe_ratio": float(metrics["pipe_ratio"]),
         "is_garbage": bool(garbage),
-        "parse_ok": parse_ok,
         "printed_page": pp["printed_page"],
         "printed_page_text": pp["printed_page_text"],
         "printed_page_kind": pp["printed_page_kind"],
@@ -214,7 +256,6 @@ def extract_pages_with_lineage(
     cfg: PipelineConfig = DEFAULT_CONFIG,
     *,
     run_id: str,
-    stage: str = "extract",
 ) -> DataFrame:
     """Single-pass extract + per-partition lineage (north-rule requirement,
     SURVEY §2.10): the SAME ``mapInPandas`` that produces corpus rows
@@ -274,11 +315,11 @@ def extract_pages_with_lineage(
                 # synthetic url so the lineage row BUCKETS like data rows —
                 # the combined frame can flow through the checkpointed
                 # bucket writer unchanged (scripts/run_extract_job.py)
-                "url": [f"lineage://{stage}/{run_id}/{pid}"],
+                "url": [f"lineage://extract/{run_id}/{pid}"],
                 "row_kind": ["lineage"],
                 "config_hash": [config_hash],
                 "run_id": [run_id],
-                "stage": [stage],
+                "stage": ["extract"],
                 "partition_id": [pid],
                 "rows_in": [rows],
                 "rows_out": [rows],
@@ -306,8 +347,11 @@ def split_extract_lineage(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def extract_pages(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """pages → corpus (the full canonical corpus schema; the final
-    extracted_text is page-local). The corpus half of
-    ``extract_pages_with_lineage`` — one Arrow-batched map stage, no shuffle
-    unless salting is requested via ``cfg.salt_partitions``."""
+    """pages → corpus (the full canonical corpus schema) before the
+    printed-page mode window, which callers apply with
+    ``apply_printed_page_mode``. The corpus half of
+    ``extract_pages_with_lineage``, not persisted: one Arrow-batched map
+    stage, no shuffle unless salting is requested via
+    ``cfg.salt_partitions``. The CLI ``extract`` stage runs
+    ``plans.pipeline.run_pipeline`` instead."""
     return split_extract_lineage(extract_pages_with_lineage(df, cfg, run_id="extract"))[0]

@@ -1,7 +1,7 @@
 """Char-trigram Naive-Bayes language identification (langid.py design).
 
-The stopword-marker heuristic in textstats.with_lang_id covers four
-Latin-script languages and nothing else. This module adds the standard
+The stopword-marker heuristic (``_marker_scores``, over the textstats
+marker sets) covers four Latin-script languages and nothing else. This module adds the standard
 model-based upgrade — a multinomial Naive Bayes over character trigrams
 (the public design of langid.py, Lui & Baldwin 2012, and of the CLD
 family) — trained at import from an embedded, authored fixture corpus

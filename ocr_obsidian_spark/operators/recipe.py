@@ -80,11 +80,9 @@ def gate_documents(
     mark=lambda stage, d: d,
 ) -> DataFrame:
     """The pipeline's stateless gate chain — lang gate → Gopher shape →
-    Gopher repetition → C4 lines — as ONE shared implementation: the
-    batch recipe threads its observe counters through ``mark`` and the
-    streaming prefix (streaming/stream_webprep.py) applies it verbatim,
-    so the two can never silently diverge. Output columns: the input's
-    plus ``lang_id``."""
+    Gopher repetition → C4 lines — as ONE implementation; the recipe
+    threads its observe counters through ``mark``. Output columns: the
+    input's plus ``lang_id``."""
     out = with_language(df, text_col=text_col)
     if langs is not None:
         out = mark("lang", out.filter(F.col("lang_id").isin(list(langs))))

@@ -257,29 +257,3 @@ def semantic_dedup_labels(
         F.col("component"),
         (F.row_number().over(w) == 1).cast("long").alias("kept"),
     )
-
-
-def drop_semantic_duplicates(
-    df: DataFrame,
-    centroids: list[list[float]],
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9999,
-    max_cell_size: int = 4096,
-    checkpoint: str = "local",
-) -> DataFrame:
-    """The end-to-end SemDeDup resolution: keep one representative per
-    semantic-duplicate group (the paper's lowest-centroid-similarity
-    member), pass everything else through untouched."""
-    labels = semantic_dedup_labels(
-        df,
-        centroids,
-        id_col=id_col,
-        vec_col=vec_col,
-        threshold=threshold,
-        max_cell_size=max_cell_size,
-        checkpoint=checkpoint,
-    )
-    losers = labels.filter(F.col("kept") == 0).select(F.col(id_col))
-    return df.join(losers, id_col, "left_anti")

@@ -567,8 +567,7 @@ def embedding_near_duplicates(
     larger scale raise n_bits (smaller buckets) and n_tables together.
 
     Skew: buckets above ``max_bucket_size`` (duplicate mega-clusters) chain
-    instead of all-pairs joining — see ``bucketed_candidate_pairs``; report
-    via ``bucket_cap_stats`` on the same keyed frame.
+    instead of all-pairs joining — see ``bucketed_candidate_pairs``.
 
     Invalid vectors (see ``_valid_embedding``) are dropped before keying:
     they have no cosine, so they can never be near-duplicates.
@@ -589,21 +588,3 @@ def embedding_near_duplicates(
         keyed, id_col, ["table", "sig"], vec_col, threshold, max_bucket_size
     )
     return pairs.dropDuplicates(["id_a", "id_b"])
-
-
-def near_dup_signature_frame(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_bits: int = 8,
-    n_tables: int = 8,
-    seed: int = 7,
-) -> DataFrame:
-    """The (id, table, sig) keyed frame embedding_near_duplicates buckets on —
-    exposed so call sites can run ``bucket_cap_stats`` on the same keys."""
-    sig_udf = _table_signatures_udf(dim, n_bits, n_tables, seed)
-    return df.filter(_valid_embedding(vec_col, dim)).select(
-        F.col(id_col), F.posexplode(sig_udf(F.col(vec_col))).alias("table", "sig")
-    )

@@ -77,20 +77,15 @@ def make_spans(
     corpus: DataFrame,
     triggers: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    *,
-    broadcast_triggers: bool = False,
 ) -> DataFrame:
     """corpus ⋈ triggers → (url, page_num, spans) with deterministic
-    ``p{page}_s{idx}`` span ids."""
+    ``p{page}_s{idx}`` span ids. No broadcast hint: the triggers table is
+    data-derived, so AQE sizes the join from its actual bytes."""
     s = cfg.spans
-
-    right = triggers.select("url", "candidates")
-    if broadcast_triggers:
-        right = F.broadcast(right)
 
     joined = corpus.select(
         "url", "page_num", "page_width", "page_height", "lines_json"
-    ).join(right, "url", "inner")
+    ).join(triggers.select("url", "candidates"), "url", "inner")
     gated = filter_block_candidates(joined, cfg)
     gated = gated.filter(F.size("candidates") > 0).filter(F.length("lines_json") > 2)
 

@@ -3,8 +3,11 @@
 
   * token counting (whitespace + a BPE-ish sub-token regex)
   * quality scoring (length / punctuation / stopword ratios)
-  * language ID (stopword-hit n-gram heuristic)
-  * document fingerprinting (normalized-content hash)
+  * Gopher and repetition gates, script mix, quality tiers
+  * a sketch-based corpus profile
+
+The per-language stopword markers below also seed the marker stage of
+``langid.with_language``.
 """
 
 from __future__ import annotations
@@ -89,34 +92,6 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
         .withColumn("punct_ratio", punct_ratio)
         .withColumn("stopword_ratio", stop_ratio)
         .withColumn("quality_score", F.greatest(score, F.lit(0.0)))
-    )
-
-
-def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Heuristic language ID: argmax of per-language stopword hit counts,
-    'und' (undetermined) when no marker hits."""
-    words = F.split(_norm(text_col), " ")
-
-    def marker_hits(markers: list[str]) -> F.Column:
-        return F.size(F.filter(words, lambda w: w.isin(markers)))
-
-    scores = {lang: marker_hits(markers) for lang, markers in _LANG_MARKERS.items()}
-    langs = list(scores)
-    best = F.greatest(*[scores[lang] for lang in langs])
-    pick = F.lit("und")
-    # reversed so earlier languages win ties deterministically
-    for lang in reversed(langs):
-        pick = F.when(scores[lang] == best, F.lit(lang)).otherwise(pick)
-    pick = F.when(best > 0, pick).otherwise(F.lit("und"))
-    return df.withColumn("lang_id", pick)
-
-
-def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Deterministic document fingerprint over normalized content (md5 +
-    xxhash64 — the 64-bit one is what a shuffle key would use)."""
-    norm = _norm(text_col)
-    return df.withColumn("fingerprint_md5", F.md5(norm)).withColumn(
-        "fingerprint64", F.xxhash64(norm)
     )
 
 
@@ -279,50 +254,13 @@ def with_quality_tiers(
     EXACT but small-scale: ``ntile`` needs a total order per group, which
     Spark executes as ONE task per ``by`` partition — right for oracle
     verification and per-language corpora that fit a task, wrong for a
-    100 TB monolingual crawl. Use :func:`tier_by_cutpoints` (sketch-based,
-    map-only assign) at scale.
+    100 TB monolingual crawl.
     """
     from pyspark.sql import Window
 
     part = Window.partitionBy(by) if by else Window.partitionBy()
     w = part.orderBy(F.col(score_col).desc(), F.col(id_col))
     return df.withColumn(tier_col, F.ntile(int(tiers)).over(w))
-
-
-def tier_by_cutpoints(
-    df: DataFrame,
-    *,
-    score_col: str = "quality_score",
-    by: str | None = "lang",
-    tiers: int = 3,
-    tier_col: str = "tier",
-    accuracy: int = 10000,
-) -> DataFrame:
-    """Scalable quality tiering: per-group approximate score quantiles
-    (``approx_percentile`` — a mergeable sketch, so the groupBy is
-    map-side-combined partial aggregation) broadcast-joined back, tier
-    assigned map-only. The 100 TB shape of :func:`with_quality_tiers`:
-    no global sort, no one-task-per-group window — the corpus is touched
-    by exactly one extra map pass.
-
-    Tier boundaries are approximate (sketch error ~1/accuracy of the rank);
-    away from cutpoints the assignment equals the exact ntile.
-    """
-    k = int(tiers)
-    probs = F.array(*[F.lit(1.0 - i / k) for i in range(1, k)])
-    keys = [by] if by else []
-    cuts = df.groupBy(*keys).agg(
-        F.percentile_approx(score_col, probs, F.lit(int(accuracy))).alias("_cuts")
-    )
-    joined = df.join(F.broadcast(cuts), on=keys) if keys else df.crossJoin(
-        F.broadcast(cuts)
-    )
-    # tier = 1 + number of cutpoints strictly above the score
-    # (_cuts is descending: [q_{(k-1)/k}, ..., q_{1/k}])
-    tier = F.size(
-        F.filter(F.col("_cuts"), lambda c: c > F.col(score_col))
-    ) + F.lit(1)
-    return joined.withColumn(tier_col, tier).drop("_cuts")
 
 
 def with_repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:

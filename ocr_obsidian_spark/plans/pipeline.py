@@ -12,18 +12,16 @@
 Stage boundaries mirror the reference's five CLI stages (SURVEY.md §0) but
 collapse the page-local work into single map stages; the whole pipeline has
 exactly one required shuffle (the per-book mode window) plus the spans/emit
-equi-joins.
+equi-joins. The CLI ``extract`` stage is ``run_pipeline`` without triggers.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
-from ..operators.blocks import detect_blocks
 from ..operators.emit import BookMeta, emit_notes
 from ..operators.extract import extract_pages_with_lineage, split_extract_lineage
 from ..operators.printed_page import apply_printed_page_mode
@@ -35,7 +33,8 @@ class PipelineResult:
     corpus: DataFrame
     spans: DataFrame | None
     notes: DataFrame | None
-    lineage: DataFrame | None = None
+    lineage: DataFrame
+    combined: DataFrame  # persisted extract output; unpersist after the writes
 
 
 def run_pipeline(
@@ -45,31 +44,21 @@ def run_pipeline(
     *,
     run_id: str = "run-0",
     book_meta: BookMeta | None = None,
-    broadcast_triggers: bool = True,
-    detect_triggers: bool = False,
 ) -> PipelineResult:
-    """``detect_triggers=True`` computes block candidates FROM the pages
-    themselves (operators/blocks.py — the reference detect-highlights stage)
-    instead of consuming a supplied triggers table; the spans/notes half of
-    the pipeline then runs from raw input alone."""
-    if detect_triggers:
-        if triggers is not None:
-            raise ValueError("pass either triggers or detect_triggers, not both")
-        triggers = detect_blocks(pages, cfg)
-    # single pass: corpus rows + per-partition lineage rows from ONE
-    # mapInPandas (the input is never re-read for metrics)
-    # stage boundary: the mode window, the lineage split and every
-    # downstream consumer read the one-pass extract output instead of
-    # re-running the UDF (the reference's single-OCR-pass rule,
-    # README.md:3-8; at cluster scale this boundary is the checkpointed
-    # corpus table itself)
-    combined = extract_pages_with_lineage(pages, cfg, run_id=run_id).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    """pages → corpus + per-partition lineage, plus spans and notes when
+    ``triggers`` (e.g. ``operators.blocks.detect_blocks(pages, cfg)``)
+    are given."""
+    # stage boundary: corpus and lineage rows come from ONE mapInPandas,
+    # and the lineage split, the mode window and every downstream consumer
+    # read its persisted output instead of re-running the UDF (the
+    # reference's single-OCR-pass rule, README.md:3-8)
+    combined = extract_pages_with_lineage(pages, cfg, run_id=run_id).persist()
     raw, lineage = split_extract_lineage(combined)
     corpus = apply_printed_page_mode(raw, cfg)
     spans = notes = None
     if triggers is not None:
-        spans = make_spans(corpus, triggers, cfg, broadcast_triggers=broadcast_triggers)
+        spans = make_spans(corpus, triggers, cfg)
         notes = emit_notes(corpus, spans, cfg, run_id=run_id, book_meta=book_meta)
-    return PipelineResult(corpus=corpus, spans=spans, notes=notes, lineage=lineage)
+    return PipelineResult(
+        corpus=corpus, spans=spans, notes=notes, lineage=lineage, combined=combined
+    )

@@ -1,5 +1,4 @@
-"""Table IO: parquet-first with JSONL interchange for reference-style
-corpus fixtures.
+"""Table IO: parquet-first.
 
 The reference's canonical corpus is JSONL (ingest/artifacts.py:43-59 write,
 ingest/textmap.py:8-18 tolerant read). Our canonical store is parquet;
@@ -9,29 +8,12 @@ ingest/textmap.py:8-18 tolerant read). Our canonical store is parquet;
 atomic-commit sink the resume contract assumes at cluster scale). The
 Iceberg runtime jar is not present in this sandbox, so that path is
 gated by an actionable catalog check (pinned by a test) and everything
-here runs parquet. JSONL remains supported as an interchange format so
-reference-produced fixtures can be ingested.
+here runs parquet.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-from ..schemas import CORPUS
-
-
-def read_corpus_jsonl(spark: SparkSession, path: str) -> DataFrame:
-    """JSONL → corpus frame with the EXPLICIT schema (never inferred; the
-    reference's tolerant-read semantics live inside the consuming UDFs,
-    not in schema inference). This is the reader for reference-style
-    ``pages.jsonl`` corpora re-expressed in our column layout."""
-    return spark.read.schema(CORPUS).json(path)
-
-
-def write_jsonl(df: DataFrame, path: str, *, mode: str = "error") -> None:
-    """Corpus/fixture JSONL sink (reference write_jsonl_records analog;
-    fail-closed by default: mode='error' refuses to overwrite)."""
-    df.write.mode(mode).json(path)
 
 
 def _require_catalog(spark: SparkSession, table: str) -> None:
@@ -95,51 +77,6 @@ def write_table(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    *,
-    bucket_by: list[str],
-    n_buckets: int,
-    sort_by: list[str] | None = None,
-    path: str | None = None,
-    mode: str = "error",
-) -> None:
-    """Bucketed parquet sink: pre-shuffle ONCE at write time so every
-    downstream equi-join or aggregation on the bucket key is
-    exchange-free (Spark reads bucket files as already-hash-partitioned
-    input splits). At 100 TB this is the difference between re-shuffling
-    the corpus per join and shuffling it once per ingest: two tables
-    bucketed by the same key into the same ``n_buckets`` sort-merge-join
-    with ZERO Exchange nodes, and ``groupBy(bucket_by)`` aggregates
-    map-side only — both pinned by tests/test_plans.py.
-
-    Bucket metadata only exists through the catalog (``saveAsTable``; a
-    plain ``.parquet(path)`` write silently drops it, and a plain
-    ``spark.read.parquet`` of the same files ignores it — read back with
-    ``read_bucketed_table``/``spark.table``). ``path`` makes it an
-    EXTERNAL table (data at ``path``, metadata in the session catalog);
-    omitted, data lands in ``spark.sql.warehouse.dir``. ``sort_by``
-    additionally sorts within each bucket file so merge joins skip their
-    sort. Fail-closed ``mode="error"`` default, like write_table."""
-    if not bucket_by:
-        raise ValueError("bucket_by must name at least one column")
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    writer = df.write.format("parquet").mode(mode).bucketBy(n_buckets, *bucket_by)
-    if sort_by:
-        writer = writer.sortBy(*sort_by)
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
-
-
-def read_bucketed_table(spark: SparkSession, table: str) -> DataFrame:
-    """Catalog scan of a bucketed table — the ONLY read path that keeps
-    the bucket-partitioning guarantee (see write_bucketed_table)."""
-    return spark.table(table)
 
 
 def read_table(spark: SparkSession, path: str, *, format: str = "parquet") -> DataFrame:

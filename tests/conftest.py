@@ -8,6 +8,7 @@ import so the pure geometry functions are reachable as oracles.
 
 from __future__ import annotations
 
+import importlib
 import sys
 import types
 
@@ -27,6 +28,15 @@ if "PIL" not in sys.modules:
         pil.Image = types.SimpleNamespace(open=None, Image=object)
         pil.ImageDraw = types.SimpleNamespace(Draw=None)
         sys.modules["PIL"] = pil
+
+
+@pytest.fixture(scope="session")
+def reference():
+    """``reference("spans")`` imports ``ingest.spans`` from the reference;
+    a test that asks for this fixture skips when the reference is absent,
+    so the oracle-free tests of its module still run."""
+    pytest.importorskip("ingest", reason=f"reference not found at {REFERENCE_PATH}")
+    return lambda name: importlib.import_module(f"ingest.{name}")
 
 
 @pytest.fixture(scope="session")

@@ -320,7 +320,7 @@ def test_incremental_near_matches_equal_exhaustive(spark):
 
 
 def test_incremental_drop_near_keeps_unmatched(spark):
-    from ocr_obsidian_spark.operators.dedup import drop_near_duplicates_against
+    from ocr_obsidian_spark.operators.dedup import near_duplicate_matches_against
 
     existing = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
@@ -333,8 +333,11 @@ def test_incremental_drop_near_keeps_unmatched(spark):
             "doc_id long, text string",
         )
     )
-    kept = drop_near_duplicates_against(new, existing)
-    assert {r["doc_id"] for r in kept.select("doc_id").collect()} == {8000}
+    matched = {
+        r["new_id"] for r in near_duplicate_matches_against(new, existing).collect()
+    }
+    unmatched = {r["doc_id"] for r in new.select("doc_id").collect()} - matched
+    assert unmatched == {8000}
 
 
 def test_incremental_near_existing_bucket_cap_is_deterministic(spark):

@@ -117,17 +117,6 @@ def test_pipeline_result_carries_lineage(spark, pages_df):
     assert rows and sum(r["rows_in"] for r in rows) == pages_df.count()
 
 
-def test_jsonl_corpus_roundtrip(spark, corpus, tmp_path):
-    from ocr_obsidian_spark.sources.io import read_corpus_jsonl, write_jsonl
-
-    path = str(tmp_path / "corpus_jsonl")
-    write_jsonl(corpus.drop("warc_ts"), path)  # json timestamps lose tz fidelity
-    back = read_corpus_jsonl(spark, path)
-    a = {r["url"]: (r["extracted_text"], r["lines_json"]) for r in corpus.collect()}
-    b = {r["url"]: (r["extracted_text"], r["lines_json"]) for r in back.collect()}
-    assert a == b
-
-
 def test_write_table_fail_closed(spark, corpus, tmp_path):
     from ocr_obsidian_spark.sources.io import read_table, write_table
 

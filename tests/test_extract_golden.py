@@ -14,7 +14,10 @@ Inputs (all deterministic, generated here, no Spark):
   * adversarial payloads: NaN/inf/tiny/huge confidences, coordinates beyond
     2^53 and 2^64, float and malformed bboxes, truncated JSON, control,
     astral-plane and lone-surrogate text, many-line pages and words whose
-    y-center sits exactly at a line's mean ± tolerance.
+    y-center sits exactly at a line's mean ± tolerance;
+  * fail-soft payloads: one malformed page dimension, confidence or
+    coordinate per page, each beyond what ``int``/``float`` accept; every
+    one must come back as a ``parse_ok=false`` row.
 Pages run under the default config; subsets also run with the printed-page
 debug payload on and with a zero line tolerance.
 
@@ -175,6 +178,35 @@ def _adversarial_pages(n: int = 700) -> list[tuple[str, Any]]:
     return out
 
 
+def _fail_soft_pages() -> list[tuple[str, bytes]]:
+    """Pages whose one malformed field once raised out of the kernel and
+    killed the map task: a page dimension that is null, not a number or
+    beyond float range, a confidence and a coordinate beyond float range,
+    and an integer coordinate beyond float range (which passes admission
+    and only overflows in the geometry)."""
+    page = (
+        b'{"page_width": %s, "page_height": %s, "scan_relpath": "s.png", "words": '
+        b'[{"t": "word", "b": [10, 20, 60, %s], "c": %s}, '
+        b'{"t": "more", "b": [%s, 20, %s, 42], "c": 90.0}]}'
+    )
+    big, big2 = b"1" * 400, b"2" * 400
+    # page_width, page_height, y2 and confidence of word 1, x1 and x2 of word 2
+    fields = {
+        "width_null": (b"null", b"1400", b"42", b"90.0", b"70", b"120"),
+        "width_text": (b'"wide"', b"1400", b"42", b"90.0", b"70", b"120"),
+        "width_1e400": (b"1e400", b"1400", b"42", b"90.0", b"70", b"120"),
+        "height_int400": (b"1000", big, b"42", b"90.0", b"70", b"120"),
+        "conf_int400": (b"1000", b"1400", b"42", b"1" + b"0" * 400, b"70", b"120"),
+        "coord_1e400": (b"1000", b"1400", b"1e400", b"90.0", b"70", b"120"),
+        "y_int400": (b"1000", b"1400", big, b"90.0", b"70", b"120"),
+        "x_int400": (b"1000", b"1400", b"42", b"90.0", big, big2),
+    }
+    return [
+        (f"https://failsoft.test/book_fs/page_{i:04d}#{name}", page % values)
+        for i, (name, values) in enumerate(fields.items(), start=1)
+    ]
+
+
 def golden_cases() -> Iterator[tuple[str, str, Any, Any]]:
     """(key, url, html, cfg) for every golden page."""
     from ocr_obsidian_spark.config import DEFAULT_CONFIG
@@ -190,6 +222,7 @@ def golden_cases() -> Iterator[tuple[str, str, Any, Any]]:
         ("fx7", fx7),
         ("sf0.01", _doc_pages()),
         ("adv", adv),
+        ("failsoft", _fail_soft_pages()),
     ]
     for tag, pages in sources:
         for url, html in pages:
@@ -216,6 +249,15 @@ def compute_digests() -> dict[str, str]:
         assert len(rec) == 21, sorted(rec)
         out[key] = record_digest(rec)
     return out
+
+
+def test_fail_soft_payloads_flag_the_page():
+    from ocr_obsidian_spark.config import DEFAULT_CONFIG
+    from ocr_obsidian_spark.operators.extract import _extract_one
+
+    for url, html in _fail_soft_pages():
+        rec = _extract_one(url, html, DEFAULT_CONFIG)
+        assert rec["parse_ok"] is False, url
 
 
 def test_extract_one_matches_golden():

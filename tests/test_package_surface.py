@@ -1,0 +1,77 @@
+"""No test-only public API: every module-level public function or class in
+``ocr_obsidian_spark/`` must be named by production code — the package
+itself, ``__spark_entry__.py``, ``bench*.py``, ``scripts/`` or
+``perfbench/``. A public function that only tests call is code that must be
+kept correct without a consumer; move the test onto the production path
+and delete it, or list it below with the reason it stays. Pure AST, no
+imports of the package."""
+
+from __future__ import annotations
+
+import ast
+from functools import cache
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
+PACKAGE = REPO / "ocr_obsidian_spark"
+
+# name -> why it stays public with only test callers
+ALLOWED_TEST_ONLY = {
+    "is_plausible_roman": "reference port of page_numbers.py, pinned by the oracle tests",
+    "fixture_trigger_rows": "source of the trigger fixture the pipeline tests run on",
+    "bucket_cap_stats": "cap report over any bucketed keying, named in operator docstrings",
+}
+
+
+def _production_files() -> list[Path]:
+    return [
+        *PACKAGE.rglob("*.py"),
+        REPO / "__spark_entry__.py",
+        *REPO.glob("bench*.py"),
+        *(REPO / "scripts").rglob("*.py"),
+        *(REPO / "perfbench").rglob("*.py"),
+    ]
+
+
+@cache
+def _public_defs() -> dict[str, str]:
+    out = {}
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.parse(path.read_text(encoding="utf-8")).body:
+            if isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) and not node.name.startswith("_"):
+                out[node.name] = str(path.relative_to(REPO))
+    return out
+
+
+@cache
+def _referenced_names() -> set[str]:
+    """Every name a production file loads, reads as an attribute or
+    imports (definitions alone do not count)."""
+    names: set[str] = set()
+    for path in _production_files():
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.Name):
+                names.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                names.add(node.attr)
+            elif isinstance(node, ast.alias):
+                names.add(node.name.rsplit(".", 1)[-1])
+    return names
+
+
+def test_every_public_definition_has_a_production_reference():
+    refs = _referenced_names()
+    orphans = sorted(
+        f"{where}: {name}"
+        for name, where in _public_defs().items()
+        if name not in refs and name not in ALLOWED_TEST_ONLY
+    )
+    assert not orphans, "public API with no production caller:\n" + "\n".join(orphans)
+
+
+def test_allowlist_names_live_test_only_definitions():
+    defs, refs = _public_defs(), _referenced_names()
+    stale = sorted(n for n in ALLOWED_TEST_ONLY if n not in defs or n in refs)
+    assert not stale, f"allowlist entries that are gone or now used: {stale}"

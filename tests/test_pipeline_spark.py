@@ -1,5 +1,5 @@
 """End-to-end Spark pipeline vs a driver-side oracle built from the
-reference's own functions (imported from /root/reference, PIL stubbed).
+reference's own functions (the ``reference`` fixture, PIL stubbed).
 
 The north-rule invariant: extracted text is BYTE-IDENTICAL per url to what
 the reference renderer produces for the same token stream; printed-page
@@ -11,30 +11,12 @@ from __future__ import annotations
 import json
 
 import pytest
-from ingest.highlights import _passes_candidate_shape_filters as oracle_shape
-from ingest.ocr import _group_lines as oracle_group
-from ingest.page_numbers import (
-    apply_printed_page_mode as oracle_mode,
-    detect_printed_page as oracle_detect,
-    infer_scan_side as oracle_side,
-)
-from ingest.qa_metrics import (
-    compute_text_metrics as oracle_metrics,
-    is_obviously_empty_or_garbage as oracle_gate,
-)
-from ingest.render_text import render_lines as oracle_render
-from ingest.spans import (
-    _bbox_union as oracle_union,
-    _merge_raw_spans as oracle_merge,
-    _select_line_indexes as oracle_select,
-)
-from ingest.types import OcrWord, PageRecord, to_jsonable
 
 from ocr_obsidian_spark.config import DEFAULT_CONFIG
 from ocr_obsidian_spark.plans.pipeline import run_pipeline
 
 
-def _oracle_tokens(row):
+def _oracle_tokens(row, OcrWord):
     payload = json.loads(row["html"].decode("utf-8"))
     words = []
     for w in payload["words"]:
@@ -61,8 +43,23 @@ def _book_page(url: str) -> tuple[str, int]:
 
 
 @pytest.fixture(scope="module")
-def oracle_state(fixture_pages, fixture_triggers):
+def oracle_state(fixture_pages, fixture_triggers, reference):
     """Reference pipeline run driver-side, sequentially per book."""
+    oracle_shape = reference("highlights")._passes_candidate_shape_filters
+    oracle_group = reference("ocr")._group_lines
+    page_numbers = reference("page_numbers")
+    oracle_mode = page_numbers.apply_printed_page_mode
+    oracle_detect = page_numbers.detect_printed_page
+    oracle_side = page_numbers.infer_scan_side
+    oracle_metrics = reference("qa_metrics").compute_text_metrics
+    oracle_gate = reference("qa_metrics").is_obviously_empty_or_garbage
+    oracle_render = reference("render_text").render_lines
+    oracle_union = reference("spans")._bbox_union
+    oracle_merge = reference("spans")._merge_raw_spans
+    oracle_select = reference("spans")._select_line_indexes
+    OcrWord = reference("types").OcrWord
+    PageRecord = reference("types").PageRecord
+    to_jsonable = reference("types").to_jsonable
     cfg = DEFAULT_CONFIG
     by_book: dict[str, list[dict]] = {}
     for row in fixture_pages:
@@ -76,7 +73,7 @@ def oracle_state(fixture_pages, fixture_triggers):
         mode = "auto"
         for row in rows:
             _, page_num = _book_page(row["url"])
-            payload, words = _oracle_tokens(row)
+            payload, words = _oracle_tokens(row, OcrWord)
             lines = oracle_group(words, page_num, cfg.line_y_tolerance_px)
             line_dicts = [to_jsonable(ln) for ln in lines]
             page_rec = PageRecord(

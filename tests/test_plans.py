@@ -5,8 +5,6 @@ is a 100×-scale bug even when results stay correct."""
 
 from __future__ import annotations
 
-import pytest
-
 SF = "/root/testdata/sf0.001"
 
 
@@ -385,82 +383,6 @@ def test_page_rank_iteration_plan_is_truncated_and_narrow(spark):
     assert "Python" not in p6 and "CartesianProduct" not in p6
     joins = len(re.findall(r"SortMergeJoin|BroadcastHashJoin", p6))
     assert joins <= 2, p6
-
-
-def test_bucketed_tables_join_and_aggregate_without_exchange(spark, tmp_path):
-    """Bucketed co-located joins (sources/io.py write_bucketed_table):
-    two tables bucketed by the same key into the same bucket count
-    sort-merge-join with ZERO Exchange nodes, groupBy on the bucket key
-    aggregates without a shuffle, and an equality filter on the bucket
-    column prunes to a single bucket at the scan. At 100 TB this is the
-    'shuffle once at ingest, never again' pattern — a plan regression
-    here silently reintroduces a full-corpus shuffle per join."""
-    from pyspark.sql import functions as F
-
-    from ocr_obsidian_spark.sources.io import (
-        read_bucketed_table,
-        write_bucketed_table,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", "source", "text"
-    )
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
-        F.col("vec_id").alias("doc_id"), "label"
-    )
-    expected = docs.join(emb, "doc_id").count()
-    write_bucketed_table(
-        docs, "tb_docs", bucket_by=["doc_id"], n_buckets=8,
-        sort_by=["doc_id"], path=str(tmp_path / "docs"),
-    )
-    write_bucketed_table(
-        emb, "tb_emb", bucket_by=["doc_id"], n_buckets=8,
-        sort_by=["doc_id"], path=str(tmp_path / "emb"),
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # fail-closed default: a second write to the same table errors
-        with pytest.raises(Exception, match="(?i)already exists"):
-            write_bucketed_table(
-                docs, "tb_docs", bucket_by=["doc_id"], n_buckets=8,
-                path=str(tmp_path / "docs2"),
-            )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        a = read_bucketed_table(spark, "tb_docs")
-        b = read_bucketed_table(spark, "tb_emb")
-        j = a.join(b, "doc_id")
-        p = plan_str(j)
-        assert "SortMergeJoin" in p
-        assert "Exchange" not in p, p
-        assert j.count() == expected
-        # map-side-only aggregation on the bucket key
-        pa = plan_str(a.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n")))
-        assert "Exchange" not in pa, pa
-        # bucket pruning: an equality filter scans 1 of 8 buckets. The
-        # planner auto-disables bucketed scans when nothing downstream
-        # needs the partitioning (autoBucketedScan), which also turns
-        # off pruning — pin the pruning path with the scan forced on.
-        spark.conf.set(
-            "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
-        )
-        try:
-            pf = plan_str(a.filter(F.col("doc_id") == 7))
-            assert "SelectedBucketsCount: 1 out of 8" in pf, pf
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.bucketing.autoBucketedScan.enabled", "true"
-            )
-        # validation errors
-        with pytest.raises(ValueError, match="bucket_by"):
-            write_bucketed_table(docs, "tb_bad", bucket_by=[], n_buckets=8)
-        with pytest.raises(ValueError, match="n_buckets"):
-            write_bucketed_table(
-                docs, "tb_bad", bucket_by=["doc_id"], n_buckets=0
-            )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS tb_docs")
-        spark.sql("DROP TABLE IF EXISTS tb_emb")
 
 
 def test_recipe_final_plan_is_truncated_and_udf_free(spark):

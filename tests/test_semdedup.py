@@ -13,10 +13,15 @@ from pyspark.sql import functions as F
 
 from ocr_obsidian_spark.operators.semdedup import (
     assign_semantic_cells,
-    drop_semantic_duplicates,
     semantic_dedup_labels,
     semantic_duplicate_pairs,
 )
+
+
+def _survivors(df, cents, **kwargs) -> set[int]:
+    """The ids SemDeDup keeps: one representative per duplicate group."""
+    labels = semantic_dedup_labels(df, cents, **kwargs)
+    return {r["vec_id"] for r in labels.filter(F.col("kept") == 1).collect()}
 
 
 def _fixture(spark, n_per=6, n_clusters=4, dim=8, seed=3):
@@ -95,8 +100,7 @@ def test_exact_copies_collapse_to_one_representative(spark):
     # groups (0.5% relative noise) — survivors must be exactly the naive
     # replay's per-component representatives, and never a planted copy
     # AND its original together
-    out = drop_semantic_duplicates(df, cents, threshold=0.9999)
-    surv = {r["vec_id"] for r in out.select("vec_id").collect()}
+    surv = _survivors(df, cents, threshold=0.9999)
     _, _, kept = _naive(rows, cents, 0.9999)
     assert surv == {i for i, k in kept.items() if k == 1}
     for j in range(3):
@@ -160,8 +164,6 @@ def test_invalid_embeddings_fail_soft(spark):
     modes of a corpus-scale encoder) must not kill the stage: they get
     sem_cell=-1, ride as their own singleton kept groups, never pair
     with each other, and valid rows dedup normally around them."""
-    from ocr_obsidian_spark.operators.semdedup import drop_semantic_duplicates
-
     cents = [[10.0, 0.0], [-10.0, 0.0]]
     rows = [
         (1, [9.0, 0.1]),
@@ -177,10 +179,7 @@ def test_invalid_embeddings_fail_soft(spark):
     }
     assert got[2] == (-1, 2, 1) and got[3] == (-1, 3, 1) and got[4] == (-1, 4, 1)
     assert got[1] == (0, 1, 1) and got[5] == (0, 1, 0)
-    surv = {r["vec_id"] for r in
-            drop_semantic_duplicates(df, cents, threshold=0.999)
-            .select("vec_id").collect()}
-    assert surv == {1, 2, 3, 4}
+    assert _survivors(df, cents, threshold=0.999) == {1, 2, 3, 4}
 
 
 def test_cell_restriction_blocks_cross_cell_pairs(spark):
@@ -198,8 +197,7 @@ def test_over_cap_cell_chains_and_components_survive(spark):
     cents = [[10.0, 0.0], [-10.0, 0.0]]
     rows = [(i, [9.0, 0.5]) for i in range(12)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = drop_semantic_duplicates(df, cents, threshold=0.9999, max_cell_size=4)
-    assert out.count() == 1
+    assert len(_survivors(df, cents, threshold=0.9999, max_cell_size=4)) == 1
 
 
 def test_driver_oracle_margins(spark):

@@ -142,11 +142,6 @@ def _components(n_ids, pairs):
 def test_near_dup_mega_cluster_bucket_cap(spark):
     """1k identical vectors: candidate volume must stay O(n), not n²/2, and
     the duplicate cluster must remain one connected component."""
-    from ocr_obsidian_spark.operators.similarity import (
-        bucket_cap_stats,
-        near_dup_signature_frame,
-    )
-
     base = _unit(np.random.default_rng(3), 64)
     rows = [(i, [float(x) for x in base]) for i in range(1000)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
@@ -157,8 +152,6 @@ def test_near_dup_mega_cluster_bucket_cap(spark):
     # ordering collapses them to exactly n-1
     assert len(pairs) == 999
     assert _components(1000, [(r["id_a"], r["id_b"]) for r in pairs]) == 1
-    stats = bucket_cap_stats(near_dup_signature_frame(df, dim=64), ["table", "sig"], 32)
-    assert stats["n_over_cap"] >= 1 and stats["max_bucket"] == 1000
 
 
 def test_near_dup_drops_invalid_vectors(spark):

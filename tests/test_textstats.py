@@ -6,9 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_obsidian_spark.operators.textstats import (
-    tier_by_cutpoints,
-    with_fingerprint,
-    with_lang_id,
+    _norm,
     with_quality_score,
     with_quality_tiers,
     with_repetition_stats,
@@ -57,6 +55,9 @@ def test_quality_score_degenerate_inputs(spark):
 
 
 def test_lang_id(spark):
+    """The stopword-marker stage of the language-ID cascade."""
+    from ocr_obsidian_spark.operators.langid import with_language
+
     df = spark.createDataFrame(
         [
             (1, "the cat and the dog of that house is to be"),
@@ -66,7 +67,7 @@ def test_lang_id(spark):
         ],
         ["doc_id", "text"],
     )
-    rows = {r["doc_id"]: r["lang_id"] for r in with_lang_id(df).collect()}
+    rows = {r["doc_id"]: r["lang_marker"] for r in with_language(df).collect()}
     assert rows[1] == "en"
     assert rows[2] == "de"
     assert rows[3] == "fr"
@@ -113,39 +114,21 @@ def test_quality_tiers_exact(spark):
         assert got[(g, 1.0)] == 3 and got[(g, 0.0)] == 3
 
 
-def test_tier_by_cutpoints_matches_ntile(docs, spark):
-    """The sketch path must agree with exact ntile away from boundaries
-    and stay monotone (higher score ⇒ never a worse tier number)."""
-    import pyspark.sql.functions as F
-
-    scored = with_quality_score(docs).withColumn(
-        "q", F.round("quality_score", 6)
-    ).select("doc_id", "lang", "q")
-    exact = with_quality_tiers(scored, score_col="q", by="lang", tiers=3)
-    approx = tier_by_cutpoints(
-        scored, score_col="q", by="lang", tiers=3, tier_col="tier_a"
-    )
-    j = exact.join(approx.select("doc_id", "tier_a"), "doc_id").collect()
-    # boundary ties can differ by at most one tier; bulk must agree
-    diffs = [abs(r["tier"] - r["tier_a"]) for r in j]
-    assert max(diffs) <= 1
-    assert sum(1 for d in diffs if d == 0) >= 0.9 * len(j)
-    # monotone within each language
-    by_lang: dict[str, list] = {}
-    for r in j:
-        by_lang.setdefault(r["lang"], []).append((r["q"], r["tier_a"]))
-    for pairs in by_lang.values():
-        pairs.sort(key=lambda p: (-p[0], p[1]))
-        tiers = [t for _, t in pairs]
-        assert tiers == sorted(tiers)
-
-
 def test_fingerprint_whitespace_invariant(spark):
     df = spark.createDataFrame(
         [(1, "Hello   world"), (2, "hello world"), (3, "different")],
         ["doc_id", "text"],
     )
-    rows = {r["doc_id"]: r for r in with_fingerprint(df).collect()}
+    # the normalized-content fingerprint of the ``fingerprint`` registry row
+    norm = _norm("text")
+    rows = {
+        r["doc_id"]: r
+        for r in df.select(
+            "doc_id",
+            F.md5(norm).alias("fingerprint_md5"),
+            F.xxhash64(norm).alias("fingerprint64"),
+        ).collect()
+    }
     assert rows[1]["fingerprint_md5"] == rows[2]["fingerprint_md5"]
     assert rows[1]["fingerprint64"] == rows[2]["fingerprint64"]
     assert rows[1]["fingerprint_md5"] != rows[3]["fingerprint_md5"]
