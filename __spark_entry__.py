@@ -878,7 +878,7 @@ def q_simhash_dups(spark: SparkSession, sf: str) -> DataFrame:
 
 def _lsh_verified(spark: SparkSession, sf: str):
     """Shared LSH-verified >=0.8-Jaccard pair pipeline (round 6): the
-    candidate table is materialized once (localCheckpoint) and its id set
+    candidate table is materialized once (truncate_lineage) and its id set
     semi-join-filters the corpus (broadcast when driver-sized) BEFORE the
     verification shingle arrays are built — previously the full corpus
     paid the shingle computation twice more (sa and sb) just to feed the
@@ -894,7 +894,7 @@ def _lsh_verified(spark: SparkSession, sf: str):
     )
 
     docs = _docs_with_dups(spark, sf, spread=True)
-    cands = truncate_lineage(minhash_lsh_candidate_pairs(docs), "local")
+    cands = truncate_lineage(minhash_lsh_candidate_pairs(docs))
     cand_ids = (
         cands.select(F.col("id_a").alias("doc_id"))
         .union(cands.select(F.col("id_b").alias("doc_id")))
@@ -1175,7 +1175,7 @@ def _crawlish_docs(spark: SparkSession, sf: str) -> DataFrame:
     target = spark.sparkContext.defaultParallelism
     if d.rdd.getNumPartitions() < target:
         d = d.repartition(target)
-    return truncate_lineage(d, "local")
+    return truncate_lineage(d)
 
 
 def crawl_shape(text: F.Column) -> F.Column:

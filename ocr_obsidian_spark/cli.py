@@ -480,10 +480,9 @@ def run_prepare(args) -> int:
             "--langs parsed to an empty allowlist; omit the flag to keep "
             "all languages"
         )
-    if args.checkpoint == "reliable" and not args.checkpoint_dir:
-        raise ConfigError("--checkpoint reliable requires --checkpoint-dir")
     spark = _session(args)
-    if args.checkpoint == "reliable":
+    if args.checkpoint_dir:
+        # a session checkpoint dir makes every stage boundary reliable
         spark.sparkContext.setCheckpointDir(args.checkpoint_dir)
     _check_out(args.out, args.overwrite)
     docs = spark.read.parquet(args.docs)
@@ -498,7 +497,6 @@ def run_prepare(args) -> int:
         jaccard_threshold=args.jaccard,
         line_dedup_min_docs=args.min_line_docs or None,
         keep_by=args.keep_by,
-        checkpoint=args.checkpoint,
     )
     write_table(
         res.df, args.out, mode="overwrite" if args.overwrite == "always" else "error"
@@ -955,15 +953,11 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--jaccard", type=float, default=0.8)
     p.add_argument("--min-line-docs", type=int, default=2,
                    help="cross-document line dedup threshold (0 disables)")
-    p.add_argument("--checkpoint", default="local",
-                   choices=["local", "reliable"],
-                   help="stage-boundary mode: local (fastest; truncated "
-                        "blocks die with an executor) or reliable (cluster "
-                        "setting — survives executor loss; needs "
-                        "--checkpoint-dir)")
     p.add_argument("--checkpoint-dir", default=None,
-                   help="fault-tolerant checkpoint directory for "
-                        "--checkpoint reliable")
+                   help="write stage boundaries as reliable checkpoints "
+                        "here (cluster setting — survives executor loss); "
+                        "default: local checkpoints (fastest; truncated "
+                        "blocks die with an executor)")
     p.set_defaults(handler=run_prepare)
 
     p = sub.add_parser(

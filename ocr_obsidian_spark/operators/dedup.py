@@ -268,7 +268,6 @@ def pair_components(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iter: int = 25,
-    checkpoint: str = "local",
     driver_max_edges: int | None = 2_000_000,
 ) -> DataFrame:
     """(node, component) — connected components of the near-dup pair graph;
@@ -286,12 +285,10 @@ def pair_components(
     checked with a count per round (driver-side loop, standard for
     iterative algorithms on Spark).
 
-    ``checkpoint`` selects the per-round lineage truncation: ``"local"``
-    (default) uses ``localCheckpoint`` — fastest, but the truncated blocks
-    live on executors, so an executor loss mid-iteration fails the job on a
-    real cluster; ``"reliable"`` writes each round to the session's
-    ``spark.sparkContext.setCheckpointDir`` (must be configured) and
-    survives executor loss — the at-scale setting.
+    The edge table and every round's labels are cut with
+    ``xengine.truncate_lineage``: reliable checkpoints into the session's
+    checkpoint dir when one is set (they survive executor loss), local
+    checkpoints otherwise.
 
     ``driver_max_edges`` gates a SMALL-GRAPH fast path: the input here is
     the *verified duplicate-pair* graph, which is orders of magnitude
@@ -305,27 +302,12 @@ def pair_components(
     equivalence is fuzz-pinned in tests/test_dedup.py. Set
     ``driver_max_edges=None`` (or 0) to force the distributed path.
     """
-    if checkpoint not in ("local", "reliable"):
-        raise ValueError(f"unknown checkpoint mode: {checkpoint!r}")
-    if checkpoint == "reliable":
-        sc = pairs.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise ValueError(
-                "checkpoint='reliable' requires "
-                "spark.sparkContext.setCheckpointDir(...) to be set"
-            )
-
-    def _truncate(df: DataFrame) -> DataFrame:
-        if checkpoint == "reliable":
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     # edges are consumed more than once whichever path wins (the gate
     # probe + either the union-find collect or every distributed round)
     # — truncate FIRST so the upstream candidate pipeline
     # (signatures/banding/verification) executes exactly once; gating on
     # the raw plan would re-execute all of it on the over-threshold path
-    edges = _truncate(
+    edges = truncate_lineage(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionByName(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
         .distinct()
@@ -371,7 +353,7 @@ def pair_components(
         .distinct()
         .withColumn("label", F.col("node"))
     )
-    labels = _truncate(labels)  # truncate lineage per round
+    labels = truncate_lineage(labels)  # truncate lineage per round
     for _ in range(max_iter):
         neigh_min = (
             edges.join(labels, edges.dst == labels.node)
@@ -389,7 +371,7 @@ def pair_components(
             stepped.join(lab2, stepped.label == lab2._n2, "left")
             .select("node", F.least(F.col("label"), F.coalesce("_l2", "label")).alias("label"))
         )
-        doubled = _truncate(doubled)
+        doubled = truncate_lineage(doubled)
         changed = (
             doubled.alias("n")
             .join(labels.alias("o"), "node")
@@ -655,7 +637,7 @@ def near_duplicate_matches_against(
     Verification joins each candidate to its two shingle arrays —
     O(candidates), never all-pairs.
 
-    The candidate table is materialized eagerly (localCheckpoint) and its
+    The candidate table is materialized eagerly (truncate_lineage) and its
     id sets semi-join-filter both corpora BEFORE the shingle arrays are
     built, so verification shingles are computed for candidate rows only.
     The candidate set is bounded by construction (|new ∩ bucket| ×
@@ -677,7 +659,7 @@ def near_duplicate_matches_against(
         .drop("_rn")
     )
     cands = nb.join(eb, ["band", "bucket"]).select("new_id", "existing_id").distinct()
-    cands = truncate_lineage(cands, "local")
+    cands = truncate_lineage(cands)
     new_src = new.join(
         broadcast_if_small(cands.select(F.col("new_id").alias(id_col)).distinct()),
         id_col,

@@ -268,7 +268,6 @@ def dsir_select(
     id_col: str = "doc_id",
     text_col: str = "text",
     seed: int = 7,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """One row per input row: ``(id_col, n_grams, logw_micro, selected)``
     — ``selected`` (0/1 long) marks the Gumbel-top-k sample of size
@@ -286,8 +285,7 @@ def dsir_select(
     scored = truncate_lineage(
         with_dsir_weight(df, model, text_col=text_col).select(
             F.col(id_col), "n_grams", "logw_micro"
-        ),
-        checkpoint,
+        )
     )
     key = F.round(
         F.col("logw_micro") / F.lit(1e6) + _gumbel_key(id_col, seed), 6

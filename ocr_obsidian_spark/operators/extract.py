@@ -250,6 +250,10 @@ EXTRACT_COMBINED = T.StructType(
     + _LINEAGE_EXTRA
 )
 
+# the kernel's int fields that land in IntegerType columns, with the
+# fallback a value outside int32 takes (the kernel's own defaults)
+_INT32_FALLBACKS = (("page_num", 0), ("page_width", 1000), ("page_height", 1400))
+
 
 def extract_pages_with_lineage(
     df: DataFrame,
@@ -298,6 +302,10 @@ def extract_pages_with_lineage(
                     min_url = url if min_url is None else min(min_url, url)
                     max_url = url if max_url is None else max(max_url, url)
                 rec = _extract_one(url, html, cfg)
+                # one out-of-int32 value would fail the whole Arrow batch
+                for k, default in _INT32_FALLBACKS:
+                    if not -(2**31) <= rec[k] < 2**31:
+                        rec[k], rec["parse_ok"] = default, False
                 rec["url"] = url
                 rec["warc_ts"] = warc_ts
                 rec["lang"] = lang

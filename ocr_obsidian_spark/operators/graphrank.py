@@ -121,7 +121,6 @@ def page_rank(
     damping_num: int = 85,
     damping_den: int = 100,
     scale: int = 10**12,
-    checkpoint: str = "local",
     node_col: str = "node",
     rank_col: str = "rank_i",
 ) -> DataFrame:
@@ -147,13 +146,12 @@ def page_rank(
     nodes = truncate_lineage(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
-        .distinct(),
-        checkpoint,
+        .distinct()
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # contributions divide by outdeg per edge, so pre-join deg once and
     # truncate: the per-iteration join then touches only narrow columns.
-    edeg = truncate_lineage(e.join(deg, "src"), checkpoint)
+    edeg = truncate_lineage(e.join(deg, "src"))
     teleport = (scale * (damping_den - damping_num)) // damping_den
 
     # initial ranks need no cut of their own: they are a trivial
@@ -178,7 +176,7 @@ def page_rank(
                 ).alias("r"),
             )
         )
-        ranks = truncate_lineage(ranks, checkpoint)
+        ranks = truncate_lineage(ranks)
     return ranks.select(F.col("node").alias(node_col), F.col("r").cast("long").alias(rank_col))
 
 

@@ -24,8 +24,9 @@ Spark-first shape:
     exact dedup (the near-dedup consumes that frame three times —
     signatures, Jaccard verification, final anti-join). The round-5
     semdedup/pair_components lesson: cut every frame a loop or
-    multi-branch consumer re-reads. At cluster scale pass
-    ``checkpoint="reliable"`` so the boundary survives executor loss.
+    multi-branch consumer re-reads. At cluster scale set a checkpoint
+    dir on the session (CLI ``prepare --checkpoint-dir``) and the
+    boundaries become reliable checkpoints that survive executor loss.
 """
 
 from __future__ import annotations
@@ -122,13 +123,9 @@ def prepare_web_corpus(
     c4: bool = True,
     line_dedup_min_docs: int | None = 2,
     jaccard_threshold: float = 0.8,
-    num_hashes: int = 64,
-    bands: int = 16,
     keep_by: str | None = None,
     benchmark: DataFrame | None = None,
-    contamination_k: int = 8,
     pii: bool = True,
-    checkpoint: str | None = "local",
 ) -> PrepareResult:
     """documents → training-ready corpus, one job, stage counts observed.
 
@@ -136,8 +133,9 @@ def prepare_web_corpus(
     only those languages. ``keep_by="quality_score"`` makes near-dedup
     keep the best-scoring member per duplicate component (RefinedWeb
     keep-best) instead of the min-id one. ``benchmark`` enables
-    k-shingle eval-set decontamination. ``checkpoint=None`` disables the
-    stage boundaries (plan-shape tests only — never at scale).
+    k-shingle eval-set decontamination. The stage boundaries are
+    ``xengine.truncate_lineage`` cuts: reliable when the session has a
+    checkpoint dir, local otherwise.
 
     Output columns: the input's, plus ``lang_id`` and ``quality_score``.
     """
@@ -164,8 +162,7 @@ def prepare_web_corpus(
         c4=c4,
         mark=mark,
     )
-    if checkpoint:
-        out = truncate_lineage(out, checkpoint)
+    out = truncate_lineage(out)
     if line_dedup_min_docs:
         # the line-frequency rebuild aggregates by id and returns only
         # (id, text) — run it on that narrow projection (wide columns
@@ -186,26 +183,20 @@ def prepare_web_corpus(
         *(c for c in ("lang_id", "quality_score") if c not in df.columns),
     )
     out = mark("exact_dedup", drop_exact_duplicates(out, text_col, id_col))
-    if checkpoint:
-        out = truncate_lineage(out, checkpoint)
-    cands = minhash_lsh_candidate_pairs(out, text_col, id_col, num_hashes, bands)
-    ver_src = out
-    if checkpoint:
-        # decide-with-small-rows (round 6, same shape as
-        # dedup.near_duplicate_matches_against): materialize the sparse
-        # candidate table once and semi-join-filter the corpus (broadcast
-        # when the id set is driver-sized) before the verification shingle
-        # arrays are built — otherwise the full corpus pays the shingle
-        # computation twice more (sa and sb) just to feed the candidate join.
-        cands = truncate_lineage(cands, checkpoint)
-        cand_ids = (
-            cands.select(F.col("id_a").alias(id_col))
-            .union(cands.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        ver_src = out.join(
-            broadcast_if_small(cand_ids, checkpoint), id_col, "left_semi"
-        )
+    out = truncate_lineage(out)
+    # decide-with-small-rows (same shape as
+    # dedup.near_duplicate_matches_against): materialize the sparse
+    # candidate table once and semi-join-filter the corpus (broadcast
+    # when the id set is driver-sized) before the verification shingle
+    # arrays are built — otherwise the full corpus pays the shingle
+    # computation twice more (sa and sb) just to feed the candidate join.
+    cands = truncate_lineage(minhash_lsh_candidate_pairs(out, text_col, id_col))
+    cand_ids = (
+        cands.select(F.col("id_a").alias(id_col))
+        .union(cands.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
+    ver_src = out.join(broadcast_if_small(cand_ids), id_col, "left_semi")
     pairs = ngram_jaccard_pairs(
         ver_src, text_col, id_col, threshold=jaccard_threshold, candidate_pairs=cands
     )
@@ -215,9 +206,7 @@ def prepare_web_corpus(
     if benchmark is not None:
         out = mark(
             "decontaminate",
-            decontaminate(
-                out, benchmark, text_col=text_col, id_col=id_col, k=contamination_k
-            ),
+            decontaminate(out, benchmark, text_col=text_col, id_col=id_col),
         )
     if pii:
         out = scrub_pii(out, text_col=text_col)

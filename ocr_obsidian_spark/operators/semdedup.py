@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from .dedup import pair_components
 from .similarity import _valid_embedding, bucketed_cosine_pairs
+from .xengine import truncate_lineage
 
 
 def _assign_sim_udf(centroids: list[list[float]]):
@@ -141,23 +142,6 @@ def assign_semantic_cells(
     return out.drop("_valid", "_safe", "_as")
 
 
-def _truncate(df: DataFrame, checkpoint: str) -> DataFrame:
-    """Lineage truncation at the assignment boundary. The K-centroid
-    argmin is a K×dim-literal expression tree; left in the lineage it is
-    duplicated into every downstream window/join/distinct and Catalyst
-    re-optimizes a multi-megabyte plan on EVERY action (measured: 31 s of
-    driver-side planning for a 0.5 s job at K=32). The assignment output
-    is a narrow (id, cell, sim) table — cutting here keeps all later
-    stages planning over attributes, and is also what a 100 TB run wants:
-    the giant literal tree must not ship with every task. Same
-    ``checkpoint`` contract as ``dedup.pair_components``: ``"local"``
-    (fast, executor-resident) or ``"reliable"`` (survives executor loss;
-    requires a configured checkpoint dir)."""
-    from .xengine import truncate_lineage
-
-    return truncate_lineage(df, checkpoint)
-
-
 def semantic_duplicate_pairs(
     df: DataFrame,
     centroids: list[list[float]],
@@ -166,7 +150,6 @@ def semantic_duplicate_pairs(
     vec_col: str = "embedding",
     threshold: float = 0.9999,
     max_cell_size: int = 4096,
-    checkpoint: str = "local",
     assigned: DataFrame | None = None,
 ) -> DataFrame:
     """(id_a, id_b) pairs with cosine >= ``threshold`` among CELL-MATES.
@@ -178,11 +161,10 @@ def semantic_duplicate_pairs(
     assignment table pass it in instead of recomputing it; it must carry
     ``id_col`` and a ``_cell`` column."""
     if assigned is None:
-        assigned = _truncate(
+        assigned = truncate_lineage(
             assign_semantic_cells(
                 df, centroids, vec_col=vec_col, cell_col="_cell"
-            ).select(F.col(id_col), F.col("_cell")),
-            checkpoint,
+            ).select(F.col(id_col), F.col("_cell"))
         )
     # cell -1 = invalid embeddings (fail-soft): they must never pair —
     # bucketing them together would join every broken row to every other
@@ -209,7 +191,6 @@ def semantic_dedup_labels(
     vec_col: str = "embedding",
     threshold: float = 0.9999,
     max_cell_size: int = 4096,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """One row per input row: ``(id_col, sem_cell, component, kept)``.
 
@@ -219,14 +200,16 @@ def semantic_dedup_labels(
     similarity, id ascending as the tie-break (exact copies have equal
     scores). Integer-only output: the driver oracle hashes no float.
 
-    The assignment is computed ONCE and lineage-truncated (see
-    ``_truncate``) — pairs, components and the keep window all read the
-    narrow (id, cell, sim) table, never the K×dim-literal plan."""
-    assigned = _truncate(
+    The assignment is computed ONCE and lineage-truncated — pairs,
+    components and the keep window all read the narrow (id, cell, sim)
+    table, never the K×dim-literal plan."""
+    # cut at the assignment boundary: the K×dim-literal argmin tree left
+    # in the lineage is re-planned on every downstream action (measured:
+    # 31 s of driver planning for a 0.5 s job at K=32)
+    assigned = truncate_lineage(
         assign_semantic_cells(
             df, centroids, vec_col=vec_col, cell_col="sem_cell"
-        ).select(F.col(id_col), "sem_cell", "cent_sim"),
-        checkpoint,
+        ).select(F.col(id_col), "sem_cell", "cent_sim")
     )
     pairs = semantic_duplicate_pairs(
         df,
@@ -235,12 +218,11 @@ def semantic_dedup_labels(
         vec_col=vec_col,
         threshold=threshold,
         max_cell_size=max_cell_size,
-        checkpoint=checkpoint,
         assigned=assigned.select(
             F.col(id_col), F.col("sem_cell").alias("_cell")
         ),
     )
-    comps = pair_components(pairs, checkpoint=checkpoint).select(
+    comps = pair_components(pairs).select(
         F.col("node").alias(id_col), "component"
     )
     labeled = assigned.join(comps, id_col, "left").withColumn(

@@ -54,6 +54,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .textstats import _norm
+from .xengine import truncate_lineage
 
 
 def drop_duplicated_substrings(
@@ -65,7 +66,6 @@ def drop_duplicated_substrings(
     min_docs: int = 2,
     out_col: str | None = None,
     anchor_hash: str = "xxhash64",
-    checkpoint: str | None = "local",
 ) -> DataFrame:
     """Remove every ``width``-word shingle (and thus every shared passage
     of >= ``width`` words) that appears in >= ``min_docs`` distinct
@@ -88,6 +88,10 @@ def drop_duplicated_substrings(
     (the driver-oracle twin — the one hash DuckDB shares bit-for-bit;
     32-char keys, ~2× slower end-to-end, identical semantics — the
     simhash64 / simhash64_md5 precedent).
+
+    The narrow (id, pos, hash) occurrence table is materialized once with
+    ``xengine.truncate_lineage`` (step 1's stage boundary), so the text
+    scan and the shingle hashing run once for both consumers.
     """
     if width < 2:
         raise ValueError("width must be >= 2 words")
@@ -134,15 +138,10 @@ def drop_duplicated_substrings(
     occ = words.select(
         F.col(id_col), F.posexplode(shingles).alias("_pos", "_h")
     )
-    if checkpoint:
-        # the (id, pos, hash) table feeds BOTH the duplicate-hash groupBy
-        # and the coverage semi-join; without a boundary each branch
-        # re-runs the normalize + split + shingle-hash transform over the
-        # whole corpus (round 6: materialize the narrow table once —
-        # ``checkpoint=None`` restores the fully-lazy plan)
-        from .xengine import truncate_lineage
-
-        occ = truncate_lineage(occ, checkpoint)
+    # the (id, pos, hash) table feeds BOTH the duplicate-hash groupBy
+    # and the coverage semi-join; without a boundary each branch re-runs
+    # the normalize + split + shingle-hash transform over the whole corpus
+    occ = truncate_lineage(occ)
     dup = (
         occ.groupBy("_h")
         .agg(F.count_distinct(F.col(id_col)).alias("_nd"))

@@ -62,38 +62,33 @@ def sql_str_literal(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 
 
-def truncate_lineage(df, checkpoint: str = "local"):
-    """Eager lineage truncation at a stage boundary — the shared helper
-    behind semdedup's assignment cut, dsir's scored-table cut and
-    pair_components' edge cut. Use it wherever a narrow table would
-    otherwise carry a giant literal expression tree into every
-    downstream operator (planning cost) or be re-executed by an
-    iterative loop / multi-branch consumer (execution cost).
+def truncate_lineage(df):
+    """Eager lineage truncation at a stage boundary — the one place that
+    picks the boundary mode, behind the recipe's stage cuts, semdedup's
+    assignment cut, dsir's scored-table cut and pair_components' edge and
+    per-round cuts. Use it wherever a narrow table would otherwise carry a
+    giant literal expression tree into every downstream operator (planning
+    cost) or be re-executed by an iterative loop / multi-branch consumer
+    (execution cost).
 
-    ``checkpoint``: ``"local"`` (localCheckpoint — fastest; truncated
-    blocks live on executors, so an executor loss mid-job fails the job
-    on a real cluster) or ``"reliable"`` (writes to the session's
-    configured checkpoint dir and survives executor loss — the at-scale
-    setting; requires ``spark.sparkContext.setCheckpointDir``)."""
-    if checkpoint not in ("local", "reliable"):
-        raise ValueError(f"unknown checkpoint mode: {checkpoint!r}")
-    if checkpoint == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise ValueError(
-                "checkpoint='reliable' requires "
-                "spark.sparkContext.setCheckpointDir(...) to be set"
-            )
+    The mode follows from the session: with a checkpoint dir set
+    (``spark.sparkContext.setCheckpointDir``, CLI ``prepare
+    --checkpoint-dir``) the table is written there with a reliable
+    ``checkpoint`` that survives executor loss — the at-scale setting;
+    otherwise ``localCheckpoint`` keeps the blocks on executors — fastest,
+    but an executor loss mid-job fails the job on a real cluster."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
 
 
-def broadcast_if_small(df, checkpoint: str = "local"):
+def broadcast_if_small(df):
     """A data-derived key set (candidate ids, null urls) ready to join:
-    materialized once with ``truncate_lineage`` — the sizing count then
-    reads the truncated blocks and the join reuses them, so the set is
-    computed exactly once — and hinted ``F.broadcast`` only when it holds
+    materialized once with ``truncate_lineage`` (local or reliable, as
+    the session decides) — the sizing count then reads the truncated
+    blocks and the join reuses them, so the set is computed exactly
+    once — and hinted ``F.broadcast`` only when it holds
     at most ``MAX_BROADCAST_ROWS`` rows. An adversarial input with a huge
     set degrades to a regular join instead of a driver OOM."""
-    df = truncate_lineage(df, checkpoint)
+    df = truncate_lineage(df)
     return F.broadcast(df) if df.count() <= MAX_BROADCAST_ROWS else df

@@ -555,9 +555,28 @@ def test_prepare_subcommand(tmp_path, spark, capsys):
     assert prepared.count() == 7
     assert {"lang_id", "quality_score"} <= set(prepared.columns)
 
-    # config errors, all raised before any Spark work: bad jaccard, an
-    # empty --langs allowlist (would silently drop the whole corpus),
-    # reliable checkpointing without a directory
+    # --checkpoint-dir makes the stage boundaries reliable checkpoints
+    # under that dir; the prepared rows are the default run's
+    ckpt = tmp_path / "p_ckpt"
+    out_r = str(tmp_path / "p_out_reliable")
+    sc = spark.sparkContext
+    try:
+        assert main([
+            "prepare", "--docs", src, "--out", out_r, "--langs", "en",
+            "--benchmark", benchp, "--min-line-docs", "3",
+            "--checkpoint-dir", str(ckpt),
+        ]) == 0
+    finally:
+        # unset the dir so no later test runs with reliable boundaries
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+    assert any(f.is_file() for f in ckpt.rglob("*"))
+    def rows(path):
+        return sorted(spark.read.parquet(path).collect(), key=lambda r: r["doc_id"])
+
+    assert rows(out_r) == rows(out)
+
+    # config errors, all raised before any Spark work: bad jaccard and an
+    # empty --langs allowlist (would silently drop the whole corpus)
     assert main([
         "prepare", "--docs", src, "--out", str(tmp_path / "p_bad"),
         "--jaccard", "1.5",
@@ -565,10 +584,6 @@ def test_prepare_subcommand(tmp_path, spark, capsys):
     assert main([
         "prepare", "--docs", src, "--out", str(tmp_path / "p_bad2"),
         "--langs", "",
-    ]) == 3
-    assert main([
-        "prepare", "--docs", src, "--out", str(tmp_path / "p_bad3"),
-        "--checkpoint", "reliable",
     ]) == 3
 
 

@@ -181,27 +181,24 @@ def test_simhash_stability_and_near_dup(docs):
 
 
 def test_pair_components_reliable_checkpoint(spark, tmp_path):
-    """checkpoint='reliable' (cluster setting: survives executor loss)
-    converges to the same components as the local default, and refuses to
-    run without a configured checkpoint dir."""
-    import pytest as _pytest
-
+    """A session checkpoint dir (cluster setting: survives executor loss)
+    turns every truncate_lineage cut into a reliable checkpoint written
+    under that dir; the 200-edge chain still resolves to one component."""
     from ocr_obsidian_spark.operators.dedup import pair_components
 
     df = spark.createDataFrame([(i, i + 1) for i in range(200)], "id_a long, id_b long")
     sc = spark.sparkContext
-    prev = sc.getCheckpointDir()
-    if prev is None:
-        with _pytest.raises(ValueError, match="setCheckpointDir"):
-            pair_components(df, checkpoint="reliable").collect()
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    got = {r["node"]: r["component"]
-           for r in pair_components(
-               df, checkpoint="reliable", driver_max_edges=None
-           ).collect()}
-    assert set(got.values()) == {0} and len(got) == 201
-    with _pytest.raises(ValueError, match="unknown checkpoint mode"):
-        pair_components(df, checkpoint="bogus")
+    ckpt = tmp_path / "ckpt"
+    sc.setCheckpointDir(str(ckpt))
+    try:
+        got = {r["node"]: r["component"]
+               for r in pair_components(df, driver_max_edges=None).collect()}
+        assert set(got.values()) == {0} and len(got) == 201
+        assert any(f.is_file() for f in ckpt.rglob("*"))
+    finally:
+        # unset the dir so no later test runs with reliable boundaries
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+    assert sc.getCheckpointDir() is None
 
 
 def test_simhash64_md5_matches_python_oracle(spark):

@@ -17,8 +17,9 @@ import pytest
 def test_malformed_payloads_fail_soft(spark):
     """At 10^12 docs a corrupt payload must degrade to a flagged row, never
     kill the stage — NULL html, truncated JSON, non-dict JSON, words of the
-    wrong type, and words with broken bboxes all survive with
-    parse_ok=False; detection skips them without error."""
+    wrong type, words with broken bboxes, and a page size or page number
+    beyond int32 all survive with parse_ok=False; detection skips them
+    without error."""
     import datetime as _dt
     import json as _json
 
@@ -40,12 +41,19 @@ def test_malformed_payloads_fail_soft(spark):
          b'{"words": [{"t": "x", "b": [1], "c": 90.0}, {"t": "ok", "b": [0,0,30,20], "c": 90.0}]}',
          "", "eng"),
         ("https://x.test/book_b/page_0006", ts, good, "", "eng"),
+        # int32 overflow: the huge page number falls back to page_num 0
+        ("https://x.test/book_b/page_0007", ts, b'{"page_width": 1099511627776}', "", "eng"),
+        ("https://x.test/book_b/page_0008", ts,
+         b'{"page_width": 1180591620717411303424}', "", "eng"),
+        ("https://x.test/book_b/page_1099511627776", ts, good, "", "eng"),
     ]
     df = spark.createDataFrame(rows, schema=PAGES)
     out = {r["page_num"]: r for r in extract_pages(df).collect()}
-    assert len(out) == 6
-    for p in (1, 2, 3, 4, 5):
+    assert len(out) == 9
+    for p in (0, 1, 2, 3, 4, 5, 7, 8):
         assert out[p]["parse_ok"] is False, p
+    assert out[7]["page_width"] == out[8]["page_width"] == 1000
+    assert out[0]["extracted_text"] == "Hello"
     assert out[6]["parse_ok"] is True
     assert out[6]["extracted_text"] == "Hello"
     # the salvageable word on page 5 still extracts

@@ -1,15 +1,10 @@
 """Geometry + span-selection unit tests (reference ingest/test_spans.py,
 test_highlights.py cases) and oracle fuzz against the reference span
-functions (imported with a PIL stub — see conftest)."""
+functions (the ``reference`` fixture, PIL stubbed — see conftest)."""
 
 from __future__ import annotations
 
 import random
-
-from ingest.spans import (  # reference oracle
-    _merge_raw_spans as oracle_merge,
-    _select_line_indexes as oracle_select,
-)
 
 from ocr_obsidian_spark.functions.geometry import (
     bbox_union,
@@ -36,7 +31,8 @@ def test_vertical_stripe_selects_exactly_one_line():
     assert len(idxs) == 1
 
 
-def test_full_overlap_selects_matching_lines():
+def test_full_overlap_selects_matching_lines(reference):
+    oracle_select = reference("spans")._select_line_indexes
     trigger = [40, 135, 820, 245]  # covers lines 2-4 y ranges
     idxs = select_line_indexes(LINES, trigger, **KW)
     assert idxs == oracle_select(LINES, trigger, **KW)
@@ -77,7 +73,8 @@ def test_span_ids_number_in_first_seen_order():
     assert spans[0]["line_ids"][0] != "p3_l1"
 
 
-def test_select_fuzz_against_reference():
+def test_select_fuzz_against_reference(reference):
+    oracle_select = reference("spans")._select_line_indexes
     rng = random.Random(5)
     for _ in range(1500):
         lines = [
@@ -93,7 +90,8 @@ def test_select_fuzz_against_reference():
         )
 
 
-def test_merge_fuzz_against_reference():
+def test_merge_fuzz_against_reference(reference):
+    oracle_merge = reference("spans")._merge_raw_spans
     rng = random.Random(6)
     for _ in range(500):
         raw = []

@@ -75,3 +75,30 @@ def test_allowlist_names_live_test_only_definitions():
     defs, refs = _public_defs(), _referenced_names()
     stale = sorted(n for n in ALLOWED_TEST_ONLY if n not in defs or n in refs)
     assert not stale, f"allowlist entries that are gone or now used: {stale}"
+
+
+def test_stage_boundary_mode_is_decided_in_xengine_only():
+    """``xengine.truncate_lineage`` is the one place that picks local or
+    reliable checkpointing (from the session's checkpoint dir): no package
+    function takes a ``checkpoint`` parameter, and no other production
+    file calls ``localCheckpoint`` or ``checkpoint`` itself."""
+    owner = PACKAGE / "operators" / "xengine.py"
+    params, calls = [], []
+    for path in _production_files():
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        where = str(path.relative_to(REPO))
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                a = node.args
+                names = [x.arg for x in (*a.posonlyargs, *a.args, *a.kwonlyargs)]
+                if path.is_relative_to(PACKAGE) and "checkpoint" in names:
+                    params.append(f"{where}:{node.lineno}")
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("checkpoint", "localCheckpoint")
+                and path != owner
+            ):
+                calls.append(f"{where}:{node.lineno}")
+    assert not params, f"functions with a checkpoint parameter: {params}"
+    assert not calls, f"checkpoint calls outside xengine.truncate_lineage: {calls}"

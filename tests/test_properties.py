@@ -5,17 +5,6 @@ input space adversarially."""
 from __future__ import annotations
 
 from hypothesis import given, settings, strategies as st
-from ingest.page_numbers import (
-    is_plausible_roman as oracle_plausible,
-    normalize_roman as oracle_norm,
-    roman_to_int as oracle_roman,
-)
-from ingest.render_text import (
-    _merge_hyphen_breaks as oracle_hyphen,
-    _normalize_spaces as oracle_spaces,
-    _token_is_junk as oracle_junk,
-    render_lines as oracle_render,
-)
 
 from ocr_obsidian_spark.functions.romans import (
     is_plausible_roman,
@@ -40,7 +29,10 @@ _texty = st.text(
 
 @given(_texty)
 @settings(max_examples=400, deadline=None)
-def test_roman_parser_matches_reference(s):
+def test_roman_parser_matches_reference(reference, s):
+    pn = reference("page_numbers")
+    oracle_norm, oracle_roman = pn.normalize_roman, pn.roman_to_int
+    oracle_plausible = pn.is_plausible_roman
     assert normalize_roman(s) == oracle_norm(s)
     assert roman_to_int(s) == oracle_roman(s)
     assert is_plausible_roman(s, min_len=2, max_value=80) == oracle_plausible(
@@ -50,13 +42,15 @@ def test_roman_parser_matches_reference(s):
 
 @given(_texty, st.floats(min_value=0, max_value=100, allow_nan=False))
 @settings(max_examples=400, deadline=None)
-def test_junk_token_matches_reference(s, conf):
+def test_junk_token_matches_reference(reference, s, conf):
+    oracle_junk = reference("render_text")._token_is_junk
     assert token_is_junk(s, conf) == oracle_junk(s, conf)
 
 
 @given(_texty)
 @settings(max_examples=300, deadline=None)
-def test_normalize_spaces_matches_reference(s):
+def test_normalize_spaces_matches_reference(reference, s):
+    oracle_spaces = reference("render_text")._normalize_spaces
     assert normalize_spaces(s) == oracle_spaces(s)
 
 
@@ -67,7 +61,8 @@ _line = st.text(
 
 @given(st.lists(_line, max_size=8))
 @settings(max_examples=300, deadline=None)
-def test_hyphen_merge_matches_reference(lines):
+def test_hyphen_merge_matches_reference(reference, lines):
+    oracle_hyphen = reference("render_text")._merge_hyphen_breaks
     # the reference fold consumes pairs; inputs are post-clean lines
     cleaned = [normalize_spaces(l) for l in lines if normalize_spaces(l)]
     assert merge_hyphen_breaks(cleaned) == oracle_hyphen(list(cleaned))
@@ -75,10 +70,10 @@ def test_hyphen_merge_matches_reference(lines):
 
 @given(st.text(alphabet=st.sampled_from(list("abXY_012.lLrR/\\")), max_size=16))
 @settings(max_examples=300, deadline=None)
-def test_infer_scan_side_matches_reference(name):
-    from ingest.page_numbers import infer_scan_side as oracle_side
-
+def test_infer_scan_side_matches_reference(reference, name):
     from ocr_obsidian_spark.functions.romans import infer_scan_side
+
+    oracle_side = reference("page_numbers").infer_scan_side
 
     assert infer_scan_side(name) == oracle_side(name)
 
@@ -95,13 +90,11 @@ def test_infer_scan_side_matches_reference(name):
     )
 )
 @settings(max_examples=200, deadline=None)
-def test_qa_metrics_match_reference(line_words):
-    from ingest.qa_metrics import (
-        compute_text_metrics as oracle_metrics,
-        is_obviously_empty_or_garbage as oracle_gate,
-    )
-
+def test_qa_metrics_match_reference(reference, line_words):
     from ocr_obsidian_spark.functions.qa import compute_text_metrics, is_garbage_page
+
+    qa = reference("qa_metrics")
+    oracle_metrics, oracle_gate = qa.compute_text_metrics, qa.is_obviously_empty_or_garbage
 
     lines = []
     for i, ws in enumerate(line_words):
@@ -135,9 +128,10 @@ def test_qa_metrics_match_reference(line_words):
     )
 )
 @settings(max_examples=200, deadline=None)
-def test_render_byte_identical_property(line_words):
+def test_render_byte_identical_property(reference, line_words):
     """THE invariant under arbitrary token streams: byte-identical render
     (including the O(n) paragraph-fold rewrite's shortcut equivalences)."""
+    oracle_render = reference("render_text").render_lines
     lines = []
     for i, ws in enumerate(line_words):
         words = [
@@ -169,14 +163,14 @@ def test_render_byte_identical_property(line_words):
     )
 )
 @settings(max_examples=200, deadline=None)
-def test_trusted_line_text_metrics_equivalence(raw_words):
+def test_trusted_line_text_metrics_equivalence(reference, raw_words):
     """compute_text_metrics(trusted_line_text=True) must equal BOTH the
     untrusted path and the reference on lines produced by the real
     admission + group_lines path (the provenance the fast path trusts)."""
-    from ingest.qa_metrics import compute_text_metrics as oracle_metrics
-
     from ocr_obsidian_spark.functions.geometry import admit_word, group_lines
     from ocr_obsidian_spark.functions.qa import compute_text_metrics
+
+    oracle_metrics = reference("qa_metrics").compute_text_metrics
 
     words = []
     for t, c, x1, y1, w, h in raw_words:

@@ -5,11 +5,6 @@ from __future__ import annotations
 
 import random
 
-from ingest.qa_metrics import (  # reference oracle
-    compute_text_metrics as oracle_metrics,
-    is_obviously_empty_or_garbage as oracle_gate,
-)
-
 from ocr_obsidian_spark.functions.qa import (
     compute_text_metrics,
     is_garbage_page,
@@ -57,7 +52,9 @@ def test_placeholder_format():
     )
 
 
-def test_metrics_and_gate_fuzz_against_reference():
+def test_metrics_and_gate_fuzz_against_reference(reference):
+    qa = reference("qa_metrics")
+    oracle_metrics, oracle_gate = qa.compute_text_metrics, qa.is_obviously_empty_or_garbage
     rng = random.Random(11)
     pool = ["word", "|", "||", "123", "a", ".", "x|y", "café", "!!!", ""]
     for _ in range(2000):

@@ -6,12 +6,6 @@ from __future__ import annotations
 
 import random
 
-from ingest.page_numbers import (  # reference oracle
-    detect_printed_page as oracle_detect,
-    roman_to_int as oracle_roman,
-)
-from ingest.types import OcrLine, OcrWord, PageRecord
-
 from ocr_obsidian_spark.functions.romans import (
     detect_printed_page,
     infer_scan_side,
@@ -36,7 +30,8 @@ def test_roman_plausibility():
     assert not is_plausible_roman("c", min_len=1, max_value=80)  # value 100 > 80
 
 
-def test_roman_fuzz_against_reference():
+def test_roman_fuzz_against_reference(reference):
+    oracle_roman = reference("page_numbers").roman_to_int
     rng = random.Random(7)
     alphabet = "ivxlcdmIVXLCDM abq.,0-"
     for _ in range(5000):
@@ -95,7 +90,8 @@ def test_single_letter_roman_rejected():
     assert res["printed_page"] is None
 
 
-def _to_oracle_page(words, lines):
+def _to_oracle_page(types, words, lines):
+    OcrLine, OcrWord, PageRecord = types.OcrLine, types.OcrWord, types.PageRecord
     ws = [OcrWord(text=w["text"], bbox=w["bbox"], confidence=w["confidence"]) for w in words]
     lns = [
         OcrLine(
@@ -115,7 +111,9 @@ def _to_oracle_page(words, lines):
     )
 
 
-def test_detection_fuzz_against_reference():
+def test_detection_fuzz_against_reference(reference):
+    oracle_detect = reference("page_numbers").detect_printed_page
+    types = reference("types")
     rng = random.Random(99)
     texts = ["14", "7", "1203", "xiv", "xx", "iix", "m", "Chapter", "IX.", "12a", "9999"]
     for _ in range(400):
@@ -152,7 +150,7 @@ def test_detection_fuzz_against_reference():
             words, lines, page_width=1000, page_height=1400, side=side, debug=True
         )
         expected, expected_debug = oracle_detect(
-            _to_oracle_page(words, lines),
+            _to_oracle_page(types, words, lines),
             page_width=1000, page_height=1400, side=side, debug=True,
         )
         got_debug = ours.pop("debug")

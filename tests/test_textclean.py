@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import random
 
-from ingest.render_text import render_lines as oracle_render  # reference oracle
 
 from ocr_obsidian_spark.functions.textclean import (
     clean_line,
@@ -56,7 +55,8 @@ def test_lowercase_continuation_reflows():
     assert render_page_text(lines) == "The city was quiet and the night fell."
 
 
-def test_list_lines_do_not_reflow():
+def test_list_lines_do_not_reflow(reference):
+    oracle_render = reference("render_text").render_lines
     # single '-' markers are junk-stripped (so those lines DO reflow — same
     # as the reference); 3-4 digit list lines keep their marker and must not
     lines = [
@@ -125,8 +125,9 @@ def _random_lines(rng: random.Random) -> list[dict]:
     return lines
 
 
-def test_byte_identity_against_reference_fuzz():
+def test_byte_identity_against_reference_fuzz(reference):
     """2000 random pages: our renderer is byte-identical to the reference."""
+    oracle_render = reference("render_text").render_lines
     rng = random.Random(1234)
     for _ in range(2000):
         lines = _random_lines(rng)
