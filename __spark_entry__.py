@@ -877,32 +877,16 @@ def q_simhash_dups(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _lsh_verified(spark: SparkSession, sf: str):
-    """Shared LSH-verified >=0.8-Jaccard pair pipeline (round 6): the
-    candidate table is materialized once (truncate_lineage) and its id set
-    semi-join-filters the corpus (broadcast when driver-sized) BEFORE the
-    verification shingle arrays are built — previously the full corpus
-    paid the shingle computation twice more (sa and sb) just to feed the
-    candidate join.
-    Returns (docs, verified_pairs); the pair set is unchanged."""
+    """(docs, verified >=0.8-Jaccard pairs over MinHash candidates) — the
+    candidate → verify composition the recipe runs."""
     from ocr_obsidian_spark.operators.dedup import (
         minhash_lsh_candidate_pairs,
         ngram_jaccard_pairs,
     )
-    from ocr_obsidian_spark.operators.xengine import (
-        broadcast_if_small,
-        truncate_lineage,
-    )
 
     docs = _docs_with_dups(spark, sf, spread=True)
-    cands = truncate_lineage(minhash_lsh_candidate_pairs(docs))
-    cand_ids = (
-        cands.select(F.col("id_a").alias("doc_id"))
-        .union(cands.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    cand_docs = docs.join(broadcast_if_small(cand_ids), "doc_id", "left_semi")
     pairs = ngram_jaccard_pairs(
-        cand_docs, threshold=0.8, candidate_pairs=cands
+        docs, threshold=0.8, candidate_pairs=minhash_lsh_candidate_pairs(docs)
     )
     return docs, pairs
 
@@ -1179,10 +1163,8 @@ def _crawlish_docs(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def crawl_shape(text: F.Column) -> F.Column:
-    """The one shaping rule (shared with scripts/recipe_scaling_probe.py
-    so the floor and the scaling ledger always measure the SAME
-    pipeline): 12-word period-terminated lines + a stopword-bearing
-    closing line."""
+    """The one shaping rule: 12-word period-terminated lines + a
+    stopword-bearing closing line."""
     return F.concat(
         F.regexp_replace(
             F.coalesce(text, F.lit("")),

@@ -10,8 +10,7 @@ The flagship ``extract`` query measures the north-rule metric
 (documents/sec through the full byte-identical extraction pipeline); the
 corpus is the sf documents table replicated ``SPARK_GRAFT_REPLICATE``×
 (default 4) with distinct ids so the map stage has enough partitions to
-exercise all cores. Same seed + same input ⇒ run-to-run comparable and
-usable for the N-vs-4N scaling evidence (scripts/scaling_bench.py).
+exercise all cores. Same seed + same input ⇒ run-to-run comparable.
 """
 
 from __future__ import annotations
@@ -204,9 +203,9 @@ def main() -> None:
     # of a query's generated stages is a per-PLAN-SHAPE, data-independent
     # one-time cost — measured 9.2 s for jaccard_pairs on a 50-doc input,
     # after which the first sf0.1 execution lands on its floor (2.9 s vs
-    # 14 s cold; scripts/jaccard_warmup_probe.py). At 100 TB that cost is
-    # amortized to zero; timing it into single-shot rows misreports every
-    # complex plan by its compile time, not its throughput.
+    # 14 s cold). At 100 TB that cost is amortized to zero; timing it
+    # into single-shot rows misreports every complex plan by its compile
+    # time, not its throughput.
     warm_dir = os.environ.get("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
     if warm_dir and os.path.isdir(warm_dir):
         for name in headliners:

@@ -481,27 +481,36 @@ def run_prepare(args) -> int:
             "all languages"
         )
     spark = _session(args)
+    _check_out(args.out, args.overwrite)
+    sc = spark.sparkContext
     if args.checkpoint_dir:
         # a session checkpoint dir makes every stage boundary reliable
-        spark.sparkContext.setCheckpointDir(args.checkpoint_dir)
-    _check_out(args.out, args.overwrite)
-    docs = spark.read.parquet(args.docs)
-    bench = spark.read.parquet(args.benchmark) if args.benchmark else None
-    res = prepare_web_corpus(
-        docs,
-        text_col=args.text_col,
-        id_col=args.id_col,
-        url_col=args.url_col,
-        langs=langs,
-        benchmark=bench,
-        jaccard_threshold=args.jaccard,
-        line_dedup_min_docs=args.min_line_docs or None,
-        keep_by=args.keep_by,
-    )
-    write_table(
-        res.df, args.out, mode="overwrite" if args.overwrite == "always" else "error"
-    )
-    print(_json.dumps({"stages": res.counts(), "out": args.out}, sort_keys=True))
+        sc.setCheckpointDir(args.checkpoint_dir)
+    try:
+        docs = spark.read.parquet(args.docs)
+        bench = spark.read.parquet(args.benchmark) if args.benchmark else None
+        res = prepare_web_corpus(
+            docs,
+            text_col=args.text_col,
+            id_col=args.id_col,
+            url_col=args.url_col,
+            langs=langs,
+            benchmark=bench,
+            jaccard_threshold=args.jaccard,
+            line_dedup_min_docs=args.min_line_docs or None,
+            keep_by=args.keep_by,
+        )
+        write_table(
+            res.df, args.out, mode="overwrite" if args.overwrite == "always" else "error"
+        )
+        print(_json.dumps({"stages": res.counts(), "out": args.out}, sort_keys=True))
+    finally:
+        if args.checkpoint_dir:
+            # Spark never deletes the per-context D/<uuid> it checkpointed
+            # into; unset the dir too, so later work here is local again
+            path = sc._jvm.org.apache.hadoop.fs.Path(sc.getCheckpointDir())
+            path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
+            getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
     return 0
 
 

@@ -200,6 +200,50 @@ def minhash_lsh_candidate_pairs(
     return bucketed_candidate_pairs(banded, id_col, ["band", "bucket"], max_bucket_size)
 
 
+def _jaccard(n_inter: F.Column, n_a: F.Column, n_b: F.Column) -> F.Column:
+    """Set Jaccard ``|A∩B| / |A∪B|`` from the intersection and set sizes."""
+    return n_inter / (n_a + n_b - n_inter)
+
+
+def _verified_pairs(
+    cands: DataFrame, left: DataFrame, right: DataFrame | None, a: str, b: str,
+    *, text_col: str, id_col: str, k: int, threshold: float,
+) -> DataFrame:
+    """(a, b, jaccard) for the candidate pairs with shingle-set Jaccard
+    >= threshold — the one candidate → verified-pairs composition.
+
+    Decide with small rows: the candidate table is cut once
+    (``truncate_lineage``; the id sets and the pair join all read it) and
+    its id sets semi-join the corpus (``xengine.broadcast_if_small``)
+    BEFORE shingle arrays are built, so only candidate rows pay for
+    shingles. ``right=None`` is the self-join: one ``a ∪ b`` id set, one
+    semi-join and one shingle frame feed both sides; otherwise ``a`` ids
+    come from ``left`` and ``b`` ids from ``right``. Candidate ids missing
+    from their corpus drop out of the inner joins."""
+    cands = truncate_lineage(cands)
+
+    def shingled(src: DataFrame, *cols: str) -> DataFrame:
+        ids = cands.select(F.explode(F.array(*cols)).alias(id_col)).distinct()
+        return src.join(broadcast_if_small(ids), id_col, "left_semi").select(
+            F.col(id_col), word_shingles(text_col, k).alias("shs")
+        )
+
+    if right is None:
+        sh_a = sh_b = shingled(left, a, b)
+    else:
+        sh_a, sh_b = shingled(left, a), shingled(right, b)
+    return (
+        cands.join(sh_a.select(F.col(id_col).alias(a), F.col("shs").alias("_sa")), a)
+        .join(sh_b.select(F.col(id_col).alias(b), F.col("shs").alias("_sb")), b)
+        .withColumn("_inter", F.size(F.array_intersect("_sa", "_sb")))
+        .withColumn(
+            "jaccard", _jaccard(F.col("_inter"), F.size("_sa"), F.size("_sb"))
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -212,51 +256,30 @@ def ngram_jaccard_pairs(
 
     Two physical strategies, same semantics:
 
-    * with ``candidate_pairs`` (the 100 TB path): join each candidate pair
-      to its two shingle sets and compute ``array_intersect`` directly —
-      cost is O(|candidates| · shingles), never an all-pairs or
-      inverted-index explosion;
+    * with ``candidate_pairs`` (the 100 TB path every near-dup caller
+      takes): ``_verified_pairs`` — shingles for candidate rows only and
+      one set intersection per pair, never an all-pairs explosion;
     * without candidates (exact, small-corpus/oracle path): inverted-index
       self-join on shingles. Beware: frequency-skewed shingles make this
       superlinear — at scale always pass LSH candidates.
     """
-    sh = df.select(F.col(id_col), word_shingles(text_col, k).alias("shs"))
-
     if candidate_pairs is not None:
-        sa = sh.select(F.col(id_col).alias("id_a"), F.col("shs").alias("shs_a"))
-        sb = sh.select(F.col(id_col).alias("id_b"), F.col("shs").alias("shs_b"))
-        return (
-            candidate_pairs.join(sa, "id_a")
-            .join(sb, "id_b")
-            .withColumn("n_inter", F.size(F.array_intersect("shs_a", "shs_b")))
-            .withColumn(
-                "jaccard",
-                F.col("n_inter")
-                / (F.size("shs_a") + F.size("shs_b") - F.col("n_inter")),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
+        return _verified_pairs(
+            candidate_pairs, df, None, "id_a", "id_b",
+            text_col=text_col, id_col=id_col, k=k, threshold=threshold,
         )
 
-    sizes = sh.select(F.col(id_col), F.size("shs").alias("n_sh"))
-    inv = sh.select(F.col(id_col), F.explode("shs").alias("sh"))
-    a = inv.select(F.col(id_col).alias("id_a"), "sh")
-    b = inv.select(F.col(id_col).alias("id_b"), "sh")
-    inter = (
-        a.join(b, ["sh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+    # each posting carries its doc's set size, so no size table joins back
+    sh = df.select(F.col(id_col), word_shingles(text_col, k).alias("shs"))
+    inv = sh.select(F.col(id_col), F.size("shs").alias("n"), F.explode("shs").alias("sh"))
+    a = inv.select(F.col(id_col).alias("id_a"), F.col("n").alias("n_a"), "sh")
+    b = inv.select(F.col(id_col).alias("id_b"), F.col("n").alias("n_b"), "sh")
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
+        a.join(b, "sh")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b", "n_a", "n_b")
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+        .withColumn("jaccard", _jaccard(F.col("n_inter"), F.col("n_a"), F.col("n_b")))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -423,8 +446,6 @@ def drop_near_duplicates(
             F.col("node").alias(id_col)
         )
     else:
-        from pyspark.sql import Window
-
         scored = comps.join(
             df.select(F.col(id_col).alias("node"), F.col(keep_by).alias("_s")),
             "node",
@@ -634,15 +655,8 @@ def near_duplicate_matches_against(
     mega-bucket of boilerplate would otherwise emit |new∩bucket| × m
     pairs; the cap is deterministic and reportable via
     ``bucket_cap_stats`` on the existing bucket keys, never silent).
-    Verification joins each candidate to its two shingle arrays —
-    O(candidates), never all-pairs.
-
-    The candidate table is materialized eagerly (truncate_lineage) and its
-    id sets semi-join-filter both corpora BEFORE the shingle arrays are
-    built, so verification shingles are computed for candidate rows only.
-    The candidate set is bounded by construction (|new ∩ bucket| ×
-    per-bucket cap); each id set is broadcast only when driver-sized
-    (``xengine.broadcast_if_small``)."""
+    Verification is ``_verified_pairs`` with ``existing`` as the right
+    side (shingles for candidate rows only)."""
     from .similarity import require_bucket_cap
 
     require_bucket_cap(max_bucket_size)
@@ -653,37 +667,11 @@ def near_duplicate_matches_against(
         existing, text_col, id_col, num_hashes, bands
     ).select(F.col(id_col).alias("existing_id"), "band", "bucket")
     w = Window.partitionBy("band", "bucket").orderBy("existing_id")
-    eb = (
-        eb.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= max_bucket_size)
-        .drop("_rn")
+    eb = eb.withColumn("_rn", F.row_number().over(w)).filter(
+        F.col("_rn") <= max_bucket_size
     )
     cands = nb.join(eb, ["band", "bucket"]).select("new_id", "existing_id").distinct()
-    cands = truncate_lineage(cands)
-    new_src = new.join(
-        broadcast_if_small(cands.select(F.col("new_id").alias(id_col)).distinct()),
-        id_col,
-        "left_semi",
-    )
-    ex_src = existing.join(
-        broadcast_if_small(cands.select(F.col("existing_id").alias(id_col)).distinct()),
-        id_col,
-        "left_semi",
-    )
-    sa = new_src.select(
-        F.col(id_col).alias("new_id"), word_shingles(text_col, k).alias("_sa")
-    )
-    sb = ex_src.select(
-        F.col(id_col).alias("existing_id"), word_shingles(text_col, k).alias("_sb")
-    )
-    return (
-        cands.join(sa, "new_id")
-        .join(sb, "existing_id")
-        .withColumn("_inter", F.size(F.array_intersect("_sa", "_sb")))
-        .withColumn(
-            "jaccard",
-            F.col("_inter") / (F.size("_sa") + F.size("_sb") - F.col("_inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "existing_id", "jaccard")
+    return _verified_pairs(
+        cands, new, existing, "new_id", "existing_id",
+        text_col=text_col, id_col=id_col, k=k, threshold=threshold,
     )

@@ -26,7 +26,10 @@ Spark-first shape:
     semdedup/pair_components lesson: cut every frame a loop or
     multi-branch consumer re-reads. At cluster scale set a checkpoint
     dir on the session (CLI ``prepare --checkpoint-dir``) and the
-    boundaries become reliable checkpoints that survive executor loss.
+    boundaries become reliable checkpoints that survive executor loss;
+  * near-dedup is ``dedup.ngram_jaccard_pairs`` over MinHash LSH
+    candidates — the one candidate → verify composition (candidate cut,
+    id-set semi-join, shingles for candidate rows only).
 """
 
 from __future__ import annotations
@@ -51,7 +54,7 @@ from .webprep import (
     drop_url_duplicates,
     scrub_pii,
 )
-from .xengine import broadcast_if_small, truncate_lineage
+from .xengine import truncate_lineage
 
 
 @dataclass
@@ -184,21 +187,9 @@ def prepare_web_corpus(
     )
     out = mark("exact_dedup", drop_exact_duplicates(out, text_col, id_col))
     out = truncate_lineage(out)
-    # decide-with-small-rows (same shape as
-    # dedup.near_duplicate_matches_against): materialize the sparse
-    # candidate table once and semi-join-filter the corpus (broadcast
-    # when the id set is driver-sized) before the verification shingle
-    # arrays are built — otherwise the full corpus pays the shingle
-    # computation twice more (sa and sb) just to feed the candidate join.
-    cands = truncate_lineage(minhash_lsh_candidate_pairs(out, text_col, id_col))
-    cand_ids = (
-        cands.select(F.col("id_a").alias(id_col))
-        .union(cands.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    ver_src = out.join(broadcast_if_small(cand_ids), id_col, "left_semi")
+    cands = minhash_lsh_candidate_pairs(out, text_col, id_col)
     pairs = ngram_jaccard_pairs(
-        ver_src, text_col, id_col, threshold=jaccard_threshold, candidate_pairs=cands
+        out, text_col, id_col, threshold=jaccard_threshold, candidate_pairs=cands
     )
     out = mark(
         "near_dedup", drop_near_duplicates(out, pairs, id_col, keep_by=keep_by)

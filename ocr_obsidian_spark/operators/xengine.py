@@ -64,12 +64,12 @@ def sql_str_literal(s: str) -> str:
 
 def truncate_lineage(df):
     """Eager lineage truncation at a stage boundary — the one place that
-    picks the boundary mode, behind the recipe's stage cuts, semdedup's
-    assignment cut, dsir's scored-table cut and pair_components' edge and
-    per-round cuts. Use it wherever a narrow table would otherwise carry a
-    giant literal expression tree into every downstream operator (planning
-    cost) or be re-executed by an iterative loop / multi-branch consumer
-    (execution cost).
+    picks the boundary mode, behind the recipe's stage cuts, the near-dup
+    candidate cut, semdedup's assignment cut, dsir's scored-table cut and
+    pair_components' edge and per-round cuts. Use it wherever a narrow
+    table would otherwise carry a giant literal expression tree into every
+    downstream operator (planning cost) or be re-executed by an iterative
+    loop / multi-branch consumer (execution cost).
 
     The mode follows from the session: with a checkpoint dir set
     (``spark.sparkContext.setCheckpointDir``, CLI ``prepare

@@ -525,7 +525,7 @@ def test_report_subcommand(tmp_path, spark, capsys):
     assert "top_hosts" not in prof
 
 
-def test_prepare_subcommand(tmp_path, spark, capsys):
+def test_prepare_subcommand(tmp_path, spark, capsys, monkeypatch):
     """The one-job composed pipeline from the CLI: stage counters printed
     as JSON, prepared corpus written. Fixture and expected stage-by-stage
     drops are shared with tests/test_recipe.py."""
@@ -556,20 +556,33 @@ def test_prepare_subcommand(tmp_path, spark, capsys):
     assert {"lang_id", "quality_score"} <= set(prepared.columns)
 
     # --checkpoint-dir makes the stage boundaries reliable checkpoints
-    # under that dir; the prepared rows are the default run's
+    # under that dir, deleted (and the dir unset) when the command ends;
+    # the prepared rows are the default run's
+    from ocr_obsidian_spark.sources import io
+
     ckpt = tmp_path / "p_ckpt"
     out_r = str(tmp_path / "p_out_reliable")
     sc = spark.sparkContext
+    written = []  # rdd-* checkpoint dirs present once the sink wrote
+    write = io.write_table
+
+    def recording_write(*a, **kw):
+        write(*a, **kw)
+        written.extend(ckpt.rglob("rdd-*"))
+
+    monkeypatch.setattr(io, "write_table", recording_write)
     try:
         assert main([
             "prepare", "--docs", src, "--out", out_r, "--langs", "en",
             "--benchmark", benchp, "--min-line-docs", "3",
             "--checkpoint-dir", str(ckpt),
         ]) == 0
+        assert sc.getCheckpointDir() is None
     finally:
         # unset the dir so no later test runs with reliable boundaries
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
-    assert any(f.is_file() for f in ckpt.rglob("*"))
+    assert written, "no reliable checkpoint was written under --checkpoint-dir"
+    assert not list(ckpt.rglob("rdd-*"))
     def rows(path):
         return sorted(spark.read.parquet(path).collect(), key=lambda r: r["doc_id"])
 

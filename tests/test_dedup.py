@@ -104,6 +104,33 @@ def test_ngram_jaccard_scores(docs):
     assert all(abs(rows[p] - 1.0) < 1e-9 for p in exact)
 
 
+def test_candidate_verify_equals_exact_path_on_candidates(spark, docs):
+    """The candidate → verify composition (cut, id-set semi-join,
+    shingles for candidate rows, Jaccard) returns exactly the exact
+    inverted-index pairs restricted to the candidates, with identical
+    jaccard values; a candidate whose id is not in the corpus drops out
+    instead of raising."""
+    cands = minhash_lsh_candidate_pairs(docs)
+    cand_set = {(r["id_a"], r["id_b"]) for r in cands.collect()}
+
+    def pairs(candidate_pairs):
+        return {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in ngram_jaccard_pairs(
+                docs, threshold=0.5, candidate_pairs=candidate_pairs
+            ).collect()
+        }
+
+    exact = pairs(None)
+    got = pairs(cands)
+    assert got == {p: j for p, j in exact.items() if p in cand_set}
+    assert len(got) >= 10  # at least the 10 exact copies
+
+    lo = min(a for a, _ in cand_set)
+    ghost = spark.createDataFrame([(lo, 999_999_999)], cands.schema)
+    assert pairs(cands.unionByName(ghost)) == got
+
+
 def _uf_components(n_ids, pairs):
     parent = list(range(n_ids))
 

@@ -95,6 +95,85 @@ def test_minhash_signatures_map_only(spark):
     assert "Exchange" not in plan_str(minhash_signatures(docs))
 
 
+def _semi_join_id_sets(df) -> list[int]:
+    """RDD ids of the truncated id sets read by the LeftSemi joins of the
+    optimized plan, one entry per join occurrence (a DataFrame used twice
+    appears twice, over the same id set)."""
+    ids = []
+
+    def walk(node, under_semi_build):
+        if under_semi_build and node.nodeName() == "LogicalRDD":
+            ids.append(node.rdd().id())
+        semi = (
+            node.nodeName() == "Join"
+            and node.joinType().toString() == "LeftSemi"
+        )
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i), under_semi_build or (semi and i == 1))
+
+    walk(df._jdf.queryExecution().optimizedPlan(), False)
+    return ids
+
+
+def test_near_dup_verify_shingles_only_candidate_rows(spark):
+    """The one candidate → verify composition (dedup._verified_pairs) for
+    the self-join (ngram_jaccard_pairs over candidates) and the
+    cross-corpus path (near_duplicate_matches_against): the candidate
+    table is a truncated scan, every shingle-building Project sits above
+    a LeftSemi join to a candidate id set — shingles for candidate rows
+    only — and the self-join uses one id set for both sides."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from ocr_obsidian_spark.operators.dedup import (
+        minhash_lsh_candidate_pairs,
+        near_duplicate_matches_against,
+        ngram_jaccard_pairs,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    new = docs.filter(F.col("doc_id") < 10).select(
+        (F.col("doc_id") + 100000).alias("doc_id"), "text"
+    )
+    cases = [
+        (
+            ngram_jaccard_pairs(
+                docs, threshold=0.5,
+                candidate_pairs=minhash_lsh_candidate_pairs(docs),
+            ),
+            r"Scan ExistingRDD\[id_a#\d+L,id_b#\d+L\]",
+            1,
+        ),
+        (
+            near_duplicate_matches_against(new, docs),
+            r"Scan ExistingRDD\[new_id#\d+L,existing_id#\d+L\]",
+            2,
+        ),
+    ]
+    for df, cand_scan, n_id_sets in cases:
+        p = plan_str(df, mode="simple")
+        assert re.search(cand_scan, p), p
+        lines = p.splitlines()
+        shingle_rows = [i for i, ln in enumerate(lines)
+                        if "Project [" in ln and "arrays_zip" in ln]
+        assert len(shingle_rows) == 2, p
+        for i in shingle_rows:
+            # a node's subtree: the following lines whose tree marker
+            # (":- " / "+- ") is indented past the node's own marker
+            depth = lines[i].index("Project [") - 3
+            below = []
+            for ln in lines[i + 1:]:
+                m = re.search(r"[:+]- ", ln)
+                if m is None or m.start() <= depth:
+                    break
+                below.append(ln)
+            assert any("LeftSemi" in ln for ln in below), lines[i]
+        ids = _semi_join_id_sets(df)
+        assert len(ids) == 2 and len(set(ids)) == n_id_sets, ids
+
+
 def test_block_classifier_prunes_scan(spark):
     from ocr_obsidian_spark.operators.blocks import classify_text_blocks
 
