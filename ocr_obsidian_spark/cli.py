@@ -15,6 +15,10 @@ corpus + lineage parquet; ``detect-blocks``/``make-spans``/``emit-notes``
 each read the prior stage's table; ``export-text`` materializes per-book
 text files from the corpus. ``smoke`` chains all five on fixtures — the
 scripts/dev_smoke_test.ps1 analog (reference README.md:187-195).
+
+Table-writing stages refuse existing outputs first and commit through
+``sources.io.commit_tables`` (staged, footer-counted, swapped in together),
+so a failed run leaves the previous output as it was.
 """
 
 from __future__ import annotations
@@ -23,23 +27,14 @@ import argparse
 import os
 import sys
 import traceback
+from dataclasses import replace
 
 from .config import ConfigError, PipelineConfig, load_pipeline_yaml
-
-
-class OverwriteError(RuntimeError):
-    """Fail-closed write refusal (reference ingest/utils_paths.py:75-95)."""
+from .sources import io as sink
 
 
 class DependencyError(RuntimeError):
     """A required runtime piece is missing (reference OcrDependencyError)."""
-
-
-def _check_out(path: str, overwrite: str) -> None:
-    if overwrite == "never" and os.path.exists(path):
-        raise OverwriteError(
-            f"Output exists and --overwrite=never: {path} (use --overwrite always)"
-        )
 
 
 def _session(args):
@@ -83,12 +78,8 @@ def _load_pages(spark, pages_arg: str):
 def _cfg(args) -> PipelineConfig:
     cfg = load_pipeline_yaml(getattr(args, "config", None))
     if getattr(args, "no_clean_text", False):
-        from dataclasses import replace
-
         cfg = replace(cfg, clean_text=False)
     if getattr(args, "printed_page_debug", False):
-        from dataclasses import replace
-
         cfg = replace(
             cfg, printed_page=type(cfg.printed_page)(
                 **{**cfg.printed_page.__dict__, "debug": True}
@@ -142,19 +133,17 @@ def _load_book_meta(path: str | None):
 
 def run_extract(args) -> int:
     from .plans.pipeline import run_pipeline
-    from .sources.io import write_table
 
     cfg = _cfg(args)
     spark = _session(args)
     corpus_out = os.path.join(args.out, "corpus")
     lineage_out = os.path.join(args.out, "lineage")
-    _check_out(corpus_out, args.overwrite)
+    sink.refuse_existing([corpus_out, lineage_out], args.overwrite)
     pages = _load_pages(spark, args.pages)
     res = run_pipeline(pages, cfg=cfg, run_id=args.run_id)
-    mode = "overwrite" if args.overwrite == "always" else "error"
-    write_table(res.corpus, corpus_out, mode=mode)
-    write_table(res.lineage, lineage_out, mode=mode)
-    n = spark.read.parquet(corpus_out).count()
+    n = sink.commit_tables(
+        {corpus_out: res.corpus, lineage_out: res.lineage}, args.overwrite
+    )[corpus_out]
     res.combined.unpersist()
     print(f"extract: wrote {n} corpus rows to {corpus_out} (run {args.run_id})")
     return 0
@@ -162,53 +151,45 @@ def run_extract(args) -> int:
 
 def run_detect_blocks(args) -> int:
     from .operators.blocks import detect_blocks
-    from .sources.io import write_table
 
     cfg = _cfg(args)
     spark = _session(args)
-    _check_out(args.out, args.overwrite)
+    sink.refuse_existing([args.out], args.overwrite)
     pages = _load_pages(spark, args.pages)
     triggers = detect_blocks(pages, cfg)
-    write_table(triggers, args.out, mode="overwrite" if args.overwrite == "always" else "error")
-    n = spark.read.parquet(args.out).count()
+    n = sink.commit_tables({args.out: triggers}, args.overwrite)[args.out]
     print(f"detect-blocks: wrote {n} trigger rows to {args.out}")
     return 0
 
 
 def run_make_spans(args) -> int:
-    from dataclasses import replace
-
     from .operators.spans_op import make_spans
-    from .sources.io import write_table
 
     cfg = _cfg(args)
     cfg = replace(cfg, spans=type(cfg.spans)(
         **{**cfg.spans.__dict__, "k_before": args.k_before, "k_after": args.k_after}
     ))
     spark = _session(args)
-    _check_out(args.out, args.overwrite)
+    sink.refuse_existing([args.out], args.overwrite)
     corpus = spark.read.parquet(args.corpus)
     triggers = spark.read.parquet(args.triggers)
     spans = make_spans(corpus, triggers, cfg)
-    write_table(spans, args.out, mode="overwrite" if args.overwrite == "always" else "error")
-    n = spark.read.parquet(args.out).count()
+    n = sink.commit_tables({args.out: spans}, args.overwrite)[args.out]
     print(f"make-spans: wrote {n} span rows to {args.out}")
     return 0
 
 
 def run_emit_notes(args) -> int:
     from .operators.emit import emit_notes
-    from .sources.io import write_table
 
     cfg = _cfg(args)
     spark = _session(args)
-    _check_out(args.out, args.overwrite)
+    sink.refuse_existing([args.out], args.overwrite)
     _, meta = _load_book_meta(args.book)
     corpus = spark.read.parquet(args.corpus)
     spans = spark.read.parquet(args.spans)
     notes = emit_notes(corpus, spans, cfg, run_id=args.run_id, book_meta=meta)
-    write_table(notes, args.out, mode="overwrite" if args.overwrite == "always" else "error")
-    n = spark.read.parquet(args.out).count()
+    n = sink.commit_tables({args.out: notes}, args.overwrite)[args.out]
     print(f"emit-notes: wrote {n} notes to {args.out} (run {args.run_id})")
     return 0
 
@@ -222,11 +203,11 @@ def run_export_text(args) -> int:
     corpus = spark.read.parquet(args.corpus)
     out = export_book_text(corpus, fmt=args.format, title=title)
     rows = out.collect()  # one small row per book — driver-side file sink
-    os.makedirs(args.out, exist_ok=True)
     ext = "md" if args.format == "md" else "txt"
-    for r in rows:
-        path = os.path.join(args.out, f"book_{r['book_id']}.{ext}")
-        _check_out(path, args.overwrite)
+    paths = [os.path.join(args.out, f"book_{r['book_id']}.{ext}") for r in rows]
+    sink.refuse_existing(paths, args.overwrite)
+    os.makedirs(args.out, exist_ok=True)
+    for path, r in zip(paths, rows):
         with open(path, "w", encoding="utf-8") as fh:
             fh.write(r["content"])
     print(f"export-text: wrote {len(rows)} book file(s) to {args.out}")
@@ -246,8 +227,6 @@ def run_dedup(args) -> int:
         minhash_lsh_candidate_pairs,
         ngram_jaccard_pairs,
     )
-    from .sources.io import write_table
-
     from .operators.substrdedup import drop_duplicated_substrings
 
     # pure-argparse validation BEFORE any Spark work: a missing
@@ -257,7 +236,7 @@ def run_dedup(args) -> int:
         return 2
 
     spark = _session(args)
-    _check_out(args.out, args.overwrite)
+    sink.refuse_existing([args.out], args.overwrite)
     docs = spark.read.parquet(args.docs)
     n_in = docs.count()
     if args.mode == "exact":
@@ -300,12 +279,11 @@ def run_dedup(args) -> int:
             threshold=args.threshold, candidate_pairs=cands,
         )
         kept = drop_near_duplicates(docs, pairs, args.id_col)
-    write_table(kept, args.out, mode="overwrite" if args.overwrite == "always" else "error")
-    res = spark.read.parquet(args.out)
-    n_out = res.count()
+    n_out = sink.commit_tables({args.out: kept}, args.overwrite)[args.out]
     if args.mode == "substr":
         from pyspark.sql import functions as F
 
+        res = spark.read.parquet(args.out)
         dropped = res.agg(F.sum("n_words_dropped")).collect()[0][0] or 0
         print(
             f"dedup[substr]: {n_in} docs, {dropped} duplicated words excised "
@@ -326,10 +304,9 @@ def run_score(args) -> int:
     from .operators.lm import with_lm_perplexity
     from .operators.qualityclf import with_quality_label
     from .operators.textstats import with_quality_score
-    from .sources.io import write_table
 
     spark = _session(args)
-    _check_out(args.out, args.overwrite)
+    sink.refuse_existing([args.out], args.overwrite)
     docs = spark.read.parquet(args.docs)
     n_in = docs.count()
     out = with_language(docs, text_col=args.text_col)
@@ -345,8 +322,7 @@ def run_score(args) -> int:
             )
         if args.clf_only:
             out = out.filter(F.col("clf_label") == 1)
-    write_table(out, args.out, mode="overwrite" if args.overwrite == "always" else "error")
-    n_out = spark.read.parquet(args.out).count()
+    n_out = sink.commit_tables({args.out: out}, args.overwrite)[args.out]
     print(f"score: {n_in} → {n_out} docs at {args.out}")
     return 0
 
@@ -408,7 +384,6 @@ def run_sample(args) -> int:
     re-weighting over a group column, rare groups boosted, waterfilled
     1.0 caps). Both are map-only over the corpus; alpha adds one
     group-cardinality count to the driver."""
-    from .sources.io import write_table
 
     # cheap validation BEFORE any Spark work (the run_dedup rule): a
     # config typo must not cost a session start + full corpus scan
@@ -423,7 +398,7 @@ def run_sample(args) -> int:
                 f"--pct must be a keep fraction in (0, 1], got {args.pct}"
             )
     spark = _session(args)
-    _check_out(args.out, args.overwrite)
+    sink.refuse_existing([args.out], args.overwrite)
     docs = spark.read.parquet(args.docs)
     # schema-only checks before the expensive count
     key = args.key_col or ("url" if "url" in docs.columns else args.id_col)
@@ -447,10 +422,7 @@ def run_sample(args) -> int:
             group_col=args.group_col,
             key_col=key,
         )
-    write_table(
-        out, args.out, mode="overwrite" if args.overwrite == "always" else "error"
-    )
-    n_out = spark.read.parquet(args.out).count()
+    n_out = sink.commit_tables({args.out: out}, args.overwrite)[args.out]
     print(f"sample: {n_in} → {n_out} docs at {args.out}")
     return 0
 
@@ -464,7 +436,6 @@ def run_prepare(args) -> int:
     import json as _json
 
     from .operators.recipe import prepare_web_corpus
-    from .sources.io import write_table
 
     if args.jaccard <= 0 or args.jaccard > 1:
         raise ConfigError(f"--jaccard must be in (0, 1], got {args.jaccard}")
@@ -481,7 +452,7 @@ def run_prepare(args) -> int:
             "all languages"
         )
     spark = _session(args)
-    _check_out(args.out, args.overwrite)
+    sink.refuse_existing([args.out], args.overwrite)
     sc = spark.sparkContext
     if args.checkpoint_dir:
         # a session checkpoint dir makes every stage boundary reliable
@@ -500,9 +471,7 @@ def run_prepare(args) -> int:
             line_dedup_min_docs=args.min_line_docs or None,
             keep_by=args.keep_by,
         )
-        write_table(
-            res.df, args.out, mode="overwrite" if args.overwrite == "always" else "error"
-        )
+        sink.commit_tables({args.out: res.df}, args.overwrite)
         print(_json.dumps({"stages": res.counts(), "out": args.out}, sort_keys=True))
     finally:
         if args.checkpoint_dir:
@@ -527,14 +496,13 @@ def run_filter(args) -> int:
     ``c4_text`` so flags match what the dropping mode would keep)."""
     from pyspark.sql import functions as F
 
-    from .sources.io import write_table
 
     if not (args.c4 or args.gopher or args.gopher_rep):
         raise ConfigError(
             "filter: pass at least one of --c4 / --gopher / --gopher-rep"
         )
     spark = _session(args)
-    _check_out(args.out, args.overwrite)
+    sink.refuse_existing([args.out], args.overwrite)
     docs = spark.read.parquet(args.docs)
     n_in = docs.count()
     out = docs
@@ -566,10 +534,7 @@ def run_filter(args) -> int:
         out = with_gopher_repetition(out, stats_col)
         if not args.flags_only:
             out = out.filter(F.col("gopher_rep_pass"))
-    write_table(
-        out, args.out, mode="overwrite" if args.overwrite == "always" else "error"
-    )
-    n_out = spark.read.parquet(args.out).count()
+    n_out = sink.commit_tables({args.out: out}, args.overwrite)[args.out]
     print(f"filter: {n_in} → {n_out} docs at {args.out}")
     return 0
 
@@ -584,10 +549,9 @@ def run_select(args) -> int:
     from pyspark.sql import functions as F
 
     from .operators.dsir import dsir_select, fit_dsir
-    from .sources.io import write_table
 
     spark = _session(args)
-    _check_out(args.out, args.overwrite)
+    sink.refuse_existing([args.out], args.overwrite)
     docs = spark.read.parquet(args.docs)
     target = spark.read.parquet(args.target)
     n_in = docs.count()
@@ -606,8 +570,7 @@ def run_select(args) -> int:
         labels.filter(F.col("selected") == 1).select(args.id_col, "logw_micro"),
         args.id_col,
     )
-    write_table(kept, args.out, mode="overwrite" if args.overwrite == "always" else "error")
-    n_out = spark.read.parquet(args.out).count()
+    n_out = sink.commit_tables({args.out: kept}, args.overwrite)[args.out]
     print(f"select: {n_in} → {n_out} docs (DSIR top-{args.keep_k}) at {args.out}")
     return 0
 
@@ -624,10 +587,9 @@ def run_tokenize(args) -> int:
         tokenize_unigram,
         tokenize_wordpiece,
     )
-    from .sources.io import write_table
 
     spark = _session(args)
-    _check_out(args.out, args.overwrite)
+    sink.refuse_existing([args.out], args.overwrite)
     docs = spark.read.parquet(args.docs)
     n_in = docs.count()
     fit = getattr(args, "fit_on_corpus", False)
@@ -680,10 +642,7 @@ def run_tokenize(args) -> int:
             seq_len=args.pack_seq_len,
             groups=args.pack_groups,
         )
-    write_table(
-        out, args.out, mode="overwrite" if args.overwrite == "always" else "error"
-    )
-    n_out = spark.read.parquet(args.out).count()
+    n_out = sink.commit_tables({args.out: out}, args.overwrite)[args.out]
     what = "sequences" if args.pack_seq_len else "docs"
     print(f"tokenize[{args.tokenizer}]: {n_in} docs -> {n_out} {what} at {args.out}")
     return 0
@@ -698,10 +657,9 @@ def run_rank(args) -> int:
     the corpus for ordinary crawls (AQE broadcasts it), but a 10^8-host
     web graph may exceed broadcast limits — AQE picks from real sizes."""
     from .operators.graphrank import host_link_edges, page_host, page_rank
-    from .sources.io import write_table
 
     spark = _session(args)
-    _check_out(args.out, args.overwrite)
+    sink.refuse_existing([args.out], args.overwrite)
     pages = spark.read.parquet(args.pages)
     edges = host_link_edges(
         pages, url_col=args.url_col, html_col=args.html_col
@@ -717,10 +675,7 @@ def run_rank(args) -> int:
         )
     else:
         out = ranks
-    write_table(
-        out, args.out, mode="overwrite" if args.overwrite == "always" else "error"
-    )
-    n = spark.read.parquet(args.out).count()
+    n = sink.commit_tables({args.out: out}, args.overwrite)[args.out]
     what = "ranked docs" if args.attach_docs else "hosts"
     print(f"rank: {n} {what} at {args.out}")
     return 0
@@ -737,7 +692,6 @@ def run_webprep(args) -> int:
         hash_sample,
         scrub_pii,
     )
-    from .sources.io import write_table
 
     pct = getattr(args, "max_overlap_pct", None)
     if pct is not None and not (0 <= pct < 100):
@@ -745,7 +699,7 @@ def run_webprep(args) -> int:
             f"--max-overlap-pct must be in [0, 100), got {pct}"
         )
     spark = _session(args)
-    _check_out(args.out, args.overwrite)
+    sink.refuse_existing([args.out], args.overwrite)
     docs = spark.read.parquet(args.docs)
     n_in = docs.count()
     out = docs
@@ -771,8 +725,7 @@ def run_webprep(args) -> int:
             )
     if args.scrub_pii:
         out = scrub_pii(out, text_col=args.text_col)
-    write_table(out, args.out, mode="overwrite" if args.overwrite == "always" else "error")
-    n_out = spark.read.parquet(args.out).count()
+    n_out = sink.commit_tables({args.out: out}, args.overwrite)[args.out]
     print(f"webprep: {n_in} → {n_out} docs at {args.out}")
     return 0
 
@@ -1092,7 +1045,7 @@ def main(argv: list[str] | None = None) -> int:
     except ConfigError as exc:
         print(f"ERROR: {exc}")
         return 3
-    except OverwriteError as exc:
+    except sink.OverwriteError as exc:
         print(f"ERROR: {exc}")
         return 4
     except DependencyError as exc:

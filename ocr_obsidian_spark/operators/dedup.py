@@ -232,9 +232,14 @@ def _verified_pairs(
         sh_a = sh_b = shingled(left, a, b)
     else:
         sh_a, sh_b = shingled(left, a), shingled(right, b)
+    # join the shingle frames unrenamed and rename after: the two sides of
+    # a self-join are then one plan, whose exchange AQE builds once
+    c, sa, sb = cands.alias("c"), sh_a.alias("sa"), sh_b.alias("sb")
     return (
-        cands.join(sh_a.select(F.col(id_col).alias(a), F.col("shs").alias("_sa")), a)
-        .join(sh_b.select(F.col(id_col).alias(b), F.col("shs").alias("_sb")), b)
+        c.join(sa, F.col(f"c.{a}") == F.col(f"sa.{id_col}"))
+        .join(sb, F.col(f"c.{b}") == F.col(f"sb.{id_col}"))
+        .select(f"c.{a}", f"c.{b}",
+                F.col("sa.shs").alias("_sa"), F.col("sb.shs").alias("_sb"))
         .withColumn("_inter", F.size(F.array_intersect("_sa", "_sb")))
         .withColumn(
             "jaccard", _jaccard(F.col("_inter"), F.size("_sa"), F.size("_sb"))

@@ -1,92 +1,94 @@
-"""Table IO: parquet-first.
+"""Table sink: one fail-closed parquet commit per CLI stage.
 
-The reference's canonical corpus is JSONL (ingest/artifacts.py:43-59 write,
-ingest/textmap.py:8-18 tolerant read). Our canonical store is parquet;
-``write_table(..., format="iceberg")`` / ``read_table(..., format=
-"iceberg")`` route the SAME call sites through the V2 ``writeTo`` /
-``spark.table`` API against a configured Iceberg catalog (the
-atomic-commit sink the resume contract assumes at cluster scale). The
-Iceberg runtime jar is not present in this sandbox, so that path is
-gated by an actionable catalog check (pinned by a test) and everything
-here runs parquet.
+``commit_tables`` writes a stage's tables to hidden staging siblings
+(``<parent>/.<name>.staging-<uuid>``, which readers of ``<parent>`` skip),
+counts their rows from the part-file footers, then renames them into
+place together. A failure before the swap leaves the previous output as
+it was; under ``--overwrite always`` the old table is renamed aside and
+deleted only after the swap. Renames go through the session's Hadoop
+``FileSystem`` and are metadata-only on local and HDFS file systems.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+import uuid
+from typing import TYPE_CHECKING, Iterable
+
+if TYPE_CHECKING:  # the CLI imports this module for --help without pyspark
+    from pyspark.sql import DataFrame
 
 
-def _require_catalog(spark: SparkSession, table: str) -> None:
-    """Fail with an ACTIONABLE error when an iceberg table identifier
-    names a catalog this session never registered (otherwise Spark
-    falls back to spark_catalog and surfaces a confusing namespace
-    error). ``catalog.db.table`` is the expected 3-part form."""
-    cat = table.split(".", 1)[0]
-    registered = spark.conf.get(f"spark.sql.catalog.{cat}", None)
-    if registered is None and cat != "spark_catalog":
-        raise RuntimeError(
-            f"iceberg table {table!r}: catalog {cat!r} is not configured in "
-            "this session. An Iceberg deployment needs the iceberg-spark-"
-            "runtime jar on the cluster classpath and "
-            f"spark.sql.catalog.{cat}=org.apache.iceberg.spark.SparkCatalog "
-            "(+ warehouse settings); see sources/io.py docstring."
+class OverwriteError(RuntimeError):
+    """Fail-closed write refusal (reference ingest/utils_paths.py:75-95)."""
+
+    def __init__(self, path: str):
+        super().__init__(
+            f"Output exists and --overwrite=never: {path} (use --overwrite always)"
         )
 
 
-def write_table(
-    df: DataFrame,
-    path: str,
-    *,
-    mode: str = "error",
-    partition_by: list[str] | None = None,
-    format: str = "parquet",
-) -> None:
-    """Canonical table sink — fail-closed default matches
-    check_write_allowed('never') (reference ingest/utils_paths.py:75-95).
-
-    ``format="parquet"`` (default): ``path`` is a filesystem/object-store
-    directory. ``format="iceberg"``: ``path`` is a CATALOG TABLE
-    IDENTIFIER (``catalog.db.table``) and the write goes through the V2
-    ``writeTo`` API — ``create()`` for the fail-closed default,
-    ``createOrReplace()`` for overwrite, ``append()`` for append — which
-    is the atomic-commit sink the checkpoint/resume contract assumes at
-    cluster scale (checkpoint.py:77). The Iceberg runtime jar + catalog
-    config are cluster-side concerns (``spark.sql.catalog.<name>`` =
-    SparkCatalog + warehouse); this sandbox has neither, so the gate
-    below turns Spark's CATALOG_NOT_FOUND into an actionable error
-    rather than a stack trace — pinned by a test."""
-    if format == "iceberg":
-        if mode not in ("error", "overwrite", "append"):
-            raise ValueError(f"unknown mode for iceberg sink: {mode!r}")
-        _require_catalog(df.sparkSession, path)
-        writer = df.writeTo(path)
-        if partition_by:
-            from pyspark.sql import functions as F
-
-            writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-        if mode == "error":
-            writer.create()
-        elif mode == "overwrite":
-            writer.createOrReplace()
-        else:
-            writer.append()
+def refuse_existing(paths: Iterable[str], overwrite: str) -> None:
+    """Raise ``OverwriteError`` under ``never`` if any local output path
+    exists (checked before any Spark work)."""
+    if overwrite != "never":
         return
-    if format != "parquet":
-        raise ValueError(f"unknown table format: {format!r}")
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    for path in paths:
+        if os.path.exists(path):
+            raise OverwriteError(path)
 
 
-def read_table(spark: SparkSession, path: str, *, format: str = "parquet") -> DataFrame:
-    """Canonical table source: parquet directory, or a catalog table
-    identifier when ``format="iceberg"`` (``spark.table`` — Iceberg
-    scans support the same pushdown/pruning the parquet plan tests pin,
-    plus partition-level stats the checkpoint resume can use)."""
-    if format == "iceberg":
-        _require_catalog(spark, path)
-        return spark.table(path)
-    if format != "parquet":
-        raise ValueError(f"unknown table format: {format!r}")
-    return spark.read.parquet(path)
+def commit_tables(tables: dict[str, DataFrame], overwrite: str) -> dict[str, int]:
+    """Write ``{final_path: df}`` as parquet, all-or-nothing; return
+    ``{final_path: rows}`` counted from the written footers (no Spark job
+    beyond the writes)."""
+    spark = next(iter(tables.values())).sparkSession
+    jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+    Path, tag = jvm.org.apache.hadoop.fs.Path, uuid.uuid4().hex
+    fs = Path(next(iter(tables))).getFileSystem(conf)
+    # qualified like Spark's writer qualifies them (relative → working dir)
+    finals = {p: fs.makeQualified(Path(p)) for p in tables}
+
+    def sibling(final, kind: str):
+        return Path(final.getParent(), f".{final.getName()}.{kind}-{tag}")
+
+    def rename(src, dst) -> None:
+        # a rename onto an existing directory would nest src inside it
+        if fs.exists(dst) or not fs.rename(src, dst):
+            raise OSError(f"could not rename {src} to {dst}")
+
+    def footer_rows(table) -> int:
+        read_footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter
+        return sum(
+            block.getRowCount()
+            for st in fs.listStatus(table)
+            if not st.getPath().getName().startswith(("_", "."))
+            for block in read_footer(conf, st).getBlocks()
+        )
+
+    staged = {p: sibling(final, "staging") for p, final in finals.items()}
+    moved, olds = [], []  # renames done so far, undone in reverse on failure
+    try:
+        for p, df in tables.items():
+            df.write.mode("error").parquet(staged[p].toString())
+        rows = {p: footer_rows(staged[p]) for p in tables}
+        for p, final in finals.items():
+            if fs.exists(final):
+                # re-checked on the table's own file system: a URI
+                # (file://, hdfs://) out path escapes the local check
+                if overwrite != "always":
+                    raise OverwriteError(p)
+                olds.append(sibling(final, "old"))
+                rename(final, olds[-1])
+                moved.append((final, olds[-1]))
+            rename(staged[p], final)
+            moved.append((staged[p], final))
+    except BaseException:
+        for src, dst in reversed(moved):
+            fs.rename(dst, src)
+        for stage in staged.values():
+            fs.delete(stage, True)
+        raise
+    for old in olds:
+        fs.delete(old, True)
+    return rows

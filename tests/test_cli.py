@@ -63,6 +63,127 @@ def test_overwrite_never_exit_code_4(tmp_path):
     assert rc == 4
 
 
+def _raise_on(victim):
+    """A Python UDF that passes every row but raises on ``victim``."""
+    from pyspark.sql import functions as F
+
+    def check(v):
+        if v == victim:
+            raise RuntimeError(f"injected failure on {v!r}")
+        return True
+
+    return F.udf(check, "boolean")
+
+
+def _snapshot(root: Path) -> dict[str, str]:
+    """relative path → sha256 of every file under ``root``."""
+    import hashlib
+
+    return {
+        str(p.relative_to(root)): hashlib.sha256(p.read_bytes()).hexdigest()
+        for p in sorted(root.rglob("*")) if p.is_file()
+    }
+
+
+def _leftovers(root: Path) -> list[str]:
+    return [str(p) for p in root.rglob("*")
+            if ".staging-" in p.name or ".old-" in p.name]
+
+
+def _extract(out: Path, pages: str = "fixtures:1,4,3") -> int:
+    return main(["extract", "--pages", pages, "--out", str(out),
+                 "--overwrite", "always", "--master", "local[4]",
+                 "--shuffle-partitions", "8", "--run-id", "r"])
+
+
+def test_failed_extract_keeps_previous_output(tmp_path, spark, monkeypatch):
+    """A failed ``--overwrite always`` extract leaves the old corpus and
+    lineage byte-equal: the tables are staged and swapped in only after
+    every write succeeded. The injected row fails inside the corpus
+    write job, after every eager job of the pipeline."""
+    from ocr_obsidian_spark.plans import pipeline
+
+    out = tmp_path / "run"
+    assert _extract(out) == 0
+    before = _snapshot(out)
+    victim = spark.read.parquet(str(out / "corpus")).first()["url"]
+    mode = pipeline.apply_printed_page_mode
+
+    def boom(raw, cfg):
+        return mode(raw, cfg).filter(_raise_on(victim)("url"))
+
+    monkeypatch.setattr(pipeline, "apply_printed_page_mode", boom)
+    assert _extract(out) == 1
+    assert _snapshot(out) == before
+    assert not _leftovers(tmp_path)
+
+
+def test_failed_extract_lineage_commits_neither_table(tmp_path, spark, monkeypatch):
+    """The corpus/lineage pair commits together: when only the lineage
+    write fails, the corpus written before it is not swapped in either."""
+    from dataclasses import replace
+
+    from ocr_obsidian_spark.plans import pipeline
+
+    out = tmp_path / "run"
+    assert _extract(out) == 0
+    before = _snapshot(out)
+    run = pipeline.run_pipeline
+
+    def lineage_fails(*a, **kw):
+        res = run(*a, **kw)
+        return replace(res, lineage=res.lineage.filter(_raise_on("r")("run_id")))
+
+    monkeypatch.setattr(pipeline, "run_pipeline", lineage_fails)
+    # a different corpus, so a swapped-in corpus would show
+    assert _extract(out, "fixtures:1,5,3") == 1
+    assert _snapshot(out) == before
+    assert not _leftovers(tmp_path)
+
+
+def test_failed_prepare_keeps_previous_output(tmp_path, spark, monkeypatch):
+    """A failed ``--overwrite always`` prepare leaves the old prepared
+    corpus byte-equal, with no staging directory behind. The injected row
+    fails in the last gate, inside the write job."""
+    from test_recipe import _fixture_rows
+
+    from ocr_obsidian_spark.operators import recipe
+
+    src = str(tmp_path / "docs")
+    spark.createDataFrame(_fixture_rows(), ["doc_id", "url", "text"]).write.parquet(src)
+    out = tmp_path / "prepared"
+    argv = ["prepare", "--docs", src, "--out", str(out), "--overwrite", "always"]
+    assert main(argv) == 0
+    before = _snapshot(out)
+    victim = spark.read.parquet(str(out)).first()["doc_id"]
+    scrub = recipe.scrub_pii
+
+    def boom(df, text_col):
+        return scrub(df, text_col=text_col).filter(_raise_on(victim)("doc_id"))
+
+    monkeypatch.setattr(recipe, "scrub_pii", boom)
+    assert main(argv) == 1
+    assert _snapshot(out) == before
+    assert not _leftovers(tmp_path)
+
+
+def test_export_text_refuses_before_writing_any_book(tmp_path, spark):
+    """``--overwrite never`` with one of two book files present exits 4
+    without writing the other one."""
+    corpus = str(tmp_path / "run" / "corpus")
+    assert main(["extract", "--pages", "fixtures:2,2,5", "--out",
+                 str(tmp_path / "run"), "--master", "local[4]"]) == 0
+    probe = tmp_path / "probe"
+    assert main(["export-text", "--corpus", corpus, "--out", str(probe)]) == 0
+    _, second = sorted(p.name for p in probe.iterdir())
+    books = tmp_path / "books"
+    books.mkdir()
+    (books / second).write_text("kept", encoding="utf-8")
+    assert main(["export-text", "--corpus", corpus, "--out", str(books)]) == 4
+    assert sorted(p.name for p in books.iterdir()) == [second]
+    assert (books / second).read_text(encoding="utf-8") == "kept"
+
+
 def test_smoke_chains_all_five_stages(tmp_path, spark):
     work = str(tmp_path / "smoke")
     assert main(["smoke", "--workdir", work, "--master", "local[4]",
@@ -564,13 +685,14 @@ def test_prepare_subcommand(tmp_path, spark, capsys, monkeypatch):
     out_r = str(tmp_path / "p_out_reliable")
     sc = spark.sparkContext
     written = []  # rdd-* checkpoint dirs present once the sink wrote
-    write = io.write_table
+    commit = io.commit_tables
 
-    def recording_write(*a, **kw):
-        write(*a, **kw)
+    def recording_commit(*a, **kw):
+        rows = commit(*a, **kw)
         written.extend(ckpt.rglob("rdd-*"))
+        return rows
 
-    monkeypatch.setattr(io, "write_table", recording_write)
+    monkeypatch.setattr(io, "commit_tables", recording_commit)
     try:
         assert main([
             "prepare", "--docs", src, "--out", out_r, "--langs", "en",

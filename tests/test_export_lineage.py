@@ -117,15 +117,19 @@ def test_pipeline_result_carries_lineage(spark, pages_df):
     assert rows and sum(r["rows_in"] for r in rows) == pages_df.count()
 
 
-def test_write_table_fail_closed(spark, corpus, tmp_path):
-    from ocr_obsidian_spark.sources.io import read_table, write_table
+def test_commit_tables_fail_closed(spark, corpus, tmp_path):
+    import pytest as _pytest
+
+    from ocr_obsidian_spark.sources.io import OverwriteError, commit_tables
 
     path = str(tmp_path / "tbl")
-    write_table(corpus.select("url", "extracted_text"), path)
-    import pytest as _pytest
-    with _pytest.raises(Exception):
-        write_table(corpus.select("url", "extracted_text"), path)  # mode=error
-    assert read_table(spark, path).count() == corpus.count()
+    df = corpus.select("url", "extracted_text")
+    assert commit_tables({path: df}, "never") == {path: corpus.count()}
+    for target in (path, f"file://{path}"):  # the URI form is not a local path
+        with _pytest.raises(OverwriteError):
+            commit_tables({target: df}, "never")
+    assert spark.read.parquet(path).count() == corpus.count()
+    assert [p.name for p in tmp_path.iterdir()] == ["tbl"]  # nothing staged left
 
 
 def test_frame_crop_candidates_dropped(spark, corpus):
@@ -194,27 +198,3 @@ def test_run_extract_job_script_rerun_idempotent(spark, pages_df, tmp_path, monk
     corpus, _ = split_extract_lineage(read_output(spark, out))
     assert corpus.count() == pages_df.count()
     assert stopped["n"] == 2
-
-
-def test_write_table_iceberg_gate_and_format_validation(spark, corpus, tmp_path):
-    """The iceberg sink goes through the V2 writeTo path; in this
-    sandbox (no iceberg runtime/catalog) the gate must fail with an
-    ACTIONABLE configuration error naming the catalog knob, not a raw
-    CATALOG_NOT_FOUND stack; unknown formats fail closed either way."""
-    import pytest as _pytest
-
-    from ocr_obsidian_spark.sources.io import read_table, write_table
-
-    df = corpus.select("url", "extracted_text")
-    with _pytest.raises(RuntimeError, match="spark.sql.catalog"):
-        write_table(df, "ice.db.tbl", format="iceberg")
-    with _pytest.raises(RuntimeError, match="spark.sql.catalog"):
-        write_table(df, "ice.db.tbl", mode="overwrite", format="iceberg")
-    with _pytest.raises(ValueError, match="unknown table format"):
-        write_table(df, str(tmp_path / "x"), format="orc")
-    with _pytest.raises(ValueError, match="unknown table format"):
-        read_table(spark, "x", format="orc")
-    with _pytest.raises(RuntimeError, match="spark.sql.catalog"):
-        read_table(spark, "ice.db.tbl", format="iceberg")
-    with _pytest.raises(ValueError, match="unknown mode"):
-        write_table(df, "ice.db.tbl", mode="bogus", format="iceberg")

@@ -45,19 +45,54 @@ def _public_defs() -> dict[str, str]:
     return out
 
 
+def _from_package(module: str | None, level: int) -> bool:
+    return level > 0 or (module or "").split(".")[0] == PACKAGE.name
+
+
+def _import_bindings(tree: ast.AST) -> dict[str, bool]:
+    """Each name a file binds by ``import`` → whether some binding of it
+    comes from the package."""
+    out: dict[str, bool] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                name = a.asname or a.name.split(".")[0]
+                out[name] = out.get(name, False) or _from_package(a.name, 0)
+        elif isinstance(node, ast.ImportFrom):
+            for a in node.names:
+                name = a.asname or a.name
+                out[name] = out.get(name, False) or _from_package(node.module, node.level)
+    return out
+
+
+def _base_name(node: ast.Attribute) -> str | None:
+    while isinstance(node, ast.Attribute):
+        node = node.value
+    return node.id if isinstance(node, ast.Name) else None
+
+
 @cache
 def _referenced_names() -> set[str]:
     """Every name a production file loads, reads as an attribute or
-    imports (definitions alone do not count)."""
+    imports from the package (definitions alone do not count). A name or
+    attribute whose base an ``import`` binds to a module outside the
+    package (``pq.read_table``) counts for nothing."""
     names: set[str] = set()
     for path in _production_files():
-        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
-            if isinstance(node, ast.Name):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        ours = _import_bindings(tree)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and ours.get(node.id, True):
                 names.add(node.id)
-            elif isinstance(node, ast.Attribute):
+            elif isinstance(node, ast.Attribute) and ours.get(_base_name(node), True):
                 names.add(node.attr)
-            elif isinstance(node, ast.alias):
-                names.add(node.name.rsplit(".", 1)[-1])
+            elif isinstance(node, ast.Import):
+                names.update(
+                    a.name.rsplit(".", 1)[-1] for a in node.names
+                    if _from_package(a.name, 0)
+                )
+            elif isinstance(node, ast.ImportFrom) and _from_package(node.module, node.level):
+                names.update(a.name for a in node.names)
     return names
 
 

@@ -120,9 +120,10 @@ def test_near_dup_verify_shingles_only_candidate_rows(spark):
     """The one candidate → verify composition (dedup._verified_pairs) for
     the self-join (ngram_jaccard_pairs over candidates) and the
     cross-corpus path (near_duplicate_matches_against): the candidate
-    table is a truncated scan, every shingle-building Project sits above
-    a LeftSemi join to a candidate id set — shingles for candidate rows
-    only — and the self-join uses one id set for both sides."""
+    table is a truncated scan, every shingle-building Project of the
+    executed plan sits above a LeftSemi join to a candidate id set —
+    shingles for candidate rows only — and the self-join uses one id set
+    and builds its shingle frame once, the second side a ReusedExchange."""
     import re
 
     from pyspark.sql import functions as F
@@ -152,13 +153,17 @@ def test_near_dup_verify_shingles_only_candidate_rows(spark):
             2,
         ),
     ]
-    for df, cand_scan, n_id_sets in cases:
-        p = plan_str(df, mode="simple")
+    for df, cand_scan, n_builds in cases:
+        df.collect()  # AQE reuses exchanges only in the executed plan
+        p = plan_str(df, mode="simple").split("== Initial Plan ==")[0]
+        assert "isFinalPlan=true" in p, p
         assert re.search(cand_scan, p), p
+        reused = re.search(r"ReusedExchange \[doc_id#\d+L, shs#\d+\]", p)
+        assert bool(reused) == (n_builds == 1), p
         lines = p.splitlines()
         shingle_rows = [i for i, ln in enumerate(lines)
                         if "Project [" in ln and "arrays_zip" in ln]
-        assert len(shingle_rows) == 2, p
+        assert len(shingle_rows) == n_builds, p
         for i in shingle_rows:
             # a node's subtree: the following lines whose tree marker
             # (":- " / "+- ") is indented past the node's own marker
@@ -171,7 +176,7 @@ def test_near_dup_verify_shingles_only_candidate_rows(spark):
                 below.append(ln)
             assert any("LeftSemi" in ln for ln in below), lines[i]
         ids = _semi_join_id_sets(df)
-        assert len(ids) == 2 and len(set(ids)) == n_id_sets, ids
+        assert len(ids) == 2 and len(set(ids)) == n_builds, ids
 
 
 def test_block_classifier_prunes_scan(spark):
