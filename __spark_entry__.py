@@ -1189,6 +1189,10 @@ def q_prepare_corpus(spark: SparkSession, sf: str) -> DataFrame:
     return prepare_web_corpus(docs, langs=None, benchmark=bench).df
 
 
+# q_mix_corpus source weights, shared with the mix_suite oracle
+_MIX_WEIGHTS = {"src0": 1.0, "src1": 0.5, "src2": 0.25, "src3": 0.05}
+
+
 def q_mix_corpus(spark: SparkSession, sf: str) -> DataFrame:
     """Weighted per-source corpus mixing (keep fractions per source,
     md5-bucket deterministic)."""
@@ -1197,9 +1201,7 @@ def q_mix_corpus(spark: SparkSession, sf: str) -> DataFrame:
     d = _docs_with_urls(spark, sf)
     # sources are src0..src19; weight a spread of fractions incl. 0-keep
     # (absent sources) and full-keep
-    kept = mix_corpus(
-        d, {"src0": 1.0, "src1": 0.5, "src2": 0.25, "src3": 0.05}
-    )
+    kept = mix_corpus(d, _MIX_WEIGHTS)
     return kept.select("doc_id", "source")
 
 
@@ -1757,7 +1759,7 @@ def q_line_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
 # the synthetic page skeleton, shared verbatim by the Spark build and the
 # DuckDB oracle's `||` concatenation (no single quotes — safe SQL literals):
-# head with style+script, link-farm nav, short h1 (below min_chars), the
+# head with style+script, link-farm nav, short h1 (below CONTENT_MIN_CHARS), the
 # document text as the body paragraph, an entity tail, link-farm footer
 _HTML_HEAD = (
     "<html><head><title>t</title><style>p{margin:0}</style>"
@@ -1978,6 +1980,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "extract_pipeline": q_extract_pipeline,
     }
 
+
+# constants the oracle SQL below renders (one definition each)
+from ocr_obsidian_spark.operators import blocks as _blocks  # noqa: E402
+from ocr_obsidian_spark.operators.webprep import (  # noqa: E402
+    C4_MIN_WORDS,
+    EOS_TOKEN,
+    MIX_BUCKETS,
+)
 
 # whitespace via the shared explicit class — Java \s includes \x0B, RE2's
 # does not, so a bare \s in a both-engines pattern is a latent divergence
@@ -2225,6 +2235,8 @@ def _html_oracle_sql(extract: bool) -> str:
         _COMMENT_RE,
         _SCRIPT_RE,
         _STYLE_RE,
+        CONTENT_MAX_LINK_DENSITY,
+        CONTENT_MIN_CHARS,
     )
 
     def decode(expr: str) -> str:
@@ -2273,23 +2285,24 @@ def _html_oracle_sql(extract: bool) -> str:
         blocktag=_BLOCK_TAG_RE, anchor=_ANCHOR_RE,
         btext=blocktext("chunk"), atext=blocktext("a"),
     )
+    content = f"n_chars >= {CONTENT_MIN_CHARS} AND ld <= {CONTENT_MAX_LINK_DENSITY}"
     if not extract:
-        return base + """
+        return base + f"""
             SELECT doc_id, CAST(block_idx AS BIGINT) AS block_idx, block_text,
                    CAST(n_chars AS BIGINT) AS n_chars,
                    CAST(link_chars AS BIGINT) AS link_chars,
                    round(ld, 6) AS link_density,
-                   (n_chars >= 25 AND ld <= 0.4) AS is_content
+                   ({content}) AS is_content
             FROM f
         """
-    return base + """
+    return base + f"""
         SELECT doc_id,
                coalesce(string_agg(
-                   CASE WHEN n_chars >= 25 AND ld <= 0.4 THEN block_text END,
+                   CASE WHEN {content} THEN block_text END,
                    chr(10) || chr(10) ORDER BY block_idx), '') AS main_text,
-               CAST(count(*) FILTER (WHERE n_chars >= 25 AND ld <= 0.4)
+               CAST(count(*) FILTER (WHERE {content})
                     AS BIGINT) AS n_blocks_kept,
-               CAST(count(*) FILTER (WHERE NOT (n_chars >= 25 AND ld <= 0.4))
+               CAST(count(*) FILTER (WHERE NOT ({content}))
                     AS BIGINT) AS n_blocks_dropped
         FROM f GROUP BY doc_id
     """
@@ -2307,6 +2320,33 @@ def _noisy_url_sql(bid: str) -> str:
                                WHEN doc_id % 6 = 3 THEN ''
                                WHEN doc_id % 6 = 4 THEN '/%7eu%31%2fv'
                                ELSE '/~u1%2Fv' END"""
+
+
+def _mix_thresholds_sql() -> str:
+    """``mix_corpus``'s per-source bucket thresholds for _MIX_WEIGHTS."""
+    return " ".join(
+        f"WHEN '{src}' THEN {int(round(w * MIX_BUCKETS))}"
+        for src, w in sorted(_MIX_WEIGHTS.items())
+    )
+
+
+def _gopher_stopwords_sql() -> str:
+    from ocr_obsidian_spark.operators.textstats import GOPHER_STOPWORDS
+
+    return "[" + ",".join(f"'{w}'" for w in GOPHER_STOPWORDS) + "]"
+
+
+def _gopher_pass_sql() -> str:
+    """``with_gopher_flags``' pass conjunction over the oracle's ``r``
+    columns, rendered from ``textstats.GOPHER_THRESHOLDS``."""
+    from ocr_obsidian_spark.operators.textstats import GOPHER_THRESHOLDS
+
+    terms = []
+    for c, (lo, hi) in GOPHER_THRESHOLDS.items():
+        col = "n_words_t" if c == "n_words" else c
+        terms += [f"{col} >= {lo}"] * (lo is not None)
+        terms += [f"{col} <= {hi}"] * (hi is not None)
+    return " AND ".join(terms)
 
 
 def _gopher_rep_sql() -> str:
@@ -3381,8 +3421,7 @@ def oracle_sql() -> dict[str, str]:
                          len(list_filter(toks,
                              t -> regexp_matches(t, '[a-z]'))) AS n_alpha,
                          len(list_intersect(list_distinct(toks),
-                             ['the','be','to','of','and','that','have','with']))
-                             AS sd
+                             {_gopher_stopwords_sql()})) AS sd
                   FROM f),
             r AS (SELECT doc_id,
                          round((n_hash + n_dots + n_uni) / n_words, 6)
@@ -3400,12 +3439,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, symbol_word_ratio, bullet_line_frac,
                    ellipsis_line_frac, alpha_word_frac, stop_distinct,
                    n_words_t AS n_words, mean_word_len,
-                   (symbol_word_ratio <= 0.1 AND bullet_line_frac <= 0.9
-                    AND ellipsis_line_frac <= 0.3 AND alpha_word_frac >= 0.8
-                    AND stop_distinct >= 2
-                    AND n_words_t >= 50 AND n_words_t <= 100000
-                    AND mean_word_len >= 3.0 AND mean_word_len <= 10.0)
-                       AS gopher_pass
+                   ({_gopher_pass_sql()}) AS gopher_pass
             FROM r
         """,
         "c4_filter": ("""
@@ -3422,7 +3456,7 @@ def oracle_sql() -> dict[str, str]:
                          list_filter(lines, x ->
                              regexp_matches(lower(trim(x)), '[.!?]["'')\\]]*$')
                              AND len(string_split_regex(lower(trim(x)),
-                                 '""" + _WS_RE + """')) >= 3
+                                 '""" + _WS_RE + """')) >= """ + str(C4_MIN_WORDS) + """
                              AND NOT contains(lower(trim(x)), 'javascript')
                              AND NOT contains(lower(trim(x)), 'lorem ipsum')
                              AND NOT contains(lower(trim(x)), '{')) AS kept
@@ -3478,10 +3512,8 @@ def oracle_sql() -> dict[str, str]:
             WITH u AS (SELECT doc_id, source, {_URL_SQL} AS url FROM documents),
             mixk AS (
                 SELECT doc_id, source FROM u
-                WHERE ('0x' || substr(md5(coalesce(url, '')), 1, 8))::BIGINT % 10000 <
-                      CASE source WHEN 'src0' THEN 10000 WHEN 'src1' THEN 5000
-                                  WHEN 'src2' THEN 2500 WHEN 'src3' THEN 500
-                                  ELSE 0 END
+                WHERE ('0x' || substr(md5(coalesce(url, '')), 1, 8))::BIGINT % {MIX_BUCKETS} <
+                      CASE source {_mix_thresholds_sql()} ELSE 0 END
             ),
             n AS (SELECT doc_id, {_NORM_SQL} AS norm FROM documents),
             w AS MATERIALIZED (SELECT doc_id, string_split(norm, ' ') AS ws
@@ -3554,12 +3586,12 @@ def oracle_sql() -> dict[str, str]:
                             - (SELECT coalesce(sum(c), 0) FROM ac3 WHERE cap))
                            / (SELECT nullif(CAST(count(*) AS DOUBLE), 0.0)
                               FROM ac3 WHERE NOT cap) AS s),
-            -- weight -> bucket threshold: floor(w*10000 + 0.5), the
+            -- weight -> bucket threshold: floor(w*MIX_BUCKETS + 0.5), the
             -- alpha_sample quantization (half-up on both engines)
             awt AS (SELECT grp,
-                           CASE WHEN cap THEN CAST(10000 AS BIGINT)
+                           CASE WHEN cap THEN CAST({MIX_BUCKETS} AS BIGINT)
                                 ELSE CAST(floor(((SELECT s FROM as4) * 1.0 / c)
-                                                * 10000 + 0.5) AS BIGINT)
+                                                * {MIX_BUCKETS} + 0.5) AS BIGINT)
                            END AS thr
                     FROM ac3)
             SELECT 'mix' AS variant, doc_id, source AS s,
@@ -3575,7 +3607,7 @@ def oracle_sql() -> dict[str, str]:
                    CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), CAST(-1 AS BIGINT)
             FROM ag JOIN awt USING (grp)
             WHERE ('0x' || substr(md5(CAST(ag.doc_id AS VARCHAR)), 1, 8))::BIGINT
-                      % 10000 < awt.thr
+                      % {MIX_BUCKETS} < awt.thr
         """,
         # sequence packing: same md5-bucket expression as hash_sample /
         # pack_shards; stream offsets via a window prefix sum, token
@@ -3586,8 +3618,8 @@ def oracle_sql() -> dict[str, str]:
             t AS (SELECT doc_id,
                          ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
                              % 8 AS grp,
-                         CASE WHEN norm = '' THEN ['[EOS]']
-                              ELSE string_split(norm, ' ') || ['[EOS]'] END AS toks
+                         CASE WHEN norm = '' THEN ['{EOS_TOKEN}']
+                              ELSE string_split(norm, ' ') || ['{EOS_TOKEN}'] END AS toks
                   FROM nrm),
             c AS (SELECT doc_id, grp, toks,
                          coalesce(sum(len(toks)) OVER (
@@ -3899,8 +3931,8 @@ def oracle_sql() -> dict[str, str]:
             b AS (
                 SELECT doc_id,
                        list_transform(
-                           range(0, greatest(cast(ceil(len(w) / 20.0) AS BIGINT), 1)),
-                           i -> array_to_string(w[i * 20 + 1 : i * 20 + 20], ' ')
+                           range(0, greatest(cast(ceil(len(w) / {_blocks.BLOCK_TOKENS}.0) AS BIGINT), 1)),
+                           i -> array_to_string(w[i * {_blocks.BLOCK_TOKENS} + 1 : i * {_blocks.BLOCK_TOKENS} + {_blocks.BLOCK_TOKENS}], ' ')
                        ) AS blocks
                 FROM n
             ),
@@ -3922,9 +3954,9 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, block_idx, n_tokens, n_chars,
                    round(n_alpha * 1.0 / greatest(n_chars, 1), 6) AS alpha_ratio,
                    round(n_link * 1.0 / greatest(n_tokens, 1), 6) AS link_density,
-                   CAST(n_tokens >= 5
-                        AND n_alpha * 1.0 / greatest(n_chars, 1) >= 0.5
-                        AND n_link * 1.0 / greatest(n_tokens, 1) <= 0.3
+                   CAST(n_tokens >= {_blocks.BLOCK_MIN_TOKENS}
+                        AND n_alpha * 1.0 / greatest(n_chars, 1) >= {_blocks.BLOCK_MIN_ALPHA_RATIO}
+                        AND n_link * 1.0 / greatest(n_tokens, 1) <= {_blocks.BLOCK_MAX_LINK_DENSITY}
                         AS BIGINT) AS is_content
             FROM feats
         """,

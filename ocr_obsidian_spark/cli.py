@@ -138,7 +138,7 @@ def run_extract(args) -> int:
     spark = _session(args)
     corpus_out = os.path.join(args.out, "corpus")
     lineage_out = os.path.join(args.out, "lineage")
-    sink.refuse_existing([corpus_out, lineage_out], args.overwrite)
+    sink.refuse_existing(spark, [corpus_out, lineage_out], args.overwrite)
     pages = _load_pages(spark, args.pages)
     res = run_pipeline(pages, cfg=cfg, run_id=args.run_id)
     n = sink.commit_tables(
@@ -154,7 +154,7 @@ def run_detect_blocks(args) -> int:
 
     cfg = _cfg(args)
     spark = _session(args)
-    sink.refuse_existing([args.out], args.overwrite)
+    sink.refuse_existing(spark, [args.out], args.overwrite)
     pages = _load_pages(spark, args.pages)
     triggers = detect_blocks(pages, cfg)
     n = sink.commit_tables({args.out: triggers}, args.overwrite)[args.out]
@@ -170,7 +170,7 @@ def run_make_spans(args) -> int:
         **{**cfg.spans.__dict__, "k_before": args.k_before, "k_after": args.k_after}
     ))
     spark = _session(args)
-    sink.refuse_existing([args.out], args.overwrite)
+    sink.refuse_existing(spark, [args.out], args.overwrite)
     corpus = spark.read.parquet(args.corpus)
     triggers = spark.read.parquet(args.triggers)
     spans = make_spans(corpus, triggers, cfg)
@@ -184,7 +184,7 @@ def run_emit_notes(args) -> int:
 
     cfg = _cfg(args)
     spark = _session(args)
-    sink.refuse_existing([args.out], args.overwrite)
+    sink.refuse_existing(spark, [args.out], args.overwrite)
     _, meta = _load_book_meta(args.book)
     corpus = spark.read.parquet(args.corpus)
     spans = spark.read.parquet(args.spans)
@@ -205,7 +205,7 @@ def run_export_text(args) -> int:
     rows = out.collect()  # one small row per book — driver-side file sink
     ext = "md" if args.format == "md" else "txt"
     paths = [os.path.join(args.out, f"book_{r['book_id']}.{ext}") for r in rows]
-    sink.refuse_existing(paths, args.overwrite)
+    sink.refuse_existing(spark, paths, args.overwrite)
     os.makedirs(args.out, exist_ok=True)
     for path, r in zip(paths, rows):
         with open(path, "w", encoding="utf-8") as fh:
@@ -236,7 +236,7 @@ def run_dedup(args) -> int:
         return 2
 
     spark = _session(args)
-    sink.refuse_existing([args.out], args.overwrite)
+    sink.refuse_existing(spark, [args.out], args.overwrite)
     docs = spark.read.parquet(args.docs)
     n_in = docs.count()
     if args.mode == "exact":
@@ -306,7 +306,7 @@ def run_score(args) -> int:
     from .operators.textstats import with_quality_score
 
     spark = _session(args)
-    sink.refuse_existing([args.out], args.overwrite)
+    sink.refuse_existing(spark, [args.out], args.overwrite)
     docs = spark.read.parquet(args.docs)
     n_in = docs.count()
     out = with_language(docs, text_col=args.text_col)
@@ -398,7 +398,7 @@ def run_sample(args) -> int:
                 f"--pct must be a keep fraction in (0, 1], got {args.pct}"
             )
     spark = _session(args)
-    sink.refuse_existing([args.out], args.overwrite)
+    sink.refuse_existing(spark, [args.out], args.overwrite)
     docs = spark.read.parquet(args.docs)
     # schema-only checks before the expensive count
     key = args.key_col or ("url" if "url" in docs.columns else args.id_col)
@@ -452,7 +452,7 @@ def run_prepare(args) -> int:
             "all languages"
         )
     spark = _session(args)
-    sink.refuse_existing([args.out], args.overwrite)
+    sink.refuse_existing(spark, [args.out], args.overwrite)
     sc = spark.sparkContext
     if args.checkpoint_dir:
         # a session checkpoint dir makes every stage boundary reliable
@@ -502,7 +502,7 @@ def run_filter(args) -> int:
             "filter: pass at least one of --c4 / --gopher / --gopher-rep"
         )
     spark = _session(args)
-    sink.refuse_existing([args.out], args.overwrite)
+    sink.refuse_existing(spark, [args.out], args.overwrite)
     docs = spark.read.parquet(args.docs)
     n_in = docs.count()
     out = docs
@@ -551,7 +551,7 @@ def run_select(args) -> int:
     from .operators.dsir import dsir_select, fit_dsir
 
     spark = _session(args)
-    sink.refuse_existing([args.out], args.overwrite)
+    sink.refuse_existing(spark, [args.out], args.overwrite)
     docs = spark.read.parquet(args.docs)
     target = spark.read.parquet(args.target)
     n_in = docs.count()
@@ -589,7 +589,7 @@ def run_tokenize(args) -> int:
     )
 
     spark = _session(args)
-    sink.refuse_existing([args.out], args.overwrite)
+    sink.refuse_existing(spark, [args.out], args.overwrite)
     docs = spark.read.parquet(args.docs)
     n_in = docs.count()
     fit = getattr(args, "fit_on_corpus", False)
@@ -659,7 +659,7 @@ def run_rank(args) -> int:
     from .operators.graphrank import host_link_edges, page_host, page_rank
 
     spark = _session(args)
-    sink.refuse_existing([args.out], args.overwrite)
+    sink.refuse_existing(spark, [args.out], args.overwrite)
     pages = spark.read.parquet(args.pages)
     edges = host_link_edges(
         pages, url_col=args.url_col, html_col=args.html_col
@@ -699,7 +699,7 @@ def run_webprep(args) -> int:
             f"--max-overlap-pct must be in [0, 100), got {pct}"
         )
     spark = _session(args)
-    sink.refuse_existing([args.out], args.overwrite)
+    sink.refuse_existing(spark, [args.out], args.overwrite)
     docs = spark.read.parquet(args.docs)
     n_in = docs.count()
     out = docs

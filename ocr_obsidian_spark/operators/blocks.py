@@ -279,17 +279,20 @@ def detect_blocks(pages: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> Dat
 # web-graft text-density block classifier (native expressions, oracled)
 # ---------------------------------------------------------------------------
 
-def classify_text_blocks(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    block_tokens: int = 20,
-    min_tokens: int = 5,
-    min_alpha_ratio: float = 0.5,
-    max_link_density: float = 0.3,
-) -> DataFrame:
-    """Segment each document into fixed-size token blocks and score salience
+# text-density block gate: blocks of BLOCK_TOKENS normalized tokens are
+# content when they hold at least BLOCK_MIN_TOKENS tokens, at least
+# BLOCK_MIN_ALPHA_RATIO of their characters are letters and at most
+# BLOCK_MAX_LINK_DENSITY of their tokens are links (the boilerplate cut of
+# text/link-density segmentation, SURVEY §0); the block_candidates oracle
+# SQL renders the same values
+BLOCK_TOKENS = 20
+BLOCK_MIN_TOKENS = 5
+BLOCK_MIN_ALPHA_RATIO = 0.5
+BLOCK_MAX_LINK_DENSITY = 0.3
+
+
+def classify_text_blocks(docs: DataFrame) -> DataFrame:
+    """Segment each ``text`` into fixed-size token blocks and score salience
     with density features — the web analog of the highlight classifier
     (boilerplate stripping by text/link density, SURVEY §0).
 
@@ -307,20 +310,20 @@ def classify_text_blocks(
     from .xengine import WS_RE
 
     norm = F.lower(
-        F.trim(F.regexp_replace(F.coalesce(F.col(text_col), F.lit("")), WS_RE, " "))
+        F.trim(F.regexp_replace(F.coalesce(F.col("text"), F.lit("")), WS_RE, " "))
     )
-    base = docs.select(F.col(id_col), F.split(norm, " ").alias("_toks"))
+    base = docs.select(F.col("doc_id"), F.split(norm, " ").alias("_toks"))
     toks = F.col("_toks")
-    n_blocks = F.ceil(F.size(toks) / F.lit(block_tokens)).cast("int")
+    n_blocks = F.ceil(F.size(toks) / F.lit(BLOCK_TOKENS)).cast("int")
     windows = F.transform(
         F.sequence(F.lit(0), F.greatest(n_blocks - 1, F.lit(0))),
-        lambda i: F.array_join(F.slice(toks, i * block_tokens + 1, block_tokens), " "),
+        lambda i: F.array_join(F.slice(toks, i * BLOCK_TOKENS + 1, BLOCK_TOKENS), " "),
     )
     exploded = (
-        base.select(F.col(id_col), F.posexplode(windows).alias("block_idx", "block_text"))
+        base.select(F.col("doc_id"), F.posexplode(windows).alias("block_idx", "block_text"))
         .filter(F.length("block_text") > 0)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "block_idx",
             "block_text",
             F.split(F.col("block_text"), " ").alias("_btoks"),
@@ -339,15 +342,15 @@ def classify_text_blocks(
     alpha_ratio = n_alpha / F.greatest(n_chars, F.lit(1))
     link_density = n_link_tok / F.greatest(n_tok, F.lit(1))
     return exploded.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("block_idx").cast("long").alias("block_idx"),
         n_tok.cast("long").alias("n_tokens"),
         n_chars.cast("long").alias("n_chars"),
         F.round(alpha_ratio, 6).alias("alpha_ratio"),
         F.round(link_density, 6).alias("link_density"),
         (
-            (n_tok >= min_tokens)
-            & (alpha_ratio >= min_alpha_ratio)
-            & (link_density <= max_link_density)
+            (n_tok >= BLOCK_MIN_TOKENS)
+            & (alpha_ratio >= BLOCK_MIN_ALPHA_RATIO)
+            & (link_density <= BLOCK_MAX_LINK_DENSITY)
         ).alias("is_content"),
     )

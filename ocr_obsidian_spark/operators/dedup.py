@@ -20,7 +20,21 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
+from .similarity import MAX_BUCKET_SIZE, bucketed_candidate_pairs, require_bucket_cap
 from .xengine import WS_RE as _NORM_WS, broadcast_if_small, truncate_lineage
+
+# LSH settings every near-dup path shares: word 3-shingles, 64 minhash
+# functions in 16 bands of 4 rows (Broder 1997; Leskovec et al., Mining of
+# Massive Datasets §3.4), and 4 16-bit simhash bands (Manku et al. 2007).
+# The hash family and banding are pinned: the registry oracles verify the
+# candidate set per family.
+SHINGLE_K = 3
+MINHASH_NUM_HASHES = 64
+MINHASH_BANDS = 16
+SIMHASH_BANDS = 4
+# pair_components' distributed rounds: pointer doubling converges in
+# O(log diameter) rounds, so 25 covers any dedup graph
+COMPONENT_MAX_ROUNDS = 25
 
 
 def normalized_text(col: str = "text") -> F.Column:
@@ -35,13 +49,14 @@ def normalized_text(col: str = "text") -> F.Column:
     )
 
 
-def exact_duplicate_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(content_hash, n_docs, keep_id) per duplicate group — hash-groupBy
-    exact dedup; map-side partial agg makes this one efficient shuffle."""
+def exact_duplicate_groups(df: DataFrame) -> DataFrame:
+    """(content_hash, n_docs, keep_id) per duplicate group of ``text``, the
+    min ``doc_id`` kept — hash-groupBy exact dedup; map-side partial agg
+    makes this one efficient shuffle."""
     return (
-        df.select(F.sha2(normalized_text(text_col), 256).alias("content_hash"), F.col(id_col))
+        df.select(F.sha2(normalized_text("text"), 256).alias("content_hash"), F.col("doc_id"))
         .groupBy("content_hash")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("keep_id"))
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keep_id"))
     )
 
 
@@ -63,7 +78,7 @@ def drop_exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "
     )
 
 
-def word_shingles(text_col: str = "text", k: int = 3) -> F.Column:
+def word_shingles(text_col: str = "text", k: int = SHINGLE_K) -> F.Column:
     """Distinct word k-shingles as an array column (native, no UDF).
     NULL text → the single-shingle [''] of an empty doc (coalesce, see
     normalized_text).
@@ -96,12 +111,12 @@ _MINHASH_CHUNK_ELEMS = 1 << 24
 
 
 def minhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", num_hashes: int = 64
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, minhash array) — MAP-ONLY signature computation, zero shuffles.
 
     One JVM-side ``xxhash64`` per shingle (inside whole-stage codegen over
-    the shingles array), then the ``num_hashes``-member family is derived by
+    the shingles array), then the ``MINHASH_NUM_HASHES``-member family is derived by
     universal hashing ``h_i = a_i·h + b_i (mod 2^64, a_i odd ⇒ bijective)``
     in ONE numpy broadcast + ``minimum.reduceat`` per Arrow batch. Replaces
     the round-1 explode + 64-aggregate groupBy: that formulation shuffled
@@ -109,6 +124,7 @@ def minhash_signatures(
     this one hashes each shingle once and never shuffles — the only
     shuffles left in the whole LSH pipeline are the band-bucket joins.
     """
+    num_hashes = MINHASH_NUM_HASHES
     rng = np.random.default_rng(1337)
     mult = (rng.integers(0, 2**63, size=num_hashes, dtype=np.uint64) << np.uint64(1)) | np.uint64(1)
     add = rng.integers(0, 2**63, size=num_hashes, dtype=np.uint64)
@@ -143,16 +159,12 @@ def minhash_signatures(
 
 
 def minhash_banded_buckets(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, band, bucket) — each document's LSH bucket per minhash band
     (exposed so call sites can run ``bucket_cap_stats`` on the same keys)."""
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, num_hashes)
+    rows_per_band = MINHASH_NUM_HASHES // MINHASH_BANDS
+    sig = minhash_signatures(df, text_col, id_col)
     # bucket = xxhash64 over the band's signature values DIRECTLY
     # (round 6): bucket ids are internal join keys — two docs co-bucket
     # iff their band slice is equal, which holds for any injective-w.h.p.
@@ -171,7 +183,7 @@ def minhash_banded_buckets(
     return sig.select(
         F.col(id_col),
         F.posexplode(
-            F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), band_bucket)
+            F.transform(F.sequence(F.lit(0), F.lit(MINHASH_BANDS - 1)), band_bucket)
         ).alias("band", "bucket"),
     )
 
@@ -180,9 +192,7 @@ def minhash_lsh_candidate_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    max_bucket_size: int = 4096,
+    max_bucket_size: int = MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) from banded minhash.
 
@@ -194,9 +204,7 @@ def minhash_lsh_candidate_pairs(
     is reportable via ``bucket_cap_stats(minhash_banded_buckets(df), ...)``
     (no silent caps).
     """
-    from .similarity import bucketed_candidate_pairs
-
-    banded = minhash_banded_buckets(df, text_col, id_col, num_hashes, bands)
+    banded = minhash_banded_buckets(df, text_col, id_col)
     return bucketed_candidate_pairs(banded, id_col, ["band", "bucket"], max_bucket_size)
 
 
@@ -207,7 +215,7 @@ def _jaccard(n_inter: F.Column, n_a: F.Column, n_b: F.Column) -> F.Column:
 
 def _verified_pairs(
     cands: DataFrame, left: DataFrame, right: DataFrame | None, a: str, b: str,
-    *, text_col: str, id_col: str, k: int, threshold: float,
+    *, text_col: str, id_col: str, threshold: float,
 ) -> DataFrame:
     """(a, b, jaccard) for the candidate pairs with shingle-set Jaccard
     >= threshold — the one candidate → verified-pairs composition.
@@ -225,7 +233,7 @@ def _verified_pairs(
     def shingled(src: DataFrame, *cols: str) -> DataFrame:
         ids = cands.select(F.explode(F.array(*cols)).alias(id_col)).distinct()
         return src.join(broadcast_if_small(ids), id_col, "left_semi").select(
-            F.col(id_col), word_shingles(text_col, k).alias("shs")
+            F.col(id_col), word_shingles(text_col).alias("shs")
         )
 
     if right is None:
@@ -253,11 +261,11 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
     threshold: float = 0.8,
     candidate_pairs: DataFrame | None = None,
 ) -> DataFrame:
-    """(id_a, id_b, jaccard) for pairs with shingle-set Jaccard >= threshold.
+    """(id_a, id_b, jaccard) for pairs whose ``SHINGLE_K``-shingle sets
+    have Jaccard >= threshold.
 
     Two physical strategies, same semantics:
 
@@ -271,11 +279,11 @@ def ngram_jaccard_pairs(
     if candidate_pairs is not None:
         return _verified_pairs(
             candidate_pairs, df, None, "id_a", "id_b",
-            text_col=text_col, id_col=id_col, k=k, threshold=threshold,
+            text_col=text_col, id_col=id_col, threshold=threshold,
         )
 
     # each posting carries its doc's set size, so no size table joins back
-    sh = df.select(F.col(id_col), word_shingles(text_col, k).alias("shs"))
+    sh = df.select(F.col(id_col), word_shingles(text_col).alias("shs"))
     inv = sh.select(F.col(id_col), F.size("shs").alias("n"), F.explode("shs").alias("sh"))
     a = inv.select(F.col(id_col).alias("id_a"), F.col("n").alias("n_a"), "sh")
     b = inv.select(F.col(id_col).alias("id_b"), F.col("n").alias("n_b"), "sh")
@@ -291,14 +299,10 @@ def ngram_jaccard_pairs(
 
 
 def pair_components(
-    pairs: DataFrame,
-    *,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iter: int = 25,
-    driver_max_edges: int | None = 2_000_000,
+    pairs: DataFrame, *, driver_max_edges: int | None = 2_000_000
 ) -> DataFrame:
-    """(node, component) — connected components of the near-dup pair graph;
+    """(node, component) — connected components of the near-dup pair graph
+    of ``(id_a, id_b)`` edges;
     ``component`` is the minimum node id reachable. This is the stage that
     turns candidate/verified PAIRS into duplicate GROUPS (and makes the
     over-cap bucket chaining safe: a chained 10⁶-member cluster still
@@ -336,8 +340,8 @@ def pair_components(
     # (signatures/banding/verification) executes exactly once; gating on
     # the raw plan would re-execute all of it on the over-threshold path
     edges = truncate_lineage(
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
     )
     if driver_max_edges:
@@ -382,7 +386,7 @@ def pair_components(
         .withColumn("label", F.col("node"))
     )
     labels = truncate_lineage(labels)  # truncate lineage per round
-    for _ in range(max_iter):
+    for _ in range(COMPONENT_MAX_ROUNDS):
         neigh_min = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src")
@@ -414,8 +418,8 @@ def pair_components(
         import warnings
 
         warnings.warn(
-            f"pair_components did not converge within {max_iter} rounds — "
-            "labels are an upper bound, not final components; raise max_iter "
+            f"pair_components did not converge within {COMPONENT_MAX_ROUNDS} rounds — "
+            "labels are an upper bound, not final components; raise COMPONENT_MAX_ROUNDS "
             "(diameter > 2^rounds is astronomically unlikely for dedup graphs)",
             RuntimeWarning,
             stacklevel=2,
@@ -429,18 +433,16 @@ def drop_near_duplicates(
     id_col: str = "doc_id",
     *,
     keep_by: str | None = None,
-    keep_desc: bool = True,
 ) -> DataFrame:
     """Keep one representative per near-duplicate component; docs in no
     pair survive untouched. The end-to-end near-dedup resolution:
     candidates → verified pairs → components → keep-list anti-join.
 
     ``keep_by=None`` (default): min id — the cheapest deterministic rule.
-    ``keep_by="quality_score"`` (or any df column): keep the BEST-scoring
-    member per component (desc by default; ``keep_desc=False`` for
-    cost-like scores), id-asc tiebreak — the curation rule real pipelines
-    use so dedup removes the redundant copies, not the good one
-    (RefinedWeb-style keep-best). Scale shape: components exist only for
+    ``keep_by="quality_score"`` (or any df column): keep the
+    highest-scoring member per component, id-asc tiebreak — the curation
+    rule real pipelines use so dedup removes the redundant copies, not
+    the good one (RefinedWeb-style keep-best). Scale shape: components exist only for
     docs that appear in a verified pair (tiny vs the corpus); the score
     join touches a two-column projection of df and the per-component
     window runs on that small table — the corpus itself only sees the
@@ -455,15 +457,11 @@ def drop_near_duplicates(
             df.select(F.col(id_col).alias("node"), F.col(keep_by).alias("_s")),
             "node",
         )
-        # nulls LAST in both directions: an unscored member must never
-        # beat a scored one to the representative slot (Spark's bare
-        # asc() puts NULLs first)
-        order = [
-            F.col("_s").desc_nulls_last() if keep_desc
-            else F.col("_s").asc_nulls_last(),
-            F.col("node").asc(),
-        ]
-        w = Window.partitionBy("component").orderBy(*order)
+        # nulls LAST: an unscored member must never beat a scored one to
+        # the representative slot
+        w = Window.partitionBy("component").orderBy(
+            F.col("_s").desc_nulls_last(), F.col("node").asc()
+        )
         losers = (
             scored.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") > 1)
@@ -472,8 +470,8 @@ def drop_near_duplicates(
     return df.join(losers, id_col, "left_anti")
 
 
-def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, simhash bigint): sign-sum of token-hash bits, MAP-ONLY.
+def simhash64(df: DataFrame) -> DataFrame:
+    """(doc_id, simhash bigint) of ``text``: sign-sum of token-hash bits, MAP-ONLY.
 
     One JVM ``xxhash64`` per token (inside the tokens array — same hash,
     same multiset of per-occurrence votes as the original explode
@@ -515,19 +513,17 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         return pd.Series(fp.view(np.int64))
 
     base = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.transform(
-            F.split(normalized_text(text_col), " "), lambda t: F.xxhash64(t)
+            F.split(normalized_text("text"), " "), lambda t: F.xxhash64(t)
         ).alias("hs"),
     )
-    return base.select(F.col(id_col), fingerprint(F.col("hs")).alias("simhash"))
+    return base.select(F.col("doc_id"), fingerprint(F.col("hs")).alias("simhash"))
 
 
-def simhash64_md5(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Oracle-reachable simhash twin: identical sign-sum vote logic to
-    ``simhash64``, but the per-token hash is the first 64 bits of ``md5``
+def simhash64_md5(df: DataFrame) -> DataFrame:
+    """Oracle-reachable simhash twin over ``(doc_id, text)``: identical
+    sign-sum vote logic to ``simhash64``, but the per-token hash is the first 64 bits of ``md5``
     (hex) — a function DuckDB shares bit-for-bit, unlike xxhash64 — and the
     fingerprint is returned as two unsigned 32-bit halves ``(sim_hi,
     sim_lo)`` so neither engine ever represents an unsigned 64-bit value.
@@ -537,10 +533,10 @@ def simhash64_md5(
     """
     h = F.md5(F.col("tok"))
     toks = df.select(
-        F.col(id_col),
-        F.explode(F.split(normalized_text(text_col), " ")).alias("tok"),
+        F.col("doc_id"),
+        F.explode(F.split(normalized_text("text"), " ")).alias("tok"),
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.conv(F.substring(h, 1, 8), 16, 10).cast("long").alias("hhi"),
         F.conv(F.substring(h, 9, 8), 16, 10).cast("long").alias("hlo"),
     )
@@ -553,7 +549,7 @@ def simhash64_md5(
                 F.when(F.shiftright(src, s).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
             ).alias(f"b_{i}")
         )
-    agg = toks.groupBy(id_col).agg(*bit_sums)
+    agg = toks.groupBy("doc_id").agg(*bit_sums)
     lo = None
     hi = None
     for i in range(64):
@@ -565,44 +561,37 @@ def simhash64_md5(
             lo = term if lo is None else lo.bitwiseXOR(term)
         else:
             hi = term if hi is None else hi.bitwiseXOR(term)
-    return agg.select(F.col(id_col), hi.alias("sim_hi"), lo.alias("sim_lo"))
+    return agg.select(F.col("doc_id"), hi.alias("sim_hi"), lo.alias("sim_lo"))
 
 
-def simhash_candidate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bands: int = 4,
-    max_bucket_size: int = 4096,
-) -> DataFrame:
-    """Near-dup candidates: equal 16-bit simhash band ⇒ hamming ≤ 48 filter
-    stage; exact hamming check on the candidates (bit_count of xor).
+def simhash_candidate_pairs(df: DataFrame) -> DataFrame:
+    """Near-dup candidates of ``(doc_id, text)``: equal 16-bit simhash band
+    (``SIMHASH_BANDS`` of them) ⇒ hamming ≤ 48 filter stage; exact hamming
+    check on the candidates (bit_count of xor).
 
     Same mega-bucket guard as the minhash path: over-cap band buckets
     (identical boilerplate ⇒ identical simhash ⇒ one bucket) chain instead
     of all-pairs joining; the fingerprints join back by id so the pair
     generation itself stays narrow.
     """
-    from .similarity import bucketed_candidate_pairs
-
-    sh = simhash64(df, text_col, id_col)
-    width = 64 // bands
+    sh = simhash64(df)
+    width = 64 // SIMHASH_BANDS
     banded = sh.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.array(
                 *[
                     F.shiftright(F.col("simhash"), b * width).bitwiseAND(
                         F.lit((1 << width) - 1)
                     )
-                    for b in range(bands)
+                    for b in range(SIMHASH_BANDS)
                 ]
             )
         ).alias("band", "band_val"),
     )
-    cands = bucketed_candidate_pairs(banded, id_col, ["band", "band_val"], max_bucket_size)
-    sa = sh.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("_sh_a"))
-    sb = sh.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("_sh_b"))
+    cands = bucketed_candidate_pairs(banded, "doc_id", ["band", "band_val"], MAX_BUCKET_SIZE)
+    sa = sh.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("_sh_a"))
+    sb = sh.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("_sh_b"))
     return (
         cands.join(sa, "id_a")
         .join(sb, "id_b")
@@ -623,17 +612,12 @@ def simhash_candidate_pairs(
 # ---------------------------------------------------------------------------
 
 
-def drop_exact_duplicates_against(
-    new: DataFrame,
-    existing: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Keep the new rows whose normalized content does NOT already exist
+def drop_exact_duplicates_against(new: DataFrame, existing: DataFrame) -> DataFrame:
+    """Keep the new rows whose normalized ``text`` does NOT already exist
     in the accumulated corpus. One anti-join on sha2(norm): both sides
     shuffle only the 64-hex key column (AQE broadcasts the smaller side
     when it fits)."""
-    key = F.sha2(normalized_text(text_col), 256)
+    key = F.sha2(normalized_text("text"), 256)
     seen = existing.select(key.alias("_k")).distinct()
     return new.withColumn("_k", key).join(seen, "_k", "left_anti").drop("_k")
 
@@ -641,18 +625,13 @@ def drop_exact_duplicates_against(
 def near_duplicate_matches_against(
     new: DataFrame,
     existing: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
-    k: int = 3,
     threshold: float = 0.95,
-    num_hashes: int = 64,
-    bands: int = 16,
-    max_bucket_size: int = 4096,
+    max_bucket_size: int = MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """(new_id, existing_id, jaccard) — cross-corpus near-duplicate
-    matches: banded-minhash candidates restricted to NEW×EXISTING bucket
-    co-membership, verified with the exact shingle Jaccard.
+    ``doc_id`` matches over ``text``: banded-minhash candidates
+    restricted to NEW×EXISTING bucket co-membership, verified with the exact shingle Jaccard.
 
     Scale shape: signatures are the map-only minhash path on both sides;
     the candidate join is an equi-join on (band, bucket); the EXISTING
@@ -662,15 +641,13 @@ def near_duplicate_matches_against(
     ``bucket_cap_stats`` on the existing bucket keys, never silent).
     Verification is ``_verified_pairs`` with ``existing`` as the right
     side (shingles for candidate rows only)."""
-    from .similarity import require_bucket_cap
-
     require_bucket_cap(max_bucket_size)
-    nb = minhash_banded_buckets(new, text_col, id_col, num_hashes, bands).select(
-        F.col(id_col).alias("new_id"), "band", "bucket"
+    nb = minhash_banded_buckets(new).select(
+        F.col("doc_id").alias("new_id"), "band", "bucket"
     )
-    eb = minhash_banded_buckets(
-        existing, text_col, id_col, num_hashes, bands
-    ).select(F.col(id_col).alias("existing_id"), "band", "bucket")
+    eb = minhash_banded_buckets(existing).select(
+        F.col("doc_id").alias("existing_id"), "band", "bucket"
+    )
     w = Window.partitionBy("band", "bucket").orderBy("existing_id")
     eb = eb.withColumn("_rn", F.row_number().over(w)).filter(
         F.col("_rn") <= max_bucket_size
@@ -678,5 +655,5 @@ def near_duplicate_matches_against(
     cands = nb.join(eb, ["band", "bucket"]).select("new_id", "existing_id").distinct()
     return _verified_pairs(
         cands, new, existing, "new_id", "existing_id",
-        text_col=text_col, id_col=id_col, k=k, threshold=threshold,
+        text_col="text", id_col="doc_id", threshold=threshold,
     )

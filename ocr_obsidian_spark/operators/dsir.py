@@ -114,9 +114,17 @@ class HashedNgramDsirModel:
         return len(gs), sum(self.lam_micro[_bucket(g, self.buckets)] for g in gs)
 
 
+# add-alpha smoothing of the hashed-gram frequencies (add-one, as in the
+# DSIR reference implementation, Xie et al. 2023); bucket count of the
+# fixture fit
+DSIR_ALPHA = 1.0
+DSIR_FIXTURE_BUCKETS = 256
+
+
 def _model_from_counts(
-    tc: dict[int, int], rc: dict[int, int], buckets: int, alpha: float
+    tc: dict[int, int], rc: dict[int, int], buckets: int
 ) -> HashedNgramDsirModel:
+    alpha = DSIR_ALPHA
     t_tot = sum(tc.values())
     r_tot = sum(rc.values())
     lam = []
@@ -130,12 +138,11 @@ def _model_from_counts(
 def fit_dsir_texts(
     target_texts: Iterable[str] = LM_FIXTURE_TRAIN,
     raw_texts: Iterable[str] = DSIR_FIXTURE_RAW,
-    *,
-    buckets: int = 256,
-    alpha: float = 1.0,
 ) -> HashedNgramDsirModel:
-    """Driver-side fit from in-memory corpora (the fixture path —
-    deterministic: same texts → bit-identical lam table)."""
+    """Driver-side fit from in-memory corpora over
+    ``DSIR_FIXTURE_BUCKETS`` buckets (the fixture path — deterministic:
+    same texts → bit-identical lam table)."""
+    buckets = DSIR_FIXTURE_BUCKETS
 
     def counts(texts: Iterable[str]) -> dict[int, int]:
         c: Counter[int] = Counter()
@@ -144,7 +151,7 @@ def fit_dsir_texts(
                 c[_bucket(g, buckets)] += 1
         return dict(c)
 
-    return _model_from_counts(counts(target_texts), counts(raw_texts), buckets, alpha)
+    return _model_from_counts(counts(target_texts), counts(raw_texts), buckets)
 
 
 def _gram_buckets_col(buckets: int) -> F.Column:
@@ -179,7 +186,6 @@ def fit_dsir(
     *,
     text_col: str = "text",
     buckets: int = 8192,
-    alpha: float = 1.0,
 ) -> HashedNgramDsirModel:
     """Distributed fit: hashed-gram bucket counts per corpus (explode →
     groupBy bucket, ≤``buckets`` rows collected), identical math to
@@ -200,7 +206,7 @@ def fit_dsir(
         )
         return {int(r["b"]): int(r["count"]) for r in rows}
 
-    return _model_from_counts(counts(target), counts(raw), buckets, alpha)
+    return _model_from_counts(counts(target), counts(raw), buckets)
 
 
 DSIR_FIXTURE_MODEL = fit_dsir_texts()
@@ -305,8 +311,8 @@ def dsir_select(
     )
 
 
-def dsir_sql_lam_table(model: HashedNgramDsirModel = DSIR_FIXTURE_MODEL) -> str:
-    """The quantized lam table as a SQL VALUES literal — alias as
-    name(b, lam) — for the DuckDB oracle twin."""
-    rows = ", ".join(f"({b}, {v})" for b, v in enumerate(model.lam_micro))
+def dsir_sql_lam_table() -> str:
+    """The quantized fixture lam table as a SQL VALUES literal — alias
+    as name(b, lam) — for the DuckDB oracle twin."""
+    rows = ", ".join(f"({b}, {v})" for b, v in enumerate(DSIR_FIXTURE_MODEL.lam_micro))
     return f"(VALUES {rows})"

@@ -198,7 +198,6 @@ def emit_notes(
     *,
     run_id: str = "run-0",
     book_meta: BookMeta | None = None,
-    template: str = DEFAULT_TEMPLATE,
 ) -> DataFrame:
     """(url, span) → one validated note row per non-blank quote."""
     meta = book_meta or BookMeta()
@@ -276,7 +275,7 @@ def emit_notes(
                             config_hash=config_hash,
                         ),
                     }
-                    note = render_template(template, replacements)
+                    note = render_template(DEFAULT_TEMPLATE, replacements)
                     validate_note(note)
 
                     sidecar: dict[str, Any] = {

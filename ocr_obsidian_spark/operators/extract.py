@@ -15,7 +15,7 @@ corpus half, so every caller runs the same per-page code.
 Scale design (10^12-doc target):
   * ``html`` is by far the widest column; it is consumed inside this stage
     and never appears in the output schema, so downstream stages prune it
-    at the parquet/Iceberg scan.
+    at the parquet scan.
   * skew from giant pages is defused by an optional pre-repartition on
     ``xxhash64(url)`` (urls are unique ⇒ uniform spread) and bounded Arrow
     batches (``spark.sql.execution.arrow.maxRecordsPerBatch``).
@@ -354,12 +354,13 @@ def split_extract_lineage(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
     return corpus, lineage
 
 
-def extract_pages(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """pages → corpus (the full canonical corpus schema) before the
-    printed-page mode window, which callers apply with
-    ``apply_printed_page_mode``. The corpus half of
+def extract_pages(df: DataFrame) -> DataFrame:
+    """pages → corpus (the full canonical corpus schema) under
+    ``DEFAULT_CONFIG``, before the printed-page mode window, which callers
+    apply with ``apply_printed_page_mode``. The corpus half of
     ``extract_pages_with_lineage``, not persisted: one Arrow-batched map
-    stage, no shuffle unless salting is requested via
-    ``cfg.salt_partitions``. The CLI ``extract`` stage runs
-    ``plans.pipeline.run_pipeline`` instead."""
-    return split_extract_lineage(extract_pages_with_lineage(df, cfg, run_id="extract"))[0]
+    stage, no shuffle. The CLI ``extract`` stage runs
+    ``plans.pipeline.run_pipeline`` with its configuration instead."""
+    return split_extract_lineage(
+        extract_pages_with_lineage(df, DEFAULT_CONFIG, run_id="extract")
+    )[0]

@@ -67,6 +67,13 @@ __all__ = ["host_link_edges", "page_host", "page_rank", "page_rank_oracle_sql"]
 # the Java∩RE2 subset so an oracle twin could replay it.
 _HREF_RE = r"(?i)<a\s(?:[^>]*\s)?href\s*=\s*[\"']([^\"']*)[\"']"
 
+# damping factor d = 85/100, the value of the original PageRank paper
+# (Brin & Page 1998), kept as an integer ratio so every step is exact;
+# initial mass per node in rank_i units
+DAMPING_NUM = 85
+DAMPING_DEN = 100
+PAGE_RANK_SCALE = 10**12
+
 
 def page_host(url_col: str = "url") -> Column:
     """Lowercased host of a page url — THE shared key expression for
@@ -83,8 +90,6 @@ def host_link_edges(
     *,
     url_col: str = "url",
     html_col: str = "html",
-    out_col_src: str = "src",
-    out_col_dst: str = "dst",
 ) -> DataFrame:
     """(page url, html) -> distinct host-level link edges (src, dst).
 
@@ -104,10 +109,10 @@ def host_link_edges(
     )
     return (
         df.select(
-            page_host(url_col).alias(out_col_src), F.explode(hrefs).alias("href")
+            page_host(url_col).alias("src"), F.explode(hrefs).alias("href")
         )
-        .select(out_col_src, target_host.alias(out_col_dst))
-        .where((F.col(out_col_dst) != "") & (F.col(out_col_src) != ""))
+        .select("src", target_host.alias("dst"))
+        .where((F.col("dst") != "") & (F.col("src") != ""))
         .distinct()
     )
 
@@ -115,16 +120,13 @@ def host_link_edges(
 def page_rank(
     edges: DataFrame,
     *,
-    src_col: str = "src",
-    dst_col: str = "dst",
     iters: int = 5,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    scale: int = 10**12,
+    scale: int = PAGE_RANK_SCALE,
     node_col: str = "node",
     rank_col: str = "rank_i",
 ) -> DataFrame:
-    """Integer-exact PageRank over a (src, dst) edge table.
+    """Integer-exact PageRank over a (src, dst) edge table, damping
+    ``DAMPING_NUM / DAMPING_DEN``.
 
     Returns (node, rank_i:long) for every node appearing as a src or
     dst. rank_i is in scale units (initial mass = ``scale`` per node);
@@ -133,12 +135,8 @@ def page_rank(
     """
     if iters < 0:
         raise ValueError("iters must be >= 0")
-    if not (0 < damping_num < damping_den):
-        raise ValueError("need 0 < damping_num < damping_den")
 
-    src = F.col(src_col)
-    dst = F.col(dst_col)
-    e = edges.select(src.alias("src"), dst.alias("dst"))
+    e = edges.select("src", "dst")
     # nodes is re-joined EVERY iteration — truncate it once, or each
     # iteration re-executes the 2-scan union + distinct (the
     # pair_components lesson: cut every DataFrame an iterative loop
@@ -152,7 +150,7 @@ def page_rank(
     # contributions divide by outdeg per edge, so pre-join deg once and
     # truncate: the per-iteration join then touches only narrow columns.
     edeg = truncate_lineage(e.join(deg, "src"))
-    teleport = (scale * (damping_den - damping_num)) // damping_den
+    teleport = (scale * (DAMPING_DEN - DAMPING_NUM)) // DAMPING_DEN
 
     # initial ranks need no cut of their own: they are a trivial
     # projection of the already-truncated nodes and are consumed once
@@ -171,7 +169,7 @@ def page_rank(
                 (
                     F.lit(teleport).cast("long")
                     + F.expr(
-                        f"({damping_num} * coalesce(insum, 0L)) DIV {damping_den}"
+                        f"({DAMPING_NUM} * coalesce(insum, 0L)) DIV {DAMPING_DEN}"
                     )
                 ).alias("r"),
             )
@@ -181,20 +179,15 @@ def page_rank(
 
 
 def page_rank_oracle_sql(
-    edges_sql: str,
-    *,
-    iters: int = 5,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    scale: int = 10**12,
-    node_col: str = "node",
-    rank_col: str = "rank_i",
+    edges_sql: str, *, iters: int = 5, node_col: str = "node"
 ) -> str:
-    """DuckDB twin: the SAME integer iteration unrolled as materialized
+    """DuckDB twin of ``page_rank`` at the default scale, ranks as
+    ``rank_i``: the SAME integer iteration unrolled as materialized
     CTEs (the Viterbi-oracle pattern — every multiply-referenced CTE is
     AS MATERIALIZED or DuckDB inlines it exponentially). ``edges_sql``
     must yield columns (src, dst)."""
-    teleport = (scale * (damping_den - damping_num)) // damping_den
+    scale = PAGE_RANK_SCALE
+    teleport = (scale * (DAMPING_DEN - DAMPING_NUM)) // DAMPING_DEN
     parts = [
         f"WITH edges AS MATERIALIZED ({edges_sql})",
         "nodes AS MATERIALIZED (SELECT src AS node FROM edges"
@@ -211,7 +204,7 @@ def page_rank_oracle_sql(
         # overflow bound in the module docstring).
         parts.append(
             f"r{t} AS MATERIALIZED (SELECT n.node, CAST(CAST({teleport} AS HUGEINT)"
-            f" + ({damping_num} * COALESCE(s.insum, 0)) // {damping_den}"
+            f" + ({DAMPING_NUM} * COALESCE(s.insum, 0)) // {DAMPING_DEN}"
             " AS BIGINT) AS r"
             " FROM nodes n LEFT JOIN ("
             f"SELECT e.dst AS node, SUM(r.r // e.deg) AS insum"
@@ -221,5 +214,5 @@ def page_rank_oracle_sql(
     body = ",\n".join(parts)
     return (
         f"{body}\n"
-        f"SELECT node AS {node_col}, r AS {rank_col} FROM r{iters}"
+        f"SELECT node AS {node_col}, r AS rank_i FROM r{iters}"
     )

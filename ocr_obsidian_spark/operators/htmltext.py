@@ -28,6 +28,13 @@ from pyspark.sql import DataFrame, functions as F
 
 from .xengine import WS_CLASS, WS_RE as _WS_RE
 
+# content gate: a block is content when its visible text has at least
+# CONTENT_MIN_CHARS characters and at most CONTENT_MAX_LINK_DENSITY of them
+# sit inside <a> elements (the jusText/boilerpipe length and link-density
+# cues); the html oracle SQL renders the same values
+CONTENT_MIN_CHARS = 25
+CONTENT_MAX_LINK_DENSITY = 0.4
+
 # dropped wholesale: content-free containers (case-insensitive, dotall)
 _SCRIPT_RE = "(?is)<script[^>]*>.*?</script>"
 _STYLE_RE = "(?is)<style[^>]*>.*?</style>"
@@ -79,18 +86,11 @@ def _block_text(col: F.Column) -> F.Column:
     )
 
 
-def _block_features(
-    df: DataFrame,
-    *,
-    html_col: str,
-    id_col: str,
-    min_chars: int,
-    max_link_density: float,
-) -> DataFrame:
-    """All chunks (INCLUDING empty-text ones — split yields ≥1 chunk per
+def _block_features(df: DataFrame) -> DataFrame:
+    """All chunks of ``html_str`` per ``doc_id`` (INCLUDING empty-text ones — split yields ≥1 chunk per
     document, which is what lets extract_main_content rebuild without a
     restore join) with visible text + link-density features."""
-    raw = F.coalesce(F.col(html_col), F.lit(""))
+    raw = F.coalesce(F.col("html_str"), F.lit(""))
     stripped = F.regexp_replace(
         F.regexp_replace(F.regexp_replace(raw, _SCRIPT_RE, " "), _STYLE_RE, " "),
         _COMMENT_RE,
@@ -98,14 +98,14 @@ def _block_features(
     )
     # stage the split once (HOF/CSE discipline — see classify_text_blocks)
     base = df.select(
-        F.col(id_col), F.split(stripped, _BLOCK_TAG_RE).alias("_chunks")
+        F.col("doc_id"), F.split(stripped, _BLOCK_TAG_RE).alias("_chunks")
     )
     exploded = base.select(
-        F.col(id_col), F.posexplode("_chunks").alias("block_idx", "_chunk")
+        F.col("doc_id"), F.posexplode("_chunks").alias("block_idx", "_chunk")
     )
     # per-block visible text and anchor-body text, each staged
     staged = exploded.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "block_idx",
         _block_text(F.col("_chunk")).alias("block_text"),
         F.aggregate(
@@ -119,30 +119,23 @@ def _block_features(
     # greatest(n,1): empty chunks must not produce a NaN density
     link_density = F.col("link_chars").cast("double") / F.greatest(n_chars, F.lit(1))
     return staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("block_idx").cast("long").alias("block_idx"),
         "block_text",
         n_chars.cast("long").alias("n_chars"),
         F.col("link_chars").cast("long").alias("link_chars"),
         F.round(link_density, 6).alias("link_density"),
         (
-            (n_chars >= int(min_chars)) & (link_density <= float(max_link_density))
+            (n_chars >= CONTENT_MIN_CHARS) & (link_density <= CONTENT_MAX_LINK_DENSITY)
         ).alias("is_content"),
     )
 
 
-def html_blocks(
-    df: DataFrame,
-    *,
-    html_col: str = "html_str",
-    id_col: str = "doc_id",
-    min_chars: int = 25,
-    max_link_density: float = 0.4,
-) -> DataFrame:
-    """Segment HTML into visible-text blocks with boilerplate features.
+def html_blocks(df: DataFrame) -> DataFrame:
+    """Segment ``html_str`` into visible-text blocks with boilerplate features.
 
     Returns one row per non-empty block:
-    ``(id_col, block_idx, block_text, n_chars, link_chars, link_density,
+    ``(doc_id, block_idx, block_text, n_chars, link_chars, link_density,
     is_content)`` where ``link_density`` is the fraction of visible
     characters that sit inside ``<a>`` elements — the classic
     nav/footer/related-links discriminator — and ``is_content`` gates on
@@ -152,26 +145,13 @@ def html_blocks(
     (posexplode is a generator, not a shuffle); at 100 TB this pipelines
     straight out of the scan with predicate/column pruning intact.
     """
-    return _block_features(
-        df,
-        html_col=html_col,
-        id_col=id_col,
-        min_chars=min_chars,
-        max_link_density=max_link_density,
-    ).filter(F.col("n_chars") > 0)
+    return _block_features(df).filter(F.col("n_chars") > 0)
 
 
-def extract_main_content(
-    df: DataFrame,
-    *,
-    html_col: str = "html_str",
-    id_col: str = "doc_id",
-    min_chars: int = 25,
-    max_link_density: float = 0.4,
-) -> DataFrame:
-    """HTML → main text: content blocks joined with blank lines, in
+def extract_main_content(df: DataFrame) -> DataFrame:
+    """``html_str`` → main text: content blocks joined with blank lines, in
     document order; boilerplate (nav, footers, link farms, scripts)
-    removed. Returns ``(id_col, main_text, n_blocks_kept,
+    removed. Returns ``(doc_id, main_text, n_blocks_kept,
     n_blocks_dropped)`` — one row per input row; documents whose every
     block is boilerplate yield ``''``.
 
@@ -181,21 +161,15 @@ def extract_main_content(
     (split yields ≥1 per document, so every input row has a group) and
     empty chunks are dropped inside the aggregated array instead.
     """
-    blocks = _block_features(
-        df,
-        html_col=html_col,
-        id_col=id_col,
-        min_chars=min_chars,
-        max_link_density=max_link_density,
-    )
+    blocks = _block_features(df)
     xs = F.array_sort(
         F.collect_list(F.struct("block_idx", "is_content", "n_chars", "block_text"))
     )
     staged = (
-        blocks.groupBy(id_col)
+        blocks.groupBy("doc_id")
         .agg(xs.alias("_xs"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.size(
                 F.filter(F.col("_xs"), lambda x: x["n_chars"] > 0)
             ).alias("_n"),
@@ -203,7 +177,7 @@ def extract_main_content(
         )
     )
     return staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.concat_ws(
             "\n\n", F.transform(F.col("_kept"), lambda x: x["block_text"])
         ).alias("main_text"),

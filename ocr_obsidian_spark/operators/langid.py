@@ -35,7 +35,6 @@ from __future__ import annotations
 
 import re
 from collections import Counter
-from collections.abc import Iterable, Mapping
 from dataclasses import dataclass
 
 import pandas as pd
@@ -201,16 +200,20 @@ class CharNGramNB:
         return best_lang, m
 
 
-def train_char_ngram_nb(
-    corpus: Mapping[str, Iterable[str]] = LANGID_FIXTURE_TRAIN,
-    *,
-    top_k: int = 200,
-) -> CharNGramNB:
-    """Multinomial NB over char trigrams, feature set = union of each
-    language's ``top_k`` trigrams (count desc, trigram asc — fully
-    deterministic), add-one smoothing, integer-quantized costs."""
+# NB feature set: each language's most frequent char n-grams
+NB_TOP_K = 200
+# the marker pre-filter is confident (and skips the NB scorer) at this
+# many stopword-marker hits
+MARKER_MIN_HITS = 3
+
+
+def train_char_ngram_nb() -> CharNGramNB:
+    """Multinomial NB over the ``LANGID_FIXTURE_TRAIN`` char n-grams,
+    feature set = union of each language's ``NB_TOP_K`` n-grams (count
+    desc, n-gram asc — fully deterministic), add-one smoothing,
+    integer-quantized costs."""
     per_lang: dict[str, Counter[str]] = {}
-    for lang, texts in corpus.items():
+    for lang, texts in LANGID_FIXTURE_TRAIN.items():
         c: Counter[str] = Counter()
         for t in texts:
             norm = re.sub(WS_RE, " ", t or "").strip().lower()
@@ -218,7 +221,7 @@ def train_char_ngram_nb(
         per_lang[lang] = c
     features: set[str] = set()
     for c in per_lang.values():
-        top = sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))[:top_k]
+        top = sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))[:NB_TOP_K]
         features.update(tg for tg, _ in top)
     default_lpm: dict[str, int] = {}
     sparse_dm: dict[tuple[str, str], int] = {}
@@ -256,14 +259,9 @@ def _marker_scores(text_col: str) -> tuple[Column, Column]:
     return pick, best
 
 
-def with_language(
-    df: DataFrame,
-    model: CharNGramNB = FIXTURE_NB,
-    *,
-    text_col: str = "text",
-    min_marker_hits: int = 3,
-) -> DataFrame:
-    """Cascade language ID: ``lang_marker`` (heuristic pick),
+def with_language(df: DataFrame, *, text_col: str = "text") -> DataFrame:
+    """Cascade language ID with the fixture NB model: ``lang_marker``
+    (heuristic pick),
     ``lang_nb`` (NB label, NULL where the heuristic was confident and
     the scorer was skipped), ``lang_id`` (the cascade decision) and
     ``nb_feature_hits``. Single scan, map-only."""
@@ -279,14 +277,14 @@ def with_language(
                 langs.append(None)
                 hits.append(None)
             else:
-                lang, m = model.classify(text or "")
+                lang, m = FIXTURE_NB.classify(text or "")
                 langs.append(lang)
                 hits.append(m)
         return pd.DataFrame({"lang": langs, "hits": hits})
 
     pick, best = _marker_scores(text_col)
     staged = df.withColumn("lang_marker", pick).withColumn(
-        "_confident", best >= int(min_marker_hits)
+        "_confident", best >= MARKER_MIN_HITS
     )
     # confident rows ship NULL instead of their full normalized text —
     # the scorer is skipped for them anyway, so the Arrow transfer only
@@ -313,13 +311,14 @@ def with_language(
     )
 
 
-def model_sql_tables(model: CharNGramNB = FIXTURE_NB) -> dict[str, str]:
-    """The quantized NB model as SQL VALUES literals for the DuckDB
+def model_sql_tables() -> dict[str, str]:
+    """The quantized fixture NB model as SQL VALUES literals for the DuckDB
     oracle: the feature list, per-language default costs, and the
     sparse (trigram, lang, delta) table."""
 
     from .xengine import sql_str_literal as esc
 
+    model = FIXTURE_NB
     feats = ", ".join(f"({esc(tg)})" for tg in sorted(model.features))
     langs = ", ".join(
         f"({esc(lg)}, {model.default_lpm[lg]})" for lg in model.langs

@@ -24,11 +24,10 @@ sums, identical in any summation order and in any engine. Perplexity
 (a float) is derived from the integer total only at the edge
 (``ppl = 10^(nll_micro/1e6/n_tokens)``), never hashed.
 
-The default model trains at import from ``LM_FIXTURE_TRAIN`` (an
-embedded, public, apostrophe-free English fixture corpus) so tests, the
-Spark UDF and the DuckDB oracle share one checked-in artifact;
-deployments pass their own ``KNBigramModel`` trained on a trusted
-corpus (CCNet uses Wikipedia).
+The model trains at import from ``LM_FIXTURE_TRAIN`` (an embedded,
+public, apostrophe-free English fixture corpus) so tests, the Spark UDF
+and the DuckDB oracle share one checked-in artifact (CCNet trains the
+same kind of model on Wikipedia).
 
 Scale shape: scoring is a single Arrow-batched pandas UDF over
 JVM-normalized text — map-only, zero shuffles; the model rides to
@@ -125,25 +124,19 @@ def _tokenize(text: str) -> list[str]:
     return norm.split(" ") if norm else []
 
 
-def train_kn_bigram(
-    texts: Iterable[str] = LM_FIXTURE_TRAIN,
-    *,
-    min_count: int = 1,
-) -> KNBigramModel:
+def train_kn_bigram(texts: Iterable[str] = LM_FIXTURE_TRAIN) -> KNBigramModel:
     """Train an interpolated-KN bigram model driver-side (the training
     corpus is small and trusted — CCNet trains on Wikipedia once, not
-    per-job). Deterministic: same texts → bit-identical tables."""
+    per-job). Every training word is in the vocabulary; ``UNK`` carries
+    the mass of unseen words. Deterministic: same texts → bit-identical
+    tables."""
     docs = [_tokenize(t) for t in texts]
-    uni = Counter(w for ws in docs for w in ws)
-    vocab = frozenset(w for w, c in uni.items() if c >= min_count)
-
-    def mapped(ws: list[str]) -> list[str]:
-        return [w if w in vocab else UNK for w in ws]
+    vocab = frozenset(w for ws in docs for w in ws)
 
     bi: Counter[tuple[str, str]] = Counter()
     for ws in docs:
         prev = BOS
-        for w in mapped(ws):
+        for w in ws:
             bi[(prev, w)] += 1
             prev = w
     c_ctx = Counter()
@@ -183,13 +176,9 @@ def train_kn_bigram(
 FIXTURE_LM = train_kn_bigram()
 
 
-def with_lm_perplexity(
-    df: DataFrame,
-    model: KNBigramModel = FIXTURE_LM,
-    *,
-    text_col: str = "text",
-) -> DataFrame:
-    """Add ``n_tokens`` (long), ``nll_micro`` (long, exact integer sum of
+def with_lm_perplexity(df: DataFrame, *, text_col: str = "text") -> DataFrame:
+    """Score ``text_col`` with the fixture model ``FIXTURE_LM``: add
+    ``n_tokens`` (long), ``nll_micro`` (long, exact integer sum of
     quantized token costs) and ``lm_ppl`` (double, derived at the edge).
     Map-only; one Arrow-batched UDF over JVM-normalized text. ``lm_ppl``
     feeds ``textstats.with_quality_tiers(score_col="lm_ppl")`` for
@@ -203,7 +192,7 @@ def with_lm_perplexity(
         out_n, out_c = [], []
         for text in norm_text:
             words = text.split(" ") if text else []
-            n, cost = model.doc_cost(words)
+            n, cost = FIXTURE_LM.doc_cost(words)
             out_n.append(n)
             out_c.append(cost)
         return pd.DataFrame({"n_tokens": out_n, "nll_micro": out_c})
@@ -226,14 +215,15 @@ def with_lm_perplexity(
     )
 
 
-def model_sql_tables(model: KNBigramModel = FIXTURE_LM) -> dict[str, str]:
-    """The quantized model as SQL VALUES literals (vocab / per-token
+def model_sql_tables() -> dict[str, str]:
+    """The quantized fixture model as SQL VALUES literals (vocab / per-token
     backoff+continuation / seen bigrams) for the DuckDB oracle twin.
     Tokens are SQL-escaped; the fixture corpus is apostrophe-free so the
     escape is a no-op there."""
 
     from .xengine import sql_str_literal as esc
 
+    model = FIXTURE_LM
     vocab_rows = ", ".join(f"({esc(w)})" for w in sorted(model.vocab))
     uni_rows = ", ".join(
         f"({esc(t)}, {model.backoff_lpm.get(t, 0)}, {model.cont_lpm.get(t, 0)})"

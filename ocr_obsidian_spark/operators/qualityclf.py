@@ -73,19 +73,23 @@ class LinearQualityModel:
         )
 
 
+# logistic-regression training: hashed-gram buckets, full-batch epochs,
+# learning rate and L2 weight decay of the fixture classifier
+CLF_BUCKETS = 256
+CLF_EPOCHS = 200
+CLF_LR = 0.5
+CLF_L2 = 1e-3
+
+
 def train_quality_clf(
     pos_texts: Iterable[str] = LM_FIXTURE_TRAIN,
     neg_texts: Iterable[str] = QUALITY_FIXTURE_NEG,
-    *,
-    buckets: int = 256,
-    epochs: int = 200,
-    lr: float = 0.5,
-    l2: float = 1e-3,
 ) -> LinearQualityModel:
-    """Deterministic full-batch logistic regression (fixed epochs, no
-    shuffling, float64 driver arithmetic — same inputs give a
+    """Deterministic full-batch logistic regression (``CLF_EPOCHS``
+    epochs, no shuffling, float64 driver arithmetic — same inputs give a
     bit-identical model). Features are raw bucket counts, so the learned
     weights quantize straight into the integer scoring rule."""
+    buckets, lr, l2 = CLF_BUCKETS, CLF_LR, CLF_L2
     docs: list[tuple[dict[int, int], int]] = []
     for texts, y in ((pos_texts, 1), (neg_texts, 0)):
         for t in texts:
@@ -97,7 +101,7 @@ def train_quality_clf(
     w = [0.0] * buckets
     bias = 0.0
     n = len(docs)
-    for _ in range(epochs):
+    for _ in range(CLF_EPOCHS):
         gw = [0.0] * buckets
         gb = 0.0
         for counts, y in docs:
@@ -155,8 +159,10 @@ def with_quality_label(
     )
 
 
-def clf_sql_tables(model: LinearQualityModel = QUALITY_FIXTURE_CLF) -> dict[str, str]:
-    """The quantized model for the DuckDB oracle twin: the weight table
-    as a VALUES literal — alias as name(b, w) — plus the bias literal."""
+def clf_sql_tables() -> dict[str, str]:
+    """The quantized fixture model for the DuckDB oracle twin: the weight
+    table as a VALUES literal — alias as name(b, w) — plus the bias
+    literal."""
+    model = QUALITY_FIXTURE_CLF
     rows = ", ".join(f"({b}, {v})" for b, v in enumerate(model.w_micro))
     return {"weights": f"(VALUES {rows})", "bias": str(model.bias_micro)}

@@ -78,9 +78,6 @@ def gate_documents(
     *,
     text_col: str = "text",
     langs: list[str] | None = None,
-    gopher: bool = True,
-    gopher_rep: bool = True,
-    c4: bool = True,
     mark=lambda stage, d: d,
 ) -> DataFrame:
     """The pipeline's stateless gate chain — lang gate → Gopher shape →
@@ -90,25 +87,19 @@ def gate_documents(
     out = with_language(df, text_col=text_col)
     if langs is not None:
         out = mark("lang", out.filter(F.col("lang_id").isin(list(langs))))
-    if gopher:
-        out = mark(
-            "gopher",
-            with_gopher_flags(out, text_col).filter(F.col("gopher_pass")),
-        )
-    if gopher_rep:
-        out = mark(
-            "gopher_rep",
-            with_gopher_repetition(out, text_col).filter(
-                F.col("gopher_rep_pass")
-            ),
-        )
-    if c4:
-        out = mark(
-            "c4",
-            c4_line_filter(out, text_col=text_col).filter(
-                F.length(F.col(text_col)) > 0
-            ),
-        )
+    out = mark(
+        "gopher", with_gopher_flags(out, text_col).filter(F.col("gopher_pass"))
+    )
+    out = mark(
+        "gopher_rep",
+        with_gopher_repetition(out, text_col).filter(F.col("gopher_rep_pass")),
+    )
+    out = mark(
+        "c4",
+        c4_line_filter(out, text_col=text_col).filter(
+            F.length(F.col(text_col)) > 0
+        ),
+    )
     return out.select(
         *df.columns, *(c for c in ("lang_id",) if c not in df.columns)
     )
@@ -121,14 +112,10 @@ def prepare_web_corpus(
     id_col: str = "doc_id",
     url_col: str | None = "url",
     langs: list[str] | None = None,
-    gopher: bool = True,
-    gopher_rep: bool = True,
-    c4: bool = True,
     line_dedup_min_docs: int | None = 2,
     jaccard_threshold: float = 0.8,
     keep_by: str | None = None,
     benchmark: DataFrame | None = None,
-    pii: bool = True,
 ) -> PrepareResult:
     """documents → training-ready corpus, one job, stage counts observed.
 
@@ -136,7 +123,8 @@ def prepare_web_corpus(
     only those languages. ``keep_by="quality_score"`` makes near-dedup
     keep the best-scoring member per duplicate component (RefinedWeb
     keep-best) instead of the min-id one. ``benchmark`` enables
-    k-shingle eval-set decontamination. The stage boundaries are
+    k-shingle eval-set decontamination. PII is always scrubbed last.
+    The stage boundaries are
     ``xengine.truncate_lineage`` cuts: reliable when the session has a
     checkpoint dir, local otherwise.
 
@@ -156,15 +144,7 @@ def prepare_web_corpus(
         )
     # the shared gate chain already prunes to input columns + lang_id,
     # so only those are materialized at the first stage boundary
-    out = gate_documents(
-        out,
-        text_col=text_col,
-        langs=langs,
-        gopher=gopher,
-        gopher_rep=gopher_rep,
-        c4=c4,
-        mark=mark,
-    )
+    out = gate_documents(out, text_col=text_col, langs=langs, mark=mark)
     out = truncate_lineage(out)
     if line_dedup_min_docs:
         # the line-frequency rebuild aggregates by id and returns only
@@ -199,7 +179,6 @@ def prepare_web_corpus(
             "decontaminate",
             decontaminate(out, benchmark, text_col=text_col, id_col=id_col),
         )
-    if pii:
-        out = scrub_pii(out, text_col=text_col)
+    out = scrub_pii(out, text_col=text_col)
     result.df = mark("output", out)
     return result

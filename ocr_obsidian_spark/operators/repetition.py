@@ -167,21 +167,13 @@ def _rep_udf(raw: pd.Series, norm: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=_FRAC_COLS)
 
 
-def with_gopher_repetition(
-    df: DataFrame,
-    text_col: str = "text",
-    *,
-    thresholds: dict[str, float] = GOPHER_REP_THRESHOLDS,
-) -> DataFrame:
-    """Add the eleven repetition fractions + ``gopher_rep_pass``.
+def with_gopher_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Add the eleven repetition fractions + ``gopher_rep_pass`` (each
+    fraction at most its published ``GOPHER_REP_THRESHOLDS`` value).
 
     Line/paragraph units come from the RAW text (exact, case-sensitive —
     boilerplate repeats exactly); n-gram stats from the shared normalized
-    form. ``thresholds`` maps output column → max allowed fraction
-    (default: the published Gopher values)."""
-    unknown = set(thresholds) - set(GOPHER_REP_THRESHOLDS)
-    if unknown:
-        raise ValueError(f"unknown repetition columns: {sorted(unknown)}")
+    form."""
     raw = F.coalesce(F.col(text_col), F.lit(""))
     staged = df.withColumn("_rep", _rep_udf(raw, _norm(text_col)))
     # rounding happens JVM-side (Spark round = HALF_UP, matching DuckDB's
@@ -189,6 +181,6 @@ def with_gopher_repetition(
     for c in _FRAC_COLS:
         staged = staged.withColumn(c, F.round(F.col("_rep")[c], 6))
     gate = F.lit(True)
-    for c, thr in thresholds.items():
+    for c, thr in GOPHER_REP_THRESHOLDS.items():
         gate = gate & (F.col(c) <= float(thr))
     return staged.withColumn("gopher_rep_pass", gate).drop("_rep")

@@ -54,7 +54,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .dedup import pair_components
-from .similarity import _valid_embedding, bucketed_cosine_pairs
+from .similarity import MAX_BUCKET_SIZE, _valid_embedding, bucketed_cosine_pairs
 from .xengine import truncate_lineage
 
 
@@ -108,10 +108,9 @@ def assign_semantic_cells(
     *,
     vec_col: str = "embedding",
     cell_col: str = "sem_cell",
-    sim_col: str = "cent_sim",
 ) -> DataFrame:
     """Map-only: nearest-centroid cell plus the keep-rule score
-    (cosine to the OWN cell's centroid). Zero shuffles.
+    ``cent_sim`` (cosine to the OWN cell's centroid). Zero shuffles.
 
     Invalid embeddings (see ``_valid_embedding``) get ``cell = -1`` and
     a NULL score — they ride through every downstream stage as their own
@@ -134,7 +133,7 @@ def assign_semantic_cells(
         cell_col,
         F.when(F.col("_valid"), F.col("_as.cell")).otherwise(F.lit(-1)),
     ).withColumn(
-        sim_col,
+        "cent_sim",
         F.when(F.col("_valid"), F.col("_as.sim")).otherwise(
             F.lit(None).cast("double")
         ),
@@ -149,7 +148,7 @@ def semantic_duplicate_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9999,
-    max_cell_size: int = 4096,
+    max_cell_size: int = MAX_BUCKET_SIZE,
     assigned: DataFrame | None = None,
 ) -> DataFrame:
     """(id_a, id_b) pairs with cosine >= ``threshold`` among CELL-MATES.
@@ -190,7 +189,7 @@ def semantic_dedup_labels(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9999,
-    max_cell_size: int = 4096,
+    max_cell_size: int = MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """One row per input row: ``(id_col, sem_cell, component, kept)``.
 

@@ -77,15 +77,9 @@ def _pair_cosine_udf():
     return pc
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(query_id, neighbor_id, cosine, rank<=k); excludes self-matches.
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
+    """(query_id, neighbor_id, cosine, rank<=k) over ``(vec_id,
+    embedding)`` rows; excludes self-matches.
 
     The query side is broadcast — the corpus is never shuffled; ranking
     shuffles only (query_id, candidate) pairs, already reduced to top-k per
@@ -93,10 +87,10 @@ def brute_force_topk(
     """
     q = F.broadcast(
         queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
         )
     )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"))
     scored = (
         c.crossJoin(q)
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -116,7 +110,15 @@ def brute_force_topk(
     )
 
 
-def _table_signatures_udf(dim: int, n_bits: int, n_tables: int, seed: int):
+# random-hyperplane LSH over embeddings (Charikar 2002): the plane seed,
+# and the default n_bits x n_tables layout (OR-amplification across
+# tables, see embedding_near_duplicates)
+LSH_SEED = 7
+LSH_BITS = 8
+LSH_TABLES = 8
+
+
+def _table_signatures_udf(dim: int, n_bits: int, n_tables: int):
     """Arrow-vectorized multi-table signatures: one numpy matmul per batch.
 
     The pure-expression alternative (n_tables × n_bits dot-product
@@ -127,7 +129,7 @@ def _table_signatures_udf(dim: int, n_bits: int, n_tables: int, seed: int):
     """
     planes = np.stack(
         [
-            np.random.default_rng(seed + 1000 * t).standard_normal((n_bits, dim))
+            np.random.default_rng(LSH_SEED + 1000 * t).standard_normal((n_bits, dim))
             for t in range(n_tables)
         ]
     )  # (T, B, D)
@@ -152,29 +154,27 @@ def lsh_topk(
     queries: DataFrame,
     k: int = 5,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
-    n_bits: int = 8,
-    n_tables: int = 8,
-    seed: int = 7,
+    n_bits: int = LSH_BITS,
+    n_tables: int = LSH_TABLES,
 ) -> DataFrame:
-    """Approximate top-k: candidates are corpus vectors sharing the query's
-    bucket in ANY of ``n_tables`` independent hash tables, then exact cosine
-    re-ranking within the candidate set. Cost is linear in corpus size
+    """Approximate top-k over ``(vec_id, embedding)`` rows: candidates are
+    corpus vectors sharing the query's bucket in ANY of ``n_tables``
+    independent hash tables, then exact cosine re-ranking within the
+    candidate set. Cost is linear in corpus size
     (each row hashes into n_tables buckets); recall is tuned by
     (n_bits, n_tables) — OR-amplification across tables."""
-    sig_udf = _table_signatures_udf(dim, n_bits, n_tables, seed)
+    sig_udf = _table_signatures_udf(dim, n_bits, n_tables)
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.posexplode(sig_udf(F.col(vec_col))).alias("table", "sig"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        F.posexplode(sig_udf(F.col("embedding"))).alias("table", "sig"),
     )
     q = F.broadcast(
         queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.posexplode(sig_udf(F.col(vec_col))).alias("table", "sig"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("q_vec"),
+            F.posexplode(sig_udf(F.col("embedding"))).alias("table", "sig"),
         )
     )
     scored = (
@@ -301,15 +301,17 @@ def ivf_assign(
     return df.withColumn(out_col, cell)
 
 
-def sample_centroids(
-    df: DataFrame, k: int, *, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> list[list[float]]:
-    """Deterministic centroid seed: the k lowest-id vectors. Kept as the
-    ORACLE-STABLE quantizer (the driver's ivf_ann query must reproduce
-    bit-identically round to round); real deployments use
+def sample_centroids(df: DataFrame, k: int) -> list[list[float]]:
+    """Deterministic centroid seed: the k lowest-``vec_id`` embeddings.
+    Kept as the ORACLE-STABLE quantizer (the driver's ivf_ann query must
+    reproduce bit-identically round to round); real deployments use
     ``kmeans_centroids`` below."""
-    rows = df.orderBy(id_col).limit(k).select(vec_col).collect()
+    rows = df.orderBy("vec_id").limit(k).select("embedding").collect()
     return [[float(v) for v in r[0]] for r in rows]
+
+
+KMEANS_SEED = 7
+KMEANS_MAX_ITER = 20
 
 
 def kmeans_centroids(
@@ -317,10 +319,9 @@ def kmeans_centroids(
     k: int,
     *,
     vec_col: str = "embedding",
-    seed: int = 7,
-    max_iter: int = 20,
 ) -> list[list[float]]:
-    """Fitted IVF coarse quantizer: seeded pyspark.ml KMeans over the
+    """Fitted IVF coarse quantizer: pyspark.ml KMeans (seed ``KMEANS_SEED``,
+    at most ``KMEANS_MAX_ITER`` iterations) over the
     embedding column (the at-scale replacement for ``sample_centroids`` —
     the fit is one MLlib job; the returned k centroids are tiny and ride
     into ``ivf_assign`` as literals, so assignment stays map-only)."""
@@ -330,7 +331,7 @@ def kmeans_centroids(
     vdf = df.select(
         array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
     )
-    model = KMeans(k=k, seed=seed, maxIter=max_iter).fit(vdf)
+    model = KMeans(k=k, seed=KMEANS_SEED, maxIter=KMEANS_MAX_ITER).fit(vdf)
     return [[float(x) for x in c] for c in model.clusterCenters()]
 
 
@@ -341,10 +342,9 @@ def ivf_topk(
     k: int = 5,
     *,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF approximate top-k: corpus is partitioned once into centroid
+    """IVF approximate top-k over ``(vec_id, embedding)`` rows: corpus is
+    partitioned once into centroid
     cells; each query scores only against its ``n_probe`` nearest cells.
 
     Scale shape: assignment is map-only; the probe join is an equi-join on
@@ -360,11 +360,11 @@ def ivf_topk(
     "expression")`` for plan-shape comparisons.
     """
     c = ivf_assign(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")),
+        corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")),
         centroids, vec_col="c_vec", out_col="cell", method="vectorized",
     )
     # per-query probe cells: rank centroid distances, keep n_probe
-    qd = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
+    qd = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
     probes = _ivf_assign_udf(centroids, min(n_probe, len(centroids)))(
         F.col("q_vec")
     )
@@ -386,6 +386,12 @@ def ivf_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
+
+
+# members per LSH bucket before a pair generator degrades to chaining
+# (bucketed_candidate_pairs) or keeps the lowest ids (the incremental
+# near-dup match); every bucketed path shares it
+MAX_BUCKET_SIZE = 4096
 
 
 def require_bucket_cap(max_bucket_size: int) -> None:
@@ -546,25 +552,21 @@ def bucket_cap_stats(
 def embedding_near_duplicates(
     df: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     threshold: float = 0.95,
-    n_bits: int = 8,
-    n_tables: int = 8,
-    seed: int = 7,
-    max_bucket_size: int = 4096,
+    max_bucket_size: int = MAX_BUCKET_SIZE,
 ) -> DataFrame:
-    """(id_a, id_b, cosine >= threshold) — embedding-cosine near-dup pass:
+    """(id_a, id_b, cosine >= threshold) — embedding-cosine near-dup pass
+    over ``(vec_id, embedding)`` rows:
     multi-table LSH candidate generation (linear), exact cosine only on
     candidates.
 
-    Recall comes from OR-amplification across ``n_tables`` independent
+    Recall comes from OR-amplification across ``LSH_TABLES`` independent
     hyperplane tables: a pair at exactly ``threshold`` collides in one table
     w.p. p_bit^n_bits with p_bit = 1 − arccos(threshold)/π, and survives
-    w.p. 1 − (1 − p_bit^n_bits)^n_tables — ≈0.99 at threshold 0.95 with the
-    (8 bits, 8 tables) default; exact copies collide in every table. At
-    larger scale raise n_bits (smaller buckets) and n_tables together.
+    w.p. 1 − (1 − p_bit^n_bits)^n_tables — ≈0.99 at threshold 0.95 with
+    8 bits x 8 tables; exact copies collide in every table. At larger
+    scale raise LSH_BITS (smaller buckets) and LSH_TABLES together.
 
     Skew: buckets above ``max_bucket_size`` (duplicate mega-clusters) chain
     instead of all-pairs joining — see ``bucketed_candidate_pairs``.
@@ -572,11 +574,11 @@ def embedding_near_duplicates(
     Invalid vectors (see ``_valid_embedding``) are dropped before keying:
     they have no cosine, so they can never be near-duplicates.
     """
-    sig_udf = _table_signatures_udf(dim, n_bits, n_tables, seed)
-    keyed = df.filter(_valid_embedding(vec_col, dim)).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.posexplode(sig_udf(F.col(vec_col))).alias("table", "sig"),
+    sig_udf = _table_signatures_udf(dim, LSH_BITS, LSH_TABLES)
+    keyed = df.filter(_valid_embedding("embedding", dim)).select(
+        F.col("vec_id"),
+        F.col("embedding"),
+        F.posexplode(sig_udf(F.col("embedding"))).alias("table", "sig"),
     )
     # fused candidate+verify (see bucketed_cosine_pairs): per (table, sig)
     # bucket one blocked matmul replaces the pair self-join + two vector
@@ -585,6 +587,6 @@ def embedding_near_duplicates(
     # with the identical float64 cosine; dropDuplicates restores the
     # distinct-pair contract of the unfused plan.
     pairs = bucketed_cosine_pairs(
-        keyed, id_col, ["table", "sig"], vec_col, threshold, max_bucket_size
+        keyed, "vec_id", ["table", "sig"], "embedding", threshold, max_bucket_size
     )
     return pairs.dropDuplicates(["id_a", "id_b"])

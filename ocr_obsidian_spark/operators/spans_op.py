@@ -29,18 +29,17 @@ from ..schemas import SPAN
 
 
 def filter_block_candidates(
-    triggers: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG, *,
-    page_width_col: str = "page_width", page_height_col: str = "page_height",
+    triggers: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """Apply the block shape gates to the ``candidates`` array column.
 
-    Requires page dimension columns on the frame (join corpus first or use
-    defaults). Mirrors reference ingest/highlights.py:61-83,128-130 as pure
+    Requires ``page_width``/``page_height`` columns on the frame (join the
+    corpus first). Mirrors reference ingest/highlights.py:61-83,128-130 as pure
     column expressions.
     """
     b = cfg.blocks
-    pw = F.col(page_width_col)
-    ph = F.col(page_height_col)
+    pw = F.col("page_width")
+    ph = F.col("page_height")
 
     def keep(c):  # noqa: ANN001 — pyspark Column lambda
         x1 = c["bbox"][0].cast("double")

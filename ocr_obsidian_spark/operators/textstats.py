@@ -31,6 +31,20 @@ _STOPWORDS = _LANG_MARKERS["en"] + ["a", "in", "it", "for", "on", "with"]
 # least two of these eight English words
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
+# the published Gopher quality-rule thresholds (Rae et al. 2021 §A1.1),
+# keyed by the ``with_gopher_flags`` column each bounds: (min, max), None =
+# unbounded. ``stop_distinct`` counts distinct GOPHER_STOPWORDS; ``n_words``
+# is 50..100 000 words, ``mean_word_len`` 3..10 characters.
+GOPHER_THRESHOLDS: dict[str, tuple[float | None, float | None]] = {
+    "symbol_word_ratio": (None, 0.1),
+    "bullet_line_frac": (None, 0.9),
+    "ellipsis_line_frac": (None, 0.3),
+    "alpha_word_frac": (0.8, None),
+    "stop_distinct": (2, None),
+    "n_words": (50, 100_000),
+    "mean_word_len": (3.0, 10.0),
+}
+
 
 def _norm(text_col: str) -> F.Column:
     # coalesce first: NULL text must behave like empty text, otherwise NULLs
@@ -95,41 +109,20 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def with_gopher_flags(
-    df: DataFrame,
-    text_col: str = "text",
-    *,
-    max_symbol_word_ratio: float = 0.1,
-    max_bullet_line_frac: float = 0.9,
-    max_ellipsis_line_frac: float = 0.3,
-    min_alpha_word_frac: float = 0.8,
-    min_distinct_stopwords: int = 2,
-    stopwords: tuple[str, ...] = GOPHER_STOPWORDS,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-) -> DataFrame:
+def with_gopher_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
     """The Gopher rule set beyond what's in with_quality_score /
     with_repetition_stats: symbol-to-word ratio (# and … spam),
     bullet-start and ellipsis-end line fractions, fraction of words
-    containing a letter, distinct-stopword count — plus the conjunction
+    containing a letter, distinct-stopword count, word count and mean
+    word length — plus their conjunction against ``GOPHER_THRESHOLDS``
     as ``gopher_pass``. All per-row array/regexp expressions: map-only,
     zero shuffles, whole-stage codegen.
 
-    The stop-word gate defaults to the PUBLISHED Gopher rule (Rae et al.
-    2021 §A1.1): the document must contain ≥ ``min_distinct_stopwords``
-    (2) distinct words of the eight-word ``GOPHER_STOPWORDS`` set; both
-    the marker set and the threshold are parameters for per-deployment
-    variants (e.g. datatrove counts total occurrences instead — pass a
-    different threshold/set to approximate).
-
-    Round 4 adds the published document-shape gates: word count in
-    [``min_words``, ``max_words``] (Gopher: 50..100 000) and mean word
-    length in [``min_mean_word_len``, ``max_mean_word_len``] (3..10
-    characters), as ``n_words`` / ``mean_word_len`` columns folded into
-    ``gopher_pass``. The repetition half of the published rule set lives
-    in ``operators/repetition.with_gopher_repetition``.
+    The stop-word gate is the PUBLISHED Gopher rule (Rae et al. 2021
+    §A1.1): the document must contain ≥ 2 distinct words of the
+    eight-word ``GOPHER_STOPWORDS`` set. The repetition half of the
+    published rule set lives in
+    ``operators/repetition.with_gopher_repetition``.
     """
     raw = F.coalesce(F.col(text_col), F.lit(""))
     staged = df.withColumn("_lines", F.split(raw, "\n")).withColumn(
@@ -161,7 +154,7 @@ def with_gopher_flags(
     stop_distinct = F.size(
         F.array_intersect(
             F.array_distinct(F.col("_toks")),
-            F.array(*[F.lit(s) for s in stopwords]),
+            F.array(*[F.lit(s) for s in GOPHER_STOPWORDS]),
         )
     )
     norm_len = F.length(_norm(text_col))
@@ -179,17 +172,12 @@ def with_gopher_flags(
         .withColumn("n_words", true_words.cast("long"))
         .withColumn("mean_word_len", F.round(mean_word_len, 6))
     )
-    gopher_pass = (
-        (F.col("symbol_word_ratio") <= max_symbol_word_ratio)
-        & (F.col("bullet_line_frac") <= max_bullet_line_frac)
-        & (F.col("ellipsis_line_frac") <= max_ellipsis_line_frac)
-        & (F.col("alpha_word_frac") >= min_alpha_word_frac)
-        & (F.col("stop_distinct") >= int(min_distinct_stopwords))
-        & (F.col("n_words") >= int(min_words))
-        & (F.col("n_words") <= int(max_words))
-        & (F.col("mean_word_len") >= float(min_mean_word_len))
-        & (F.col("mean_word_len") <= float(max_mean_word_len))
-    )
+    gopher_pass = F.lit(True)
+    for c, (lo, hi) in GOPHER_THRESHOLDS.items():
+        if lo is not None:
+            gopher_pass = gopher_pass & (F.col(c) >= lo)
+        if hi is not None:
+            gopher_pass = gopher_pass & (F.col(c) <= hi)
     return out.withColumn("gopher_pass", gopher_pass).drop("_lines", "_toks")
 
 
@@ -205,7 +193,7 @@ _SCRIPT_RANGES = {
 }
 
 
-def with_script_mix(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_script_mix(df: DataFrame) -> DataFrame:
     """Unicode-script composition signals: per-document fraction of ALL
     characters (spaces/digits/punctuation included in the denominator)
     that belong to each major script (latin / cyrillic / arabic / CJK),
@@ -215,7 +203,7 @@ def with_script_mix(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Map-only regexp counting, whole-stage codegen; ties break by the
     fixed script order for determinism."""
-    raw = F.coalesce(F.col(text_col), F.lit(""))
+    raw = F.coalesce(F.col("text"), F.lit(""))
     n = F.greatest(F.length(raw), F.lit(1))
     counts = {
         name: F.regexp_count(raw, F.lit("[" + rng + "]"))
@@ -242,12 +230,10 @@ def with_quality_tiers(
     score_col: str = "quality_score",
     by: str | None = "lang",
     tiers: int = 3,
-    id_col: str = "doc_id",
-    tier_col: str = "tier",
 ) -> DataFrame:
     """Exact quality tiering: rank documents by ``score_col`` (desc,
-    ``id_col`` tiebreak) within each ``by`` group and split into ``tiers``
-    equal buckets — tier 1 = head (best), tier N = tail. The corpus-curation
+    ``doc_id`` tiebreak) within each ``by`` group and split into ``tiers``
+    equal buckets as ``tier`` — 1 = head (best), N = tail. The corpus-curation
     move behind head/middle/tail selection: keep the head, sample the
     middle, drop the tail.
 
@@ -259,11 +245,11 @@ def with_quality_tiers(
     from pyspark.sql import Window
 
     part = Window.partitionBy(by) if by else Window.partitionBy()
-    w = part.orderBy(F.col(score_col).desc(), F.col(id_col))
-    return df.withColumn(tier_col, F.ntile(int(tiers)).over(w))
+    w = part.orderBy(F.col(score_col).desc(), F.col("doc_id"))
+    return df.withColumn("tier", F.ntile(int(tiers)).over(w))
 
 
-def with_repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition signals — the standard boilerplate/spam
     filters a training-data pipeline applies before dedup:
 
@@ -279,9 +265,9 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """
     # staged projections: HOF lambdas re-evaluate captured subtrees per
     # element (round-3 CSE lesson — see classify_text_blocks)
-    lines = F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
+    lines = F.split(F.coalesce(F.col("text"), F.lit("")), "\n")
     base = df.withColumn("_lines", lines).withColumn(
-        "_toks", F.split(_norm(text_col), " ")
+        "_toks", F.split(_norm("text"), " ")
     )
     n_lines = F.size(F.col("_lines"))
     dup_line_frac = F.when(n_lines <= 0, F.lit(0.0)).otherwise(
@@ -322,20 +308,24 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+# profile_corpus sketch settings: HyperLogLog++ relative standard
+# deviation, reported doc-length quantiles, size of the top-host table
+PROFILE_RSD = 0.02
+PROFILE_QUANTILES = (0.5, 0.9, 0.99)
+PROFILE_TOP_HOSTS = 10
+
+
 def profile_corpus(
     df: DataFrame,
     *,
     text_col: str = "text",
-    url_col: str | None = "url",
-    rsd: float = 0.02,
-    quantiles: tuple[float, ...] = (0.5, 0.9, 0.99),
-    top_hosts: int = 10,
     include_counts: bool = True,
 ) -> dict:
     """Sketch-based corpus profile — the 100 TB-safe twin of the exact
     `report` stage: HyperLogLog++ distinct counts (approx_count_distinct,
-    error controlled by ``rsd``) for distinct normalized contents and
-    distinct hosts, Greenwald-Khanna doc-length quantiles
+    error ``PROFILE_RSD``) for distinct normalized contents and
+    distinct hosts (of a ``url`` column, when there is one),
+    Greenwald-Khanna doc-length quantiles
     (percentile_approx). All three are single-pass, partial-aggregable
     sketches that merge map-side — the corpus's raw values never
     shuffle; exact distinct counts at 10^12 docs would each be a
@@ -352,10 +342,10 @@ def profile_corpus(
     n_chars = F.length(F.coalesce(F.col(text_col), F.lit("")))
     aggs = [
         F.approx_count_distinct(
-            F.sha2(normalized_text(text_col), 256), rsd
+            F.sha2(normalized_text(text_col), 256), PROFILE_RSD
         ).alias("approx_distinct_contents"),
         F.percentile_approx(
-            n_chars.cast("double"), list(quantiles), 10_000
+            n_chars.cast("double"), list(PROFILE_QUANTILES), 10_000
         ).alias("len_q"),
     ]
     if include_counts:
@@ -365,21 +355,21 @@ def profile_corpus(
             F.sum(F.col(text_col).isNull().cast("long")).alias("n_null_text"),
         ] + aggs
     host = None
-    if url_col and url_col in df.columns:
+    if "url" in df.columns:
         from .webprep import extract_domain
 
         # NULL urls get the '' host group (the md5_bucket convention) —
         # a bare None key would poison sorted-JSON consumers and drop
         # the rows from the distinct-host sketch
-        host = F.coalesce(extract_domain(url_col), F.lit(""))
+        host = F.coalesce(extract_domain("url"), F.lit(""))
         aggs.append(
-            F.approx_count_distinct(host, rsd).alias("approx_distinct_hosts")
+            F.approx_count_distinct(host, PROFILE_RSD).alias("approx_distinct_hosts")
         )
     row = df.agg(*aggs).collect()[0]
     prof = {
         "approx_distinct_contents": int(row["approx_distinct_contents"]),
         "len_quantiles": {
-            str(q): float(v) for q, v in zip(quantiles, row["len_q"] or [])
+            str(q): float(v) for q, v in zip(PROFILE_QUANTILES, row["len_q"] or [])
         },
     }
     if include_counts:
@@ -395,7 +385,7 @@ def profile_corpus(
             df.groupBy(host.alias("host"))
             .count()
             .orderBy(F.col("count").desc(), F.col("host"))
-            .limit(int(top_hosts))
+            .limit(PROFILE_TOP_HOSTS)
             .collect()
         )
         prof["top_hosts"] = {r["host"]: int(r["count"]) for r in top}

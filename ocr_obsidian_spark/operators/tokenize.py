@@ -110,8 +110,12 @@ def _fold_whole_word(pieces: list[str], word: str, max_word_chars: int) -> list[
     return pieces
 
 
-def _wordpiece_udf(vocab: Sequence[str], *, both: bool = False,
-                   max_word_chars: int = 100):
+# BERT's whole-word [UNK] length cut (Devlin et al. 2019, the released
+# WordPiece tokenizer's max_input_chars_per_word)
+WORDPIECE_MAX_WORD_CHARS = 100
+
+
+def _wordpiece_udf(vocab: Sequence[str], *, both: bool = False):
     init = frozenset(p for p in vocab if not p.startswith("##"))
     cont = frozenset(p[2:] for p in vocab if p.startswith("##") and len(p) > 2)
     max_i = max((len(p) for p in init), default=1)
@@ -145,7 +149,7 @@ def _wordpiece_udf(vocab: Sequence[str], *, both: bool = False,
                 for word in text.split(" "):
                     pieces = _word_pieces(word, init, cont, max_i, max_c)
                     c_out.extend(pieces)
-                    w_out.extend(_fold_whole_word(pieces, word, max_word_chars))
+                    w_out.extend(_fold_whole_word(pieces, word, WORDPIECE_MAX_WORD_CHARS))
             chars.append(c_out)
             words_out.append(w_out)
         return pd.DataFrame({"char": chars, "word": words_out})
@@ -158,11 +162,9 @@ def tokenize_wordpiece(
     *,
     vocab: Sequence[str] = WORDPIECE_FIXTURE_VOCAB,
     text_col: str = "text",
-    tokens_col: str = "wordpiece_tokens",
     unk_mode: str = "char",
-    max_word_chars: int = 100,
 ) -> DataFrame:
-    """Add ``tokens_col`` (array<string>, the WordPiece pieces in order)
+    """Add ``wordpiece_tokens`` (array<string>, the WordPiece pieces in order)
     and ``n_wordpiece_tokens`` (long). Normalization runs JVM-side (the
     shared textstats norm expression); only the per-word greedy matching
     is Python. Feed ``n_wordpiece_tokens`` to ``pack_shards(...,
@@ -173,34 +175,32 @@ def tokenize_wordpiece(
       * ``"char"`` (default, the round-1 semantics): an unmatched
         position emits [UNK] and advances one character;
       * ``"word"``: classic BERT whole-word [UNK] — any unmatched
-        position, or a word over ``max_word_chars`` (BERT ships 100),
-        collapses the whole word to one [UNK];
-      * ``"both"``: char-mode columns plus ``{tokens_col}_ww`` /
+        position, or a word over ``WORDPIECE_MAX_WORD_CHARS``, collapses
+        the whole word to one [UNK];
+      * ``"both"``: char-mode columns plus ``wordpiece_tokens_ww`` /
         ``n_wordpiece_tokens_ww`` with the whole-word fold.
     """
     if unk_mode == "char":
         toks = _wordpiece_udf(vocab)(_norm(text_col))
-        return df.withColumn(tokens_col, toks).withColumn(
-            "n_wordpiece_tokens", F.size(tokens_col).cast("long")
+        return df.withColumn("wordpiece_tokens", toks).withColumn(
+            "n_wordpiece_tokens", F.size("wordpiece_tokens").cast("long")
         )
     if unk_mode not in ("word", "both"):
         raise ValueError(f"unknown unk_mode {unk_mode!r}")
-    both = _wordpiece_udf(vocab, both=True, max_word_chars=max_word_chars)(
-        _norm(text_col)
-    )
+    both = _wordpiece_udf(vocab, both=True)(_norm(text_col))
     staged = df.withColumn("_wp", both)
     if unk_mode == "word":
         return (
-            staged.withColumn(tokens_col, F.col("_wp.word"))
-            .withColumn("n_wordpiece_tokens", F.size(tokens_col).cast("long"))
+            staged.withColumn("wordpiece_tokens", F.col("_wp.word"))
+            .withColumn("n_wordpiece_tokens", F.size("wordpiece_tokens").cast("long"))
             .drop("_wp")
         )
     return (
-        staged.withColumn(tokens_col, F.col("_wp.char"))
-        .withColumn("n_wordpiece_tokens", F.size(tokens_col).cast("long"))
-        .withColumn(f"{tokens_col}_ww", F.col("_wp.word"))
+        staged.withColumn("wordpiece_tokens", F.col("_wp.char"))
+        .withColumn("n_wordpiece_tokens", F.size("wordpiece_tokens").cast("long"))
+        .withColumn("wordpiece_tokens_ww", F.col("_wp.word"))
         .withColumn(
-            "n_wordpiece_tokens_ww", F.size(f"{tokens_col}_ww").cast("long")
+            "n_wordpiece_tokens_ww", F.size("wordpiece_tokens_ww").cast("long")
         )
         .drop("_wp")
     )
@@ -251,15 +251,19 @@ def _merge_pass(syms: tuple[str, ...], pair: tuple[str, str]) -> tuple[str, ...]
     return tuple(out)
 
 
+# BPE trainer stop rule: a pair seen fewer than this many times is not merged
+BPE_MIN_COUNT = 2
+
+
 def train_bpe(
-    word_freqs: Mapping[str, int], n_merges: int = 120, min_count: int = 2
+    word_freqs: Mapping[str, int], n_merges: int = 120
 ) -> list[tuple[str, str]]:
     """Learn a BPE merge table from word frequencies (Sennrich et al.
     2016 algorithm 1): repeatedly count adjacent symbol pairs weighted by
     word frequency, merge the most frequent pair, record it. Fully
     deterministic: ties on count break to the lexicographically smallest
-    pair. Stops early when the best pair occurs fewer than ``min_count``
-    times (degenerate single-occurrence merges only memorize the corpus).
+    pair. Stops early when the best pair occurs fewer than
+    ``BPE_MIN_COUNT`` times (degenerate single-occurrence merges only memorize the corpus).
 
     This is the DRIVER-SIDE trainer for fixture/test vocabularies — at
     production scale pair counting is a corpus-wide aggregation done once
@@ -278,7 +282,7 @@ def train_bpe(
         if not pairs:
             break
         best_count = max(pairs.values())
-        if best_count < min_count:
+        if best_count < BPE_MIN_COUNT:
             break
         best = min(p for p, c in pairs.items() if c == best_count)
         merges.append(best)
@@ -342,9 +346,8 @@ def tokenize_bpe(
     *,
     merges: Sequence[tuple[str, str]] = BPE_FIXTURE_MERGES,
     text_col: str = "text",
-    tokens_col: str = "bpe_tokens",
 ) -> DataFrame:
-    """Add ``tokens_col`` (array<string>, the BPE tokens in order) and
+    """Add ``bpe_tokens`` (array<string>, the BPE tokens in order) and
     ``n_bpe_tokens`` (long). Normalization (lowercase + whitespace
     collapse) runs JVM-side via the shared textstats norm expression;
     only the per-word merge loop is Python (Arrow-batched, with a
@@ -353,8 +356,8 @@ def tokenize_bpe(
     the merge table rides in the closure (a real 50k-merge GPT-2-scale
     table is ~500 KB, same order as the WordPiece vocab above)."""
     toks = _bpe_udf(merges)(_norm(text_col))
-    return df.withColumn(tokens_col, toks).withColumn(
-        "n_bpe_tokens", F.size(tokens_col).cast("long")
+    return df.withColumn("bpe_tokens", toks).withColumn(
+        "n_bpe_tokens", F.size("bpe_tokens").cast("long")
     )
 
 
@@ -373,7 +376,7 @@ def tokenize_bpe(
 # literals):
 #   * text normalized EXACTLY like the other tokenizers (lowercase +
 #     whitespace collapse), split on single spaces; empty words nothing;
-#   * within a word, best[k] = min over the last `max_piece_len`
+#   * within a word, best[k] = min over the last UNIGRAM_MAX_PIECE_LEN
 #     predecessors j of best[j] + cost(word[j:k]); a length-1 piece
 #     absent from the vocab scores UNIGRAM_UNK_COST (single characters
 #     are therefore always admissible, so every word segments);
@@ -383,7 +386,7 @@ def tokenize_bpe(
 #     the same prefix first differ at a separator-vs-character position,
 #     and U+001F sorts below every text character), so the tuple order
 #     is prefix-monotone and the DP argmin is globally optimal;
-#   * words longer than `max_word_chars` skip the DP and emit the WHOLE
+#   * words longer than UNIGRAM_MAX_WORD_CHARS skip the DP and emit the WHOLE
 #     word as one token costing len(word) * UNIGRAM_UNK_COST (bounds the
 #     oracle's DP unroll and the UDF's worst case; concat(tokens) per
 #     word == word holds in every mode).
@@ -394,6 +397,10 @@ UNIGRAM_MAX_PIECE_LEN = 6
 UNIGRAM_MAX_WORD_CHARS = 24
 # cost of an out-of-vocabulary single character: p = 1e-12
 UNIGRAM_UNK_COST = 12_000_000
+# unigram trainer: seed pieces seen fewer times are pruned (single
+# characters never are); hard-EM re-segmentation rounds
+UNIGRAM_MIN_COUNT = 2
+UNIGRAM_EM_ITERS = 3
 
 
 def _counts_to_costs(counts: Mapping[str, int]) -> dict[str, int]:
@@ -406,13 +413,7 @@ def _counts_to_costs(counts: Mapping[str, int]) -> dict[str, int]:
     }
 
 
-def viterbi_segment(
-    word: str,
-    costs: Mapping[str, int],
-    *,
-    max_piece_len: int = UNIGRAM_MAX_PIECE_LEN,
-    unk_cost: int = UNIGRAM_UNK_COST,
-) -> tuple[list[str], int]:
+def viterbi_segment(word: str, costs: Mapping[str, int]) -> tuple[list[str], int]:
     """Min-cost segmentation of one word (see module-section contract).
     Returns (pieces, total_cost_micro)."""
     n = len(word)
@@ -422,7 +423,7 @@ def viterbi_segment(
     best[0] = (0, 0, "")
     for k in range(1, n + 1):
         cand: tuple[int, int, str] | None = None
-        for j in range(max(0, k - max_piece_len), k):
+        for j in range(max(0, k - UNIGRAM_MAX_PIECE_LEN), k):
             prev = best[j]
             if prev is None:
                 continue
@@ -431,7 +432,7 @@ def viterbi_segment(
             if c is None:
                 if k - j != 1:
                     continue
-                c = unk_cost
+                c = UNIGRAM_UNK_COST
             t = (prev[0] + c, prev[1] + 1, prev[2] + UNIGRAM_SEP + piece)
             if cand is None or t < cand:
                 cand = t
@@ -440,15 +441,9 @@ def viterbi_segment(
     return path.split(UNIGRAM_SEP)[1:], cost
 
 
-def train_unigram(
-    word_freqs: Mapping[str, int],
-    *,
-    max_piece_len: int = UNIGRAM_MAX_PIECE_LEN,
-    min_count: int = 2,
-    n_iters: int = 3,
-) -> dict[str, int]:
+def train_unigram(word_freqs: Mapping[str, int]) -> dict[str, int]:
     """Learn a unigram piece-cost table: seed with every substring of
-    length 1..max_piece_len (frequency-weighted), then hard-EM — Viterbi
+    length 1..UNIGRAM_MAX_PIECE_LEN (frequency-weighted), then hard-EM — Viterbi
     re-segment the corpus under the current costs, recount piece usage,
     re-derive costs — the Viterbi-counts variant of Kudo 2018's EM (the
     posterior sum is replaced by the argmax path, a standard hard-EM
@@ -461,14 +456,14 @@ def train_unigram(
     for w, f in word_freqs.items():
         n = len(w)
         for i in range(n):
-            for ln in range(1, min(max_piece_len, n - i) + 1):
+            for ln in range(1, min(UNIGRAM_MAX_PIECE_LEN, n - i) + 1):
                 counts[w[i : i + ln]] += f
-    vocab = {p: c for p, c in counts.items() if c >= min_count or len(p) == 1}
+    vocab = {p: c for p, c in counts.items() if c >= UNIGRAM_MIN_COUNT or len(p) == 1}
     costs = _counts_to_costs(vocab)
-    for _ in range(n_iters):
+    for _ in range(UNIGRAM_EM_ITERS):
         usage: Counter[str] = Counter()
         for w, f in word_freqs.items():
-            for p in viterbi_segment(w, costs, max_piece_len=max_piece_len)[0]:
+            for p in viterbi_segment(w, costs)[0]:
                 usage[p] += f
         vocab = {
             p: usage[p] for p in vocab if usage[p] > 0 or len(p) == 1
@@ -490,8 +485,7 @@ UNIGRAM_FIXTURE_COSTS: dict[str, int] = train_unigram(
 )
 
 
-def _unigram_udf(costs: Mapping[str, int], *, max_piece_len: int,
-                 max_word_chars: int, unk_cost: int):
+def _unigram_udf(costs: Mapping[str, int]):
     table = dict(costs)
 
     @F.pandas_udf(T.StructType([
@@ -504,13 +498,10 @@ def _unigram_udf(costs: Mapping[str, int], *, max_piece_len: int,
         def one_word(word: str) -> tuple[list[str], int]:
             got = cache.get(word)
             if got is None:
-                if len(word) > max_word_chars:
-                    got = ([word], unk_cost * len(word))
+                if len(word) > UNIGRAM_MAX_WORD_CHARS:
+                    got = ([word], UNIGRAM_UNK_COST * len(word))
                 else:
-                    got = viterbi_segment(
-                        word, table,
-                        max_piece_len=max_piece_len, unk_cost=unk_cost,
-                    )
+                    got = viterbi_segment(word, table)
                 cache[word] = got
             return got
 
@@ -540,12 +531,8 @@ def tokenize_unigram(
     *,
     costs: Mapping[str, int] = UNIGRAM_FIXTURE_COSTS,
     text_col: str = "text",
-    tokens_col: str = "unigram_tokens",
-    max_piece_len: int = UNIGRAM_MAX_PIECE_LEN,
-    max_word_chars: int = UNIGRAM_MAX_WORD_CHARS,
-    unk_cost: int = UNIGRAM_UNK_COST,
 ) -> DataFrame:
-    """Add ``tokens_col`` (array<string>, Viterbi pieces in order),
+    """Add ``unigram_tokens`` (array<string>, Viterbi pieces in order),
     ``n_unigram_tokens`` (long) and ``unigram_cost_micro`` (long, the
     exact integer Viterbi objective — a real -log10 corpus likelihood in
     micro units, usable directly as a CCNet-style quality signal next to
@@ -555,16 +542,10 @@ def tokenize_unigram(
     embarrassingly parallel at 100 TB; the cost table rides in the
     closure (a real 32k-piece table is ~400 KB, same order as the
     WordPiece vocab)."""
-    staged = df.withColumn(
-        "_ug",
-        _unigram_udf(
-            costs, max_piece_len=max_piece_len,
-            max_word_chars=max_word_chars, unk_cost=unk_cost,
-        )(_norm(text_col)),
-    )
+    staged = df.withColumn("_ug", _unigram_udf(costs)(_norm(text_col)))
     return (
-        staged.withColumn(tokens_col, F.col("_ug.toks"))
-        .withColumn("n_unigram_tokens", F.size(tokens_col).cast("long"))
+        staged.withColumn("unigram_tokens", F.col("_ug.toks"))
+        .withColumn("n_unigram_tokens", F.size("unigram_tokens").cast("long"))
         .withColumn("unigram_cost_micro", F.col("_ug.cost"))
         .drop("_ug")
     )
@@ -587,7 +568,6 @@ def corpus_word_histogram(
     df: DataFrame,
     *,
     text_col: str = "text",
-    min_count: int = 1,
     max_words: int | None = None,
 ) -> DataFrame:
     """(word, count:long) over the corpus, using EXACTLY the tokenizer
@@ -595,9 +575,7 @@ def corpus_word_histogram(
     collapse) and single-space word split, so a vocabulary fit on this
     histogram agrees with what the encoders will see.
 
-    ``min_count`` prunes the hapax tail BEFORE any driver collect (at
-    web scale most distinct words occur once — typos, ids, hashes — and
-    no trainer keeps them). ``max_words`` keeps the top-K by
+    ``max_words`` keeps the top-K by
     (count desc, word asc) — a deterministic total order, so the kept
     set is reproducible across runs and parallelism. Plan shape: one
     hash exchange for the groupBy; the top-K is a TakeOrdered, not a
@@ -607,19 +585,15 @@ def corpus_word_histogram(
         .where(F.col("word") != "")
     )
     hist = words.groupBy("word").agg(F.count(F.lit(1)).alias("count"))
-    if min_count > 1:
-        hist = hist.where(F.col("count") >= min_count)
     if max_words is not None:
         hist = hist.orderBy(F.col("count").desc(), F.col("word")).limit(max_words)
     return hist
 
 
 def _collect_histogram(
-    df: DataFrame, text_col: str, min_count: int, max_words: int | None
+    df: DataFrame, text_col: str, max_words: int | None
 ) -> dict[str, int]:
-    hist = corpus_word_histogram(
-        df, text_col=text_col, min_count=min_count, max_words=max_words
-    )
+    hist = corpus_word_histogram(df, text_col=text_col, max_words=max_words)
     return {r["word"]: r["count"] for r in hist.collect()}
 
 
@@ -627,40 +601,24 @@ def train_bpe_on_corpus(
     df: DataFrame,
     *,
     text_col: str = "text",
-    n_merges: int = 120,
-    min_count: int = 2,
-    hist_min_count: int = 1,
     max_words: int | None = 1_000_000,
 ) -> list[tuple[str, str]]:
     """Fit a BPE merge table on a corpus DataFrame: distributed word
-    histogram (bounded by ``max_words``/``hist_min_count`` so the
-    collect is vocabulary-sized, never corpus-sized) + the deterministic
+    histogram (bounded by ``max_words`` so the collect is
+    vocabulary-sized, never corpus-sized) + the deterministic
     driver-side Sennrich trainer. Equals ``train_bpe(Counter(all
     normalized text.split()))`` whenever the bounds don't bind — pinned
     by tests."""
-    return train_bpe(
-        _collect_histogram(df, text_col, hist_min_count, max_words),
-        n_merges=n_merges,
-        min_count=min_count,
-    )
+    return train_bpe(_collect_histogram(df, text_col, max_words))
 
 
 def train_unigram_on_corpus(
     df: DataFrame,
     *,
     text_col: str = "text",
-    max_piece_len: int = UNIGRAM_MAX_PIECE_LEN,
-    min_count: int = 2,
-    n_iters: int = 3,
-    hist_min_count: int = 1,
     max_words: int | None = 1_000_000,
 ) -> dict[str, int]:
     """Fit a unigram-LM cost table on a corpus DataFrame: same
     bounded-histogram shape as ``train_bpe_on_corpus``, driver-side
     hard-EM trainer. Equals the local fit when the bounds don't bind."""
-    return train_unigram(
-        _collect_histogram(df, text_col, hist_min_count, max_words),
-        max_piece_len=max_piece_len,
-        min_count=min_count,
-        n_iters=n_iters,
-    )
+    return train_unigram(_collect_histogram(df, text_col, max_words))

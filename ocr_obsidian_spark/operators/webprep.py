@@ -32,6 +32,16 @@ PHONE_RE = "(?:\\+?[0-9]{1,3}[-. ]?)?\\(?[0-9]{3}\\)?[-. ]?[0-9]{3}[-. ]?[0-9]{4
 IPV4_RE = "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b"
 
 
+# md5-bucket resolution of mix_corpus / alpha_sample keep fractions
+MIX_BUCKETS = 10000
+# C4 line rule (Raffel et al. 2020 §2.2): keep lines ending in terminal
+# punctuation with at least C4_MIN_WORDS words (the paper keeps lines of
+# at least 5 words; this engine's gate, recipe and oracle use 3)
+C4_MIN_WORDS = 3
+# document terminator pack_token_sequences appends to every token stream
+EOS_TOKEN = "[EOS]"
+
+
 def extract_domain(url_col: str = "url") -> F.Column:
     """Lowercased host of an url; '' when the url has no scheme://host."""
     return F.lower(F.regexp_extract(F.col(url_col), DOMAIN_RE, 1))
@@ -42,7 +52,6 @@ def cap_per_domain(
     max_docs: int,
     *,
     url_col: str = "url",
-    domain_col: str | None = None,
 ) -> DataFrame:
     """Keep at most ``max_docs`` documents per domain, deterministically
     (url order — rerunning or re-partitioning never changes the keep set).
@@ -52,8 +61,7 @@ def cap_per_domain(
     inserts a map-side WindowGroupLimit so only ~max_docs rows per domain
     per partition reach the exchange.
     """
-    dom = F.col(domain_col) if domain_col else extract_domain(url_col)
-    w = Window.partitionBy(dom.alias("_dom")).orderBy(url_col)
+    w = Window.partitionBy(extract_domain(url_col).alias("_dom")).orderBy(url_col)
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= int(max_docs))
@@ -222,11 +230,10 @@ def c4_line_filter(
     *,
     text_col: str = "text",
     out_col: str | None = None,
-    min_words: int = 3,
 ) -> DataFrame:
     """C4-style line cleaning: keep only lines that end in terminal
-    punctuation, carry at least ``min_words`` words, and don't look like
-    code/boilerplate (``javascript``, ``lorem ipsum``, ``{``) — the
+    punctuation, carry at least ``C4_MIN_WORDS`` words, and don't look
+    like code/boilerplate (``javascript``, ``lorem ipsum``, ``{``) — the
     sentence-level gate applied before document-level quality scoring.
 
     Entirely per-row array expressions (split → filter → rejoin): ZERO
@@ -250,7 +257,7 @@ def c4_line_filter(
             n.rlike("""[.!?]["')\\]]*$""")
             # split on whitespace RUNS — a double space must not make a
             # 2-word line count as 3
-            & (F.size(F.split(n, WS_RE)) >= int(min_words))
+            & (F.size(F.split(n, WS_RE)) >= C4_MIN_WORDS)
             & ~n.contains("javascript")
             & ~n.contains("lorem ipsum")
             & ~n.contains("{")
@@ -271,11 +278,9 @@ def c4_line_filter(
     )
 
 
-def filter_blocked_domains(
-    df: DataFrame, blocked: list[str], *, url_col: str = "url"
-) -> DataFrame:
-    """Drop documents whose host is a blocked domain OR any subdomain of
-    one (``ads.example.com`` matches a blocked ``example.com``) — the
+def filter_blocked_domains(df: DataFrame, blocked: list[str]) -> DataFrame:
+    """Drop documents whose ``url`` host is a blocked domain OR any
+    subdomain of one (``ads.example.com`` matches a blocked ``example.com``) — the
     crawl-pipeline blocklist gate (spam/adult/SEO-farm domain lists).
     Case-insensitive; NULL/schemeless urls have no host and are KEPT.
 
@@ -293,7 +298,7 @@ def filter_blocked_domains(
         the blocked-host set is small (blocklist ∩ corpus), so AQE
         broadcasts the anti-join and the corpus never shuffles.
     """
-    dom = F.coalesce(extract_domain(url_col), F.lit(""))
+    dom = F.coalesce(extract_domain("url"), F.lit(""))
     if len(blocked) <= 64:
         hit = F.lit(False)
         for b in blocked:
@@ -365,12 +370,12 @@ def mix_corpus(
     *,
     source_col: str = "source",
     key_col: str = "url",
-    buckets: int = 10000,
 ) -> DataFrame:
     """Deterministic corpus mixing: keep each source at its target
-    fraction (0..1) by content-keyed md5 buckets — the per-source
-    downsampling step of a training-data recipe (e.g. cap web at 0.3,
-    keep curated sources whole). Sources absent from ``weights`` drop.
+    fraction (0..1) by content-keyed md5 buckets (``MIX_BUCKETS`` of
+    them) — the per-source downsampling step of a training-data recipe
+    (e.g. cap web at 0.3, keep curated sources whole). Sources absent
+    from ``weights`` drop.
 
     Like hash_sample, the keep decision is a pure function of the key:
     reproducible across runs, engines and parallelism, and map-only (the
@@ -381,16 +386,15 @@ def mix_corpus(
         raise ValueError("mix weights must be fractions in [0, 1]")
     thresh = F.lit(0)
     for src, frac in sorted(weights.items()):
-        n_keep = int(round(frac * buckets))
+        n_keep = int(round(frac * MIX_BUCKETS))
         if frac > 0.0 and n_keep == 0:
             # never silently quantize an explicit positive weight to
             # zero-keep — the caller meant to keep SOME of this source
             raise ValueError(
-                f"weight {frac} for {src!r} rounds to 0 of {buckets} "
-                f"buckets; raise `buckets` to express it"
+                f"weight {frac} for {src!r} rounds to 0 of {MIX_BUCKETS} buckets"
             )
         thresh = F.when(F.col(source_col) == src, F.lit(n_keep)).otherwise(thresh)
-    return df.filter(md5_bucket(key_col, buckets) < thresh)
+    return df.filter(md5_bucket(key_col, MIX_BUCKETS) < thresh)
 
 
 def alpha_sampling_weights(
@@ -449,7 +453,6 @@ def alpha_sample(
     keep_frac: float = 0.5,
     group_col: str = "lang",
     key_col: str = "doc_id",
-    buckets: int = 10000,
 ) -> DataFrame:
     """Deterministic temperature re-sampling over a group column: one
     tiny groupBy-count to the driver, ``alpha_sampling_weights`` for the
@@ -473,20 +476,20 @@ def alpha_sample(
     weights = alpha_sampling_weights(counts, alpha=alpha, keep_frac=keep_frac)
     # Quantize each fraction to bucket resolution, half-up, BEFORE the
     # mix_corpus threshold: the keep set becomes a pure function of
-    # (counts, alpha, keep_frac, buckets) with no float-rounding
+    # (counts, alpha, keep_frac) with no float-rounding
     # ambiguity at bucket boundaries (floor(x + 0.5) has one semantics
     # everywhere; round() is banker's in Python, half-away in DuckDB).
-    quant = {g: math.floor(w * buckets + 0.5) / buckets for g, w in weights.items()}
+    quant = {
+        g: math.floor(w * MIX_BUCKETS + 0.5) / MIX_BUCKETS for g, w in weights.items()
+    }
     zeroed = sorted(g for g, w in quant.items() if w == 0.0)
     if zeroed:
         # alpha-sampling never *intends* to drop a group outright
         raise ValueError(
-            f"groups {zeroed} quantize to 0 of {buckets} buckets; "
-            f"raise `buckets` or `keep_frac` to express their weight"
+            f"groups {zeroed} quantize to 0 of {MIX_BUCKETS} buckets; "
+            f"raise `keep_frac` to express their weight"
         )
-    return mix_corpus(
-        work, quant, source_col=grp, key_col=key_col, buckets=buckets
-    ).drop(grp)
+    return mix_corpus(work, quant, source_col=grp, key_col=key_col).drop(grp)
 
 
 def pack_shards(
@@ -494,8 +497,6 @@ def pack_shards(
     budget: int,
     *,
     tokens_col: str = "n_tokens",
-    id_col: str = "doc_id",
-    key_col: str = "url",
     groups: int = 64,
 ) -> DataFrame:
     """Token-budget sharding: assign each document to a training shard of
@@ -504,8 +505,8 @@ def pack_shards(
     into ~N-token files.
 
     Documents are first spread over ``groups`` md5-bucket groups (pure
-    function of ``key_col`` — reproducible at any parallelism), then
-    packed within each group in ``id_col`` order: a document starts the
+    function of ``url`` — reproducible at any parallelism), then
+    packed within each group in ``doc_id`` order: a document starts the
     next shard when the running total BEFORE it has filled the budget
     (``shard_idx = floor(cum_before / budget)``), so shards are
     contiguous id ranges within a group and a document never splits.
@@ -523,11 +524,11 @@ def pack_shards(
 
     if int(budget) <= 0:
         raise ValueError(f"shard budget must be positive, got {budget}")
-    grp = md5_bucket(key_col, groups)
+    grp = md5_bucket("url", groups)
     staged = df.withColumn("_grp", grp)
     w = (
         Window.partitionBy("_grp")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum_before = F.sum(F.col(tokens_col)).over(w) - F.col(tokens_col)
@@ -547,11 +548,10 @@ def pack_token_sequences(
     key_col: str = "url",
     seq_len: int = 2048,
     groups: int = 64,
-    eos: str = "[EOS]",
 ) -> DataFrame:
     """GPT-style sequence packing — the actual pretraining data layout:
     within each md5-bucket group the document token streams (each
-    terminated by ``eos``) are concatenated in ``id_col`` order and
+    terminated by ``EOS_TOKEN``) are concatenated in ``id_col`` order and
     chopped into consecutive ``seq_len``-token sequences; documents span
     sequence boundaries (no padding waste), the group's final partial
     sequence is emitted short. ``pack_shards`` assigns whole documents
@@ -582,7 +582,7 @@ def pack_token_sequences(
     staged = df.select(
         md5_bucket(F.col(key).cast("string"), groups).alias("_grp"),
         F.col(id_col).alias("_id"),
-        F.concat(F.col(tokens_col), F.array(F.lit(eos))).alias("_toks"),
+        F.concat(F.col(tokens_col), F.array(F.lit(EOS_TOKEN))).alias("_toks"),
     )
     w = (
         Window.partitionBy("_grp")
@@ -705,9 +705,6 @@ def decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 8,
-    method: str = "exact",
-    bits_log2: int = 23,
-    n_hashes: int = 6,
 ) -> DataFrame:
     """Drop documents sharing ANY word k-shingle with the benchmark set —
     eval-set decontamination, the standard guard against test-set leakage
@@ -715,50 +712,20 @@ def decontaminate(
     enough that natural collisions are rare, short enough to catch
     partial copies).
 
-    ``method="exact"`` (default): the corpus side explodes to
-    (id, shingle) and semi-joins the broadcast benchmark shingle set; the
-    corpus itself never shuffles. Right whenever the eval shingle set
-    fits a broadcast.
-
-    ``method="bloom"``: identical RESULT (exactly — no false negatives
-    by Bloom construction, false positives removed by an exact confirm
-    join; pinned by an equivalence test and by the driver oracle, whose
-    SQL twin is the exact semantics), different scale shape: a packed
-    2^bits_log2-bit Bloom image of the benchmark shingles is broadcast
-    in a UDF closure instead of the shingle strings, the exploded corpus
-    is pre-filtered map-side (JVM-computed positions, one vectorized
-    bit-test UDF), and only surviving CANDIDATE shingles — expected
-    (true hits + fp_rate * corpus shingles) — reach the exact confirm
-    semi-join, left un-hinted so AQE picks its strategy from the
-    post-filter sizes. Use when the eval set is broadcast-hostile:
-    10^8 shingles need ~2^30 bits (128 MB, ~0.5% fp at 6 hashes) vs
-    ~10 GB of strings."""
+    The corpus side explodes to (id, shingle) and semi-joins the
+    broadcast benchmark shingle set; the corpus itself never shuffles.
+    For an eval set too large to broadcast, ``contamination_report``'s
+    Bloom path carries the same exact semantics."""
     from .dedup import word_shingles
 
     bench = benchmark_shingles(benchmark, text_col=text_col, k=k)
     doc_shingles = docs.select(
         F.col(id_col), F.explode(word_shingles(text_col, k)).alias("shingle")
     )
-    if method == "bloom":
-        bits = build_shingle_bloom(
-            benchmark, text_col=text_col, k=k,
-            bits_log2=bits_log2, n_hashes=n_hashes,
-        )
-        m = len(bits) * 64
-        candidates = doc_shingles.where(
-            _bloom_hit_udf(bits)(_bloom_positions(m, n_hashes))
-        )
-        contaminated = (
-            candidates.join(bench, "shingle", "left_semi")
-            .select(id_col).distinct()
-        )
-    elif method == "exact":
-        contaminated = (
-            doc_shingles.join(F.broadcast(bench), "shingle", "left_semi")
-            .select(id_col).distinct()
-        )
-    else:
-        raise ValueError(f"unknown method {method!r}")
+    contaminated = (
+        doc_shingles.join(F.broadcast(bench), "shingle", "left_semi")
+        .select(id_col).distinct()
+    )
     return docs.join(contaminated, id_col, "left_anti")
 
 
@@ -781,9 +748,19 @@ def contamination_report(
     overlap rather than drop on any single shared n-gram, because long
     documents share boilerplate n-grams with eval sets incidentally).
 
-    Both methods return IDENTICAL counts (bloom false positives are
-    removed by the exact confirm join; pinned by tests and the driver
-    oracle). Scale shape: totals are one narrow groupBy (only the id
+    ``method="exact"`` (default) semi-joins the broadcast benchmark
+    shingle set. ``method="bloom"`` is the broadcast-hostile eval-set
+    shape: a packed 2^bits_log2-bit Bloom image of the benchmark shingles
+    rides in a UDF closure instead of the shingle strings, the exploded
+    corpus is pre-filtered map-side (JVM-computed positions, one
+    vectorized bit-test UDF), and only surviving CANDIDATE shingles reach
+    the exact confirm semi-join, left un-hinted so AQE picks its strategy
+    from the post-filter sizes; 10^8 shingles need ~2^30 bits (128 MB,
+    ~0.5% fp at 6 hashes) vs ~10 GB of strings.
+
+    Both methods return IDENTICAL counts (no false negatives by Bloom
+    construction; false positives are removed by the exact confirm join;
+    pinned by tests and the driver oracle). Scale shape: totals are one narrow groupBy (only the id
     rides past the explode); hits count the confirmed contaminated
     occurrences; the final join is narrow-table vs narrow-table."""
     from .dedup import word_shingles
@@ -827,9 +804,6 @@ def decontaminate_by_overlap(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 8,
-    method: str = "exact",
-    bits_log2: int = 23,
-    n_hashes: int = 6,
 ) -> DataFrame:
     """Threshold decontamination: drop documents whose DISTINCT-shingle
     overlap with the benchmark exceeds ``max_overlap_pct`` percent. The
@@ -840,8 +814,7 @@ def decontaminate_by_overlap(
     if not (0 <= max_overlap_pct < 100):
         raise ValueError("max_overlap_pct must be in [0, 100)")
     rep = contamination_report(
-        docs, benchmark, text_col=text_col, id_col=id_col, k=k,
-        method=method, bits_log2=bits_log2, n_hashes=n_hashes,
+        docs, benchmark, text_col=text_col, id_col=id_col, k=k
     )
     bad = rep.where(
         F.col("n_contaminated") * 100 > F.lit(max_overlap_pct) * F.col("n_shingles")
@@ -932,42 +905,32 @@ def drop_duplicated_lines(
     )
 
 
-def normalize_unicode(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    form: str = "NFC",
-    out_col: str | None = None,
-) -> DataFrame:
-    """Unicode-normalize a text column (NFC by default — the standard
-    training-corpus canonicalization so byte-level dedup/hashing treats
-    composed and decomposed sequences as one document).
+def normalize_unicode(df: DataFrame) -> DataFrame:
+    """NFC-normalize the ``text`` column — the standard training-corpus
+    canonicalization so byte-level dedup/hashing treats composed and
+    decomposed sequences as one document.
 
     Arrow-batched pandas UDF: Spark has no built-in Unicode-normalization
     expression, so this is the documented vectorized-UDF exception; the
     driver oracle replays it with DuckDB's ``nfc_normalize``. NULLs pass
     through."""
-    if form not in ("NFC", "NFD", "NFKC", "NFKD"):
-        raise ValueError(f"unknown normalization form: {form!r}")
 
     @F.pandas_udf(T.StringType())
     def norm(s: pd.Series) -> pd.Series:
         return s.map(
-            lambda t: unicodedata.normalize(form, t) if t is not None else None
+            lambda t: unicodedata.normalize("NFC", t) if t is not None else None
         )
 
-    return df.withColumn(out_col or text_col, norm(F.col(text_col)))
+    return df.withColumn("text", norm(F.col("text")))
 
 
-def scrub_pii(
-    df: DataFrame, *, text_col: str = "text", out_col: str | None = None
-) -> DataFrame:
-    """Redact emails / phone numbers / IPv4s with typed placeholder tokens.
+def scrub_pii(df: DataFrame, *, text_col: str = "text") -> DataFrame:
+    """Redact emails / phone numbers / IPv4s in ``text_col`` with typed
+    placeholder tokens.
 
     Map-only regexp_replace chain (order matters: emails first so the
     phone pattern never eats an address's digits). Patterns are
     cross-engine-safe so the driver oracle replays them in DuckDB."""
-    out = out_col or text_col
     scrubbed = F.regexp_replace(
         F.regexp_replace(
             F.regexp_replace(F.coalesce(F.col(text_col), F.lit("")), EMAIL_RE, "<EMAIL>"),
@@ -977,4 +940,4 @@ def scrub_pii(
         PHONE_RE,
         "<PHONE>",
     )
-    return df.withColumn(out, scrubbed)
+    return df.withColumn(text_col, scrubbed)

@@ -11,12 +11,11 @@ deleted only after the swap. Renames go through the session's Hadoop
 
 from __future__ import annotations
 
-import os
 import uuid
 from typing import TYPE_CHECKING, Iterable
 
 if TYPE_CHECKING:  # the CLI imports this module for --help without pyspark
-    from pyspark.sql import DataFrame
+    from pyspark.sql import DataFrame, SparkSession
 
 
 class OverwriteError(RuntimeError):
@@ -28,14 +27,27 @@ class OverwriteError(RuntimeError):
         )
 
 
-def refuse_existing(paths: Iterable[str], overwrite: str) -> None:
-    """Raise ``OverwriteError`` under ``never`` if any local output path
-    exists (checked before any Spark work)."""
-    if overwrite != "never":
-        return
+def _qualified(spark: SparkSession, path: str):
+    """(Hadoop ``FileSystem``, qualified ``Path``) of ``path``, qualified
+    like Spark's writer qualifies it (relative → working dir; a URI such
+    as ``file://`` or ``hdfs://`` names its own file system)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs, fs.makeQualified(jpath)
+
+
+def _refuse(fs, final, path: str, overwrite: str) -> None:
+    """The one existence rule: under anything but ``always`` an output
+    that exists on its file system is refused."""
+    if overwrite != "always" and fs.exists(final):
+        raise OverwriteError(path)
+
+
+def refuse_existing(spark: SparkSession, paths: Iterable[str], overwrite: str) -> None:
+    """Raise ``OverwriteError`` under ``never`` if any output path exists
+    on its file system (checked before any Spark job)."""
     for path in paths:
-        if os.path.exists(path):
-            raise OverwriteError(path)
+        _refuse(*_qualified(spark, path), path, overwrite)
 
 
 def commit_tables(tables: dict[str, DataFrame], overwrite: str) -> dict[str, int]:
@@ -45,9 +57,8 @@ def commit_tables(tables: dict[str, DataFrame], overwrite: str) -> dict[str, int
     spark = next(iter(tables.values())).sparkSession
     jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
     Path, tag = jvm.org.apache.hadoop.fs.Path, uuid.uuid4().hex
-    fs = Path(next(iter(tables))).getFileSystem(conf)
-    # qualified like Spark's writer qualifies them (relative → working dir)
-    finals = {p: fs.makeQualified(Path(p)) for p in tables}
+    fs, _ = _qualified(spark, next(iter(tables)))
+    finals = {p: _qualified(spark, p)[1] for p in tables}
 
     def sibling(final, kind: str):
         return Path(final.getParent(), f".{final.getName()}.{kind}-{tag}")
@@ -73,11 +84,10 @@ def commit_tables(tables: dict[str, DataFrame], overwrite: str) -> dict[str, int
             df.write.mode("error").parquet(staged[p].toString())
         rows = {p: footer_rows(staged[p]) for p in tables}
         for p, final in finals.items():
+            # re-checked at the swap: the target may have appeared since
+            # the up-front refuse_existing
+            _refuse(fs, final, p, overwrite)
             if fs.exists(final):
-                # re-checked on the table's own file system: a URI
-                # (file://, hdfs://) out path escapes the local check
-                if overwrite != "always":
-                    raise OverwriteError(p)
                 olds.append(sibling(final, "old"))
                 rename(final, olds[-1])
                 moved.append((final, olds[-1]))

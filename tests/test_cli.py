@@ -63,6 +63,22 @@ def test_overwrite_never_exit_code_4(tmp_path):
     assert rc == 4
 
 
+def test_overwrite_never_uri_out_refused_before_extract(tmp_path, spark, monkeypatch):
+    """A ``file://`` ``--out`` that exists is refused up front, on the
+    path's own file system: exit 4 without running the pipeline."""
+    from ocr_obsidian_spark.plans import pipeline
+
+    out = f"file://{tmp_path / 'run'}"
+    argv = ["extract", "--pages", "fixtures:1,2,1", "--out", out, "--master", "local[2]"]
+    assert main(argv) == 0
+
+    def must_not_run(*a, **kw):
+        raise RuntimeError("the extract job ran before the overwrite check")
+
+    monkeypatch.setattr(pipeline, "run_pipeline", must_not_run)
+    assert main(argv) == 4
+
+
 def _raise_on(victim):
     """A Python UDF that passes every row but raises on ``victim``."""
     from pyspark.sql import functions as F

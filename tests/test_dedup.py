@@ -404,14 +404,6 @@ def test_drop_near_duplicates_keep_best_quality(spark):
     }
     # best q in {1,2,3} is 0.9 shared by 2 and 3 -> id-asc keeps 2
     assert kept == {2, 4, 10}
-    # ascending mode keeps the LOWEST score (cost-like metric)
-    kept_asc = {
-        r["doc_id"]
-        for r in drop_near_duplicates(
-            docs, pairs, keep_by="q", keep_desc=False
-        ).collect()
-    }
-    assert kept_asc == {1, 4, 10}
     # default rule unchanged: min id
     kept_min = {
         r["doc_id"] for r in drop_near_duplicates(docs, pairs).collect()
@@ -428,22 +420,19 @@ def test_drop_near_duplicates_keep_best_quality(spark):
 
 
 def test_drop_near_duplicates_null_score_never_wins(spark):
-    """NULL scores sort last in BOTH directions — an unscored member
-    must not become the component representative."""
+    """NULL scores sort last — an unscored member must not become the
+    component representative."""
     from ocr_obsidian_spark.operators.dedup import drop_near_duplicates
 
     docs = spark.createDataFrame(
         [(1, None), (2, 0.5)], "doc_id long, q double"
     )
     pairs = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
-    for desc in (True, False):
-        kept = {
-            r["doc_id"]
-            for r in drop_near_duplicates(
-                docs, pairs, keep_by="q", keep_desc=desc
-            ).collect()
-        }
-        assert kept == {2}, desc
+    kept = {
+        r["doc_id"]
+        for r in drop_near_duplicates(docs, pairs, keep_by="q").collect()
+    }
+    assert kept == {2}
 
 
 def test_word_shingles_zip_form_equals_per_index_form(docs):

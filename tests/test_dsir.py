@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_obsidian_spark.operators.dsir import (
+    DSIR_FIXTURE_BUCKETS,
     DSIR_FIXTURE_MODEL,
     DSIR_FIXTURE_RAW,
     _bucket,
@@ -51,8 +52,8 @@ def test_distributed_fit_matches_text_fit(spark):
     raw = list(DSIR_FIXTURE_RAW)
     tdf = spark.createDataFrame([(t,) for t in target], "text string")
     rdf = spark.createDataFrame([(t,) for t in raw], "text string")
-    dist = fit_dsir(tdf, rdf, buckets=64)
-    local = fit_dsir_texts(target, raw, buckets=64)
+    dist = fit_dsir(tdf, rdf, buckets=DSIR_FIXTURE_BUCKETS)
+    local = fit_dsir_texts(target, raw)
     assert dist == local
 
 
@@ -61,8 +62,8 @@ def test_fit_handles_null_and_empty_text(spark):
         [("the quick fox",), (None,), ("",), ("  ",)], "text string"
     )
     rdf = spark.createDataFrame([("a b c",)], "text string")
-    dist = fit_dsir(tdf, rdf, buckets=32)
-    local = fit_dsir_texts(["the quick fox", None, "", "  "], ["a b c"], buckets=32)
+    dist = fit_dsir(tdf, rdf, buckets=DSIR_FIXTURE_BUCKETS)
+    local = fit_dsir_texts(["the quick fox", None, "", "  "], ["a b c"])
     assert dist == local
 
 

@@ -14,6 +14,16 @@ from typing import Any
 import pytest
 
 
+def _corpus(pages, cfg):
+    """The corpus half of the extract loop under ``cfg``."""
+    from ocr_obsidian_spark.operators.extract import (
+        extract_pages_with_lineage,
+        split_extract_lineage,
+    )
+
+    return split_extract_lineage(extract_pages_with_lineage(pages, cfg, run_id="t"))[0]
+
+
 def test_malformed_payloads_fail_soft(spark):
     """At 10^12 docs a corrupt payload must degrade to a flagged row, never
     kill the stage — NULL html, truncated JSON, non-dict JSON, words of the
@@ -78,7 +88,7 @@ def test_salted_repartition_same_results(spark, pages_df):
     from ocr_obsidian_spark.operators.extract import extract_pages
 
     cfg = PipelineConfig(salt_partitions=12)
-    salted = {r["url"]: r["extracted_text"] for r in extract_pages(pages_df, cfg).collect()}
+    salted = {r["url"]: r["extracted_text"] for r in _corpus(pages_df, cfg).collect()}
     plain = {r["url"]: r["extracted_text"] for r in extract_pages(pages_df).collect()}
     assert salted == plain
 
@@ -159,8 +169,8 @@ def test_debug_rides_as_corpus_column(spark, pages_df):
 
     cfg = PipelineConfig(printed_page=PrintedPageConfig(debug=True))
     sample = pages_df.limit(12)
-    a = {r["url"]: r["pp_debug_json"] for r in extract_pages(sample, cfg).collect()}
-    b = {r["url"]: r["pp_debug_json"] for r in extract_pages(sample.repartition(4), cfg).collect()}
+    a = {r["url"]: r["pp_debug_json"] for r in _corpus(sample, cfg).collect()}
+    b = {r["url"]: r["pp_debug_json"] for r in _corpus(sample.repartition(4), cfg).collect()}
     assert a == b and a
     payloads = [_json.loads(v) for v in a.values() if v]
     assert payloads

@@ -89,10 +89,6 @@ def test_page_rank_rejects_bad_params(spark):
     df = spark.createDataFrame([("a", "b")], ["src", "dst"])
     with pytest.raises(ValueError):
         page_rank(df, iters=-1)
-    with pytest.raises(ValueError):
-        page_rank(df, damping_num=0)
-    with pytest.raises(ValueError):
-        page_rank(df, damping_num=100, damping_den=100)
 
 
 def test_host_link_edges_extraction(spark):

@@ -81,13 +81,17 @@ def test_cascade_skips_nb_where_marker_confident(spark):
 
 
 def test_spark_udf_matches_python_scorer(spark):
+    """Every probe the marker pre-filter is not confident about goes
+    through the NB UDF and matches the python scorer."""
     rows = [(i, t) for i, t in enumerate(PROBES.values())]
     df = spark.createDataFrame(rows, "doc_id int, text string")
     got = {
         r["doc_id"]: (r["lang_nb"], r["nb_feature_hits"])
-        for r in with_language(df, min_marker_hits=10**9).collect()
+        for r in with_language(df).collect()
     }
-    for i, t in rows:
+    scored = [(i, t) for i, t in rows if got[i][0] is not None]
+    assert len(scored) >= len(rows) - 3  # only en/de/fr hit 3 markers
+    for i, t in scored:
         assert got[i] == FIXTURE_NB.classify(_norm(t)), t
 
 

@@ -13,6 +13,8 @@ import json
 import pytest
 
 from ocr_obsidian_spark.config import DEFAULT_CONFIG
+from ocr_obsidian_spark.operators.emit import emit_notes
+from ocr_obsidian_spark.operators.spans_op import make_spans
 from ocr_obsidian_spark.plans.pipeline import run_pipeline
 
 
@@ -161,10 +163,14 @@ def oracle_state(fixture_pages, fixture_triggers, reference):
 
 @pytest.fixture(scope="module")
 def pipeline_result(spark, pages_df, triggers_df):
-    res = run_pipeline(pages_df, triggers_df, DEFAULT_CONFIG, run_id="test-run")
+    res = run_pipeline(pages_df, DEFAULT_CONFIG, run_id="test-run")
+    span_df = make_spans(res.corpus, triggers_df, DEFAULT_CONFIG)
     corpus = {r["url"]: r.asDict() for r in res.corpus.collect()}
-    spans = {r["url"]: r.asDict(recursive=True) for r in res.spans.collect()}
-    notes = [r.asDict() for r in res.notes.collect()]
+    spans = {r["url"]: r.asDict(recursive=True) for r in span_df.collect()}
+    notes = [
+        r.asDict()
+        for r in emit_notes(res.corpus, span_df, DEFAULT_CONFIG, run_id="test-run").collect()
+    ]
     return corpus, spans, notes
 
 

@@ -24,8 +24,8 @@ def test_fixture_model_separates_classes_perfectly():
 
 
 def test_training_is_deterministic():
-    a = train_quality_clf(epochs=50)
-    b = train_quality_clf(epochs=50)
+    a = train_quality_clf()
+    b = train_quality_clf()
     assert a == b
 
 
@@ -59,10 +59,8 @@ def test_null_and_empty_text_score_bias_only(spark):
 
 
 def test_retrained_model_scores_through_udf(spark):
-    # a caller-supplied model (different corpora/buckets) flows through
-    m = train_quality_clf(
-        ["good clean prose here"], ["zzz 1 2 3 click"], buckets=32, epochs=40
-    )
+    # a caller-supplied model (different corpora) flows through
+    m = train_quality_clf(["good clean prose here"], ["zzz 1 2 3 click"])
     df = spark.createDataFrame(
         [(1, "good clean prose here"), (2, "zzz 1 2 3 click")],
         "doc_id long, text string",

@@ -131,7 +131,9 @@ def test_prepare_web_corpus_keep_best_and_optional_stages(spark):
 
     rng = random.Random(11)
     base = _make_doc(rng, n_sent=5)
-    degraded = base + "\n!!! ??? ;;; ::: !!! ??? ;;; :::"  # punct tanks the score
+    # a punctuation line that keeps its terminal '!' (so the C4 gate
+    # keeps it) lowers the quality score
+    degraded = base + "\n!!! ??? ;;; ::: !!! ??? ;;; ::: !!!"
     docs = spark.createDataFrame(
         [(0, degraded), (1, base)], ["doc_id", "text"]
     )
@@ -139,17 +141,15 @@ def test_prepare_web_corpus_keep_best_and_optional_stages(spark):
         docs,
         url_col=None,
         langs=None,
-        gopher=False,
-        gopher_rep=False,
-        c4=False,
         line_dedup_min_docs=None,
-        pii=False,
         keep_by="quality_score",
     )
     kept = res.df.collect()
     # min-id would keep doc 0; keep-best keeps the clean doc 1
     assert [r["doc_id"] for r in kept] == [1]
-    assert set(res.observations) == {"input", "exact_dedup", "near_dedup", "output"}
+    assert set(res.observations) == {
+        "input", "gopher", "gopher_rep", "c4", "exact_dedup", "near_dedup", "output",
+    }
     assert res.counts()["output"] == 1
 
 

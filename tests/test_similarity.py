@@ -186,10 +186,10 @@ def test_ivf_with_kmeans_centroids(spark, emb, emb_np):
     from ocr_obsidian_spark.operators.similarity import ivf_topk, kmeans_centroids
 
     ids, mat = emb_np
-    cents = kmeans_centroids(emb, 8, seed=7)
+    cents = kmeans_centroids(emb, 8)
     assert len(cents) == 8 and len(cents[0]) == 64
     # deterministic under the fixed seed
-    cents2 = kmeans_centroids(emb, 8, seed=7)
+    cents2 = kmeans_centroids(emb, 8)
     assert cents == cents2
     queries = emb.filter(F.col("vec_id") < 20)
     got = ivf_topk(emb, queries, cents, k=5, n_probe=3).collect()

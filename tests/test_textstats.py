@@ -157,21 +157,21 @@ def test_script_mix(spark):
 def test_gopher_flags(spark):
     from ocr_obsidian_spark.operators.textstats import with_gopher_flags
 
-    clean = (
+    sentence = (
         "The quick brown fox jumps over the lazy dog and it is that good. "
         "It runs to the hill and the end of the field is near that barn."
     )
+    clean = sentence + " " + sentence  # 54 words: past the published 50 floor
     rows = [
         (1, clean),
         (2, clean + "\n# # # # # # # # # # # # # # # # # # # #"),  # symbol spam
-        (3, "- one\n- two\n- three\n* four"),  # all bullets
+        (3, "\n".join(f"{b} {sentence}" for b in "--*•")),  # all bullets
         (4, clean + "\nmore...\nstill more...\nagain…\nyet…"),  # ellipsis heavy
-        (5, "000 111 222 333 444 555"),  # no alpha words, no stopwords
+        (5, "000 111 222 333 444 555 " * 10),  # no alpha words, no stopwords
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    # relax the published 50-word floor: these fixtures isolate the
-    # symbol/bullet/ellipsis/alpha/stopword rules on short texts
-    got = {r["doc_id"]: r for r in with_gopher_flags(df, min_words=5).collect()}
+    got = {r["doc_id"]: r for r in with_gopher_flags(df).collect()}
+    assert all(r["n_words"] >= 50 for r in got.values())
     assert got[1]["gopher_pass"]
     assert got[2]["symbol_word_ratio"] > 0.1 and not got[2]["gopher_pass"]
     assert got[3]["bullet_line_frac"] == 1.0 and not got[3]["gopher_pass"]
@@ -183,7 +183,10 @@ def test_gopher_flags(spark):
 def test_gopher_document_shape_gates(spark):
     """Published Gopher doc-shape rules: word count in [50, 100k], mean
     word length in [3, 10]."""
-    from ocr_obsidian_spark.operators.textstats import with_gopher_flags
+    from ocr_obsidian_spark.operators.textstats import (
+        GOPHER_THRESHOLDS,
+        with_gopher_flags,
+    )
 
     ok = "the good and solid words keep flowing here with sense " * 6  # 60 words
     rows = [
@@ -198,47 +201,38 @@ def test_gopher_document_shape_gates(spark):
     assert got[2]["n_words"] == 8 and not got[2]["gopher_pass"]
     assert got[3]["mean_word_len"] < 3.0 and not got[3]["gopher_pass"]
     assert got[4]["mean_word_len"] > 10.0 and not got[4]["gopher_pass"]
-    # the floor parametrizes away for short-doc deployments
-    relaxed = {
-        r["doc_id"]: r
-        for r in with_gopher_flags(df, min_words=5).collect()
-    }
-    assert relaxed[2]["gopher_pass"]
+    # the short document fails the word floor alone
+    for c, (lo, hi) in GOPHER_THRESHOLDS.items():
+        if c != "n_words":
+            assert (lo is None or got[2][c] >= lo) and (hi is None or got[2][c] <= hi), c
 
 
 def test_gopher_stopword_rule_is_published_set(spark):
-    """Default marker set = the 8-word Gopher rule (Rae et al. 2021 A1.1),
-    counted as DISTINCT presence; set and threshold are parameters."""
+    """The marker set is the 8-word Gopher rule (Rae et al. 2021 A1.1),
+    counted as DISTINCT presence, at least two."""
     from ocr_obsidian_spark.operators.textstats import (
         GOPHER_STOPWORDS,
+        GOPHER_THRESHOLDS,
         with_gopher_flags,
     )
 
     assert GOPHER_STOPWORDS == (
         "the", "be", "to", "of", "and", "that", "have", "with",
     )
+    assert GOPHER_THRESHOLDS["stop_distinct"] == (2, None)
+    filler = " good words keep flowing here" * 10  # 50 non-stopwords
     rows = [
-        (1, "the the the the the cat"),  # 1 distinct stopword, many hits
-        (2, "be with someone nice"),  # exactly 2 distinct
-        (3, "the be to of and that have with all words once"),  # all 8
-        (4, "is it a in on for words only"),  # non-Gopher markers: zero
+        (1, "the the the the the cat" + filler),  # 1 distinct stopword, many hits
+        (2, "be with someone nice" + filler),  # exactly 2 distinct
+        (3, "the be to of and that have with all words once" + filler),  # all 8
+        (4, "is it a in on for words only" + filler),  # non-Gopher markers: zero
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: r for r in with_gopher_flags(df, min_words=5).collect()}
+    got = {r["doc_id"]: r for r in with_gopher_flags(df).collect()}
     assert got[1]["stop_distinct"] == 1 and not got[1]["gopher_pass"]
-    assert got[2]["stop_distinct"] == 2
+    assert got[2]["stop_distinct"] == 2 and got[2]["gopher_pass"]
     assert got[3]["stop_distinct"] == 8 and got[3]["gopher_pass"]
-    assert got[4]["stop_distinct"] == 0
-    # parametrized variant: custom set + threshold
-    custom = {
-        r["doc_id"]: r
-        for r in with_gopher_flags(
-            df, stopwords=("cat", "nice"), min_distinct_stopwords=1
-        ).collect()
-    }
-    assert custom[1]["stop_distinct"] == 1
-    assert custom[2]["stop_distinct"] == 1
-    assert custom[3]["stop_distinct"] == 0
+    assert got[4]["stop_distinct"] == 0 and not got[4]["gopher_pass"]
 
 
 def test_gopher_repetition_fractions(spark):
@@ -335,7 +329,7 @@ def test_profile_corpus_sketches_match_exact_on_fixture(spark):
         )
     rows.append((9000, None, None))  # null url + null text ride through
     df = spark.createDataFrame(rows, ["doc_id", "url", "text"])
-    prof = profile_corpus(df, rsd=0.02, top_hosts=3)
+    prof = profile_corpus(df)
     assert prof["n_docs"] == 301
     assert prof["n_null_text"] == 1
     # 60 distinct non-null contents + the null/'' group
@@ -350,7 +344,7 @@ def test_profile_corpus_sketches_match_exact_on_fixture(spark):
     }
     for h, c in prof["top_hosts"].items():
         assert exact_hosts[h] == c, h
-    assert len(prof["top_hosts"]) == 3
+    assert len(prof["top_hosts"]) == 8  # every host fits the top-10 table
     # quantiles: within the exact value range, ordered
     q = prof["len_quantiles"]
     assert q["0.5"] <= q["0.9"] <= q["0.99"]
@@ -362,9 +356,8 @@ def test_profile_corpus_sketches_match_exact_on_fixture(spark):
     # would crash on mixed None/str keys) and the dict is JSON-safe
     import json as _json
 
-    prof_all = profile_corpus(df, top_hosts=10)
-    assert "" in prof_all["top_hosts"]
-    _json.dumps(prof_all, sort_keys=True)
+    assert "" in prof["top_hosts"]
+    _json.dumps(prof, sort_keys=True)
     # include_counts=False drops exactly the exact-count keys
     slim = profile_corpus(df, include_counts=False)
     assert "n_docs" not in slim and "approx_distinct_contents" in slim

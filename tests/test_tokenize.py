@@ -433,9 +433,7 @@ def test_distributed_fit_equals_local_fit(spark):
     local_counts = Counter(
         w for t in texts for w in (t or "").lower().split()
     )
-    assert train_bpe_on_corpus(df, n_merges=40) == train_bpe(
-        local_counts, n_merges=40
-    )
+    assert train_bpe_on_corpus(df) == train_bpe(local_counts)
     assert train_unigram_on_corpus(df) == train_unigram(local_counts)
 
 
@@ -448,11 +446,6 @@ def test_word_histogram_bounds_and_determinism(spark):
         r["word"]: r["count"] for r in corpus_word_histogram(df).collect()
     }
     assert full == {"aa": 3, "bb": 3, "cc": 2, "dd": 1, "xx": 1}
-    pruned = {
-        r["word"]: r["count"]
-        for r in corpus_word_histogram(df, min_count=2).collect()
-    }
-    assert pruned == {"aa": 3, "bb": 3, "cc": 2}
     # top-3: count desc, word asc — 'aa' and 'bb' tie at 3, then 'cc'
     top = [
         r["word"]

@@ -84,40 +84,44 @@ def test_decontaminate_drops_shingle_overlap(spark):
 
 
 def test_decontaminate_bloom_equals_exact(spark):
-    """The Bloom scale path returns EXACTLY the exact-method rows (no
-    false negatives by construction; false positives die in the confirm
-    join), on real corpus text with planted contamination."""
+    """The Bloom scale path of ``contamination_report`` returns EXACTLY
+    the exact-method counts (no false negatives by construction; false
+    positives die in the confirm join), and its clean rows are
+    ``decontaminate``'s keep set, on real corpus text with planted
+    contamination."""
+    from ocr_obsidian_spark.operators.webprep import contamination_report
+
     docs = (
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select("doc_id", "text")
         .limit(60)
     )
     bench = docs.filter(F.col("doc_id") % 7 == 0)
-    exact = {r["doc_id"] for r in decontaminate(docs, bench).collect()}
-    bloom = {
-        r["doc_id"]
-        for r in decontaminate(docs, bench, method="bloom").collect()
-    }
-    assert bloom == exact
+    kept = {r["doc_id"] for r in decontaminate(docs, bench).collect()}
+
+    def report(**kw):
+        rows = contamination_report(docs, bench, **kw).collect()
+        return {r["doc_id"]: (r["n_shingles"], r["n_contaminated"]) for r in rows}
+
+    exact = report()
+    assert {i for i, (_, c) in exact.items() if c == 0} == kept
+    assert report(method="bloom") == exact
     # a DELIBERATELY saturated filter (64 bits for hundreds of shingles
     # -> near-100% fp rate) still yields the exact result: every fp is
     # confirmed away
-    tiny = {
-        r["doc_id"]
-        for r in decontaminate(
-            docs, bench, method="bloom", bits_log2=6, n_hashes=2
-        ).collect()
-    }
-    assert tiny == exact
+    assert report(method="bloom", bits_log2=6, n_hashes=2) == exact
 
 
 def test_decontaminate_bloom_empty_benchmark_keeps_all(spark):
+    from ocr_obsidian_spark.operators.webprep import contamination_report
+
     docs = spark.createDataFrame(
         [(1, "some words here repeated words here words again for shingles")],
         "doc_id long, text string",
     )
     bench = docs.filter(F.col("doc_id") < 0)
-    assert decontaminate(docs, bench, method="bloom").count() == 1
+    [r] = contamination_report(docs, bench, method="bloom").collect()
+    assert r["n_contaminated"] == 0
 
 
 def test_bloom_build_sets_expected_bits(spark):
@@ -178,11 +182,6 @@ def test_normalize_unicode_nfc(spark):
     assert got[0].startswith("café Å")     # composed
     assert "ﬁ" in got[0]                        # NFC keeps the ligature
     assert got[1] == "plain ascii" and got[2] is None
-    nfkc = {r["doc_id"]: r["text"]
-            for r in normalize_unicode(df, form="NFKC").collect()}
-    assert "fin" in nfkc[0] and "ﬁ" not in nfkc[0]  # NFKC folds it
-    with pytest.raises(ValueError):
-        normalize_unicode(df, form="NFX")
 
 
 def test_drop_duplicated_lines(spark):
@@ -486,7 +485,7 @@ def test_c4_word_count_whitespace_runs(spark):
 
     rows = [(1, "Go  on.\nThis one   truly  has five words.")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    [r] = c4_line_filter(df, out_col="clean", min_words=3).collect()
+    [r] = c4_line_filter(df, out_col="clean").collect()
     # 'Go  on.' is 2 words despite the double space → dropped
     assert r["clean"] == "This one   truly  has five words."
 
