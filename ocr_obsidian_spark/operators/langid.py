@@ -259,56 +259,62 @@ def _marker_scores(text_col: str) -> tuple[Column, Column]:
     return pick, best
 
 
+_NB_STRUCT = T.StructType([
+    T.StructField("lang", T.StringType(), True),
+    T.StructField("hits", T.LongType(), True),
+])
+
+
+def _nb_labels(norm_text: pd.Series, skip: pd.Series) -> pd.DataFrame:
+    """NB scorer kernel: ``(lang, hits)`` per row, NULLs where ``skip``.
+    Module-level so the UDF pickles by reference and ``FIXTURE_NB``
+    loads once per worker, not once per task command."""
+    langs, hits = [], []
+    for text, s in zip(norm_text, skip):
+        if s:
+            langs.append(None)
+            hits.append(None)
+        else:
+            lang, m = FIXTURE_NB.classify(text or "")
+            langs.append(lang)
+            hits.append(m)
+    return pd.DataFrame({"lang": langs, "hits": hits})
+
+
+_nb_udf = F.pandas_udf(_nb_labels, _NB_STRUCT)
+
+
 def with_language(df: DataFrame, *, text_col: str = "text") -> DataFrame:
     """Cascade language ID with the fixture NB model: ``lang_marker``
     (heuristic pick),
     ``lang_nb`` (NB label, NULL where the heuristic was confident and
     the scorer was skipped), ``lang_id`` (the cascade decision) and
     ``nb_feature_hits``. Single scan, map-only."""
-
-    @F.pandas_udf(T.StructType([
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("hits", T.LongType(), True),
-    ]))
-    def nb(norm_text: pd.Series, skip: pd.Series) -> pd.DataFrame:
-        langs, hits = [], []
-        for text, s in zip(norm_text, skip):
-            if s:
-                langs.append(None)
-                hits.append(None)
-            else:
-                lang, m = FIXTURE_NB.classify(text or "")
-                langs.append(lang)
-                hits.append(m)
-        return pd.DataFrame({"lang": langs, "hits": hits})
-
     pick, best = _marker_scores(text_col)
-    staged = df.withColumn("lang_marker", pick).withColumn(
-        "_confident", best >= MARKER_MIN_HITS
+    staged = df.withColumns(
+        {"lang_marker": pick, "_confident": best >= MARKER_MIN_HITS}
     )
     # confident rows ship NULL instead of their full normalized text —
     # the scorer is skipped for them anyway, so the Arrow transfer only
     # carries the undecided minority (round 6; identical outputs)
     staged = staged.withColumn(
         "_nb",
-        nb(
+        _nb_udf(
             F.when(~F.col("_confident"), _norm(text_col)).otherwise(
                 F.lit(None).cast("string")
             ),
             F.col("_confident"),
         ),
     )
-    return (
-        staged.withColumn("lang_nb", F.col("_nb.lang"))
-        .withColumn("nb_feature_hits", F.col("_nb.hits"))
-        .withColumn(
-            "lang_id",
-            F.when(F.col("_confident"), F.col("lang_marker")).otherwise(
+    return staged.withColumns(
+        {
+            "lang_nb": F.col("_nb.lang"),
+            "nb_feature_hits": F.col("_nb.hits"),
+            "lang_id": F.when(F.col("_confident"), F.col("lang_marker")).otherwise(
                 F.col("_nb.lang")
             ),
-        )
-        .drop("_nb", "_confident")
-    )
+        }
+    ).drop("_nb", "_confident")
 
 
 def model_sql_tables() -> dict[str, str]:

@@ -178,8 +178,9 @@ def with_gopher_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
     staged = df.withColumn("_rep", _rep_udf(raw, _norm(text_col)))
     # rounding happens JVM-side (Spark round = HALF_UP, matching DuckDB's
     # round; python's round() is half-even and diverges on exact ties)
-    for c in _FRAC_COLS:
-        staged = staged.withColumn(c, F.round(F.col("_rep")[c], 6))
+    staged = staged.withColumns(
+        {c: F.round(F.col("_rep")[c], 6) for c in _FRAC_COLS}
+    )
     gate = F.lit(True)
     for c, thr in GOPHER_REP_THRESHOLDS.items():
         gate = gate & (F.col(c) <= float(thr))

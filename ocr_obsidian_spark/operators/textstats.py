@@ -101,11 +101,13 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
         )
         .cast("double")
     )
-    return (
-        df.withColumn("alpha_ratio", alpha_ratio)
-        .withColumn("punct_ratio", punct_ratio)
-        .withColumn("stopword_ratio", stop_ratio)
-        .withColumn("quality_score", F.greatest(score, F.lit(0.0)))
+    return df.withColumns(
+        {
+            "alpha_ratio": alpha_ratio,
+            "punct_ratio": punct_ratio,
+            "stopword_ratio": stop_ratio,
+            "quality_score": F.greatest(score, F.lit(0.0)),
+        }
     )
 
 
@@ -125,8 +127,8 @@ def with_gopher_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
     ``operators/repetition.with_gopher_repetition``.
     """
     raw = F.coalesce(F.col(text_col), F.lit(""))
-    staged = df.withColumn("_lines", F.split(raw, "\n")).withColumn(
-        "_toks", F.split(_norm(text_col), " ")
+    staged = df.withColumns(
+        {"_lines": F.split(raw, "\n"), "_toks": F.split(_norm(text_col), " ")}
     )
     n_lines = F.greatest(F.size("_lines"), F.lit(1))
     n_words = F.greatest(F.size("_toks"), F.lit(1))
@@ -163,14 +165,16 @@ def with_gopher_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
     mean_word_len = F.when(true_words == 0, F.lit(0.0)).otherwise(
         (norm_len - true_words + 1).cast("double") / true_words
     )
-    out = (
-        staged.withColumn("symbol_word_ratio", F.round(symbol_word_ratio, 6))
-        .withColumn("bullet_line_frac", F.round(bullet_frac, 6))
-        .withColumn("ellipsis_line_frac", F.round(ellipsis_frac, 6))
-        .withColumn("alpha_word_frac", F.round(alpha_word_frac, 6))
-        .withColumn("stop_distinct", stop_distinct.cast("long"))
-        .withColumn("n_words", true_words.cast("long"))
-        .withColumn("mean_word_len", F.round(mean_word_len, 6))
+    out = staged.withColumns(
+        {
+            "symbol_word_ratio": F.round(symbol_word_ratio, 6),
+            "bullet_line_frac": F.round(bullet_frac, 6),
+            "ellipsis_line_frac": F.round(ellipsis_frac, 6),
+            "alpha_word_frac": F.round(alpha_word_frac, 6),
+            "stop_distinct": stop_distinct.cast("long"),
+            "n_words": true_words.cast("long"),
+            "mean_word_len": F.round(mean_word_len, 6),
+        }
     )
     gopher_pass = F.lit(True)
     for c, (lo, hi) in GOPHER_THRESHOLDS.items():

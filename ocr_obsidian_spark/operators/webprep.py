@@ -265,17 +265,15 @@ def c4_line_filter(
 
     kept = F.filter(F.col("_lx"), keep)
     staged2 = staged.withColumn("_kept", kept)
-    return (
-        staged2.withColumn(
-            out, F.concat_ws("\n", F.transform(F.col("_kept"), lambda x: x["raw"]))
-        )
-        .withColumn("n_lines_kept", F.size("_kept").cast("long"))
-        .withColumn(
-            "n_lines_dropped",
-            (F.size("_lx") - F.size("_kept")).cast("long"),
-        )
-        .drop("_lx", "_kept")
-    )
+    return staged2.withColumns(
+        {
+            out: F.concat_ws(
+                "\n", F.transform(F.col("_kept"), lambda x: x["raw"])
+            ),
+            "n_lines_kept": F.size("_kept").cast("long"),
+            "n_lines_dropped": (F.size("_lx") - F.size("_kept")).cast("long"),
+        }
+    ).drop("_lx", "_kept")
 
 
 def filter_blocked_domains(df: DataFrame, blocked: list[str]) -> DataFrame:

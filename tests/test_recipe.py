@@ -124,6 +124,28 @@ def test_prepare_web_corpus_deterministic_across_parallelism(spark):
     assert rows_a == rows_b and rows_a
 
 
+def test_prepare_web_corpus_warm_run_compiles_nothing(spark):
+    """A repeated recipe run in one session reuses every generated class:
+    the session's codegen cache holds the recipe's working set, so the
+    second run compiles nothing (an LRU cache smaller than the working
+    set evicts each class before its next use, and every run recompiles)."""
+    from ocr_obsidian_spark.operators.recipe import prepare_web_corpus
+
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    docs = spark.createDataFrame(_fixture_rows(), ["doc_id", "url", "text"])
+
+    def run():
+        return sorted(prepare_web_corpus(docs).df.collect())
+
+    first = run()
+    before = compiles.getCount()
+    assert run() == first
+    assert compiles.getCount() == before
+
+
 def test_prepare_web_corpus_keep_best_and_optional_stages(spark):
     """keep_by keeps the best-scoring near-dup member; disabled stages
     neither run nor report a counter."""
